@@ -217,20 +217,22 @@ object Bench {
     // med0_s / default_med0_s.
     def medOf(m: Map[String, Stat], n: String): Double =
       m.get(n).map(_.med).getOrElse(-1.0)
+    // A negative default median means "default lane did not run" only when
+    // both runs lack it; a failed default in just one run keeps run 1's
+    // pair, so a failed rerun never replaces a valid Stat.
     def keepRerun(n: String): Boolean = {
       val p0 = medOf(plugin0, n); val p2 = medOf(plugin2, n)
+      val d0 = medOf(default0, n); val d2 = medOf(default2, n)
       if (p0 < 0 || p2 < 0) false
-      else {
-        val d0 = medOf(default0, n); val d2 = medOf(default2, n)
-        if (d0 < 0 || d2 < 0) p2 < p0 else p2 + d2 < p0 + d0
-      }
+      else if (d0 < 0 && d2 < 0) p2 < p0
+      else d0 >= 0 && d2 >= 0 && p2 + d2 < p0 + d0
     }
     def splice(base: Map[String, Stat], rerun: Map[String, Stat])
         : (Map[String, Stat], Map[String, Double]) = {
       val replaced = Map.newBuilder[String, Double]
       val merged = base.map { case (n, st) =>
         rerun.get(n) match {
-          case Some(r2) if keepRerun(n) =>
+          case Some(r2) if r2.med >= 0 && keepRerun(n) =>
             replaced += n -> st.med
             n -> r2
           case _ => n -> st

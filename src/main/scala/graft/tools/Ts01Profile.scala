@@ -66,11 +66,8 @@ object Ts01Profile {
     lane("default         ", sfDir, plugin = false, Map.empty)
     lane("no-prefetch     ", sfDir, plugin = true,
       Map("spark.shuffle.cloud.prefetch" -> "false"))
-    lane("no-adaptive     ", sfDir, plugin = true,
-      Map("spark.shuffle.cloud.adaptiveConcurrency" -> "false"))
     lane("conc32          ", sfDir, plugin = true,
-      Map("spark.shuffle.cloud.maxConcurrencyTask" -> "32",
-        "spark.shuffle.cloud.adaptiveConcurrency" -> "false"))
+      Map("spark.shuffle.cloud.maxConcurrencyTask" -> "32"))
     lane("writebuf128k    ", sfDir, plugin = true,
       Map("spark.shuffle.cloud.writeBufferSize" -> "128k"))
     lane("readbuf64k      ", sfDir, plugin = true,

@@ -2,9 +2,10 @@ package org.apache.spark.shuffle.cloud
 
 import java.io.{ByteArrayInputStream, InputStream, SequenceInputStream}
 import java.util.concurrent.LinkedBlockingQueue
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger, AtomicLong}
 
 import org.apache.spark.internal.Logging
+import org.apache.spark.shuffle.ShuffleReadMetricsReporter
 import org.apache.spark.storage.BlockId
 
 /** Asynchronous, memory-capped block prefetcher — the heart of read
@@ -12,19 +13,23 @@ import org.apache.spark.storage.BlockId
   *
   * Behavioral spec from the reference (`S3BufferedPrefetchIterator.scala:
   * 16-213`): a pool of daemon threads pulls blocks off the fetch list,
-  * buffers up to `min(blockSize, maxBufferSizeTask-share)` bytes each, and
-  * hands completed buffers to the consuming task thread through a blocking
-  * queue; total buffered bytes never exceed `maxBufferSizeTask`. Thread
-  * count adapts to observed fetch latency (`:32-94`): a hill-climbing
-  * controller compares the recent average latency against the previous
-  * window and steps the concurrency up when latency is flat/improving,
-  * down when it degrades — bounded by `[1, maxConcurrencyTask]`.
+  * buffers up to `min(blockSize, maxBufferSizeTask)` bytes each, and hands
+  * completed buffers to the consuming task thread through a blocking
+  * queue; total buffered bytes never exceed `maxBufferSizeTask`. The pool
+  * is fixed at `min(maxConcurrencyTask, blocks)` workers, all fetching
+  * from the start: store latency is hidden by keeping that many GETs in
+  * flight, and a congested store is bounded by the executor-wide fetch
+  * permit (`maxConcurrencyExecutor`), not by shrinking the pool.
   *
   * Completion order is delivery order: reducers don't care which map's
   * block arrives first, so the queue never head-of-line blocks.
+  *
+  * Time the consumer spends waiting on the queue is Spark's fetch wait: it
+  * is reported to `readMetrics` as it accrues.
   */
 private[cloud] class CloudPrefetchIterator(env: CloudShuffleEnv,
-    blocks: IndexedSeq[(BlockId, CloudBlockStream, InputStream)])
+    blocks: IndexedSeq[(BlockId, CloudBlockStream, InputStream)],
+    readMetrics: ShuffleReadMetricsReporter)
     extends Iterator[(BlockId, InputStream)] with Logging {
 
   private case class Fetched(blockId: BlockId, stream: InputStream, buffered: Long)
@@ -34,22 +39,24 @@ private[cloud] class CloudPrefetchIterator(env: CloudShuffleEnv,
   private var delivered = 0
   private val total = blocks.length
 
+  // fetch wait, consumer thread only: nanoseconds accumulate so that
+  // sub-millisecond waits add up before Spark's millisecond counter sees them
+  private var waitNanos = 0L
+  private var waitMsReported = 0L
+
   // --- read-side statistics (reference S3BufferedPrefetchIterator.scala:
-  // 155-186) — all fields only touched when env.readStatistics is on, so
-  // the disabled path pays zero timing calls
+  // 155-186) — the prefetch-side timing calls only run when
+  // env.readStatistics is on
   private val statsEnabled = env.readStatistics
   private val startNanos = if (statsEnabled) System.nanoTime() else 0L
-  private val bytesRead = new java.util.concurrent.atomic.AtomicLong(0L)
-  private val prefetchNanos = new java.util.concurrent.atomic.AtomicLong(0L)
-  private var waitNanos = 0L // consumer thread only
-  private val statsLogged = new java.util.concurrent.atomic.AtomicBoolean(false)
+  private val bytesRead = new AtomicLong(0L)
+  private val prefetchNanos = new AtomicLong(0L)
+  private val statsLogged = new AtomicBoolean(false)
 
   // Early-terminating consumers (limit/take) never reach delivered == total,
-  // so the drain-side emission below would silently drop their tasks from
-  // the per-task stats sample (ADVICE r3). A task-completion listener
-  // catches those; the AtomicBoolean makes the emission exactly-once
-  // whichever path fires first. Outside a task (unit tests) the drain-side
-  // emission is the only path — same behavior as before.
+  // so a task-completion listener emits their line; the AtomicBoolean makes
+  // the emission exactly-once whichever path fires first. Outside a task
+  // (unit tests) the drain-side emission is the only path.
   if (statsEnabled) {
     val tc = org.apache.spark.TaskContext.get()
     if (tc != null) tc.addTaskCompletionListener[Unit] { _ => logStatistics() }
@@ -66,8 +73,7 @@ private[cloud] class CloudPrefetchIterator(env: CloudShuffleEnv,
     logInfo(f"cloud shuffle read stats: $delivered/$total blocks, $bR bytes, " +
       f"$tW ms waiting (${tW / n} avg), $tP ms prefetching (${tP / n} avg, " +
       f"${bR / n} block size, $mibs%.1f MiB/s). " +
-      f"Total: ${totalNanos / 1000000} ms - ${100 * waitNanos / totalNanos}%% waiting. " +
-      f"$targetThreads target threads.")
+      f"Total: ${totalNanos / 1000000} ms - ${100 * waitNanos / totalNanos}%% waiting.")
   }
 
   // --- memory budget ------------------------------------------------------
@@ -88,103 +94,59 @@ private[cloud] class CloudPrefetchIterator(env: CloudShuffleEnv,
     budgetLock.notifyAll()
   }
 
-  // --- adaptive concurrency ----------------------------------------------
-  @volatile private var targetThreads =
-    if (env.adaptiveConcurrency) math.min(2, env.maxConcurrencyTask)
-    else env.maxConcurrencyTask
-  private val latencyLock = new Object
-  private var windowNanos = 0L
-  private var windowCount = 0
-  private var prevAvgNanos = Long.MaxValue
-  private var lastStep = +1
-
-  private def recordLatency(nanos: Long): Unit = {
-    if (!env.adaptiveConcurrency) return
-    latencyLock.synchronized {
-      windowNanos += nanos
-      windowCount += 1
-      if (windowCount >= 8) {
-        val avg = windowNanos / windowCount
-        // keep moving in the same direction while latency improves;
-        // reverse when it degrades by >10%
-        val step = if (avg > prevAvgNanos + prevAvgNanos / 10) -lastStep else lastStep
-        targetThreads = math.max(1, math.min(env.maxConcurrencyTask, targetThreads + step))
-        lastStep = if (step == 0) 1 else step
-        prevAvgNanos = avg
-        windowNanos = 0L
-        windowCount = 0
-      }
-    }
-  }
-
   // --- worker pool --------------------------------------------------------
-  private val activeWorkers = new AtomicInteger(0)
-  // never start more workers than there are blocks: a 2-block reduce task
-  // has no use for the other maxConcurrencyTask-2 threads, and their
-  // create-then-immediately-return churn was a measurable slice of the
-  // per-task fixed cost on tiny shuffles (tools/OverheadProfile, r10).
-  // Semantics-preserving: a worker beyond `total` can never claim an
-  // index, and the adaptive target only matters up to `total` workers.
+  // never more workers than blocks: a worker beyond `total` could never
+  // claim an index, and creating it is pure per-task fixed cost
   private val workers = (0 until math.min(env.maxConcurrencyTask, total)).map { i =>
-    val t = new Thread(() => workLoop(i), s"cloud-shuffle-prefetch-$i")
+    val t = new Thread(() => workLoop(), s"cloud-shuffle-prefetch-$i")
     t.setDaemon(true)
     t
   }
   workers.foreach(_.start())
 
-  private def workLoop(workerId: Int): Unit = {
-    while (true) {
-      // soft concurrency gate: workers beyond the adaptive target park
-      if (workerId >= targetThreads) {
-        val idx = nextIdx.get()
-        if (idx >= total) return
-        Thread.sleep(1)
-      } else {
-        val idx = nextIdx.getAndIncrement()
-        if (idx >= total) return
-        val (blockId, ranged, wrapped) = blocks(idx)
-        val toBuffer = math.min(ranged.size, env.maxBufferSizeTask)
-        var acquired = false
-        try {
-          acquire(toBuffer)
-          acquired = true
-          // memory first, THEN the executor-wide permit: a task parked on
-          // its memory budget must not hold a fetch slot the rest of the
-          // executor could use. The clock starts INSIDE the permit —
-          // queue wait must not pollute the adaptive controller's
-          // store-latency signal or the MiB/s statistics.
-          var readNanos = 0L
-          val buf = env.withFetchPermit {
+  private def workLoop(): Unit = {
+    var idx = nextIdx.getAndIncrement()
+    while (idx < total) {
+      val (blockId, ranged, wrapped) = blocks(idx)
+      val toBuffer = math.min(ranged.size, env.maxBufferSizeTask)
+      var acquired = false
+      try {
+        acquire(toBuffer)
+        acquired = true
+        // memory first, THEN the executor-wide permit: a task parked on
+        // its memory budget must not hold a fetch slot the rest of the
+        // executor could use. The clock starts INSIDE the permit, so queue
+        // wait does not pollute the MiB/s statistics.
+        val buf = env.withFetchPermit {
+          if (!statsEnabled) readUpTo(wrapped, toBuffer)
+          else {
             val t0 = System.nanoTime()
             val b = readUpTo(wrapped, toBuffer)
-            readNanos = System.nanoTime() - t0
+            prefetchNanos.addAndGet(System.nanoTime() - t0)
+            bytesRead.addAndGet(b.length.toLong)
             b
           }
-          recordLatency(readNanos)
-          if (statsEnabled) {
-            prefetchNanos.addAndGet(readNanos)
-            bytesRead.addAndGet(buf.length.toLong)
-          }
-          val stream: InputStream =
-            if (buf.length.toLong >= ranged.size || isExhausted(wrapped)) {
-              wrapped.close()
-              new ByteArrayInputStream(buf)
-            } else {
-              // block bigger than the budget: serve the buffered head, then
-              // stream the tail straight from the store
-              new SequenceInputStream(new ByteArrayInputStream(buf), wrapped)
-            }
-          queue.put(Right(Fetched(blockId, stream, toBuffer)))
-        } catch {
-          case t: Throwable =>
-            // only give back budget that was actually taken — an exception
-            // inside acquire() itself (e.g. interrupt while parked) must not
-            // drive bufferedBytes negative and loosen the cap for others
-            if (acquired) release(toBuffer)
-            queue.put(Left(t))
-            return
         }
+        val stream: InputStream =
+          if (buf.length.toLong >= ranged.size || isExhausted(wrapped)) {
+            wrapped.close()
+            new ByteArrayInputStream(buf)
+          } else {
+            // block bigger than the budget: serve the buffered head, then
+            // stream the tail straight from the store
+            new SequenceInputStream(new ByteArrayInputStream(buf), wrapped)
+          }
+        queue.put(Right(Fetched(blockId, stream, toBuffer)))
+      } catch {
+        case t: Throwable =>
+          // only give back budget that was actually taken — an exception
+          // inside acquire() itself (e.g. interrupt while parked) must not
+          // drive bufferedBytes negative and loosen the cap for others
+          if (acquired) release(toBuffer)
+          queue.put(Left(t))
+          return
       }
+      idx = nextIdx.getAndIncrement()
     }
   }
 
@@ -197,13 +159,10 @@ private[cloud] class CloudPrefetchIterator(env: CloudShuffleEnv,
   }
 
   private def readUpTo(in: InputStream, limit: Long): Array[Byte] = {
-    // exact-size single allocation (r14, tools/Ts01Profile): the block's
-    // buffered size is KNOWN up front (the index gives exact ranges), so
-    // read straight into one right-sized array — the former
-    // ByteArrayOutputStream + toByteArray pair double-copied and
-    // double-allocated every block, a GC tax the read path pays at any
-    // store latency. Blocks beyond byte[]-addressability buffer their
-    // first 2 GB; the SequenceInputStream tail streams the rest.
+    // the buffered size is known up front (the index gives exact ranges),
+    // so read straight into one right-sized array. Blocks beyond
+    // byte[]-addressability buffer their first 2 GB; the
+    // SequenceInputStream tail streams the rest.
     val size = math.min(limit, (Int.MaxValue - 16).toLong).toInt
     val buf = new Array[Byte](size)
     var off = 0
@@ -219,9 +178,14 @@ private[cloud] class CloudPrefetchIterator(env: CloudShuffleEnv,
   override def hasNext: Boolean = delivered < total
 
   override def next(): (BlockId, InputStream) = {
-    val w0 = if (statsEnabled) System.nanoTime() else 0L
+    val w0 = System.nanoTime()
     val taken = queue.take()
-    if (statsEnabled) waitNanos += System.nanoTime() - w0
+    waitNanos += System.nanoTime() - w0
+    val waitMs = waitNanos / 1000000
+    if (waitMs > waitMsReported) {
+      readMetrics.incFetchWaitTime(waitMs - waitMsReported)
+      waitMsReported = waitMs
+    }
     taken match {
       case Left(err) =>
         throw new RuntimeException(s"cloud shuffle prefetch failed", err)

@@ -4,12 +4,14 @@ import java.io.{BufferedOutputStream, IOException, OutputStream}
 import java.nio.file.Files
 import java.util.{Collections, Optional}
 
-import org.apache.hadoop.fs.Path
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
+
 import org.apache.spark.SparkConf
 import org.apache.spark.internal.Logging
 import org.apache.spark.shuffle.api._
 import org.apache.spark.shuffle.api.metadata.MapOutputCommitMessage
-import org.apache.spark.storage.ShuffleDataBlockId
+import org.apache.spark.storage.{ShuffleChecksumBlockId, ShuffleDataBlockId, ShuffleIndexBlockId}
 
 /** `ShuffleDataIO` plugin: Spark's writers stream their output through these
   * components, which is where the redirection to the Hadoop-FS object store
@@ -63,8 +65,7 @@ private[cloud] class CloudDriverComponents(conf: SparkConf)
   }
 
   override def removeShuffle(shuffleId: Int, blocking: Boolean): Unit = {
-    val env = CloudShuffleEnv.get()
-    if (env.cleanupShuffleFiles) env.deleteShuffle(shuffleId)
+    CloudShuffleEnv.get().deleteShuffle(shuffleId)
     CloudShuffleIndex.purgeShuffle(shuffleId)
   }
 
@@ -158,18 +159,15 @@ private[cloud] class CloudMapOutputWriter(env: CloudShuffleEnv, shuffleId: Int,
   }
 
   override def commitAllPartitions(checksums: Array[Long]): MapOutputCommitMessage = {
-    if (stream != null) stream.close()
     val total = partitionLengths.sum
-    if (total != bytesWritten) {
-      throw new IOException(
-        s"cloud shuffle corruption: partition lengths sum to $total " +
-          s"but $bytesWritten bytes were written")
-    }
-    if (total > 0 || env.checksumEnabled || env.alwaysCreateIndex) {
-      CloudShuffleIndex.writeIndex(env, shuffleId, mapId, partitionLengths)
-    }
-    if (env.checksumEnabled && checksums.nonEmpty) {
-      CloudShuffleIndex.writeChecksums(env, shuffleId, mapId, checksums)
+    val withIndex = total > 0 || env.checksumEnabled || env.alwaysCreateIndex
+    CloudMapOutputWriter.commit(env, shuffleId, mapId, partitionLengths, withIndex, checksums) {
+      if (stream != null) stream.close()
+      if (total != bytesWritten) {
+        throw new IOException(
+          s"cloud shuffle corruption: partition lengths sum to $total " +
+            s"but $bytesWritten bytes were written")
+      }
     }
     MapOutputCommitMessage.of(partitionLengths)
   }
@@ -177,23 +175,65 @@ private[cloud] class CloudMapOutputWriter(env: CloudShuffleEnv, shuffleId: Int,
   override def abort(error: Throwable): Unit = {
     try if (stream != null) stream.close()
     catch { case e: Exception => logDebug(s"abort close: $e") }
-    env.deleteBlock(ShuffleDataBlockId(shuffleId, mapId, CloudShuffleManager.NOOP_REDUCE_ID))
+    CloudMapOutputWriter.discard(env, shuffleId, mapId)
+  }
+}
+
+private[cloud] object CloudMapOutputWriter {
+
+  /** Commits one map output: the index and checksum PUTs start on the env's
+    * I/O pool while `closeData` finishes the data PUT on the calling
+    * thread, so the task waits out one store latency instead of three.
+    * Returns or throws only once every PUT has finished; if any failed, the
+    * map's objects are discarded, so a failed commit leaves nothing a
+    * reader or a listing could see. */
+  def commit(env: CloudShuffleEnv, shuffleId: Int, mapId: Long, lengths: Array[Long],
+      withIndex: Boolean, checksums: Array[Long])(closeData: => Unit): Unit = {
+    implicit val ec: ExecutionContext = CloudShuffleEnv.ioEc
+    val puts = Seq(
+      Option.when(withIndex)(Future(CloudShuffleIndex.writeIndex(env, shuffleId, mapId, lengths))),
+      Option.when(env.checksumEnabled && checksums.nonEmpty)(
+        Future(CloudShuffleIndex.writeChecksums(env, shuffleId, mapId, checksums)))).flatten
+    val dataError = try { closeData; None } catch { case t: Throwable => Some(t) }
+    (dataError +: puts.map(settle)).flatten.headOption.foreach { e =>
+      discard(env, shuffleId, mapId)
+      throw e
+    }
+  }
+
+  /** Waits for `f` even across an interrupt; the interrupt then fails the
+    * commit. */
+  private def settle(f: Future[Unit]): Option[Throwable] =
+    try Await.ready(f, Duration.Inf).value.get.failed.toOption
+    catch { case e: InterruptedException => settle(f).orElse(Some(e)) }
+
+  /** Deletes a map output's data, index and checksum objects and forgets
+    * its cached index. */
+  def discard(env: CloudShuffleEnv, shuffleId: Int, mapId: Long): Unit = {
+    Seq(ShuffleDataBlockId(shuffleId, mapId, CloudShuffleManager.NOOP_REDUCE_ID),
+      ShuffleIndexBlockId(shuffleId, mapId, CloudShuffleManager.NOOP_REDUCE_ID),
+      ShuffleChecksumBlockId(shuffleId, mapId, 0)).foreach(env.deleteBlock)
+    CloudShuffleIndex.forget(shuffleId, mapId)
   }
 }
 
 /** Fast path when the sort writer produced exactly one spill file: move it
-  * (local FS) or stream-copy it (object store) as the data blob, then write
-  * index + checksums (reference: `S3SingleSpillShuffleMapOutputWriter.scala:24-64`).
+  * (local FS) or stream-copy it (object store) as the data blob, committed
+  * together with the index + checksums (reference: `S3SingleSpillShuffleMapOutputWriter.scala:24-64`).
   */
 private[cloud] class CloudSingleSpillWriter(env: CloudShuffleEnv, shuffleId: Int,
     mapId: Long) extends SingleSpillShuffleMapOutputWriter with Logging {
 
   override def transferMapSpillFile(mapSpillFile: java.io.File,
       partitionLengths: Array[Long], checksums: Array[Long]): Unit = {
+    CloudMapOutputWriter.commit(env, shuffleId, mapId, partitionLengths, withIndex = true,
+      checksums)(writeData(mapSpillFile))
+  }
+
+  private def writeData(mapSpillFile: java.io.File): Unit = {
     val blockId = ShuffleDataBlockId(shuffleId, mapId, CloudShuffleManager.NOOP_REDUCE_ID)
-    val target = env.blockPath(blockId)
     if (env.isLocalFs) {
-      val dst = java.nio.file.Paths.get(target.toUri.getPath)
+      val dst = java.nio.file.Paths.get(env.blockPath(blockId).toUri.getPath)
       Files.createDirectories(dst.getParent)
       Files.move(mapSpillFile.toPath, dst,
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
@@ -213,10 +253,6 @@ private[cloud] class CloudSingleSpillWriter(env: CloudShuffleEnv, shuffleId: Int
         in.close()
         out.close()
       }
-    }
-    CloudShuffleIndex.writeIndex(env, shuffleId, mapId, partitionLengths)
-    if (env.checksumEnabled && checksums.nonEmpty) {
-      CloudShuffleIndex.writeChecksums(env, shuffleId, mapId, checksums)
     }
   }
 }

@@ -46,13 +46,9 @@ final class CloudShuffleEnv(val conf: SparkConf, val appId: String) extends Logg
     if (d.endsWith("/")) d.dropRight(1) else d
   }
   val folderPrefixes: Int = math.max(1, conf.getInt(PREFIXES_KEY, 10))
-  // 1m default (r14, was 8m): the buffer only coalesces sub-buffer write()
-  // calls before the FS client's own buffering (io.file.buffer.size /
-  // the object-store client's multipart block store) — 1 MiB keeps that
-  // protection while an 8 MiB array per concurrent map writer was pure
-  // heap churn (tools/Ts01Profile: ~10% of ts01's plugin-lane wall on the
-  // write side). Object-store PUT granularity lives in the FS client, not
-  // here; raise per job if a store's client measures otherwise.
+  // The write buffer only coalesces small write() calls ahead of the FS
+  // client's own buffering, which sets the PUT granularity; raise it per
+  // job for a store client that does not buffer.
   val writeBufferSize: Int = conf.getSizeAsBytes(WRITE_BUFFER_KEY, "1m").toInt
   val readBufferSize: Int = conf.getSizeAsBytes(READ_BUFFER_KEY, "1m").toInt
   val maxBufferSizeTask: Long = conf.getSizeAsBytes(MAX_BUFFER_TASK_KEY, "128m")
@@ -85,7 +81,6 @@ final class CloudShuffleEnv(val conf: SparkConf, val appId: String) extends Logg
   def availableFetchPermits: Int =
     executorFetchPermits.map(_.availablePermits()).getOrElse(-1)
   val prefetchEnabled: Boolean = conf.getBoolean(PREFETCH_KEY, defaultValue = true)
-  val adaptiveConcurrency: Boolean = conf.getBoolean(ADAPTIVE_KEY, defaultValue = true)
   /** Per-task read-side statistics (bytes, wait/prefetch time, MiB/s) at
     * INFO on task completion — reference `S3BufferedPrefetchIterator.scala:
     * 155-186`. Off by default: zero timing calls on the consumer path. */
@@ -119,22 +114,14 @@ final class CloudShuffleEnv(val conf: SparkConf, val appId: String) extends Logg
       hadoopConf.getInt("io.file.buffer.size", 4096) == 4096)
     hadoopConf.setInt("io.file.buffer.size", 131072)
   val fs: FileSystem = {
-    // newInstance, NOT get: FileSystem.get returns a JVM-cached instance
-    // shared with every other file:// user (Spark's parquet committers,
-    // dd14's compactIndex), and the checksum/buffer settings below must
-    // not leak into their writes — the FS cache key ignores the conf, so
-    // mutating the cached instance would change behavior for the whole
-    // JVM depending on who initialized it first.
+    // newInstance, not get: the cached instance is shared with every other
+    // user of the scheme in this JVM (the cache key ignores the conf), and
+    // the checksum/buffer settings below must not leak into their writes.
     val f = FileSystem.newInstance(URI.create(rootDir), hadoopConf)
-    // Hadoop's `file://` FS is a ChecksumFileSystem: every create ALSO
-    // writes a .crc sidecar (a second file create + CRC32 over every
-    // byte) and every open stats the sidecar first. That layer is pure
-    // duplication here — the plugin carries its own integrity checks
-    // (Spark's checksum file format, validated streaming-side in
-    // CloudBlockStream) — and it showed up as the A/B lane's overhead
-    // tail: shuffle WRITE time ~10× the default manager's on small
-    // shuffles (tools/OverheadProfile, r10). Object-store FSs (s3a)
-    // implement both calls as no-ops, so this only changes local runs.
+    // `file://` is a ChecksumFileSystem: every create also writes a .crc
+    // sidecar and every open stats it. The plugin carries its own checksums
+    // (Spark's format, validated while streaming), so that layer is pure
+    // duplication; object-store FSs implement both calls as no-ops.
     f.setWriteChecksum(false)
     f.setVerifyChecksum(false)
     f
@@ -182,11 +169,21 @@ final class CloudShuffleEnv(val conf: SparkConf, val appId: String) extends Logg
     try fs.delete(blockPath(blockId), false)
     catch { case e: Exception => logDebug(s"delete ${blockId.name}: $e") }
 
+  /** Shuffles registered in this JVM whose objects may still be stored.
+    * Only the driver registers shuffles. */
+  private val liveShuffles = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+
+  def registerShuffle(shuffleId: Int): Unit = liveShuffles.add(shuffleId)
+
   /** Delete every object of one shuffle — one future per folder prefix so
-    * object-store deletes proceed in parallel. */
+    * object-store deletes proceed in parallel. Spark reaches the plugin
+    * through several cleanup calls, on the driver and on executors; only
+    * the first call in the JVM that registered the shuffle deletes. */
   def deleteShuffle(shuffleId: Int): Unit =
-    if (useSparkShuffleFetch) deleteOne(new Path(s"$rootDir/$appId/$shuffleId"))
-    else parallelDelete(p => new Path(s"$rootDir/$p/$appId/$shuffleId"))
+    if (liveShuffles.remove(shuffleId) && cleanupShuffleFiles) {
+      if (useSparkShuffleFetch) deleteOne(new Path(s"$rootDir/$appId/$shuffleId"))
+      else parallelDelete(p => new Path(s"$rootDir/$p/$appId/$shuffleId"))
+    }
 
   /** Delete every object this application wrote. */
   def deleteAppFolders(): Unit =
@@ -200,7 +197,7 @@ final class CloudShuffleEnv(val conf: SparkConf, val appId: String) extends Logg
   /** Map ids of every committed map output of a shuffle, discovered by
     * listing `.index` objects across all folder prefixes in parallel. */
   def listMapIds(shuffleId: Int): Seq[Long] = {
-    implicit val ec: ExecutionContext = CloudShuffleEnv.deleteEc
+    implicit val ec: ExecutionContext = CloudShuffleEnv.ioEc
     val pattern = ("shuffle_" + shuffleId + "_(\\d+)_\\d+\\.index").r
     val fut = Future.sequence((0 until folderPrefixes).map { p =>
       Future {
@@ -217,7 +214,7 @@ final class CloudShuffleEnv(val conf: SparkConf, val appId: String) extends Logg
   }
 
   private def parallelDelete(path: Int => Path): Unit = {
-    implicit val ec: ExecutionContext = CloudShuffleEnv.deleteEc
+    implicit val ec: ExecutionContext = CloudShuffleEnv.ioEc
     val fut = Future.sequence((0 until folderPrefixes).map { p =>
       Future {
         try fs.delete(path(p), true)
@@ -237,7 +234,6 @@ object CloudShuffleEnv extends Logging {
   val MAX_BUFFER_TASK_KEY = "spark.shuffle.cloud.maxBufferSizeTask"
   val MAX_CONCURRENCY_KEY = "spark.shuffle.cloud.maxConcurrencyTask"
   val PREFETCH_KEY = "spark.shuffle.cloud.prefetch"
-  val ADAPTIVE_KEY = "spark.shuffle.cloud.adaptiveConcurrency"
   val CLEANUP_KEY = "spark.shuffle.cloud.cleanup"
   val RELOCATE_KEY = "spark.shuffle.cloud.relocateMapStatus"
   val VALIDATE_KEY = "spark.shuffle.cloud.checksum.validate"
@@ -247,9 +243,11 @@ object CloudShuffleEnv extends Logging {
   val SPARK_FETCH_KEY = "spark.shuffle.cloud.useSparkShuffleFetch"
   val MAX_EXEC_CONCURRENCY_KEY = "spark.shuffle.cloud.maxConcurrencyExecutor"
 
-  private val deleteEc: ExecutionContext =
+  /** Daemon pool for store requests issued side by side: the per-prefix
+    * deletes and listings, and a commit's index and checksum PUTs. */
+  private[cloud] val ioEc: ExecutionContext =
     ExecutionContext.fromExecutorService(Executors.newCachedThreadPool { r =>
-      val t = new Thread(r, "cloud-shuffle-delete")
+      val t = new Thread(r, "cloud-shuffle-io")
       t.setDaemon(true)
       t
     })

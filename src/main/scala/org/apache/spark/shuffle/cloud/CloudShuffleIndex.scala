@@ -82,6 +82,11 @@ private[cloud] object CloudShuffleIndex extends Logging {
     }
   }
 
+  def forget(shuffleId: Int, mapId: Long): Unit = {
+    indexCache.remove(ShuffleIndexBlockId(shuffleId, mapId, CloudShuffleManager.NOOP_REDUCE_ID))
+    checksumCache.remove(ShuffleChecksumBlockId(shuffleId, mapId, 0))
+  }
+
   def purgeAll(): Unit = {
     indexCache.clear()
     checksumCache.clear()

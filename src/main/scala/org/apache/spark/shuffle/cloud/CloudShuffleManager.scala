@@ -1,7 +1,5 @@
 package org.apache.spark.shuffle.cloud
 
-import java.util.concurrent.ConcurrentHashMap
-
 import org.apache.spark.{ShuffleDependency, SparkConf, SparkEnv, TaskContext}
 import org.apache.spark.internal.Logging
 import org.apache.spark.scheduler.MapStatus
@@ -67,8 +65,6 @@ class CloudShuffleManager(conf: SparkConf) extends ShuffleManager with Logging {
     }
   }
 
-  private val registeredShuffleIds = ConcurrentHashMap.newKeySet[Integer]()
-
   private lazy val shuffleExecutorComponents: ShuffleExecutorComponents = {
     val components = ShuffleDataIOUtils.loadShuffleDataIO(conf).executor()
     val extraConfigs = conf.getAllWithPrefix(ShuffleDataIOUtils.SHUFFLE_SPARK_CONF_PREFIX).toMap
@@ -79,7 +75,7 @@ class CloudShuffleManager(conf: SparkConf) extends ShuffleManager with Logging {
 
   override def registerShuffle[K, V, C](shuffleId: Int,
       dependency: ShuffleDependency[K, V, C]): ShuffleHandle = {
-    registeredShuffleIds.add(shuffleId)
+    CloudShuffleEnv.get().registerShuffle(shuffleId)
     // Spark's own three-way strategy choice (reference reuses it verbatim,
     // `S3ShuffleManager.scala:52-71`)
     if (SortShuffleWriter.shouldBypassMergeSort(conf, dependency)) {
@@ -138,10 +134,8 @@ class CloudShuffleManager(conf: SparkConf) extends ShuffleManager with Logging {
   }
 
   override def unregisterShuffle(shuffleId: Int): Boolean = {
-    registeredShuffleIds.remove(shuffleId)
     CloudShuffleIndex.purgeShuffle(shuffleId)
-    val env = CloudShuffleEnv.get()
-    if (env.cleanupShuffleFiles) env.deleteShuffle(shuffleId)
+    CloudShuffleEnv.get().deleteShuffle(shuffleId)
     true
   }
 

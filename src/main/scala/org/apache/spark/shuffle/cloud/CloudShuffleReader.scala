@@ -144,7 +144,7 @@ private[cloud] class CloudShuffleReader[K, C](
       }.toIndexedSeq
 
     val fetched: Iterator[(BlockId, InputStream)] =
-      if (env.prefetchEnabled) new CloudPrefetchIterator(env, ranged)
+      if (env.prefetchEnabled) new CloudPrefetchIterator(env, ranged, readMetrics)
       else ranged.iterator.map { case (id, _, s) =>
         (id, new BufferedInputStream(s, env.readBufferSize))
       }

@@ -1,0 +1,97 @@
+package org.apache.spark.shuffle.cloud
+
+import java.io.{FileNotFoundException, IOException}
+import java.nio.file.Files
+
+import org.scalatest.BeforeAndAfterEach
+import org.scalatest.funsuite.AnyFunSuite
+
+/** A map output's commit issues its data, index and checksum PUTs together
+  * and is all-or-nothing: a commit that fails, or an aborted map output,
+  * leaves no object and no cached index behind. */
+class ConcurrentCommitSpec extends AnyFunSuite with BeforeAndAfterEach {
+
+  private val shuffleId = 9002
+  private val lengths = Array(3L, 0L, 5L)
+  private val checksums = Array(11L, 22L, 33L)
+
+  override def beforeEach(): Unit = CloudShuffleEnv.reset()
+
+  override def afterEach(): Unit = CloudShuffleEnv.reset()
+
+  private def withEnv[T](store: (String, String)*)(body: CloudShuffleEnv => T): T = {
+    val env = new CloudShuffleEnv(GatedStore.sparkConf(store: _*), "concurrent-commit-spec")
+    try body(env) finally env.fs.close()
+  }
+
+  private def closesTogether = GatedStore.ClosePartiesKey -> "3"
+
+  private def store(env: CloudShuffleEnv) = env.fs.asInstanceOf[GatedStore]
+
+  /** Writes `lengths` bytes per partition through a map output writer. */
+  private def written(env: CloudShuffleEnv, mapId: Long): CloudMapOutputWriter = {
+    val writer = new CloudMapOutputWriter(env, shuffleId, mapId, lengths.length)
+    lengths.zipWithIndex.filter(_._1 > 0).foreach { case (n, p) =>
+      val out = writer.getPartitionWriter(p).openStream()
+      out.write(Array.fill[Byte](n.toInt)(p.toByte))
+      out.close()
+    }
+    writer
+  }
+
+  private def objectsOf(env: CloudShuffleEnv, mapId: Long): Seq[String] =
+    GatedStore.objects(env).filter(_.startsWith(s"shuffle_${shuffleId}_${mapId}_"))
+
+  /** Neither the store nor the JVM's cache can serve the map's index or
+    * checksums. */
+  private def assertGone(env: CloudShuffleEnv, mapId: Long): Unit = {
+    assert(objectsOf(env, mapId).isEmpty)
+    intercept[FileNotFoundException](CloudShuffleIndex.readIndex(env, shuffleId, mapId))
+    intercept[FileNotFoundException](CloudShuffleIndex.readChecksums(env, shuffleId, mapId))
+  }
+
+  test("the data, index and checksum PUTs of one map are in flight together") {
+    // every PUT's close waits until three are closing at once
+    withEnv(closesTogether) { env =>
+      val msg = written(env, 1L).commitAllPartitions(checksums)
+      assert(msg.getPartitionLengths.toSeq == lengths.toSeq)
+      assert(store(env).closesPeak.get == 3)
+      assert(objectsOf(env, 1L).sorted ==
+        Seq("shuffle_9002_1_0.checksum", "shuffle_9002_1_0.data", "shuffle_9002_1_0.index"))
+      assert(CloudShuffleIndex.readIndex(env, shuffleId, 1L).toSeq == Seq(0L, 3L, 3L, 8L))
+    }
+  }
+
+  test("the single-spill commit issues its three PUTs together") {
+    withEnv(closesTogether) { env =>
+      val spill = Files.createTempFile("spill", ".data")
+      Files.write(spill, Array.fill[Byte](lengths.sum.toInt)(7))
+      new CloudSingleSpillWriter(env, shuffleId, 2L)
+        .transferMapSpillFile(spill.toFile, lengths, checksums)
+      assert(store(env).closesPeak.get == 3)
+      assert(objectsOf(env, 2L).size == 3)
+      Files.deleteIfExists(spill)
+    }
+  }
+
+  test("a failed data PUT fails the commit and leaves no index or checksum") {
+    // the index and checksum PUTs land while the data PUT fails: a leftover
+    // index would make a listing count the aborted attempt
+    withEnv(closesTogether, GatedStore.FailDataCloseKey -> "true") { env =>
+      val e = intercept[IOException](written(env, 3L).commitAllPartitions(checksums))
+      assert(e.getMessage.contains("injected upload failure"))
+      assert(store(env).closesPeak.get == 3)
+      assertGone(env, 3L)
+    }
+  }
+
+  test("abort deletes the data, index and checksum objects") {
+    withEnv() { env =>
+      val writer = written(env, 4L)
+      writer.commitAllPartitions(checksums)
+      assert(objectsOf(env, 4L).size == 3)
+      writer.abort(new RuntimeException("task failed after commit"))
+      assertGone(env, 4L)
+    }
+  }
+}

@@ -1,0 +1,122 @@
+package org.apache.spark.shuffle.cloud
+
+import java.io.{IOException, OutputStream}
+import java.net.URI
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.{CyclicBarrier, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FSDataInputStream, FSDataOutputStream, Path, RawLocalFileSystem}
+import org.apache.hadoop.util.Progressable
+import org.apache.spark.SparkConf
+
+/** Test store: the raw local file system under the `gatefs` scheme, with
+  * optional barriers that make concurrency observable.
+  *
+  *  - `fs.gatefs.open.parties` = n: every `open` (a GET) waits until n opens
+  *    are in progress together;
+  *  - `fs.gatefs.open.delay.ms` = d: every `open` then sleeps d ms;
+  *  - `fs.gatefs.close.parties` = n: every output stream's `close` (the
+  *    moment a PUT lands) waits until n closes are in progress together;
+  *  - `fs.gatefs.fail.data.close` = true: closing a `.data` object throws
+  *    after its bytes are on disk, as a failed upload would.
+  *
+  * A barrier that is not met within 10 s breaks, failing the request. The
+  * store records the peak number of opens and closes in progress at once.
+  */
+class GatedStore extends RawLocalFileSystem {
+  import GatedStore._
+
+  private var openGate: Option[CyclicBarrier] = None
+  private var closeGate: Option[CyclicBarrier] = None
+  private var openDelayMs = 0L
+  private var failDataClose = false
+
+  val opens = new AtomicInteger(0)
+  val opensPeak = new Peak
+  val closesPeak = new Peak
+
+  override def getUri: URI = Uri
+
+  override def getScheme: String = Scheme
+
+  override def initialize(name: URI, conf: Configuration): Unit = {
+    super.initialize(name, conf)
+    def gate(key: String) = Option(conf.getInt(key, 0)).filter(_ > 0).map(new CyclicBarrier(_))
+    openGate = gate(OpenPartiesKey)
+    closeGate = gate(ClosePartiesKey)
+    openDelayMs = conf.getLong(OpenDelayKey, 0L)
+    failDataClose = conf.getBoolean(FailDataCloseKey, false)
+  }
+
+  override def open(f: Path, bufferSize: Int): FSDataInputStream = {
+    opens.incrementAndGet()
+    opensPeak.during(openGate) {
+      if (openDelayMs > 0) Thread.sleep(openDelayMs)
+      super.open(f, bufferSize)
+    }
+  }
+
+  override def create(f: Path, overwrite: Boolean, bufferSize: Int, replication: Short,
+      blockSize: Long, progress: Progressable): FSDataOutputStream =
+    gated(f, super.create(f, overwrite, bufferSize, replication, blockSize, progress))
+
+  private def gated(f: Path, out: FSDataOutputStream): FSDataOutputStream =
+    new FSDataOutputStream(new OutputStream {
+      override def write(b: Int): Unit = out.write(b)
+      override def write(b: Array[Byte], off: Int, len: Int): Unit = out.write(b, off, len)
+      override def flush(): Unit = out.flush()
+      override def close(): Unit = closesPeak.during(closeGate) {
+        out.close()
+        if (failDataClose && f.getName.endsWith(".data")) {
+          throw new IOException(s"injected upload failure for ${f.getName}")
+        }
+      }
+    }, null)
+}
+
+object GatedStore {
+  val Scheme = "gatefs"
+  val Uri: URI = URI.create(s"$Scheme:///")
+  val OpenPartiesKey = "fs.gatefs.open.parties"
+  val ClosePartiesKey = "fs.gatefs.close.parties"
+  val OpenDelayKey = "fs.gatefs.open.delay.ms"
+  val FailDataCloseKey = "fs.gatefs.fail.data.close"
+
+  /** Plugin settings rooted at a fresh `gatefs` directory; `store` keys are
+    * the store's own (e.g. [[OpenPartiesKey]]). */
+  def sparkConf(store: (String, String)*): SparkConf = {
+    val root = Files.createTempDirectory("gated-store").toUri.getPath
+    val conf = new SparkConf()
+      .set(CloudShuffleEnv.ROOT_DIR_KEY, s"$Scheme://$root")
+      .set(s"spark.hadoop.fs.$Scheme.impl", classOf[GatedStore].getName)
+    store.foreach { case (k, v) => conf.set(s"spark.hadoop.$k", v) }
+    conf
+  }
+
+  /** Names of every object under an env's store root. */
+  def objects(env: CloudShuffleEnv): Seq[String] = {
+    val walk = Files.walk(Paths.get(URI.create(env.rootDir).getPath))
+    try walk.iterator().asScala.filter(Files.isRegularFile(_)).map(_.getFileName.toString).toSeq
+    finally walk.close()
+  }
+
+  /** Counts calls in progress and keeps the highest count seen. */
+  final class Peak {
+    private val now = new AtomicInteger(0)
+    private val peak = new AtomicInteger(0)
+
+    def get: Int = peak.get()
+
+    def during[T](gate: Option[CyclicBarrier])(body: => T): T = {
+      peak.accumulateAndGet(now.incrementAndGet(), math.max)
+      try {
+        gate.foreach(_.await(10, TimeUnit.SECONDS))
+        body
+      } finally now.decrementAndGet()
+    }
+  }
+}
