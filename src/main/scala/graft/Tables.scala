@@ -16,8 +16,11 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  /** Where fixture `name` lives under `dir`. */
+  def path(dir: String, name: String): String = s"$dir/$name.parquet"
+
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val df = spark.read.parquet(path(dir, name))
     if (name == "events") normalizeEventsTs(df) else df
   }
 

@@ -315,13 +315,13 @@ object Clustering {
   // enough to re-do on EVERY call, so no cross-rep state survives.
   private[graft] def corpusCountFor(s: SparkSession, d: String): Long = {
     val conf = s.sessionState.newHadoopConf()
-    val root = new org.apache.hadoop.fs.Path(s"$d/embeddings.parquet")
+    val root = new org.apache.hadoop.fs.Path(Tables.path(d, "embeddings"))
     val fs = root.getFileSystem(conf)
-    val files =
-      if (fs.getFileStatus(root).isDirectory)
-        fs.listStatus(root).map(_.getPath)
-          .filter(_.getName.endsWith(".parquet")).toSeq
-      else Seq(root)
+    // recursive: a partitioned table keeps its part files in subdirectories
+    val listed = fs.listFiles(root, true)
+    val files = Iterator.continually(listed).takeWhile(_.hasNext).map(_.next().getPath)
+      .filter(_.getName.endsWith(".parquet")).toSeq
+    require(files.nonEmpty, s"no parquet files under $root")
     files.map { p =>
       val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf)
       val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)

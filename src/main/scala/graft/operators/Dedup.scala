@@ -1054,9 +1054,10 @@ object Dedup {
     * always — m is a strictly smaller neighbor), both in canonical
     * orientation. What the dropped distinct cost: bounded RESIDUAL
     * multiplicity instead of global distinctness — a pair can recur only
-    * as a leaf/center coincidence or as one (v, m) emitted from two
-    * groups sharing a min, so ≤ 2 rows per distinct output edge
-    * (|leaves| ≤ |ed|, |centers| ≤ #groups), and every downstream
+    * as a leaf/center coincidence or as one (v, m) emitted from every
+    * group holding both v and the min m, so one edge can recur once per
+    * such group, but the output is ≤ 2·|ed| rows in aggregate
+    * (|leaves| ≤ |ed|, |centers| = #groups ≤ |ed|), and every downstream
     * consumer (largeStar's min-agg, labelsOf, the certificate's
     * inequality count) is duplicate-blind — labels, round count, and
     * convergence are untouched. NorthStarSpec pins label equality on the

@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.Tables
 import graft.Tables.{davg, dsum, dsum6}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
@@ -332,10 +332,12 @@ object Relational {
     // driver-side routing mirror of pctResolveLevel's COMPRESSED route
     // (plain Double compare: a NaN endpoint reads not-compressed here and
     // resolves via the level-1 rank pass — the same depth-ceiling
-    // degradation the r15 shape documented for non-finite endpoints)
+    // degradation the r15 shape documented for non-finite endpoints). A
+    // null endpoint (a bucket of null values) reads like NaN.
+    def bound(r: Row, f: String): Double =
+      if (r.isNullAt(r.fieldIndex(f))) Double.NaN else r.getAs[Double](f)
     val anyCompressed = f0Rows.exists { r =>
-      val lo = r.getAs[Double]("lo"); val hi = r.getAs[Double]("hi")
-      lo < hi && r.getAs[Long]("cnt") > PctSmallBucket
+      bound(r, "lo") < bound(r, "hi") && r.getAs[Long]("cnt") > PctSmallBucket
     }
     // common case (every straddler small — spread distributions at any
     // scale): a depth-1 plan, no refine machinery at all. Compressed

@@ -2,9 +2,8 @@ package org.apache.spark.shuffle.cloud
 
 import java.io.{ByteArrayInputStream, InputStream, SequenceInputStream}
 import java.util.concurrent.LinkedBlockingQueue
-import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger, AtomicLong}
+import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.internal.Logging
 import org.apache.spark.shuffle.ShuffleReadMetricsReporter
 import org.apache.spark.storage.BlockId
 
@@ -30,7 +29,7 @@ import org.apache.spark.storage.BlockId
 private[cloud] class CloudPrefetchIterator(env: CloudShuffleEnv,
     blocks: IndexedSeq[(BlockId, CloudBlockStream, InputStream)],
     readMetrics: ShuffleReadMetricsReporter)
-    extends Iterator[(BlockId, InputStream)] with Logging {
+    extends Iterator[(BlockId, InputStream)] {
 
   private case class Fetched(blockId: BlockId, stream: InputStream, buffered: Long)
 
@@ -43,38 +42,6 @@ private[cloud] class CloudPrefetchIterator(env: CloudShuffleEnv,
   // sub-millisecond waits add up before Spark's millisecond counter sees them
   private var waitNanos = 0L
   private var waitMsReported = 0L
-
-  // --- read-side statistics (reference S3BufferedPrefetchIterator.scala:
-  // 155-186) — the prefetch-side timing calls only run when
-  // env.readStatistics is on
-  private val statsEnabled = env.readStatistics
-  private val startNanos = if (statsEnabled) System.nanoTime() else 0L
-  private val bytesRead = new AtomicLong(0L)
-  private val prefetchNanos = new AtomicLong(0L)
-  private val statsLogged = new AtomicBoolean(false)
-
-  // Early-terminating consumers (limit/take) never reach delivered == total,
-  // so a task-completion listener emits their line; the AtomicBoolean makes
-  // the emission exactly-once whichever path fires first. Outside a task
-  // (unit tests) the drain-side emission is the only path.
-  if (statsEnabled) {
-    val tc = org.apache.spark.TaskContext.get()
-    if (tc != null) tc.addTaskCompletionListener[Unit] { _ => logStatistics() }
-  }
-
-  private def logStatistics(): Unit = {
-    if (!statsLogged.compareAndSet(false, true)) return
-    val totalNanos = math.max(1L, System.nanoTime() - startNanos)
-    val bR = bytesRead.get()
-    val tP = prefetchNanos.get() / 1000000
-    val tW = waitNanos / 1000000
-    val n = math.max(1, total)
-    val mibs = if (tP > 0) bR.toDouble / (tP.toDouble / 1000) / (1024 * 1024) else 0.0
-    logInfo(f"cloud shuffle read stats: $delivered/$total blocks, $bR bytes, " +
-      f"$tW ms waiting (${tW / n} avg), $tP ms prefetching (${tP / n} avg, " +
-      f"${bR / n} block size, $mibs%.1f MiB/s). " +
-      f"Total: ${totalNanos / 1000000} ms - ${100 * waitNanos / totalNanos}%% waiting.")
-  }
 
   // --- memory budget ------------------------------------------------------
   private val budgetLock = new Object
@@ -115,18 +82,8 @@ private[cloud] class CloudPrefetchIterator(env: CloudShuffleEnv,
         acquired = true
         // memory first, THEN the executor-wide permit: a task parked on
         // its memory budget must not hold a fetch slot the rest of the
-        // executor could use. The clock starts INSIDE the permit, so queue
-        // wait does not pollute the MiB/s statistics.
-        val buf = env.withFetchPermit {
-          if (!statsEnabled) readUpTo(wrapped, toBuffer)
-          else {
-            val t0 = System.nanoTime()
-            val b = readUpTo(wrapped, toBuffer)
-            prefetchNanos.addAndGet(System.nanoTime() - t0)
-            bytesRead.addAndGet(b.length.toLong)
-            b
-          }
-        }
+        // executor could use
+        val buf = env.withFetchPermit(readUpTo(wrapped, toBuffer))
         val stream: InputStream =
           if (buf.length.toLong >= ranged.size || isExhausted(wrapped)) {
             wrapped.close()
@@ -194,7 +151,6 @@ private[cloud] class CloudPrefetchIterator(env: CloudShuffleEnv,
         // release the budget once the task thread owns the buffer: the
         // bytes are handed off, not duplicated
         release(f.buffered)
-        if (statsEnabled && delivered == total) logStatistics()
         (f.blockId, f.stream)
     }
   }

@@ -19,7 +19,7 @@ import org.apache.spark.storage.{ShuffleChecksumBlockId, ShuffleDataBlockId, Shu
   */
 class CloudShuffleDataIO(conf: SparkConf) extends ShuffleDataIO {
   override def executor(): ShuffleExecutorComponents = new CloudExecutorComponents(conf)
-  override def driver(): ShuffleDriverComponents = new CloudDriverComponents(conf)
+  override def driver(): ShuffleDriverComponents = new CloudDriverComponents
 }
 
 private[cloud] class CloudExecutorComponents(conf: SparkConf)
@@ -41,20 +41,9 @@ private[cloud] class CloudExecutorComponents(conf: SparkConf)
     Optional.of(new CloudSingleSpillWriter(env, shuffleId, mapId))
 }
 
-private[cloud] class CloudDriverComponents(conf: SparkConf)
-    extends ShuffleDriverComponents with Logging {
+private[cloud] class CloudDriverComponents extends ShuffleDriverComponents with Logging {
 
-  override def initializeApplication(): java.util.Map[String, String] = {
-    if (conf.getBoolean(CloudShuffleEnv.SPARK_FETCH_KEY, defaultValue = false)) {
-      // Spark-native fetch: the fallback block manager must exist in the
-      // master so reducers can resolve blocks relocated to it
-      val env = org.apache.spark.SparkEnv.get
-      org.apache.spark.storage.FallbackStorage.registerBlockManagerIfNeeded(
-        env.blockManager.master, conf,
-        org.apache.spark.deploy.SparkHadoopUtil.get.newConfiguration(conf))
-    }
-    Collections.emptyMap()
-  }
+  override def initializeApplication(): java.util.Map[String, String] = Collections.emptyMap()
 
   override def cleanupApplication(): Unit = {
     val env = CloudShuffleEnv.get()
@@ -160,7 +149,7 @@ private[cloud] class CloudMapOutputWriter(env: CloudShuffleEnv, shuffleId: Int,
 
   override def commitAllPartitions(checksums: Array[Long]): MapOutputCommitMessage = {
     val total = partitionLengths.sum
-    val withIndex = total > 0 || env.checksumEnabled || env.alwaysCreateIndex
+    val withIndex = total > 0 || env.checksumEnabled
     CloudMapOutputWriter.commit(env, shuffleId, mapId, partitionLengths, withIndex, checksums) {
       if (stream != null) stream.close()
       if (total != bytesWritten) {
@@ -186,7 +175,7 @@ private[cloud] object CloudMapOutputWriter {
     * thread, so the task waits out one store latency instead of three.
     * Returns or throws only once every PUT has finished; if any failed, the
     * map's objects are discarded, so a failed commit leaves nothing a
-    * reader or a listing could see. */
+    * reader could see. */
   def commit(env: CloudShuffleEnv, shuffleId: Int, mapId: Long, lengths: Array[Long],
       withIndex: Boolean, checksums: Array[Long])(closeData: => Unit): Unit = {
     implicit val ec: ExecutionContext = CloudShuffleEnv.ioEc

@@ -28,29 +28,12 @@ final class CloudShuffleEnv(val conf: SparkConf, val appId: String) extends Logg
 
   import CloudShuffleEnv._
 
-  /** Spark-native fetch mode: blocks are written in Spark's
-    * FallbackStorage layout and read by Spark's own BlockStoreShuffleReader
-    * through the fallback block manager (reference:
-    * `S3ShuffleManager.scala:82-99`, `S3ShuffleDispatcher.scala:132-141`).
-    * rootDir is then the decommission fallback path by definition. */
-  val useSparkShuffleFetch: Boolean =
-    conf.getBoolean(SPARK_FETCH_KEY, defaultValue = false)
-
-  val rootDir: String = {
-    val d =
-      if (useSparkShuffleFetch)
-        conf.getOption("spark.storage.decommission.fallbackStorage.path")
-          .getOrElse(throw new IllegalArgumentException(
-            s"$SPARK_FETCH_KEY requires spark.storage.decommission.fallbackStorage.path"))
-      else conf.get(ROOT_DIR_KEY, "file:///tmp/cloud-shuffle")
-    if (d.endsWith("/")) d.dropRight(1) else d
-  }
+  val rootDir: String = conf.get(ROOT_DIR_KEY, "file:///tmp/cloud-shuffle").stripSuffix("/")
   val folderPrefixes: Int = math.max(1, conf.getInt(PREFIXES_KEY, 10))
   // The write buffer only coalesces small write() calls ahead of the FS
   // client's own buffering, which sets the PUT granularity; raise it per
   // job for a store client that does not buffer.
   val writeBufferSize: Int = conf.getSizeAsBytes(WRITE_BUFFER_KEY, "1m").toInt
-  val readBufferSize: Int = conf.getSizeAsBytes(READ_BUFFER_KEY, "1m").toInt
   val maxBufferSizeTask: Long = conf.getSizeAsBytes(MAX_BUFFER_TASK_KEY, "128m")
   val maxConcurrencyTask: Int = math.max(1, conf.getInt(MAX_CONCURRENCY_KEY, 10))
   /** Executor-wide cap on concurrent prefetch reads across ALL tasks
@@ -80,11 +63,6 @@ final class CloudShuffleEnv(val conf: SparkConf, val appId: String) extends Logg
   /** Observable permit count (-1 when the cap is off) — diagnostics. */
   def availableFetchPermits: Int =
     executorFetchPermits.map(_.availablePermits()).getOrElse(-1)
-  val prefetchEnabled: Boolean = conf.getBoolean(PREFETCH_KEY, defaultValue = true)
-  /** Per-task read-side statistics (bytes, wait/prefetch time, MiB/s) at
-    * INFO on task completion — reference `S3BufferedPrefetchIterator.scala:
-    * 155-186`. Off by default: zero timing calls on the consumer path. */
-  val readStatistics: Boolean = conf.getBoolean(READ_STATS_KEY, defaultValue = false)
   val cleanupShuffleFiles: Boolean = conf.getBoolean(CLEANUP_KEY, defaultValue = true)
   val relocateMapStatus: Boolean = conf.getBoolean(RELOCATE_KEY, defaultValue = true)
   /** Write-side checksums ride on Spark's own `spark.shuffle.checksum.*`. */
@@ -92,17 +70,6 @@ final class CloudShuffleEnv(val conf: SparkConf, val appId: String) extends Logg
   val checksumAlgorithm: String = conf.get("spark.shuffle.checksum.algorithm", "ADLER32")
   val validateChecksums: Boolean =
     conf.getBoolean(VALIDATE_KEY, defaultValue = false) && checksumEnabled
-  /** false = enumerate blocks by listing `.index` objects on the store
-    * instead of asking the driver's MapOutputTracker (debug fallback,
-    * reference `S3ShuffleReader.scala:182-195`). */
-  val useDriverTracker: Boolean = conf.getBoolean(TRACKER_KEY, defaultValue = true)
-  /** Write the index object even for all-empty map outputs (reference
-    * `alwaysCreateIndex`, `S3ShuffleMapOutputWriter.scala:111`). Forced on
-    * in listing mode: an index-less empty map is invisible to a listing,
-    * and the reader's dup-attempt cross-check would then refuse the read
-    * (listed < registered) on a perfectly healthy shuffle. */
-  val alwaysCreateIndex: Boolean =
-    conf.getBoolean(ALWAYS_INDEX_KEY, defaultValue = false) || !useDriverTracker
 
   private val hadoopConf = SparkHadoopUtil.get.newConfiguration(conf)
   // Hadoop streams default to io.file.buffer.size = 4 KB — every store
@@ -141,14 +108,8 @@ final class CloudShuffleEnv(val conf: SparkConf, val appId: String) extends Logg
 
   def blockPath(blockId: BlockId): Path = {
     val (shuffleId, mapId) = coords(blockId)
-    if (useSparkShuffleFetch) {
-      // Spark's FallbackStorage layout: appId/shuffleId/hash(name)/name
-      val hash = org.apache.spark.network.util.JavaUtils.nonNegativeHash(blockId.name)
-      new Path(s"$rootDir/$appId/$shuffleId/$hash/${blockId.name}")
-    } else {
-      val prefix = (mapId % folderPrefixes + folderPrefixes) % folderPrefixes
-      new Path(s"$rootDir/$prefix/$appId/$shuffleId/${blockId.name}")
-    }
+    val prefix = (mapId % folderPrefixes + folderPrefixes) % folderPrefixes
+    new Path(s"$rootDir/$prefix/$appId/$shuffleId/${blockId.name}")
   }
 
   /** Open a block for ranged reads; FS readahead is disabled because the
@@ -162,8 +123,6 @@ final class CloudShuffleEnv(val conf: SparkConf, val appId: String) extends Logg
 
   def createBlock(blockId: BlockId): FSDataOutputStream =
     fs.create(blockPath(blockId), true)
-
-  def blockExists(blockId: BlockId): Boolean = fs.exists(blockPath(blockId))
 
   def deleteBlock(blockId: BlockId): Unit =
     try fs.delete(blockPath(blockId), false)
@@ -180,38 +139,11 @@ final class CloudShuffleEnv(val conf: SparkConf, val appId: String) extends Logg
     * through several cleanup calls, on the driver and on executors; only
     * the first call in the JVM that registered the shuffle deletes. */
   def deleteShuffle(shuffleId: Int): Unit =
-    if (liveShuffles.remove(shuffleId) && cleanupShuffleFiles) {
-      if (useSparkShuffleFetch) deleteOne(new Path(s"$rootDir/$appId/$shuffleId"))
-      else parallelDelete(p => new Path(s"$rootDir/$p/$appId/$shuffleId"))
-    }
+    if (liveShuffles.remove(shuffleId) && cleanupShuffleFiles)
+      parallelDelete(p => new Path(s"$rootDir/$p/$appId/$shuffleId"))
 
   /** Delete every object this application wrote. */
-  def deleteAppFolders(): Unit =
-    if (useSparkShuffleFetch) deleteOne(new Path(s"$rootDir/$appId"))
-    else parallelDelete(p => new Path(s"$rootDir/$p/$appId"))
-
-  private def deleteOne(p: Path): Unit =
-    try fs.delete(p, true)
-    catch { case e: Exception => logDebug(s"delete $p: $e") }
-
-  /** Map ids of every committed map output of a shuffle, discovered by
-    * listing `.index` objects across all folder prefixes in parallel. */
-  def listMapIds(shuffleId: Int): Seq[Long] = {
-    implicit val ec: ExecutionContext = CloudShuffleEnv.ioEc
-    val pattern = ("shuffle_" + shuffleId + "_(\\d+)_\\d+\\.index").r
-    val fut = Future.sequence((0 until folderPrefixes).map { p =>
-      Future {
-        val dir = new Path(s"$rootDir/$p/$appId/$shuffleId")
-        try fs.listStatus(dir).toSeq.flatMap { st =>
-          st.getPath.getName match {
-            case pattern(mapId) => Some(mapId.toLong)
-            case _              => None
-          }
-        } catch { case _: java.io.FileNotFoundException => Seq.empty }
-      }
-    })
-    Await.result(fut, Duration.Inf).flatten.sorted
-  }
+  def deleteAppFolders(): Unit = parallelDelete(p => new Path(s"$rootDir/$p/$appId"))
 
   private def parallelDelete(path: Int => Path): Unit = {
     implicit val ec: ExecutionContext = CloudShuffleEnv.ioEc
@@ -230,21 +162,15 @@ object CloudShuffleEnv extends Logging {
   val ROOT_DIR_KEY = "spark.shuffle.cloud.rootDir"
   val PREFIXES_KEY = "spark.shuffle.cloud.folderPrefixes"
   val WRITE_BUFFER_KEY = "spark.shuffle.cloud.writeBufferSize"
-  val READ_BUFFER_KEY = "spark.shuffle.cloud.readBufferSize"
   val MAX_BUFFER_TASK_KEY = "spark.shuffle.cloud.maxBufferSizeTask"
   val MAX_CONCURRENCY_KEY = "spark.shuffle.cloud.maxConcurrencyTask"
-  val PREFETCH_KEY = "spark.shuffle.cloud.prefetch"
   val CLEANUP_KEY = "spark.shuffle.cloud.cleanup"
   val RELOCATE_KEY = "spark.shuffle.cloud.relocateMapStatus"
   val VALIDATE_KEY = "spark.shuffle.cloud.checksum.validate"
-  val TRACKER_KEY = "spark.shuffle.cloud.useDriverTracker"
-  val READ_STATS_KEY = "spark.shuffle.cloud.readStatistics"
-  val ALWAYS_INDEX_KEY = "spark.shuffle.cloud.alwaysCreateIndex"
-  val SPARK_FETCH_KEY = "spark.shuffle.cloud.useSparkShuffleFetch"
   val MAX_EXEC_CONCURRENCY_KEY = "spark.shuffle.cloud.maxConcurrencyExecutor"
 
   /** Daemon pool for store requests issued side by side: the per-prefix
-    * deletes and listings, and a commit's index and checksum PUTs. */
+    * deletes and a commit's index and checksum PUTs. */
   private[cloud] val ioEc: ExecutionContext =
     ExecutionContext.fromExecutorService(Executors.newCachedThreadPool { r =>
       val t = new Thread(r, "cloud-shuffle-io")

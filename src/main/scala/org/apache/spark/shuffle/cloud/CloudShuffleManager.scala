@@ -1,5 +1,7 @@
 package org.apache.spark.shuffle.cloud
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.{ShuffleDependency, SparkConf, SparkEnv, TaskContext}
 import org.apache.spark.internal.Logging
 import org.apache.spark.scheduler.MapStatus
@@ -114,23 +116,10 @@ class CloudShuffleManager(conf: SparkConf) extends ShuffleManager with Logging {
       context: TaskContext,
       metrics: ShuffleReadMetricsReporter): ShuffleReader[K, C] = {
     val batch = SortShuffleManager.canUseBatchFetch(startPartition, endPartition, context)
-    if (CloudShuffleEnv.get().useSparkShuffleFetch) {
-      // Spark-native read path: blocks live at the fallback block manager
-      // (MapStatus relocation) and Spark's own reader fetches them through
-      // FallbackStorage from the store
-      val env = SparkEnv.get
-      val blocksByAddress = env.mapOutputTracker.getMapSizesByExecutorId(
-        handle.shuffleId, startMapIndex, endMapIndex, startPartition, endPartition)
-      new BlockStoreShuffleReader(
-        handle.asInstanceOf[BaseShuffleHandle[K, _, C]], blocksByAddress,
-        context, metrics, env.serializerManager, env.blockManager,
-        env.mapOutputTracker, shouldBatchFetch = batch)
-    } else {
-      new CloudShuffleReader(
-        handle.asInstanceOf[BaseShuffleHandle[K, _, C]],
-        startMapIndex, endMapIndex, startPartition, endPartition,
-        context, metrics, shouldBatchFetch = batch)
-    }
+    new CloudShuffleReader(
+      handle.asInstanceOf[BaseShuffleHandle[K, _, C]],
+      startMapIndex, endMapIndex, startPartition, endPartition,
+      context, metrics, shouldBatchFetch = batch)
   }
 
   override def unregisterShuffle(shuffleId: Int): Boolean = {
@@ -144,14 +133,6 @@ class CloudShuffleManager(conf: SparkConf) extends ShuffleManager with Logging {
 
   override def stop(): Unit = {
     shuffleBlockResolver.stop()
-  }
-
-  private implicit class MapAsJava[A, B](m: Map[A, B]) {
-    def asJava: java.util.Map[A, B] = {
-      val j = new java.util.HashMap[A, B]()
-      m.foreach { case (k, v) => j.put(k, v) }
-      j
-    }
   }
 }
 

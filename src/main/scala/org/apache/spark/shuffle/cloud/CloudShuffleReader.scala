@@ -1,10 +1,9 @@
 package org.apache.spark.shuffle.cloud
 
-import java.io.{BufferedInputStream, InputStream}
+import java.io.InputStream
 
 import org.apache.spark.{InterruptibleIterator, SparkEnv, TaskContext}
 import org.apache.spark.internal.{config => SparkConfig}
-import org.apache.spark.internal.Logging
 import org.apache.spark.io.CompressionCodec
 import org.apache.spark.serializer.SerializerManager
 import org.apache.spark.shuffle.{BaseShuffleHandle, ShuffleReader, ShuffleReadMetricsReporter}
@@ -33,7 +32,7 @@ private[cloud] class CloudShuffleReader[K, C](
     context: TaskContext,
     readMetrics: ShuffleReadMetricsReporter,
     shouldBatchFetch: Boolean)
-    extends ShuffleReader[K, C] with Logging {
+    extends ShuffleReader[K, C] {
 
   private val env = CloudShuffleEnv.get()
   private val dep = handle.dependency
@@ -61,58 +60,12 @@ private[cloud] class CloudShuffleReader[K, C](
       throw new IllegalArgumentException(s"unexpected shuffle block $other")
   }
 
-  /** Block enumeration via object-store listing: every committed map
-    * output's `.index` object names the map id; reduce ranges come from
-    * the request. Sizes are unknown until the index is read — empty
-    * partitions drop out at slicing time. Only sound for full map ranges;
-    * partial ranges (AQE skew splits) need the tracker's map indexes.
-    *
-    * Listing cannot tell duplicate committed attempts of the same map
-    * apart (mapId is the task ATTEMPT id): speculation or a stage retry
-    * that commits twice would make reducers silently read the same data
-    * twice — the tracker dedupes to one winner, a listing can't. When the
-    * tracker is reachable (always true in local mode) we cross-check the
-    * listed count against its registered map count and fail loudly on a
-    * mismatch rather than double-read. */
-  private def blocksByListing(): Seq[(BlockId, Long)] = {
-    val wholeMapRange = startMapIndex == 0 && endMapIndex == Int.MaxValue
-    if (!wholeMapRange) {
-      logWarning("cloud shuffle: listing mode cannot serve a partial map " +
-        "range; falling back to the driver tracker for this read")
-      return blocksByTracker()
-    }
-    logWarning("cloud shuffle: enumerating blocks by object-store listing " +
-      "(debug fallback) — duplicate committed task attempts are " +
-      "indistinguishable from distinct maps and would be read twice")
-    val mapIds = env.listMapIds(handle.shuffleId)
-    SparkEnv.get.mapOutputTracker match {
-      case master: org.apache.spark.MapOutputTrackerMaster =>
-        val expected = master.getNumAvailableOutputs(handle.shuffleId)
-        if (expected > 0 && mapIds.length != expected) {
-          throw new org.apache.spark.SparkException(
-            s"cloud shuffle: listing found ${mapIds.length} committed map " +
-              s"outputs for shuffle ${handle.shuffleId} but the tracker " +
-              s"registered $expected — duplicate (speculation/stage-retry) " +
-              "or missing attempts; refusing to double-read. Use the driver " +
-              "tracker enumeration instead.")
-        }
-      case _ => // remote worker: count unknown, the warning above stands
-    }
-    mapIds.flatMap { mapId =>
-      (startPartition until endPartition).map { r =>
-        (ShuffleBlockId(handle.shuffleId, mapId, r): BlockId, 1L)
-      }
-    }
-  }
-
-  private def blocksByTracker(): Seq[(BlockId, Long)] = {
-    val blocksByAddress = SparkEnv.get.mapOutputTracker.getMapSizesByExecutorId(
-      handle.shuffleId, startMapIndex, endMapIndex, startPartition, endPartition)
-    blocksByAddress.flatMap(_._2.map(t => (t._1, t._2))).filter(_._2 > 0).toSeq
-  }
-
   override def read(): Iterator[Product2[K, C]] = {
-    val rawBlocks = if (env.useDriverTracker) blocksByTracker() else blocksByListing()
+    // the tracker holds one committed attempt per map, so a duplicate
+    // attempt left on the store is never read
+    val rawBlocks = SparkEnv.get.mapOutputTracker.getMapSizesByExecutorId(
+      handle.shuffleId, startMapIndex, endMapIndex, startPartition, endPartition)
+      .flatMap(_._2.map(t => (t._1, t._2))).filter(_._2 > 0).toSeq
     val blocks = if (batchFetchAllowed) CloudShuffleReader.mergeContiguous(rawBlocks) else rawBlocks
 
     readMetrics.incRemoteBlocksFetched(blocks.size)
@@ -143,11 +96,7 @@ private[cloud] class CloudShuffleReader[K, C](
         }
       }.toIndexedSeq
 
-    val fetched: Iterator[(BlockId, InputStream)] =
-      if (env.prefetchEnabled) new CloudPrefetchIterator(env, ranged, readMetrics)
-      else ranged.iterator.map { case (id, _, s) =>
-        (id, new BufferedInputStream(s, env.readBufferSize))
-      }
+    val fetched = new CloudPrefetchIterator(env, ranged, readMetrics)
 
     val serializerInstance = dep.serializer.newInstance()
     val recordIter = fetched.flatMap { case (blockId, in) =>

@@ -8,11 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** AQE skew-join splitting THROUGH the cloud shuffle plugin: a skew-split
   * partition is a partial map range (startMapIndex/endMapIndex), so this
-  * exercises CloudShuffleReader's ranged enumeration — the path a plain
-  * full-range shuffle never touches. Runs in BOTH enumeration modes: the
-  * driver tracker serves partial ranges natively; listing mode cannot
-  * (mapId is a task attempt id, not a map index — see SCALE.md §4) and
-  * must fall back to the tracker for exactly those reads, warning loudly.
+  * exercises CloudShuffleReader's ranged enumeration through the
+  * MapOutputTracker — the path a plain full-range shuffle never touches.
   */
 class AqeSkewReadSpec extends AnyFunSuite {
 
@@ -79,23 +76,6 @@ class AqeSkewReadSpec extends AnyFunSuite {
       // guards nothing): AQE marks the shuffle read "skewed" in the plan
       val plan = runSkewedJoin(ss)
       assert(plan.contains("skewed"), s"expected an AQE skew-split read:\n$plan")
-    }
-  }
-
-  test("listing mode: skew-split partial ranges fall back to the tracker, correctly") {
-    // VERDICT r6 item 6: listing mode cannot serve a partial map range —
-    // an object listing yields committed mapIds (task ATTEMPT ids), and
-    // nothing in the store orders attempts by the stage's map INDEX,
-    // which is what [startMapIndex, endMapIndex) addresses. The reader
-    // falls back to the driver tracker for exactly those reads (the
-    // tracker is always reachable where AQE runs — AQE itself needs the
-    // tracker's map statistics to decide a split). This drives the whole
-    // skewed join through listing mode and proves the fallback path
-    // returns bit-correct results while full-range reads stay listed.
-    withSession("spark.shuffle.cloud.useDriverTracker" -> "false") { ss =>
-      val plan = runSkewedJoin(ss)
-      assert(plan.contains("skewed"),
-        s"expected an AQE skew-split read under listing mode:\n$plan")
     }
   }
 }

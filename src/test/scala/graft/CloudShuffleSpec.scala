@@ -14,7 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shuffle round-trip suite — same shapes as the reference's own tests
   * (`S3ShuffleManagerTest.scala`): aggregation, group-by, forced sort
   * shuffle, combineByKey, terasort-like global sort — plus SQL through the
-  * plugin and checksum/prefetch toggles. `file://` substitutes for S3 via
+  * plugin and checksum toggles. `file://` substitutes for S3 via
   * the Hadoop FileSystem abstraction, exactly as the reference tests do.
   */
 class CloudShuffleSpec extends AnyFunSuite with BeforeAndAfterEach {
@@ -57,57 +57,6 @@ class CloudShuffleSpec extends AnyFunSuite with BeforeAndAfterEach {
       new CloudShuffleManager(baseConf("spark.shuffle.push.enabled" -> "true"))
     }
     assert(ex.getMessage.contains("spark.shuffle.push.enabled=false"), ex.getMessage)
-  }
-
-  test("read statistics logged per task when enabled") {
-    import org.apache.logging.log4j.core.LoggerContext
-    import org.apache.logging.log4j.core.appender.AbstractAppender
-    import org.apache.logging.log4j.core.config.Property
-    val captured = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val appender = new AbstractAppender("graft-stats-capture", null, null,
-        false, Property.EMPTY_ARRAY) {
-      override def append(event: org.apache.logging.log4j.core.LogEvent): Unit =
-        captured.add(event.getMessage.getFormattedMessage)
-    }
-    appender.start()
-    def ctx = org.apache.logging.log4j.LogManager.getContext(false)
-      .asInstanceOf[LoggerContext]
-    try {
-      withSc(baseConf(CloudShuffleEnv.READ_STATS_KEY -> "true")) { sc =>
-        // register AFTER the context starts: Spark's logging init replaces
-        // the log4j2 configuration (dropping earlier appenders). Force the
-        // root level too — an earlier suite's setLogLevel("WARN") persists
-        // across suites in the shared test JVM and would filter INFO
-        // before it reaches any appender.
-        sc.setLogLevel("INFO")
-        ctx.getConfiguration.getRootLogger.addAppender(appender,
-          org.apache.logging.log4j.Level.INFO, null)
-        ctx.updateLoggers()
-        sc.parallelize(1 to 1000, 4).map(i => (i % 7, i)).reduceByKey(_ + _).collect()
-        val full = captured.asScala.filter(_.contains("cloud shuffle read stats"))
-        assert(full.nonEmpty, "expected per-task read stats lines at INFO")
-        assert(full.exists(_.contains("MiB/s")), full.take(3).toSeq)
-        // EARLY-TERMINATED consumer (limit/take shape): a repartition read
-        // iterator abandoned after one record never reaches
-        // delivered == total, so the drain-side emission can't fire — the
-        // task-completion listener must emit the line instead (VERDICT r4
-        // item 7). delivered < total in the line proves it came from the
-        // listener path.
-        captured.clear()
-        sc.parallelize(1 to 1000, 4).repartition(2)
-          .mapPartitions(_.take(1)).collect()
-        sc.setLogLevel("WARN") // stop INFO spam for the rest of the suite
-      }
-      val early = captured.asScala.filter(_.contains("cloud shuffle read stats"))
-      assert(early.nonEmpty, "limit-style tasks must still emit read stats")
-      val pat = """(\d+)/(\d+) blocks""".r
-      assert(early.exists(l => pat.findFirstMatchIn(l)
-          .exists(m => m.group(1).toLong < m.group(2).toLong)),
-        s"expected a stats line with delivered < total blocks: ${early.toSeq}")
-    } finally {
-      ctx.getConfiguration.getRootLogger.removeAppender("graft-stats-capture")
-      ctx.updateLoggers()
-    }
   }
 
   test("foldByKey round trip (sort/unsafe path)") {
@@ -305,20 +254,6 @@ class CloudShuffleSpec extends AnyFunSuite with BeforeAndAfterEach {
     }
   }
 
-  test("listing mode: block enumeration via the store instead of the tracker") {
-    withSc(baseConf("spark.shuffle.cloud.useDriverTracker" -> "false")) { sc =>
-      val n = 5000
-      val data = sc.parallelize(0 until n, 6).map(i => (i % 37, i.toLong))
-      val result = data.reduceByKey(_ + _, 5).collect().sortBy(_._1)
-      val expected = (0 until n).groupBy(_ % 37)
-        .map { case (k, vs) => (k, vs.map(_.toLong).sum) }.toSeq.sortBy(_._1)
-      assert(result.toSeq == expected)
-      // a sorted shuffle through listing mode too
-      assert(data.sortByKey(ascending = true, 4).keys.collect().toSeq ==
-        (0 until n).map(_ % 37).sorted)
-    }
-  }
-
   test("executor-wide fetch permit cap: correct results, permits returned") {
     // cap the WHOLE JVM to one concurrent prefetch read: many reduce
     // tasks contend for the single permit and must still drain every
@@ -333,19 +268,23 @@ class CloudShuffleSpec extends AnyFunSuite with BeforeAndAfterEach {
     }
   }
 
-  test("listing mode survives all-empty map outputs with checksums off") {
-    // an empty map writes no data object; without an index it is invisible
-    // to a listing, and the dup-attempt cross-check then refuses the read
-    // (listed < registered) on a healthy shuffle. alwaysCreateIndex is
-    // forced on in listing mode so every committed map stays enumerable
-    // (reference `alwaysCreateIndex`, S3ShuffleMapOutputWriter.scala:111).
-    withSc(baseConf(
-      "spark.shuffle.cloud.useDriverTracker" -> "false",
-      "spark.shuffle.checksum.enabled" -> "false")) { sc =>
-      // 2 records over 6 map partitions: most map outputs are all-empty
+  test("all-empty map outputs with checksums off commit no object") {
+    // with checksums off an all-empty map output writes neither a data nor
+    // an index object: its tracker sizes are all zero, so no reducer asks
+    val root = Files.createTempDirectory("cloud-shuffle-empty").toUri.toString
+    withSc(baseConf("spark.shuffle.checksum.enabled" -> "false",
+      "spark.shuffle.cloud.rootDir" -> root)) { sc =>
+      // 2 records over 6 map partitions: 4 map outputs are all-empty
       val data = sc.makeRDD(Seq((1, 10L), (2, 20L)), 6)
       assert(data.reduceByKey(_ + _, 3).collect().sorted.toSeq ==
         Seq((1, 10L), (2, 20L)))
+      // shuffle_<shuffleId>_<mapId>_0.{data,index}: one of each for the two
+      // non-empty maps, nothing for the other four
+      val names = Files.walk(java.nio.file.Paths.get(new java.net.URI(root))).iterator()
+        .asScala.filter(Files.isRegularFile(_)).map(_.getFileName.toString).toSeq
+      assert(names.size == 4 && names.map(_.split('_')(2)).distinct.size == 2 &&
+        names.count(_.endsWith(".data")) == 2 && names.count(_.endsWith(".index")) == 2,
+        s"expected a data and an index object for each non-empty map only: $names")
     }
   }
 
@@ -369,78 +308,6 @@ class CloudShuffleSpec extends AnyFunSuite with BeforeAndAfterEach {
       val result = data.reduceByKey(_ + _, 5).collect()
       assert(result.map(_._2).sum == 10000L, "retry must neither drop nor double records")
       assert(result.length == 13)
-    }
-  }
-
-  test("task retry under listing mode: aborted attempt leaves no readable output") {
-    // listing mode enumerates the store — an aborted attempt that left its
-    // index object behind would trip the dup-attempt guard; abort must
-    // clean up well enough that the listing sees exactly one attempt
-    val root = Files.createTempDirectory("cloud-shuffle-retry").toUri.toString
-    withSc(baseConf("spark.shuffle.cloud.useDriverTracker" -> "false",
-      "spark.shuffle.cloud.rootDir" -> root).setMaster("local[4, 3]")) { sc =>
-      val data = sc.parallelize(0 until 10000, 6).map { i =>
-        val tc = org.apache.spark.TaskContext.get()
-        if (tc.partitionId() == 2 && tc.attemptNumber() == 0 && i % 1666 == 1000)
-          throw new RuntimeException("injected map failure")
-        (i % 7, 1L)
-      }
-      assert(data.reduceByKey(_ + _, 4).collect().map(_._2).sum == 10000L)
-    }
-  }
-
-  test("listing mode detects duplicate committed map attempts instead of double-reading") {
-    val root = Files.createTempDirectory("cloud-shuffle-dup").toUri.toString
-    withSc(baseConf("spark.shuffle.cloud.useDriverTracker" -> "false",
-      "spark.shuffle.cloud.rootDir" -> root)) { sc =>
-      val data = sc.parallelize(0 until 1000, 4).map(i => (i % 7, 1L))
-      val shuffled = data.reduceByKey(_ + _, 3)
-      assert(shuffled.collect().map(_._2).sum == 1000L)
-      // forge a second committed attempt: copy one map's index object under
-      // a fresh task-attempt id — exactly what a speculative duplicate or
-      // stage-retry commit leaves behind (the tracker dedupes to one
-      // winner; a listing cannot tell them apart)
-      val rootPath = java.nio.file.Paths.get(new java.net.URI(root))
-      val index = Files.walk(rootPath).iterator().asScala
-        .find(_.getFileName.toString.endsWith(".index"))
-        .getOrElse(fail("no index object written"))
-      val pattern = "shuffle_(\\d+)_(\\d+)_(\\d+)\\.index".r
-      val forged = index.getFileName.toString match {
-        case pattern(sh, mapId, rest) =>
-          index.resolveSibling(s"shuffle_${sh}_${mapId.toLong + 1000}_$rest.index")
-      }
-      Files.copy(index, forged)
-      // re-running the reduce re-reads the shuffle through listing mode and
-      // must fail loudly on the attempt-count mismatch, not return doubled
-      // sums
-      val e = intercept[org.apache.spark.SparkException](shuffled.collect())
-      def messages(t: Throwable): Seq[String] =
-        Option(t).toSeq.flatMap(x => x.getMessage +: messages(x.getCause))
-      assert(messages(e).exists(m => m != null && m.contains("refusing to double-read")),
-        s"expected the duplicate-attempt guard, got: $e")
-    }
-  }
-
-  test("useSparkShuffleFetch: Spark-native read path via FallbackStorage") {
-    val root = Files.createTempDirectory("cloud-shuffle-fallback").toUri.toString
-    val conf = baseConf(
-      "spark.shuffle.cloud.useSparkShuffleFetch" -> "true",
-      "spark.storage.decommission.enabled" -> "true",
-      "spark.storage.decommission.shuffleBlocks.enabled" -> "true",
-      "spark.storage.decommission.fallbackStorage.path" -> root)
-    withSc(conf) { sc =>
-      val n = 4000
-      val data = sc.parallelize(0 until n, 5).map(i => (i % 23, i.toLong))
-      val result = data.foldByKey(0L, 4)(_ + _).collect().sortBy(_._1)
-      val expected = (0 until n).groupBy(_ % 23)
-        .map { case (k, vs) => (k, vs.map(_.toLong).sum) }.toSeq.sortBy(_._1)
-      assert(result.toSeq == expected)
-      // blocks must have landed in the FallbackStorage layout
-      val rootPath = java.nio.file.Paths.get(new java.net.URI(root))
-      val files = Files.walk(rootPath).iterator()
-      var sawData = false
-      files.forEachRemaining(p => if (p.toString.endsWith(".data")) sawData = true)
-      assert(sawData, "expected data blobs under the fallback path")
     }
   }
 

@@ -357,4 +357,12 @@ class ClusteringSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"capped clique split into clusters ${out.map(_._3).toSet}")
     edges.unpersist()
   }
+
+  test("corpusCountFor counts every row of a partitioned embeddings table") {
+    // a partitioned write nests the part files one directory down
+    val dir = java.nio.file.Files.createTempDirectory("corpus-count").toString
+    spark.range(1000).select(col("id").as("vec_id"), (col("id") % 3).as("part"))
+      .write.partitionBy("part").parquet(Tables.path(dir, "embeddings"))
+    assert(Clustering.corpusCountFor(spark, dir) == 1000L)
+  }
 }

@@ -401,6 +401,38 @@ class SketchAndPlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("q35 routing: a located bucket with null bounds reads as not compressed") {
+    // group N holds only null values, so its one histogram bucket has null
+    // bmin/bmax and every N target locates a frontier row with null
+    // bounds. Group O is compressed by an outlier, so the plan-time routing
+    // reads both kinds of row in one collect and must pick the deep plan.
+    val ss = spark
+    import ss.implicits._
+    val R = graft.operators.Relational
+    val o = ss.range(10000).select(lit("O").as("g"),
+      when(col("id") === 0, lit(1e12)).otherwise(col("id").cast("double") / 7.0).as("x"))
+    val rows = o.unionByName(
+      ss.range(5).select(lit("N").as("g"), lit(null).cast("double").as("x")))
+    val cnts = rows.groupBy("g").agg(count(lit(1)).as("n_rows"))
+    val ps = Seq(0.5 -> "p50", 0.9 -> "p90")
+    val f0 = R.pctFrontier0(R.pctLocate(rows, cnts, col("x"), ps, "g").located, "g")
+    assert(f0.filter(col("g") === "N" && col("lo").isNull && col("hi").isNull).count() == 4)
+    assert(f0.filter(col("g") === "O" && col("lo") < col("hi") &&
+      col("cnt") > R.PctSmallBucket).count() > 0, "group O must be compressed")
+    val got = R.exactPcts(rows, cnts, col("x"), ps, "g").collect()
+      .map(r => r.getString(0) -> r).toMap
+    assert(got.get("N").forall(r => r.isNullAt(1) && r.isNullAt(2)),
+      s"an all-null group has no percentile value: ${got.get("N")}")
+    val xs = o.select(col("x")).as[Double].collect().sorted
+    ps.zipWithIndex.foreach { case ((p, name), i) =>
+      val pos = (xs.length - 1) * p
+      val frac = pos - math.floor(pos)
+      val want = if (frac == 0) xs(pos.toInt)
+        else xs(math.floor(pos).toInt) * (1.0 - frac) + xs(math.ceil(pos).toInt) * frac
+      assert(got("O").getDouble(i + 1) == want, s"$name: got ${got("O")}, want $want")
+    }
+  }
+
   test("ss04: IVF cell assignment is map-side (no corpus×k shuffle, single window)") {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
     import org.apache.spark.sql.execution.window.WindowExec
@@ -802,8 +834,12 @@ class SketchAndPlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     import org.apache.spark.sql.execution
     val sq = spark
     import sq.implicits._
-    val e = Seq((5L, 1L), (4L, 1L), (5L, 4L), (3L, 2L), (6L, 2L), (9L, 8L),
-        (5L, 1L), (7L, 2L), (7L, 3L))
+    // nodes 20-24 each join 11-15, which join nothing else: after the
+    // large star each of the five groups 20-24 holds 11-15, so all five
+    // share the min 11 and each emits the same four leaves (12-15, 11)
+    val shared = for (g <- 20L to 24L; m <- 11L to 15L) yield (g, m)
+    val e = (Seq((5L, 1L), (4L, 1L), (5L, 4L), (3L, 2L), (6L, 2L), (9L, 8L),
+        (5L, 1L), (7L, 2L), (7L, 3L)) ++ shared)
       .toDF("u", "v").localCheckpoint()
     val one = graft.operators.Dedup.smallStarRound(
       graft.operators.Dedup.largeStarRound(e))
@@ -828,10 +864,11 @@ class SketchAndPlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     val got = one.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got == ref, s"fused small-star emits a different edge set:\n" +
       s"got $got\nref $ref")
-    // the residual-multiplicity bound the fusion's comment claims
+    // the residual-multiplicity bound the fusion's comment claims: at most
+    // 2·|ed| rows in aggregate, ed being the distinct large-star output
     val rows = one.collect().length
-    assert(rows <= 2 * ref.size,
-      s"multiplicity bound violated: $rows rows for ${ref.size} edges")
+    val ed = ls.distinct().count()
+    assert(rows <= 2 * ed, s"multiplicity bound violated: $rows rows for $ed input edges")
   }
 
   test("dd16/tx10: one pinned gram pass — splittable count join, no gram window") {
