@@ -14,7 +14,7 @@ object SparkEntry {
     operators.Relational.queries("q01_pricing_summary")(spark, "/root/testdata/sf0.001")
 
   /** The operator modules, by name — the single list every aggregate
-    * below (and tools like KeyCheck) derives from, so adding a module in
+    * below (and SparkEntrySpec) derives from, so adding a module in
     * one place wires it everywhere. */
   val modules: Seq[(String, (Map[String, (SparkSession, String) => DataFrame],
       Map[String, String]))] = Seq(
@@ -34,7 +34,7 @@ object SparkEntry {
   /** Queries that run a streaming drain (state store + checkpoint I/O) —
     * correctness surface, excluded from Bench. Derived from the
     * StreamingQueries module plus the `_stream_` naming convention that
-    * marks streaming drains living in other modules (pp02); KeyCheck
+    * marks streaming drains living in other modules (pp02); SparkEntrySpec
     * asserts the module's own keys all follow the convention so it
     * cannot silently lapse. */
   def streamingQueries: Set[String] =

@@ -210,11 +210,12 @@ object Clustering {
   // that kills cl04's Θ(n²)-candidate eps-graph. The gated entry pins the
   // sizing formula's values AT THE GATE FIXTURE (knnBitsFor(500) = 5 —
   // the oracle's plane literals must be static); the uncapped probe lane
-  // evaluates knnBitsFor at each tier's corpus count. tools/Cl05Tune
-  // sweep at sf0.01: 16×5 has edge recall 271/271 and FULL role +
-  // co-cluster agreement with cl03's exact tier; the fixture's clusters
-  // hang on single boundary edges (one lost edge at 16×6 cut co-cluster
-  // recall to 0.81), so the gate ships the recall-1 point of the sweep.
+  // evaluates knnBitsFor at each tier's corpus count. The (tables, bits)
+  // sweep at sf0.01 (since-deleted probe, source at commit 6eeefdb): 16×5
+  // has edge recall 271/271 and FULL role + co-cluster agreement with
+  // cl03's exact tier; the fixture's clusters hang on single boundary
+  // edges (one lost edge at 16×6 cut co-cluster recall to 0.81), so the
+  // gate ships the recall-1 point of the sweep.
   private[graft] val Cl05Tables = 16
   private[graft] val Cl05Bits = 5
   private[graft] val Cl05K = 10
@@ -428,7 +429,8 @@ object Clustering {
     // 0.614 (vs ≈0.80 in dd13's cos-0.8 regime), so cl04 runs 48 tables
     // × 10 bits where dd13 runs 6×16 — boundary-pair recall 1−(1−P₁)⁴⁸ ≈
     // 0.94 for P₁ = p¹⁰+10p⁹(1−p); measured on the sf0.01 fixture
-    // (tools/Cl04Tune, edges hug the boundary: 212 of 271 in cos
+    // (since-deleted sweep, source at commit 6eeefdb; ClusteringSpec pins
+    // the config; edges hug the boundary: 212 of 271 in cos
     // [0.35, 0.40)): recall 257/271 = 0.948 with 42% of all pairs as
     // candidates. Exact-cosine verify decimates candidates in codegen
     // before the distinct; everything downstream consumes only the

@@ -152,7 +152,7 @@ object Dedup {
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   private[graft] val IngestSplitId = 50L  // doc_id < 50 = arriving stream
-  // dd04's tuned MinHash blocking (tools/LshTune) — shared with dd14
+  // dd04's tuned MinHash blocking (band sweep below) — shared with dd14
   private val MhPerms = 160; private val MhBands = 20
   private val MhRows = MhPerms / MhBands
   private val PbMod = 16
@@ -417,8 +417,9 @@ object Dedup {
     // (band, bucket); verification re-checks exact Jaccard so false
     // positives drop out. Runs on the FULL table.
     //
-    // Tuning (measured on the fixtures, see tools/LshTune): the corpus has
-    // ~100× more pairs at jac 0.5-0.9 than above the 0.9 threshold, so
+    // Tuning (measured on the fixtures by a since-deleted band sweep;
+    // source at commit 6eeefdb): the corpus has ~100× more pairs at jac
+    // 0.5-0.9 than above the 0.9 threshold, so
     // 4-row bands (collision P=jac⁴) drown verification in candidates;
     // 8-row bands cut jac=0.5 collisions 16× while 20 bands keep per-pair
     // recall ≥ 1-1.3e-5 at jac=0.9 (<1 expected miss on the fixtures' 17k
@@ -486,8 +487,9 @@ object Dedup {
     // prefix element. Tokens are ordered by ASCENDING GLOBAL FREQUENCY
     // (the canonical AllPairs order): prefixes then hold each set's
     // rarest tokens, so blocking buckets are as small as the corpus
-    // allows. Measured via tools/PrefixTune: 29.2k candidates at sf0.01
-    // vs 29.4k under hash order (2.074M vs 2.087M at sf0.1) — a ~1% gain
+    // allows. Measured (since-deleted probe, source at commit 6eeefdb):
+    // 29.2k candidates at sf0.01 vs 29.4k under hash order (2.074M vs
+    // 2.087M at sf0.1) — a ~1% gain
     // here because the fixtures' vocabulary is near-uniform; on Zipfian
     // real-corpus vocabularies this ordering is the difference between
     // stop-word buckets of O(corpus) and rare-word buckets of O(1), which
@@ -545,8 +547,9 @@ object Dedup {
     // NorthStarSpec. No SQL oracle (hyperplane hashes aren't expressible
     // in DuckDB); driver records a rows-only check.
     //
-    // Tuning (measured via tools/VecLshTune at sf0.1): true pairs hug the
-    // 0.4 threshold (906/920 in cos [0.4, 0.5)), where per-hyperplane sign
+    // Tuning (measured at sf0.1 by a since-deleted sweep; source at commit
+    // 6eeefdb): true pairs hug the 0.4 threshold (906/920 in cos
+    // [0.4, 0.5)), where per-hyperplane sign
     // agreement is p ≈ 0.63 vs 0.5 for random pairs — each added bit cuts
     // candidates by only (0.5/0.63) ≈ 0.79× at fixed recall, so sub-1%
     // candidate volume is out of reach at this threshold (it IS reachable
@@ -850,26 +853,18 @@ object Dedup {
     * Factored for the skew stress spec, which measures exactly that gap
     * on a planted duplicate bomb. */
   private[graft] def clusterTableOf(docsDf: DataFrame,
-      sizesViaWindow: Boolean = true,
-      componentsViaStar: Boolean = true): DataFrame = {
+      sizesViaWindow: Boolean = true): DataFrame = {
     val (groups, repPairs) = prefixRepPairsOf(docsDf)
-    val reps = groups.select(col("rep_id"))
-    // Components default to star contraction (r12, VERDICT r11 item 2):
-    // this table is the PRODUCTION artifact every downstream dedup
-    // consumer joins, so its producer must carry the worst graph a 100 TB
-    // corpus can ship — an adversarial long-chain cluster makes
-    // propagateLabels' round count O(diameter/4) cluster-wide barriers,
-    // where starComponents contracts in O(log n) rounds (NorthStarSpec
-    // measures the crossover on a 60-node path: 3 star rounds vs 15
-    // label-prop rounds). On the fixtures' near-clique graphs both
-    // converge in ≤3 rounds and emit IDENTICAL min-labels (dd15 ==
-    // dd09's oracle), so the flip costs nothing here and removes the
-    // diameter wall at scale. Label propagation stays one flag away as
-    // dd09's own operator and for diameter-bounded corpora where its
-    // 4-hops-per-action economy wins.
-    val labels =
-      if (componentsViaStar) starComponents(reps, repPairs)
-      else propagateLabels(reps, repPairs)
+    // Components come from star contraction: this table is the PRODUCTION
+    // artifact every downstream dedup consumer joins, so its producer must
+    // carry the worst graph a 100 TB corpus can ship — an adversarial
+    // long-chain cluster makes label propagation's round count
+    // O(diameter/4) cluster-wide barriers, where starComponents contracts
+    // in O(log n) rounds (NorthStarSpec measures the crossover on a
+    // 60-node path: 3 star rounds vs 15 label-prop rounds). On the
+    // fixtures' near-clique graphs both emit IDENTICAL min-labels (dd15 ==
+    // dd09's oracle).
+    val labels = starComponents(groups.select(col("rep_id")), repPairs)
     val m = groups.select(col("rep_id"), explode(col("members")).as("doc_id"))
       .join(labels, "rep_id")
     // Cluster size via a window count: the membership table shuffles on
@@ -960,9 +955,10 @@ object Dedup {
         .join(l.select(col("rep_id").as("v"), col("comp_id").as("lv")), "v")
         .filter(col("lu") =!= col("lv")).count()
       // 2 blind rounds = 8 hops of label travel; every fixture's rep graph
-      // has diameter <= 8 (measured via tools/Dd09Probe: labels stable
-      // after round 2 at sf0.1, earlier at smaller sf). Lazy checkpoints:
-      // the certificate count below is the loop's ONLY action — it
+      // has diameter <= 8 (labels stable after round 2 at sf0.1, earlier
+      // at smaller sf; measured by a since-deleted probe, source at commit
+      // 6eeefdb). Lazy checkpoints: the certificate count below is the
+      // loop's ONLY action — it
       // materializes both rounds' label RDDs in one job instead of three.
       labels = step(step(labels).localCheckpoint(false)).localCheckpoint(false)
       var v = violations(labels)
@@ -1111,10 +1107,11 @@ object Dedup {
     var labels: DataFrame = null
     // certificate CADENCE (r15, dd09's blind-round discipline applied
     // here): every measured fixture graph converges in 3–5 contractions
-    // (dd15's rep graph 3, the DBSCAN eps core graphs 5 — tools/
-    // StarRounds), so the loop runs 3 contractions blind, certifies, then
-    // re-certifies every 2. Each contraction stays lazily checkpointed —
-    // plan depth is bounded per contraction exactly as before — and the
+    // (dd15's rep graph 3, the DBSCAN eps core graphs 5; since-deleted
+    // probe, source at commit 6eeefdb), so the loop runs 3 contractions
+    // blind, certifies, then re-certifies every 2. Each contraction stays
+    // lazily checkpointed — plan depth is bounded per contraction exactly
+    // as before — and the
     // certificate count is the only action, materializing every
     // contraction since the previous check in one job chain. vs r14
     // (checkpoint + certify every contraction): dd15 3 rounds = 6 actions

@@ -667,7 +667,7 @@ object Pipelines {
       val target = Seq("src0", "src1", "src2", "src3")
       val docs = Tables.load(s, d, "documents")
         .select(col("doc_id"), col("source"), tokens(col("text")).as("toks"))
-      // pin the gram table (r16 — the round's JobProfile showed the
+      // pin the gram table (r16 — a per-job profile showed the
       // explode + per-bigram md5 kernel as pp14's two single-task ~0.6 s
       // jobs, and `grams` is referenced twice: the weights aggregation
       // AND the per-doc scoring probe each re-ran the corpus gram pass).

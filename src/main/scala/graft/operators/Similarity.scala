@@ -319,8 +319,8 @@ object Similarity {
     * index (top-20 among verified candidates), the lexical lane reads
     * the term-bucketed postings index, RRF fuses. Per-request work is
     * proportional to the REQUEST on both lanes. Factored so the batch
-    * entry (ss14), the per-trigger streaming entry (ss15), and the
-    * serve-batch-size probe (tools/Ss15BatchProbe) run ONE code path. */
+    * entry (ss14) and the per-trigger streaming entry (ss15) run ONE
+    * code path. */
   private[graft] def hybridServeIndexed(s: SparkSession, d: String,
       qBatch: DataFrame): DataFrame = {
     val vec = serveLshTopK(s, d,

@@ -595,8 +595,9 @@ object StreamingQueries {
       // the id-ordering conjunct sits INSIDE the join condition: Spark's
       // state-constraint extractor only mines the time conjuncts for the
       // state watermark and carries non-time predicates as residuals
-      // (re-verified on 4.1.2 via tools/StreamJoinProbe — r2 shipped a
-      // both-orders emission believing this threw; it does not in this
+      // (re-verified on 4.1.2 by a since-deleted probe, source at commit
+      // 6eeefdb — r2 shipped a both-orders emission believing this threw;
+      // it does not in this
       // shape), so each unordered pair is emitted exactly once and no
       // self-pairs exist: half the join output of the r2 formulation at
       // identical state retention (the ±1h window is symmetric).

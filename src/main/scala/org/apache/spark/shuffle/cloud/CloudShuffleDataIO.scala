@@ -84,7 +84,7 @@ private[cloud] class CloudMapOutputWriter(env: CloudShuffleEnv, shuffleId: Int,
       val raw = env.createBlock(
         ShuffleDataBlockId(shuffleId, mapId, CloudShuffleManager.NOOP_REDUCE_ID))
       stream = new MeteredOutputStream(
-        new BufferedOutputStream(raw, env.writeBufferSize),
+        new BufferedOutputStream(raw, CloudShuffleEnv.WRITE_BUFFER_SIZE),
         s"shuffle $shuffleId map $mapId")
     }
     stream
@@ -228,11 +228,11 @@ private[cloud] class CloudSingleSpillWriter(env: CloudShuffleEnv, shuffleId: Int
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     } else {
       val out = new MeteredOutputStream(
-        new BufferedOutputStream(env.createBlock(blockId), env.writeBufferSize),
+        new BufferedOutputStream(env.createBlock(blockId), CloudShuffleEnv.WRITE_BUFFER_SIZE),
         s"shuffle $shuffleId map $mapId (single spill)")
       val in = Files.newInputStream(mapSpillFile.toPath)
       try {
-        val buf = new Array[Byte](env.writeBufferSize)
+        val buf = new Array[Byte](CloudShuffleEnv.WRITE_BUFFER_SIZE)
         var n = in.read(buf)
         while (n >= 0) {
           if (n > 0) out.write(buf, 0, n)

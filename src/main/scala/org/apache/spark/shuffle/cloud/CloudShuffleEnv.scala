@@ -30,10 +30,6 @@ final class CloudShuffleEnv(val conf: SparkConf, val appId: String) extends Logg
 
   val rootDir: String = conf.get(ROOT_DIR_KEY, "file:///tmp/cloud-shuffle").stripSuffix("/")
   val folderPrefixes: Int = math.max(1, conf.getInt(PREFIXES_KEY, 10))
-  // The write buffer only coalesces small write() calls ahead of the FS
-  // client's own buffering, which sets the PUT granularity; raise it per
-  // job for a store client that does not buffer.
-  val writeBufferSize: Int = conf.getSizeAsBytes(WRITE_BUFFER_KEY, "1m").toInt
   val maxBufferSizeTask: Long = conf.getSizeAsBytes(MAX_BUFFER_TASK_KEY, "128m")
   val maxConcurrencyTask: Int = math.max(1, conf.getInt(MAX_CONCURRENCY_KEY, 10))
   /** Executor-wide cap on concurrent prefetch reads across ALL tasks
@@ -64,7 +60,6 @@ final class CloudShuffleEnv(val conf: SparkConf, val appId: String) extends Logg
   def availableFetchPermits: Int =
     executorFetchPermits.map(_.availablePermits()).getOrElse(-1)
   val cleanupShuffleFiles: Boolean = conf.getBoolean(CLEANUP_KEY, defaultValue = true)
-  val relocateMapStatus: Boolean = conf.getBoolean(RELOCATE_KEY, defaultValue = true)
   /** Write-side checksums ride on Spark's own `spark.shuffle.checksum.*`. */
   val checksumEnabled: Boolean = conf.getBoolean("spark.shuffle.checksum.enabled", defaultValue = true)
   val checksumAlgorithm: String = conf.get("spark.shuffle.checksum.algorithm", "ADLER32")
@@ -161,13 +156,16 @@ final class CloudShuffleEnv(val conf: SparkConf, val appId: String) extends Logg
 object CloudShuffleEnv extends Logging {
   val ROOT_DIR_KEY = "spark.shuffle.cloud.rootDir"
   val PREFIXES_KEY = "spark.shuffle.cloud.folderPrefixes"
-  val WRITE_BUFFER_KEY = "spark.shuffle.cloud.writeBufferSize"
   val MAX_BUFFER_TASK_KEY = "spark.shuffle.cloud.maxBufferSizeTask"
   val MAX_CONCURRENCY_KEY = "spark.shuffle.cloud.maxConcurrencyTask"
   val CLEANUP_KEY = "spark.shuffle.cloud.cleanup"
-  val RELOCATE_KEY = "spark.shuffle.cloud.relocateMapStatus"
   val VALIDATE_KEY = "spark.shuffle.cloud.checksum.validate"
   val MAX_EXEC_CONCURRENCY_KEY = "spark.shuffle.cloud.maxConcurrencyExecutor"
+
+  /** Buffer in front of every data PUT. It only coalesces small write()
+    * calls ahead of the FS client's own buffering, which sets the PUT
+    * granularity. */
+  val WRITE_BUFFER_SIZE: Int = 1 << 20
 
   /** Daemon pool for store requests issued side by side: the per-prefix
     * deletes and a commit's index and checksum PUTs. */

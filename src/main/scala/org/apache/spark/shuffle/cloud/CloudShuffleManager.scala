@@ -52,14 +52,13 @@ class CloudShuffleManager(conf: SparkConf) extends ShuffleManager with Logging {
         "spark.shuffle.push.enabled=false (merged-block IDs have no " +
         "object-store path, and server-side merge adds nothing when " +
         "reducers already read contiguous ranges from the store)")
-    // With MapStatus relocation every map output advertises the fallback
+    // MapStatus relocation makes every map output advertise the fallback
     // block manager's fake host, which reduce locality then turns into a
     // preferred location no executor can ever satisfy. Under delay
     // scheduling (spark.locality.wait > 0) such a task can starve
     // INDEFINITELY once no other task-finish event re-offers resources.
     // Object-store shuffle has no reduce locality to exploit anyway.
-    if (conf.getBoolean(CloudShuffleEnv.RELOCATE_KEY, defaultValue = true) &&
-        conf.getBoolean("spark.shuffle.reduceLocality.enabled", defaultValue = true)) {
+    if (conf.getBoolean("spark.shuffle.reduceLocality.enabled", defaultValue = true)) {
       logWarning("cloud shuffle: spark.shuffle.reduceLocality.enabled=true with " +
         "MapStatus relocation makes the fallback host every reducer's preferred " +
         "location and can DEADLOCK delay scheduling on an idle cluster; set " +
@@ -107,8 +106,7 @@ class CloudShuffleManager(conf: SparkConf) extends ShuffleManager with Logging {
         new SortShuffleWriter(other, mapId, context, metrics,
           shuffleExecutorComponents)
     }
-    if (CloudShuffleEnv.get().relocateMapStatus) new RelocatingShuffleWriter(base)
-    else base
+    new RelocatingShuffleWriter(base)
   }
 
   override def getReader[K, C](handle: ShuffleHandle, startMapIndex: Int,

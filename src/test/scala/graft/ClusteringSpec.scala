@@ -228,7 +228,7 @@ class ClusteringSpec extends AnyFunSuite with BeforeAndAfterAll {
     // VERDICT r12 item 2: the 100-TB DBSCAN pair search must carry a
     // MEASURED recall bound at eps=0.35 — dd13's blocking is tuned for
     // cos >= 0.8 and its recall down here was unproven prose. cl04's
-    // 48x10 radius-1 config (tools/Cl04Tune sweep) is asserted against
+    // 48x10 radius-1 config (chosen by a since-deleted sweep) is asserted against
     // the exact graph; deterministic per fixture, so the bounds pin the
     // shipped config rather than estimate it.
     import graft.operators.{Clustering, Dedup}

@@ -2,8 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** CI twin of tools.KeyCheck: the SparkEntry contract invariants, enforced
-  * by `sbt test` so a drift cannot wait for someone to run the dev main.
+/** The SparkEntry contract invariants, enforced by `sbt test` so a drift
+  * fails CI.
   * No SparkSession needed — these are pure map-shape checks over the
   * module registry, so the suite costs milliseconds. */
 class SparkEntrySpec extends AnyFunSuite {
