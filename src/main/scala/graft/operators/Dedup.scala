@@ -86,7 +86,7 @@ object Dedup {
       .filter(col("jac") >= 0.9)
       .distinct() // a pair can share several prefix tokens
       // the VERIFIED pair set feeds both dd07's doc-pair expansion and
-      // dd09's component loop (which re-reads it as both edge directions):
+      // dd09's components:
       // persist it like the group table — the CacheManager's plan matching
       // then shares one materialization across the ops in a session, and a
       // production dedup pipeline would checkpoint this table regardless
@@ -143,13 +143,6 @@ object Dedup {
       .select(col("a_id"), col("b_id"), round(col("cos"), 6).as("cos_r"))
       .distinct()
   }
-
-  // dd14's index: the corpus MinHash band table materialized ONCE per
-  // fixture, partitioned by a packed (band, bucket mod 16) key — 320
-  // directories, so an arriving batch's probe reads touch only its
-  // bands' buckets (ss08's index discipline, applied to dedup).
-  private val minhashIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   private[graft] val IngestSplitId = 50L  // doc_id < 50 = arriving stream
   // dd04's tuned MinHash blocking (band sweep below) — shared with dd14
@@ -218,8 +211,14 @@ object Dedup {
         col("bk.band").as("band"), col("bk.bucket").as("bucket"))
       .withColumn("pb", (col("band") * PbMod + pmod(col("bucket"), lit(PbMod))).cast("int"))
 
+  /** dd14's index: the corpus MinHash band table materialized ONCE per
+    * documents content, partitioned by a packed (band, bucket mod 16) key
+    * — 320 directories, so an arriving batch's probe reads touch only its
+    * bands' buckets (ss08's index discipline, applied to dedup). The key
+    * covers `documents`, not the index's own files, so the arrivals
+    * [[appendArrivalsOnce]] adds never trigger a rebuild. */
   private[graft] def minhashIndexDir(s: SparkSession, d: String): String =
-    Materialized.dir(minhashIndexCache, "graft-dd14-index", d) { dir =>
+    Materialized.dir(s, "dd14-index", Tables.path(d, "documents")) { dir =>
       bandRows(docs(s, d).filter(col("doc_id") >= IngestSplitId))
         .write.partitionBy("pb").mode("overwrite").parquet(dir)
     }
@@ -323,17 +322,13 @@ object Dedup {
     rewritten
   }
 
-  // pp03's input: the dd12 cluster table materialized ONCE per fixture
-  // (build once, consume many — ss08's index discipline). A production
-  // prep pipeline joins the checkpointed dedup artifact; it does not
-  // re-run connected components per consuming job.
-  private val clusterTableCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Path of the materialized (doc_id, rep_id, comp_id, n_members)
-    * cluster table for fixture `d`, building it on first use. */
+    * cluster table for fixture `d`, built once per documents content
+    * (build once, consume many — ss08's index discipline): pp03 and a
+    * production prep pipeline join the checkpointed dedup artifact; they
+    * do not re-run connected components per consuming job. */
   private[operators] def clusterTableDir(s: SparkSession, d: String): String =
-    Materialized.dir(clusterTableCache, "graft-dd12-clusters", d) { dir =>
+    Materialized.dir(s, "dd12-clusters", Tables.path(d, "documents")) { dir =>
       clusterTableOf(docs(s, d))
         .write.mode("overwrite").parquet(dir)
     }
@@ -620,37 +615,17 @@ object Dedup {
     // near-dup pair set (dd07's lossless edges) into clusters and assign
     // every document its cluster id (min doc_id reachable; singletons map
     // to themselves) — the step an actual corpus dedup needs after pair
-    // generation (keep one doc per cluster, not one per pair). Iterative
-    // min-label propagation over hash joins: each round every node adopts
-    // the smallest label among itself and its neighbors; converges in
-    // O(component diameter) rounds (near-dup clusters are near-cliques,
-    // so 2-3 rounds on real corpora). The driver loop only counts changed
-    // labels per round — the label table itself never leaves the cluster
-    // (this is how GraphX/GraphFrames run CC too; at 10⁹+ nodes the
-    // alternating large-star/small-star variant halves the rounds, same
-    // join shape). Exact oracle: DuckDB recursive-CTE reachability.
-    "dd09_dup_components" -> ((s, d) => {
-      val (groups, labels) = repComponents(s, d)
-      groups.select(col("rep_id"), explode(col("members")).as("doc_id"))
-        .join(labels, "rep_id")
-        .select(col("doc_id"), col("comp_id"))
-    }),
+    // generation (keep one doc per cluster, not one per pair). Components
+    // come from [[starComponents]] on the rep graph: the label table never
+    // leaves the cluster, and the round count is O(log n) whatever the
+    // component diameter. Exact oracle: DuckDB recursive-CTE reachability.
+    "dd09_dup_components" -> ((s, d) => repComponents(s, d)),
 
-    // The same duplicate-cluster components via alternating large-star /
-    // small-star contraction (see [[starComponents]]) — the O(log n)-
-    // round production path for graphs whose DIAMETER does not stay
-    // small (dd09's label propagation pays a round per 4 hops of
-    // diameter; a 10⁹-node chain-shaped near-dup graph would need 10⁸
-    // cluster-wide barriers there vs ~30 here). Identical output to
-    // dd09 by construction — the oracle is dd09's recursive-CTE
-    // reachability, verbatim.
-    "dd15_cc_star" -> ((s, d) => {
-      val (groups, repPairs) = prefixRepPairs(s, d)
-      val labels = starComponents(groups.select(col("rep_id")), repPairs)
-      groups.select(col("rep_id"), explode(col("members")).as("doc_id"))
-        .join(labels, "rep_id")
-        .select(col("doc_id"), col("comp_id"))
-    }),
+    // dd09's components under the name of the algorithm that computes
+    // them (alternating large-star / small-star contraction, see
+    // [[starComponents]]): the same body, so the same rows — the oracle
+    // is dd09's recursive-CTE reachability, verbatim.
+    "dd15_cc_star" -> ((s, d) => repComponents(s, d)),
 
     // The TERMINAL dedup artifact (VERDICT r4 item 3, closing SCALE.md's
     // "Known limits" caveat): the cluster/group TABLE, not the pair list.
@@ -661,12 +636,12 @@ object Dedup {
     // representative (rep_id), its near-dup cluster id (comp_id), and the
     // cluster size — O(n) output at every scale, and exactly the table a
     // "keep one per cluster" filter or a dedup-ratio report consumes.
-    // Shape on top of dd09's label propagation: membership join + one
-    // hash agg + one AQE-broadcastable size join. Exact DuckDB oracle
-    // (recursive-CTE reachability + counts).
+    // Shape on top of dd09's components: membership join + one window
+    // count (see [[clusterTableOf]]). Exact DuckDB oracle (recursive-CTE
+    // reachability + counts).
     //
-    // SERVED from the per-fixture materialized table (VERDICT r9 item 3):
-    // the component loop is deterministic per fixture dir, and a
+    // SERVED from the materialized table ([[clusterTableDir]]): the
+    // component loop is deterministic per documents content, and a
     // production consumer joins the CHECKPOINTED dedup artifact — it does
     // not re-run connected components per reading job. First use builds
     // (clusterTableOf, the full loop); every later read — pp03's input,
@@ -809,41 +784,17 @@ object Dedup {
         coalesce(col("covered_tokens"), lit(0L)).as("covered_tokens"))
   }
 
-  /** dd09/dd12 shared core: connected components over the verified
-    * rep-level near-dup graph. Returns the persisted exact-dup group
-    * table and the converged (rep_id, comp_id) label table.
-    *
-    * Components are computed on the REP graph (exact-dup groups
-    * collapsed — identical components, ~100× fewer nodes/edges); callers
-    * expand to docs through the membership table. */
-  private[operators] def repComponents(s: SparkSession, d: String): (DataFrame, DataFrame) = {
-      // localCheckpoint (eager) TRUNCATES LINEAGE each round — without it
-      // every iteration's plan embeds all previous rounds and Catalyst
-      // planning goes superlinear (measured: round 6 took 92 s at sf0.01
-      // with persist-only; ~1 s with checkpointing). The blocks live on
-      // executors and are reclaimed by the ContextCleaner.
-      //
-      // ACTION ECONOMY (the r3→r4 rework): an iterative DataFrame loop is
-      // billed per Spark ACTION, not per row — every eager checkpoint and
-      // every convergence count() is a full plan→schedule→run cycle, a
-      // fixed cost at test scale and a cluster-wide barrier at 100 TB
-      // (measured: r3's loop ran ~13 actions; each cost ~3 s on the
-      // contended bench host → dd09 42 s while the same data converged in
-      // ~5 s on an idle rig). So: (a) FOUR min-label hops per checkpointed
-      // round — one action covers 4 propagation hops; (b) NO per-round
-      // convergence count — rounds run "blind" and a single edge-
-      // consistency check afterwards proves the fixpoint: labels only
-      // decrease and start at own id, so if comp_id(u) == comp_id(v) on
-      // EVERY edge, each component carries one uniform label L; the
-      // component's min node m only ever lowers its label, L = label(m)
-      // <= m, and every label is some reachable node's id >= m — hence
-      // L = m exactly, the min-label fixpoint. Violations == 0 is a
-      // convergence CERTIFICATE, not a heuristic. (c) If the certificate
-      // fails (component diameter beyond what the blind rounds cover —
-      // not seen on any fixture, but reachable by adversarial chain
-      // graphs), fall back to counted rounds until it holds.
-      val (groups, repPairs) = prefixRepPairs(s, d)
-      (groups, propagateLabels(groups.select(col("rep_id")), repPairs))
+  /** dd09/dd15's connected components over the verified rep-level
+    * near-dup graph, as (doc_id, comp_id) with comp_id the min doc_id
+    * reachable. Components are computed on the REP graph (exact-dup
+    * groups collapsed — identical components, ~100× fewer nodes/edges)
+    * and expanded to docs through the membership table. */
+  private[operators] def repComponents(s: SparkSession, d: String): DataFrame = {
+    val (groups, repPairs) = prefixRepPairs(s, d)
+    val labels = starComponents(groups.select(col("rep_id")), repPairs)
+    groups.select(col("rep_id"), explode(col("members")).as("doc_id"))
+      .join(labels, "rep_id")
+      .select(col("doc_id"), col("comp_id"))
   }
 
   /** dd12's terminal cluster table on an arbitrary (doc_id, text) corpus
@@ -855,15 +806,11 @@ object Dedup {
   private[graft] def clusterTableOf(docsDf: DataFrame,
       sizesViaWindow: Boolean = true): DataFrame = {
     val (groups, repPairs) = prefixRepPairsOf(docsDf)
-    // Components come from star contraction: this table is the PRODUCTION
-    // artifact every downstream dedup consumer joins, so its producer must
-    // carry the worst graph a 100 TB corpus can ship — an adversarial
-    // long-chain cluster makes label propagation's round count
-    // O(diameter/4) cluster-wide barriers, where starComponents contracts
-    // in O(log n) rounds (NorthStarSpec measures the crossover on a
-    // 60-node path: 3 star rounds vs 15 label-prop rounds). On the
-    // fixtures' near-clique graphs both emit IDENTICAL min-labels (dd15 ==
-    // dd09's oracle).
+    // Components come from star contraction, as in dd09: this table is
+    // the PRODUCTION artifact every downstream dedup consumer joins, so its
+    // producer must carry the worst graph a 100 TB corpus can ship — an
+    // adversarial long-chain cluster still contracts in O(log n) rounds
+    // (NorthStarSpec's 60-node path).
     val labels = starComponents(groups.select(col("rep_id")), repPairs)
     val m = groups.select(col("rep_id"), explode(col("members")).as("doc_id"))
       .join(labels, "rep_id")
@@ -900,109 +847,28 @@ object Dedup {
     expandRepPairs(groups, repPairs)
   }
 
-  /** The label-propagation loop itself, on an arbitrary rep graph —
-    * factored from [[repComponents]] so the FALLBACK path (certificate
-    * fails after the blind rounds, counted rounds take over) is testable
-    * with adversarial graphs: every fixture's rep graph has diameter ≤ 8
-    * and converges inside the blind rounds, so only a synthetic chain
-    * exercises the fallback. `reps`: one `rep_id` per node; `pairs`:
-    * undirected edges as (ra, rb). Returns (rep_id, comp_id) at the
-    * min-label fixpoint (certificate-verified — see the invariant
-    * argument above). */
-  private[graft] def propagateLabels(reps: DataFrame, pairs: DataFrame): DataFrame = {
-      // both edge directions from ONE scan of the (expensive) verified
-      // pair set — a unionAll of two selects would run the prefix-join
-      // subtree twice
-      //
-      // Checkpoints here are LAZY (eager = false, r15): eagerness decides
-      // only WHEN the RDD materializes, not whether the logical plan
-      // truncates — localCheckpoint returns a LogicalRDD leaf either way,
-      // so the 2^k-references-per-k-hop-round plan-size argument below is
-      // untouched. Lazily, each round's RDD materializes as a side effect
-      // of the NEXT action that reads it (the violations() certificate
-      // count), so the loop pays ONE action per round instead of
-      // checkpoint + count — at 100 TB each action is a cluster-wide
-      // barrier, and locally each was ~10 AQE stage-jobs of fixed
-      // scheduling latency (measured r15: dd09 3.7 s → see
-      // OPTIMIZATION_r15.md). Within that one action the checkpoint's
-      // persist (MEMORY_AND_DISK) still deduplicates the multi-referenced
-      // subtree: the first task to compute a partition caches it.
-      val edges = pairs.select(explode(array(
-          struct(col("ra").as("u"), col("rb").as("v")),
-          struct(col("rb").as("u"), col("ra").as("v")))).as("e"))
-        .select(col("e.u").as("u"), col("e.v").as("v"))
-        .localCheckpoint(false)
-      // a k-hop round references its input 2^k times (each hop reads the
-      // label table on both sides of its join), so the input MUST be a
-      // checkpointed LEAF — a plain (uncheckpointed) init would splice 16
-      // copies of the upstream subtree into round 1's plan (measured: 6 s
-      // vs 1.2 s at sf0.1 for the identical round otherwise)
-      var labels = reps.select(col("rep_id"), col("rep_id").as("comp_id"))
-        .localCheckpoint(false)
-      def hopMin(l: DataFrame): DataFrame = {
-        val nbrMin = edges
-          .join(l.withColumnRenamed("rep_id", "u"), "u")
-          .groupBy(col("v").as("rep_id"))
-          .agg(min(col("comp_id")).as("nbr_min"))
-        l.withColumnRenamed("comp_id", "cur")
-          .join(nbrMin, Seq("rep_id"), "left")
-          .select(col("rep_id"),
-            least(col("cur"), coalesce(col("nbr_min"), col("cur"))).as("comp_id"))
-      }
-      def step(l: DataFrame): DataFrame = hopMin(hopMin(hopMin(hopMin(l))))
-      def violations(l: DataFrame): Long = edges
-        .join(l.select(col("rep_id").as("u"), col("comp_id").as("lu")), "u")
-        .join(l.select(col("rep_id").as("v"), col("comp_id").as("lv")), "v")
-        .filter(col("lu") =!= col("lv")).count()
-      // 2 blind rounds = 8 hops of label travel; every fixture's rep graph
-      // has diameter <= 8 (labels stable after round 2 at sf0.1, earlier
-      // at smaller sf; measured by a since-deleted probe, source at commit
-      // 6eeefdb). Lazy checkpoints: the certificate count below is the
-      // loop's ONLY action — it
-      // materializes both rounds' label RDDs in one job instead of three.
-      labels = step(step(labels).localCheckpoint(false)).localCheckpoint(false)
-      var v = violations(labels)
-      var extraRounds = 0
-      while (v > 0 && extraRounds < 25) {
-        labels = step(labels).localCheckpoint(false)
-        v = violations(labels)
-        extraRounds += 1
-      }
-      // a silent truncation would return wrong cluster ids — fail loudly
-      // (25 four-hop fallback rounds = 100+ hops of diameter; hitting the
-      // cap means something is off, not that the graph is merely large)
-      require(v == 0,
-        s"dd09: label propagation did not converge ($v inconsistent edges " +
-          s"after $extraRounds fallback rounds)")
-      labels
-  }
-
-  /** Alternating large-star / small-star connected components — the
-    * 10⁹-node upgrade path [[propagateLabels]]'s comments name, now
-    * implemented (public algorithm: Kiveris et al., "Connected
-    * Components in MapReduce and Beyond", ACM SoCC'14). Each round
-    * CONTRACTS the graph toward stars instead of moving labels one hop:
-    * large-star links every node's larger neighbors to its neighborhood
-    * minimum, small-star links the smaller neighbors — distances halve
-    * per alternation, so rounds scale O(log n) with graph size where
-    * label propagation needs O(component diameter) rounds. The per-round
-    * shape is the same hash shuffle on node id as dd09 (groupBy min +
-    * equi-join), so each round costs the same at any scale; only the
-    * ROUND COUNT differs, and at 100 TB every round is a cluster-wide
-    * barrier — that is the whole trade. On the fixtures' near-clique
-    * dedup graphs (diameter ≤ 8) dd09's 4-hop blind rounds win on action
-    * economy; on chain/tree-shaped graphs the star rounds win
-    * asymptotically — NorthStarSpec measures the crossover on the same
-    * 60-node adversarial path the dd09 fallback test uses.
+  /** The one connected-components algorithm (dd09/dd15, the dd12 cluster
+    * table, the DBSCAN lanes): alternating large-star / small-star
+    * contraction (Kiveris et al., "Connected Components in MapReduce and
+    * Beyond", ACM SoCC'14). `reps`: one `rep_id` per node; `pairs`:
+    * undirected edges as (ra, rb). Returns (rep_id, comp_id) with comp_id
+    * the minimum node id of the node's component.
     *
-    * Convergence is certificate-driven, reusing dd09's fixpoint
-    * argument: every emitted edge connects nodes of one original
-    * component, so labels (= each node's final star center) are
-    * reachable-node ids bounded below by the component min m, and m's
-    * own label is m (no smaller node exists for it to point at); if
-    * every ORIGINAL edge's endpoints agree, the uniform label is
-    * exactly m. The loop stops at the first round whose labels pass —
-    * no separate stability heuristic to trust.
+    * Each round CONTRACTS the graph toward stars: large-star links every
+    * node's larger neighbors to its neighborhood minimum, small-star links
+    * the smaller neighbors — distances halve per alternation, so rounds
+    * scale O(log n) with graph size, not with component diameter. Each
+    * round is a hash shuffle on node id (groupBy min + equi-join), and at
+    * 100 TB every round is a cluster-wide barrier, so the round count is
+    * what the algorithm bounds.
+    *
+    * Convergence is certificate-driven: every emitted edge connects nodes
+    * of one original component, so labels (= each node's final star
+    * center) are reachable-node ids bounded below by the component min m,
+    * and m's own label is m (no smaller node exists for it to point at);
+    * if every ORIGINAL edge's endpoints agree, the uniform label is
+    * exactly m. The loop stops at the first certified round — no
+    * separate stability heuristic to trust.
     */
   private[graft] def starComponents(reps: DataFrame, pairs: DataFrame): DataFrame =
     starComponentsWithRounds(reps, pairs)._1
@@ -1105,22 +971,19 @@ object Dedup {
       .filter(col("lu") =!= col("lv")).count()
     var rounds = 0
     var labels: DataFrame = null
-    // certificate CADENCE (r15, dd09's blind-round discipline applied
-    // here): every measured fixture graph converges in 3–5 contractions
-    // (dd15's rep graph 3, the DBSCAN eps core graphs 5; since-deleted
-    // probe, source at commit 6eeefdb), so the loop runs 3 contractions
-    // blind, certifies, then re-certifies every 2. Each contraction stays
-    // lazily checkpointed — plan depth is bounded per contraction exactly
-    // as before — and the
-    // certificate count is the only action, materializing every
-    // contraction since the previous check in one job chain. vs r14
-    // (checkpoint + certify every contraction): dd15 3 rounds = 6 actions
-    // → 1; cl03's tail 5 rounds = 10 actions → 2. At 100 TB each action
-    // is a cluster-wide barrier; the trade is ≤ 2 contractions of
-    // overshoot past the fixpoint (ADVICE r15: a graph converging at
-    // round 1 is first certified at round 3; a contraction of an
-    // already-star graph is a cheap no-op) against certificates that each
-    // re-scan the original edge list. `rounds` still counts CONTRACTIONS.
+    // certificate CADENCE: every measured fixture graph converges in 3–5
+    // contractions (the dd09/dd15 rep graph 3, the DBSCAN eps core graphs
+    // 5), so the loop runs 3 contractions blind, certifies, then
+    // re-certifies every 2. Each contraction is lazily checkpointed, which
+    // bounds plan depth per contraction, and the certificate count is the
+    // only action, materializing every contraction since the previous
+    // check in one job chain (dd09's 3 rounds cost 1 action; cl03's tail
+    // 5 rounds cost 2). At 100 TB each action is a cluster-wide barrier;
+    // the trade is ≤ 2 contractions of overshoot past the fixpoint (a
+    // graph converging at round 1 is first certified at round 3; a
+    // contraction of an already-star graph is a cheap no-op) against
+    // certificates that each re-scan the original edge list. `rounds`
+    // counts CONTRACTIONS.
     while (labels == null && rounds < maxRounds) {
       val target = math.min(maxRounds, if (rounds == 0) 3 else rounds + 2)
       while (rounds < target) {
@@ -1131,7 +994,7 @@ object Dedup {
       // action, recomputing the cheap groupBy-min off the edge
       // checkpoint inside its own plan (twice, for the lu/lv self-join —
       // still far cheaper than a separate materializing action per round;
-      // iterative loops are billed per ACTION, the dd09 lesson)
+      // iterative loops are billed per ACTION)
       val l = labelsOf(edges)
       if (violations(l) == 0) labels = l
     }
@@ -1304,9 +1167,8 @@ object Dedup {
       SELECT m.doc_id, comp.comp_id
       FROM m JOIN comp USING (rep_id)""",
 
-    // dd15 computes the same components as dd09 (star contraction vs
-    // label propagation is an execution-strategy choice, not a semantic
-    // one) — same ground truth, shared CTE so they cannot drift
+    // dd15 computes the same components as dd09 (one body) — same ground
+    // truth, shared CTE so they cannot drift
     "dd15_cc_star" -> s"""$ComponentOracleCte
       SELECT m.doc_id, comp.comp_id
       FROM m JOIN comp USING (rep_id)""",

@@ -79,21 +79,17 @@ object Multimodal {
     * for arbitrarily long documents (the cap is mirrored in the oracle). */
   private[graft] val MaxFrames = 16
 
-  // The staged MEDIA TABLE (VERDICT r12 item 5 — the dd12
-  // build-once/serve-many precedent): all three synthetic codec payloads
-  // encode ONCE per fixture into one columnar parquet table
-  // (doc_id, source, gif, png, wav); each consumer reads ONLY its
-  // codec's column (parquet is columnar — mm02 never deserializes the
-  // GIF bytes). Before r13 every mm02/mm03/mm04/mm06 run re-ENCODED the
-  // corpus per query, double-billing the synthetic encode onto the
-  // decode path that is the actual workload (a media corpus arrives
-  // encoded; the pipeline's job is the decode side). Build cost rides
-  // the first access like dd12's cluster table.
-  private val mediaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
+  // The staged MEDIA TABLE (the dd12 build-once/serve-many precedent):
+  // all three synthetic codec payloads encode ONCE per documents content
+  // into one columnar parquet table (doc_id, source, gif, png, wav); each
+  // consumer reads ONLY its codec's column (parquet is columnar — mm02
+  // never deserializes the GIF bytes). Encoding per query would
+  // double-bill the synthetic encode onto the decode path that is the
+  // actual workload (a media corpus arrives encoded; the pipeline's job
+  // is the decode side). Build cost rides the first access like dd12's
+  // cluster table.
   private[graft] def mediaDir(s: SparkSession, d: String): String =
-    Materialized.dir(mediaCache, "graft-mm-media", d) { dir =>
+    Materialized.dir(s, "mm-media", Tables.path(d, "documents")) { dir =>
       import s.implicits._
       Tables.load(s, d, "documents")
         .select(col("doc_id"), col("source"), col("text").cast("binary").as("raw"))

@@ -463,21 +463,16 @@ object StreamingQueries {
     drainWithSentinels(s, d)(clickPurchaseJoin(_, "left_outer"))
       .filter(col("a_user") >= 0)
 
-  // One staged sentineled source dir per fixture: the staging writes are
-  // an indexing cost, not a per-drain cost (VERDICT r9 item 2 measured
-  // re-staging at ~35% of the streaming lane's wall — st06/st07 alone re-
-  // wrote the same three files nine times across the bench passes).
-  private val sentinelSrcCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Staged source dir for `d`'s sentineled event stream — the fixture
     * file plus two far-future sentinel microbatch files — built ONCE per
-    * fixture dir and reused by every drain over it. Safe to share: each
-    * drain runs from a fresh checkpoint, and the staged files keep fixed
-    * mtimes, so listing order (= microbatch order under
-    * maxFilesPerTrigger=1) is identical for every reader. */
+    * events content and reused by every drain over it: the staging writes
+    * are an indexing cost, not a per-drain cost (re-staging measured ~35%
+    * of the streaming lane's wall). Safe to share: each drain runs from a
+    * fresh checkpoint, and the staged files keep fixed mtimes, so listing
+    * order (= microbatch order under maxFilesPerTrigger=1) is identical
+    * for every reader. */
   private[graft] def sentineledSrcDir(s: SparkSession, d: String): String =
-    Materialized.dir(sentinelSrcCache, "graft-stsrc", d) { dirStr =>
+    Materialized.dir(s, "stsrc", Tables.path(d, "events")) { dirStr =>
       import java.nio.file.{Files, Paths, StandardCopyOption}
       val srcDir = Paths.get(dirStr)
       val fixture = srcDir.resolve("events.parquet")
@@ -524,8 +519,8 @@ object StreamingQueries {
     * negative user/event ids (one 'click' + one 'purchase' per sentinel
     * file so every filtered substream's watermark advances) — callers
     * filter them from the drained output. The staged dir is memoized per
-    * fixture ([[sentineledSrcDir]]); Materialized's shutdown hook owns
-    * its cleanup. */
+    * events content ([[sentineledSrcDir]]); Materialized's shutdown hook
+    * owns its cleanup. */
   private[graft] def drainWithSentinels(s: SparkSession, d: String)
       (build: DataFrame => DataFrame): DataFrame = {
     val srcDir = sentineledSrcDir(s, d)

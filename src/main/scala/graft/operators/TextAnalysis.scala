@@ -323,8 +323,8 @@ object TextAnalysis {
     // replace-all implementation, and single spaces around the pattern
     // make token boundaries unforgeable (symbols are space-free).
     // Each round's type table and argmax pin via eager localCheckpoint —
-    // the iterative-loop discipline (dd09's lesson): R rounds of plan
-    // growth would otherwise re-embed every prior round's subplan at
+    // the iterative-loop discipline of Dedup.starComponents: R rounds of
+    // plan growth would otherwise re-embed every prior round's subplan at
     // each reference.
     "tx13_bpe_merges" -> ((s, d) => {
       val (merges, _) = bpeTrain(s, d)
@@ -498,25 +498,21 @@ object TextAnalysis {
     })
   )
 
-  // one trained tokenizer per (session, fixture, rounds) — the
-  // codebookFor discipline: tx13 and tx15 consume the SAME model, so
-  // training runs once per JVM, not once per query (keyed by
-  // sessionUUID — ADVICE r13: an identity hash reused after the owning
-  // session is GC'd would hand a new session dead checkpointed RDDs; the
-  // checkpointed type table is session-bound)
-  private val bpeCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, Int), (Seq[DataFrame], DataFrame)]()
-
   /** tx13/tx15 shared training loop: R rounds of weighted-pair argmax +
     * greedy merge over the (word type, freq) table. Returns the per-round
     * argmax rows and the final type table (w, sym, freq) — the encoder.
-    * Round state pins via eager localCheckpoint (the dd09 iterative-loop
-    * discipline): R rounds of unpinned growth would re-embed every prior
-    * round's subplan at each of its two references. */
+    * Round state pins via eager localCheckpoint (the iterative-loop
+    * discipline of [[Dedup.starComponents]]): R rounds of unpinned growth would re-embed every prior
+    * round's subplan at each of its two references.
+    *
+    * One trained tokenizer per documents content and round count — the
+    * codebookFor discipline: tx13 and tx15 consume the SAME model, so
+    * training runs once, not once per query. Session-scoped: the
+    * checkpointed type table is bound to the session that trained it. */
   private def bpeTrain(s: SparkSession, d: String,
       rounds: Int = 6): (Seq[DataFrame], DataFrame) =
-    bpeCache.computeIfAbsent((Materialized.sessionKey(s), d, rounds),
-      _ => bpeTrainUncached(s, d, rounds))
+    Materialized.sessionValue(s, "tx-bpe", Tables.path(d, "documents"), rounds)(
+      bpeTrainUncached(s, d, rounds))
 
   private def bpeTrainUncached(s: SparkSession, d: String,
       rounds: Int): (Seq[DataFrame], DataFrame) = {

@@ -18,12 +18,20 @@ import org.apache.spark.storage.{BlockId, ShuffleChecksumBlockId, ShuffleIndexBl
   *    (ADLER32 / CRC32 / CRC32C value).
   *
   * Both are tiny and read often (every reducer touches every map's index),
-  * so they are cached per-JVM.
+  * so they are cached per-JVM. A cold read resolves through a per-key lazy
+  * cell OUTSIDE the map: its store round trip holds no bin lock, which
+  * would block unrelated readers and `writeIndex`'s `put`. Concurrent
+  * readers of one map still share one GET, and a failed read leaves no
+  * cell behind.
   */
 private[cloud] object CloudShuffleIndex extends Logging {
 
-  private val indexCache = new ConcurrentHashMap[BlockId, Array[Long]]()
-  private val checksumCache = new ConcurrentHashMap[BlockId, Array[Long]]()
+  private final class Cell(read: () => Array[Long]) {
+    lazy val longs: Array[Long] = read()
+  }
+
+  private val indexCache = new ConcurrentHashMap[BlockId, Cell]()
+  private val checksumCache = new ConcurrentHashMap[BlockId, Cell]()
 
   /** `[0, l0, l0+l1, …]` — length n+1, exact cumulative byte offsets. */
   def prefixSums(lengths: Array[Long]): Array[Long] = {
@@ -43,7 +51,7 @@ private[cloud] object CloudShuffleIndex extends Logging {
     val blockId = ShuffleIndexBlockId(shuffleId, mapId, CloudShuffleManager.NOOP_REDUCE_ID)
     val acc = prefixSums(partitionLengths)
     writeLongs(env, blockId, acc)
-    indexCache.put(blockId, acc)
+    indexCache.put(blockId, new Cell(() => acc))
   }
 
   def writeChecksums(env: CloudShuffleEnv, shuffleId: Int, mapId: Long,
@@ -51,18 +59,29 @@ private[cloud] object CloudShuffleIndex extends Logging {
     if (checksums.isEmpty) return
     val blockId = ShuffleChecksumBlockId(shuffleId, mapId, 0)
     writeLongs(env, blockId, checksums)
-    checksumCache.put(blockId, checksums)
+    checksumCache.put(blockId, new Cell(() => checksums))
   }
 
   /** Cumulative offsets for one map task's data blob, cached. */
   def readIndex(env: CloudShuffleEnv, shuffleId: Int, mapId: Long): Array[Long] = {
     val blockId = ShuffleIndexBlockId(shuffleId, mapId, CloudShuffleManager.NOOP_REDUCE_ID)
-    indexCache.computeIfAbsent(blockId, _ => readLongs(env, blockId))
+    cached(indexCache, env, blockId)
   }
 
   def readChecksums(env: CloudShuffleEnv, shuffleId: Int, mapId: Long): Array[Long] = {
     val blockId = ShuffleChecksumBlockId(shuffleId, mapId, 0)
-    checksumCache.computeIfAbsent(blockId, _ => readLongs(env, blockId))
+    cached(checksumCache, env, blockId)
+  }
+
+  private def cached(cache: ConcurrentHashMap[BlockId, Cell], env: CloudShuffleEnv,
+      blockId: BlockId): Array[Long] = {
+    val cell = cache.computeIfAbsent(blockId, _ => new Cell(() => readLongs(env, blockId)))
+    try cell.longs
+    catch {
+      case t: Throwable =>
+        cache.remove(blockId, cell)
+        throw t
+    }
   }
 
   def purgeShuffle(shuffleId: Int): Unit = {
@@ -70,7 +89,7 @@ private[cloud] object CloudShuffleIndex extends Logging {
     purge(checksumCache, shuffleId)
   }
 
-  private def purge(cache: ConcurrentHashMap[BlockId, Array[Long]], shuffleId: Int): Unit = {
+  private def purge(cache: ConcurrentHashMap[BlockId, Cell], shuffleId: Int): Unit = {
     val it = cache.keySet().iterator()
     while (it.hasNext) {
       val matches = it.next() match {

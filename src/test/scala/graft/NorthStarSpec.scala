@@ -223,33 +223,12 @@ class NorthStarSpec extends AnyFunSuite with BeforeAndAfterAll {
       "dd13 must return exactly the planted twin pairs")
   }
 
-  test("dd09 fallback rounds converge on an adversarial chain graph") {
-    // every fixture's rep graph has diameter ≤ 8, so the blind rounds
-    // always converge there and the counted-fallback path never runs in
-    // production-shaped tests. A 60-node path graph needs 59 hops of
-    // label travel — ~13 fallback rounds past the 8 blind hops — and
-    // must still reach the certificate-verified fixpoint (every node
-    // labeled 0, the chain's min).
-    val ss = spark
-    import ss.implicits._
-    val n = 60L
-    val reps = (0L until n).toDF("rep_id")
-    val pairs = (0L until n - 1).map(i => (i, i + 1)).toDF("ra", "rb")
-    val labels = graft.operators.Dedup.propagateLabels(reps, pairs)
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-    assert(labels.length == n)
-    assert(labels.map(_._1).sorted.toSeq == (0L until n),
-      "every node must keep exactly one label row")
-    assert(labels.forall(_._2 == 0L),
-      s"single chain is one component with min label 0: ${labels.filter(_._2 != 0L).take(5).toSeq}")
-  }
-
   test("dd15 star contraction: logarithmic rounds on the chain, dd09-identical labels") {
     val ss = spark
     import ss.implicits._
-    // the same 60-node path that forces dd09 into ~13 counted fallback
-    // rounds: star contraction halves distances per alternation, so it
-    // must land inside ceil(log2(60)) + a small constant
+    // a 60-node path (diameter 59): star contraction halves distances per
+    // alternation, so it must land inside ceil(log2(60)) + a small
+    // constant
     val n = 60L
     val reps = (0L until n).toDF("rep_id")
     val pairs = (0L until n - 1).map(i => (i, i + 1)).toDF("ra", "rb")
