@@ -11,20 +11,25 @@ import org.apache.spark.storage.BlockId
   * performance against high-latency object stores.
   *
   * Behavioral spec from the reference (`S3BufferedPrefetchIterator.scala:
-  * 16-213`): a pool of daemon threads pulls blocks off the fetch list,
-  * buffers up to `min(blockSize, maxBufferSizeTask)` bytes each, and hands
-  * completed buffers to the consuming task thread through a blocking
-  * queue; total buffered bytes never exceed `maxBufferSizeTask`. The pool
-  * is fixed at `min(maxConcurrencyTask, blocks)` workers, all fetching
-  * from the start: store latency is hidden by keeping that many GETs in
-  * flight, and a congested store is bounded by the executor-wide fetch
-  * permit (`maxConcurrencyExecutor`), not by shrinking the pool.
+  * 16-213`): workers pull blocks off the fetch list, buffer up to
+  * `min(blockSize, maxBufferSizeTask)` bytes each, and hand completed
+  * buffers to the consuming task thread through a blocking queue; total
+  * buffered bytes never exceed `maxBufferSizeTask`. There are
+  * `min(maxConcurrencyTask, blocks)` workers, all fetching from the start
+  * on the env's I/O pool: store latency is hidden by keeping that many
+  * GETs in flight, and a congested store is bounded by the executor-wide
+  * fetch permit (`maxConcurrencyExecutor`), not by fewer workers.
   *
   * Completion order is delivery order: reducers don't care which map's
   * block arrives first, so the queue never head-of-line blocks.
   *
   * Time the consumer spends waiting on the queue is Spark's fetch wait: it
   * is reported to `readMetrics` as it accrues.
+  *
+  * [[close]] stops the prefetcher: parked workers wake and exit, and every
+  * fetched but undelivered stream is closed. The reader calls it at task
+  * end, so a consumer that stops early holds no pool thread, buffer or
+  * store connection; the first worker error stops the other workers too.
   */
 private[cloud] class CloudPrefetchIterator(env: CloudShuffleEnv,
     blocks: IndexedSeq[(BlockId, CloudBlockStream, InputStream)],
@@ -37,6 +42,9 @@ private[cloud] class CloudPrefetchIterator(env: CloudShuffleEnv,
   private val queue = new LinkedBlockingQueue[Either[Throwable, Fetched]]()
   private var delivered = 0
   private val total = blocks.length
+  @volatile private var stopped = false
+  // the stream last handed to the consumer; consumer thread only
+  private var current: InputStream = _
 
   // fetch wait, consumer thread only: nanoseconds accumulate so that
   // sub-millisecond waits add up before Spark's millisecond counter sees them
@@ -47,13 +55,15 @@ private[cloud] class CloudPrefetchIterator(env: CloudShuffleEnv,
   private val budgetLock = new Object
   private var bufferedBytes = 0L
 
-  private def acquire(size: Long): Unit = budgetLock.synchronized {
+  /** Takes `size` bytes of budget; false, taking nothing, once stopped. */
+  private def acquire(size: Long): Boolean = budgetLock.synchronized {
     // Always admit at least one in-flight buffer to avoid deadlock on
     // blocks larger than the whole budget.
-    while (bufferedBytes > 0 && bufferedBytes + size > env.maxBufferSizeTask) {
+    while (!stopped && bufferedBytes > 0 && bufferedBytes + size > env.maxBufferSizeTask) {
       budgetLock.wait()
     }
-    bufferedBytes += size
+    if (!stopped) bufferedBytes += size
+    !stopped
   }
 
   private def release(size: Long): Unit = budgetLock.synchronized {
@@ -61,24 +71,21 @@ private[cloud] class CloudPrefetchIterator(env: CloudShuffleEnv,
     budgetLock.notifyAll()
   }
 
-  // --- worker pool --------------------------------------------------------
+  // --- workers --------------------------------------------------------------
   // never more workers than blocks: a worker beyond `total` could never
-  // claim an index, and creating it is pure per-task fixed cost
-  private val workers = (0 until math.min(env.maxConcurrencyTask, total)).map { i =>
-    val t = new Thread(() => workLoop(), s"cloud-shuffle-prefetch-$i")
-    t.setDaemon(true)
-    t
+  // claim an index
+  (0 until math.min(env.maxConcurrencyTask, total)).foreach { _ =>
+    CloudShuffleEnv.ioEc.execute(() => workLoop())
   }
-  workers.foreach(_.start())
 
   private def workLoop(): Unit = {
     var idx = nextIdx.getAndIncrement()
-    while (idx < total) {
+    while (idx < total && !stopped) {
       val (blockId, ranged, wrapped) = blocks(idx)
       val toBuffer = math.min(ranged.size, env.maxBufferSizeTask)
       var acquired = false
       try {
-        acquire(toBuffer)
+        if (!acquire(toBuffer)) return
         acquired = true
         // memory first, THEN the executor-wide permit: a task parked on
         // its memory budget must not hold a fetch slot the rest of the
@@ -94,13 +101,17 @@ private[cloud] class CloudPrefetchIterator(env: CloudShuffleEnv,
             new SequenceInputStream(new ByteArrayInputStream(buf), wrapped)
           }
         queue.put(Right(Fetched(blockId, stream, toBuffer)))
+        // a stop() that drained the queue just before this put missed it
+        if (stopped) discardQueued()
       } catch {
         case t: Throwable =>
           // only give back budget that was actually taken — an exception
           // inside acquire() itself (e.g. interrupt while parked) must not
           // drive bufferedBytes negative and loosen the cap for others
           if (acquired) release(toBuffer)
-          queue.put(Left(t))
+          try wrapped.close() catch { case _: Exception => }
+          if (!stopped) queue.put(Left(t))
+          stop()
           return
       }
       idx = nextIdx.getAndIncrement()
@@ -131,6 +142,38 @@ private[cloud] class CloudPrefetchIterator(env: CloudShuffleEnv,
     if (off == size) buf else java.util.Arrays.copyOf(buf, off)
   }
 
+  // --- stopping -------------------------------------------------------------
+  /** Any thread: wakes parked workers, which then exit, and closes the
+    * streams of fetched blocks not yet delivered. A queued error stays for
+    * the consumer. */
+  private def stop(): Unit = {
+    stopped = true
+    budgetLock.synchronized(budgetLock.notifyAll())
+    discardQueued()
+  }
+
+  private def discardQueued(): Unit = {
+    val dropped = scala.collection.mutable.ArrayBuffer.empty[Fetched]
+    queue.removeIf {
+      case Right(f) => dropped += f; true
+      case Left(_)  => false
+    }
+    dropped.foreach { f =>
+      try f.stream.close() catch { case _: Exception => }
+      release(f.buffered)
+    }
+  }
+
+  /** Consumer thread: stops the prefetcher and closes the stream it last
+    * delivered. Idempotent. */
+  def close(): Unit = {
+    stop()
+    if (current != null) {
+      try current.close() catch { case _: Exception => }
+      current = null
+    }
+  }
+
   // --- consumer side ------------------------------------------------------
   override def hasNext: Boolean = delivered < total
 
@@ -145,12 +188,14 @@ private[cloud] class CloudPrefetchIterator(env: CloudShuffleEnv,
     }
     taken match {
       case Left(err) =>
+        close()
         throw new RuntimeException(s"cloud shuffle prefetch failed", err)
       case Right(f) =>
         delivered += 1
         // release the budget once the task thread owns the buffer: the
         // bytes are handed off, not duplicated
         release(f.buffered)
+        current = f.stream
         (f.blockId, f.stream)
     }
   }

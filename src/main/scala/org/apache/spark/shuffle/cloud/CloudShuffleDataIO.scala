@@ -7,7 +7,7 @@ import java.util.{Collections, Optional}
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
 
-import org.apache.spark.SparkConf
+import org.apache.spark.{SparkConf, TaskContext}
 import org.apache.spark.internal.Logging
 import org.apache.spark.shuffle.api._
 import org.apache.spark.shuffle.api.metadata.MapOutputCommitMessage
@@ -47,10 +47,8 @@ private[cloud] class CloudDriverComponents extends ShuffleDriverComponents with 
 
   override def cleanupApplication(): Unit = {
     val env = CloudShuffleEnv.get()
-    if (env.cleanupShuffleFiles) {
-      logInfo(s"cleaning up cloud shuffle folders under ${env.rootDir}")
-      env.deleteAppFolders()
-    }
+    logInfo(s"cleaning up cloud shuffle folders under ${env.rootDir}")
+    env.deleteAppFolders()
   }
 
   override def removeShuffle(shuffleId: Int, blocking: Boolean): Unit = {
@@ -81,11 +79,7 @@ private[cloud] class CloudMapOutputWriter(env: CloudShuffleEnv, shuffleId: Int,
 
   private def ensureStream(): OutputStream = {
     if (stream == null) {
-      val raw = env.createBlock(
-        ShuffleDataBlockId(shuffleId, mapId, CloudShuffleManager.NOOP_REDUCE_ID))
-      stream = new MeteredOutputStream(
-        new BufferedOutputStream(raw, CloudShuffleEnv.WRITE_BUFFER_SIZE),
-        s"shuffle $shuffleId map $mapId")
+      stream = CloudMapOutputWriter.createData(env, shuffleId, mapId)
     }
     stream
   }
@@ -123,27 +117,6 @@ private[cloud] class CloudMapOutputWriter(env: CloudShuffleEnv, shuffleId: Int,
       override def close(): Unit = {} // shared stream closes at commit
     }
 
-    /** Channel path: UnsafeShuffleWriter merges spill files with
-      * `FileChannel.transferTo` when the partition writer offers a
-      * channel — fewer byte[] hops than the stream path. */
-    override def openChannelWrapper(): Optional[WritableByteChannelWrapper] = {
-      ensureStream()
-      Optional.of(new WritableByteChannelWrapper {
-        private val inner = new java.nio.channels.WritableByteChannel {
-          private val under = java.nio.channels.Channels.newChannel(stream)
-          override def write(src: java.nio.ByteBuffer): Int = {
-            val n = under.write(src)
-            recordBytes(n)
-            n
-          }
-          override def isOpen: Boolean = true
-          override def close(): Unit = {} // shared stream closes at commit
-        }
-        override def channel(): java.nio.channels.WritableByteChannel = inner
-        override def close(): Unit = {}
-      })
-    }
-
     override def getNumBytesWritten: Long = count
   }
 
@@ -170,21 +143,33 @@ private[cloud] class CloudMapOutputWriter(env: CloudShuffleEnv, shuffleId: Int,
 
 private[cloud] object CloudMapOutputWriter {
 
+  /** The buffered data object of one map output. */
+  def createData(env: CloudShuffleEnv, shuffleId: Int, mapId: Long): OutputStream =
+    new BufferedOutputStream(
+      env.createBlock(ShuffleDataBlockId(shuffleId, mapId, CloudShuffleManager.NOOP_REDUCE_ID)),
+      CloudShuffleEnv.WRITE_BUFFER_SIZE)
+
   /** Commits one map output: the index and checksum PUTs start on the env's
     * I/O pool while `closeData` finishes the data PUT on the calling
     * thread, so the task waits out one store latency instead of three.
     * Returns or throws only once every PUT has finished; if any failed, the
     * map's objects are discarded, so a failed commit leaves nothing a
-    * reader could see. */
+    * reader could see. Spark's writers time their record writes but not
+    * the commit, so its wall time is added to the task's shuffle write
+    * time here. */
   def commit(env: CloudShuffleEnv, shuffleId: Int, mapId: Long, lengths: Array[Long],
       withIndex: Boolean, checksums: Array[Long])(closeData: => Unit): Unit = {
     implicit val ec: ExecutionContext = CloudShuffleEnv.ioEc
+    val t0 = System.nanoTime()
     val puts = Seq(
       Option.when(withIndex)(Future(CloudShuffleIndex.writeIndex(env, shuffleId, mapId, lengths))),
       Option.when(env.checksumEnabled && checksums.nonEmpty)(
         Future(CloudShuffleIndex.writeChecksums(env, shuffleId, mapId, checksums)))).flatten
     val dataError = try { closeData; None } catch { case t: Throwable => Some(t) }
-    (dataError +: puts.map(settle)).flatten.headOption.foreach { e =>
+    val error = (dataError +: puts.map(settle)).flatten.headOption
+    Option(TaskContext.get()).foreach(
+      _.taskMetrics().shuffleWriteMetrics.incWriteTime(System.nanoTime() - t0))
+    error.foreach { e =>
       discard(env, shuffleId, mapId)
       throw e
     }
@@ -206,79 +191,19 @@ private[cloud] object CloudMapOutputWriter {
   }
 }
 
-/** Fast path when the sort writer produced exactly one spill file: move it
-  * (local FS) or stream-copy it (object store) as the data blob, committed
-  * together with the index + checksums (reference: `S3SingleSpillShuffleMapOutputWriter.scala:24-64`).
+/** Fast path when the sort writer produced exactly one spill file: stream
+  * it to the store as the data object, committed together with the index
+  * and checksums (reference: `S3SingleSpillShuffleMapOutputWriter.scala:24-64`).
   */
 private[cloud] class CloudSingleSpillWriter(env: CloudShuffleEnv, shuffleId: Int,
-    mapId: Long) extends SingleSpillShuffleMapOutputWriter with Logging {
+    mapId: Long) extends SingleSpillShuffleMapOutputWriter {
 
   override def transferMapSpillFile(mapSpillFile: java.io.File,
       partitionLengths: Array[Long], checksums: Array[Long]): Unit = {
     CloudMapOutputWriter.commit(env, shuffleId, mapId, partitionLengths, withIndex = true,
-      checksums)(writeData(mapSpillFile))
-  }
-
-  private def writeData(mapSpillFile: java.io.File): Unit = {
-    val blockId = ShuffleDataBlockId(shuffleId, mapId, CloudShuffleManager.NOOP_REDUCE_ID)
-    if (env.isLocalFs) {
-      val dst = java.nio.file.Paths.get(env.blockPath(blockId).toUri.getPath)
-      Files.createDirectories(dst.getParent)
-      Files.move(mapSpillFile.toPath, dst,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    } else {
-      val out = new MeteredOutputStream(
-        new BufferedOutputStream(env.createBlock(blockId), CloudShuffleEnv.WRITE_BUFFER_SIZE),
-        s"shuffle $shuffleId map $mapId (single spill)")
-      val in = Files.newInputStream(mapSpillFile.toPath)
-      try {
-        val buf = new Array[Byte](CloudShuffleEnv.WRITE_BUFFER_SIZE)
-        var n = in.read(buf)
-        while (n >= 0) {
-          if (n > 0) out.write(buf, 0, n)
-          n = in.read(buf)
-        }
-      } finally {
-        in.close()
-        out.close()
-      }
+      checksums) {
+      val out = CloudMapOutputWriter.createData(env, shuffleId, mapId)
+      try Files.copy(mapSpillFile.toPath, out) finally out.close()
     }
-  }
-}
-
-/** OutputStream decorator measuring bytes + wall time, logging MiB/s per
-  * map task on close (reference: `S3MeasureOutputStream.scala:8-65`). */
-private[cloud] class MeteredOutputStream(under: OutputStream, label: String)
-    extends OutputStream with Logging {
-
-  private var bytes = 0L
-  private var nanos = 0L
-  private var closed = false
-
-  override def write(b: Int): Unit = {
-    val t0 = System.nanoTime()
-    under.write(b)
-    nanos += System.nanoTime() - t0
-    bytes += 1
-  }
-
-  override def write(b: Array[Byte], off: Int, len: Int): Unit = {
-    val t0 = System.nanoTime()
-    under.write(b, off, len)
-    nanos += System.nanoTime() - t0
-    bytes += len
-  }
-
-  override def flush(): Unit = under.flush()
-
-  override def close(): Unit = {
-    if (closed) return
-    closed = true
-    val t0 = System.nanoTime()
-    under.close()
-    nanos += System.nanoTime() - t0
-    val mib = bytes / 1024.0 / 1024.0
-    val sec = math.max(nanos / 1e9, 1e-9)
-    logInfo(f"$label: wrote $mib%.2f MiB in $sec%.3f s (${mib / sec}%.1f MiB/s)")
   }
 }

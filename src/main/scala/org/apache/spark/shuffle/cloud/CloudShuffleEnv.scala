@@ -59,7 +59,6 @@ final class CloudShuffleEnv(val conf: SparkConf, val appId: String) extends Logg
   /** Observable permit count (-1 when the cap is off) — diagnostics. */
   def availableFetchPermits: Int =
     executorFetchPermits.map(_.availablePermits()).getOrElse(-1)
-  val cleanupShuffleFiles: Boolean = conf.getBoolean(CLEANUP_KEY, defaultValue = true)
   /** Write-side checksums ride on Spark's own `spark.shuffle.checksum.*`. */
   val checksumEnabled: Boolean = conf.getBoolean("spark.shuffle.checksum.enabled", defaultValue = true)
   val checksumAlgorithm: String = conf.get("spark.shuffle.checksum.algorithm", "ADLER32")
@@ -88,7 +87,6 @@ final class CloudShuffleEnv(val conf: SparkConf, val appId: String) extends Logg
     f.setVerifyChecksum(false)
     f
   }
-  val isLocalFs: Boolean = URI.create(rootDir).getScheme == "file"
 
   /** (shuffleId, mapId) coordinates of any supported shuffle block. */
   private def coords(blockId: BlockId): (Int, Long) = blockId match {
@@ -134,7 +132,7 @@ final class CloudShuffleEnv(val conf: SparkConf, val appId: String) extends Logg
     * through several cleanup calls, on the driver and on executors; only
     * the first call in the JVM that registered the shuffle deletes. */
   def deleteShuffle(shuffleId: Int): Unit =
-    if (liveShuffles.remove(shuffleId) && cleanupShuffleFiles)
+    if (liveShuffles.remove(shuffleId))
       parallelDelete(p => new Path(s"$rootDir/$p/$appId/$shuffleId"))
 
   /** Delete every object this application wrote. */
@@ -158,17 +156,22 @@ object CloudShuffleEnv extends Logging {
   val PREFIXES_KEY = "spark.shuffle.cloud.folderPrefixes"
   val MAX_BUFFER_TASK_KEY = "spark.shuffle.cloud.maxBufferSizeTask"
   val MAX_CONCURRENCY_KEY = "spark.shuffle.cloud.maxConcurrencyTask"
-  val CLEANUP_KEY = "spark.shuffle.cloud.cleanup"
   val VALIDATE_KEY = "spark.shuffle.cloud.checksum.validate"
   val MAX_EXEC_CONCURRENCY_KEY = "spark.shuffle.cloud.maxConcurrencyExecutor"
+
+  /** Every `spark.shuffle.cloud.*` option; the manager refuses any other. */
+  val KEYS: Seq[String] = Seq(ROOT_DIR_KEY, PREFIXES_KEY, MAX_BUFFER_TASK_KEY,
+    MAX_CONCURRENCY_KEY, VALIDATE_KEY, MAX_EXEC_CONCURRENCY_KEY)
 
   /** Buffer in front of every data PUT. It only coalesces small write()
     * calls ahead of the FS client's own buffering, which sets the PUT
     * granularity. */
   val WRITE_BUFFER_SIZE: Int = 1 << 20
 
-  /** Daemon pool for store requests issued side by side: the per-prefix
-    * deletes and a commit's index and checksum PUTs. */
+  /** Daemon pool for every store request issued off a task thread: the
+    * prefetch workers, the per-prefix deletes and a commit's index and
+    * checksum PUTs. It grows with demand, so a worker parked on its task's
+    * memory budget never keeps another request from starting. */
   private[cloud] val ioEc: ExecutionContext =
     ExecutionContext.fromExecutorService(Executors.newCachedThreadPool { r =>
       val t = new Thread(r, "cloud-shuffle-io")

@@ -52,6 +52,12 @@ class CloudShuffleManager(conf: SparkConf) extends ShuffleManager with Logging {
         "spark.shuffle.push.enabled=false (merged-block IDs have no " +
         "object-store path, and server-side merge adds nothing when " +
         "reducers already read contiguous ranges from the store)")
+    // a misspelt or removed option would otherwise be silently ignored
+    val unknown = conf.getAll.map(_._1)
+      .filter(k => k.startsWith("spark.shuffle.cloud.") && !CloudShuffleEnv.KEYS.contains(k)).sorted
+    require(unknown.isEmpty,
+      s"unknown cloud shuffle option(s) ${unknown.mkString(", ")}; the known options are " +
+        CloudShuffleEnv.KEYS.mkString(", "))
     // MapStatus relocation makes every map output advertise the fallback
     // block manager's fake host, which reduce locality then turns into a
     // preferred location no executor can ever satisfy. Under delay

@@ -97,6 +97,9 @@ private[cloud] class CloudShuffleReader[K, C](
       }.toIndexedSeq
 
     val fetched = new CloudPrefetchIterator(env, ranged, readMetrics)
+    // a consumer that stops early (take/limit, task kill) leaves workers
+    // parked on the memory budget until this stops them
+    context.addTaskCompletionListener[Unit](_ => fetched.close())
 
     val serializerInstance = dep.serializer.newInstance()
     val recordIter = fetched.flatMap { case (blockId, in) =>

@@ -11,9 +11,9 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
   * per query* (reference `examples/run_benchmarks.sh:29-34`: q5 9.6 GB …
   * q67 66 GB), so the bench surfaces the same quantity next to wall time.
   * Every shuffle byte in this engine flows through the cloud plugin
-  * (W8 measured output streams on the write side, the prefetch iterator on
+  * (the map output writers on the write side, the prefetch iterator on
   * the read side), and the task-level `ShuffleWriteMetrics` /
-  * `ShuffleReadMetrics` Spark aggregates are fed by exactly those streams —
+  * `ShuffleReadMetrics` Spark aggregates are fed on exactly those paths —
   * a `SparkListener` over task ends is the zero-overhead way to fold them
   * per query without threading counters through the plugin singletons.
   *

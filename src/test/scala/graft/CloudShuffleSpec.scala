@@ -59,6 +59,16 @@ class CloudShuffleSpec extends AnyFunSuite with BeforeAndAfterEach {
     assert(ex.getMessage.contains("spark.shuffle.push.enabled=false"), ex.getMessage)
   }
 
+  test("an unknown spark.shuffle.cloud option is refused at manager init") {
+    // writeBufferSize was an option once; a job still setting it must learn
+    // that it has no effect
+    val ex = intercept[IllegalArgumentException] {
+      new CloudShuffleManager(baseConf("spark.shuffle.cloud.writeBufferSize" -> "8m"))
+    }
+    assert(ex.getMessage.contains("spark.shuffle.cloud.writeBufferSize"), ex.getMessage)
+    CloudShuffleEnv.KEYS.foreach(k => assert(ex.getMessage.contains(k), ex.getMessage))
+  }
+
   test("foldByKey round trip (sort/unsafe path)") {
     withSc(baseConf()) { sc =>
       val n = 10000

@@ -21,11 +21,14 @@ import org.apache.spark.SparkConf
   *  - `fs.gatefs.open.delay.ms` = d: every `open` then sleeps d ms;
   *  - `fs.gatefs.close.parties` = n: every output stream's `close` (the
   *    moment a PUT lands) waits until n closes are in progress together;
+  *  - `fs.gatefs.close.delay.ms` = d: every output stream's `close` then
+  *    sleeps d ms;
   *  - `fs.gatefs.fail.data.close` = true: closing a `.data` object throws
   *    after its bytes are on disk, as a failed upload would.
   *
   * A barrier that is not met within 10 s breaks, failing the request. The
-  * store records the peak number of opens and closes in progress at once.
+  * store records the peak number of opens and closes in progress at once,
+  * and the number of input streams open now.
   */
 class GatedStore extends RawLocalFileSystem {
   import GatedStore._
@@ -33,9 +36,11 @@ class GatedStore extends RawLocalFileSystem {
   private var openGate: Option[CyclicBarrier] = None
   private var closeGate: Option[CyclicBarrier] = None
   private var openDelayMs = 0L
+  private var closeDelayMs = 0L
   private var failDataClose = false
 
   val opens = new AtomicInteger(0)
+  val openInputs = new AtomicInteger(0)
   val opensPeak = new Peak
   val closesPeak = new Peak
 
@@ -49,14 +54,24 @@ class GatedStore extends RawLocalFileSystem {
     openGate = gate(OpenPartiesKey)
     closeGate = gate(ClosePartiesKey)
     openDelayMs = conf.getLong(OpenDelayKey, 0L)
+    closeDelayMs = conf.getLong(CloseDelayKey, 0L)
     failDataClose = conf.getBoolean(FailDataCloseKey, false)
   }
 
   override def open(f: Path, bufferSize: Int): FSDataInputStream = {
     opens.incrementAndGet()
-    opensPeak.during(openGate) {
+    val in = opensPeak.during(openGate) {
       if (openDelayMs > 0) Thread.sleep(openDelayMs)
       super.open(f, bufferSize)
+    }
+    openInputs.incrementAndGet()
+    new FSDataInputStream(in) {
+      private var closed = false
+      override def close(): Unit = {
+        if (!closed) openInputs.decrementAndGet()
+        closed = true
+        super.close()
+      }
     }
   }
 
@@ -70,6 +85,7 @@ class GatedStore extends RawLocalFileSystem {
       override def write(b: Array[Byte], off: Int, len: Int): Unit = out.write(b, off, len)
       override def flush(): Unit = out.flush()
       override def close(): Unit = closesPeak.during(closeGate) {
+        if (closeDelayMs > 0) Thread.sleep(closeDelayMs)
         out.close()
         if (failDataClose && f.getName.endsWith(".data")) {
           throw new IOException(s"injected upload failure for ${f.getName}")
@@ -84,6 +100,7 @@ object GatedStore {
   val OpenPartiesKey = "fs.gatefs.open.parties"
   val ClosePartiesKey = "fs.gatefs.close.parties"
   val OpenDelayKey = "fs.gatefs.open.delay.ms"
+  val CloseDelayKey = "fs.gatefs.close.delay.ms"
   val FailDataCloseKey = "fs.gatefs.fail.data.close"
 
   /** Plugin settings rooted at a fresh `gatefs` directory; `store` keys are
@@ -96,6 +113,17 @@ object GatedStore {
     store.foreach { case (k, v) => conf.set(s"spark.hadoop.$k", v) }
     conf
   }
+
+  /** [[sparkConf]] plus what a `local[4]` SparkContext needs to shuffle
+    * through the plugin. */
+  def localSparkConf(appName: String, store: (String, String)*): SparkConf =
+    sparkConf(store: _*)
+      .setMaster("local[4]")
+      .setAppName(appName)
+      .set("spark.ui.enabled", "false")
+      .set("spark.shuffle.manager", classOf[CloudShuffleManager].getName)
+      .set("spark.shuffle.sort.io.plugin.class", classOf[CloudShuffleDataIO].getName)
+      .set("spark.shuffle.reduceLocality.enabled", "false")
 
   /** Names of every object under an env's store root. */
   def objects(env: CloudShuffleEnv): Seq[String] = {

@@ -2,15 +2,21 @@ package org.apache.spark.shuffle.cloud
 
 import java.io.InputStream
 
-import org.apache.spark.SparkContext
+import scala.jdk.CollectionConverters._
+import scala.util.Random
+
+import org.apache.spark.{HashPartitioner, SparkContext}
 import org.apache.spark.executor.TempShuffleReadMetrics
 import org.apache.spark.storage.{BlockId, ShuffleDataBlockId}
 import org.scalatest.BeforeAndAfterEach
+import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.SpanSugar._
 
 /** The prefetcher runs `maxConcurrencyTask` GETs at once from its first
   * block, within the per-task memory budget, and reports the time the task
-  * waits for blocks as Spark's fetch wait. */
+  * waits for blocks as Spark's fetch wait. Closing it, as the reader does
+  * at task end, leaves no worker parked and no store stream open. */
 class PrefetchPoolSpec extends AnyFunSuite with BeforeAndAfterEach {
 
   private val threads = 4
@@ -38,6 +44,12 @@ class PrefetchPoolSpec extends AnyFunSuite with BeforeAndAfterEach {
     (env, blocks)
   }
 
+  /** Threads parked on some prefetcher's memory budget. */
+  private def parkedWorkers: Int = Thread.getAllStackTraces.values.asScala.count(_.exists { f =>
+    f.getClassName.startsWith(classOf[CloudPrefetchIterator].getName) &&
+      f.getMethodName.endsWith("acquire")
+  })
+
   private def drain(id: BlockId, in: InputStream, size: Int): Unit = {
     val bytes = in.readAllBytes()
     val m = id.asInstanceOf[ShuffleDataBlockId].mapId
@@ -47,13 +59,8 @@ class PrefetchPoolSpec extends AnyFunSuite with BeforeAndAfterEach {
   test("one reducer keeps maxConcurrencyTask GETs in flight") {
     // every GET waits until `threads` GETs are open together: a pool that
     // runs fewer workers never gets past its first block
-    val conf = GatedStore.sparkConf(GatedStore.OpenPartiesKey -> threads.toString)
-      .setMaster("local[4]")
-      .setAppName("prefetch-pool-spec")
-      .set("spark.ui.enabled", "false")
-      .set("spark.shuffle.manager", classOf[CloudShuffleManager].getName)
-      .set("spark.shuffle.sort.io.plugin.class", classOf[CloudShuffleDataIO].getName)
-      .set("spark.shuffle.reduceLocality.enabled", "false")
+    val conf = GatedStore.localSparkConf("prefetch-pool-spec",
+      GatedStore.OpenPartiesKey -> threads.toString)
       .set(CloudShuffleEnv.MAX_CONCURRENCY_KEY, threads.toString)
     val sc = new SparkContext(conf)
     try {
@@ -102,5 +109,61 @@ class PrefetchPoolSpec extends AnyFunSuite with BeforeAndAfterEach {
       // the first block cannot arrive before its GET's 30 ms
       assert(metrics.fetchWaitTime >= 25, s"fetch wait ${metrics.fetchWaitTime} ms")
     } finally env.fs.close()
+  }
+
+  test("close wakes the workers parked on the memory budget") {
+    // 8 x 400 KiB under a 1 MiB budget: after one block is consumed, two
+    // more are buffered and the other workers wait for budget
+    val size = 400 * 1024
+    val (env, blocks) = storeWithBlocks(8, size)
+    try {
+      val it = new CloudPrefetchIterator(env, blocks, new TempShuffleReadMetrics)
+      val (id, in) = it.next()
+      drain(id, in, size)
+      eventually(timeout(5.seconds), interval(20.millis)) { assert(parkedWorkers > 0) }
+      it.close()
+      eventually(timeout(5.seconds), interval(20.millis)) {
+        assert(parkedWorkers == 0)
+        assert(env.fs.asInstanceOf[GatedStore].openInputs.get == 0)
+      }
+    } finally env.fs.close()
+  }
+
+  test("close closes the delivered and the queued tail streams") {
+    // 1.5 MiB blocks under a 1 MiB budget: each buffers its first MiB and
+    // keeps its store stream open for the tail
+    val size = 3 << 19
+    val (env, blocks) = storeWithBlocks(3, size)
+    try {
+      val store = env.fs.asInstanceOf[GatedStore]
+      val it = new CloudPrefetchIterator(env, blocks, new TempShuffleReadMetrics)
+      val (_, in) = it.next()
+      assert(in.read(new Array[Byte](16)) == 16)
+      // the delivered block's tail and the next block's tail are open
+      eventually(timeout(5.seconds), interval(20.millis)) { assert(store.openInputs.get == 2) }
+      it.close()
+      eventually(timeout(5.seconds), interval(20.millis)) {
+        assert(store.openInputs.get == 0)
+        assert(parkedWorkers == 0)
+      }
+    } finally env.fs.close()
+  }
+
+  test("take(1) over a shuffle larger than the budget leaves no worker parked") {
+    val conf = GatedStore.localSparkConf("prefetch-pool-spec")
+      .set(CloudShuffleEnv.MAX_CONCURRENCY_KEY, threads.toString)
+      .set(CloudShuffleEnv.MAX_BUFFER_TASK_KEY, "64k")
+    val sc = new SparkContext(conf)
+    try {
+      // 8 maps of incompressible 100 KiB values into 2 reducers: every
+      // reducer's blocks add up to several budgets
+      val rows = sc.parallelize(0 until 64, 8).map { i =>
+        val value = new Array[Byte](100 * 1024)
+        new Random(i).nextBytes(value)
+        (i, value)
+      }.partitionBy(new HashPartitioner(2)).take(1)
+      assert(rows.length == 1)
+      eventually(timeout(5.seconds), interval(20.millis)) { assert(parkedWorkers == 0) }
+    } finally sc.stop()
   }
 }
