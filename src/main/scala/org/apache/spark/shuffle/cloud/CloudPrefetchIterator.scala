@@ -2,7 +2,6 @@ package org.apache.spark.shuffle.cloud
 
 import java.io.{ByteArrayInputStream, InputStream, SequenceInputStream}
 import java.util.concurrent.LinkedBlockingQueue
-import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.shuffle.ShuffleReadMetricsReporter
 import org.apache.spark.storage.BlockId
@@ -11,14 +10,21 @@ import org.apache.spark.storage.BlockId
   * performance against high-latency object stores.
   *
   * Behavioral spec from the reference (`S3BufferedPrefetchIterator.scala:
-  * 16-213`): workers pull blocks off the fetch list, buffer up to
-  * `min(blockSize, maxBufferSizeTask)` bytes each, and hand completed
-  * buffers to the consuming task thread through a blocking queue; total
-  * buffered bytes never exceed `maxBufferSizeTask`. There are
-  * `min(maxConcurrencyTask, blocks)` workers, all fetching from the start
-  * on the env's I/O pool: store latency is hidden by keeping that many
-  * GETs in flight, and a congested store is bounded by the executor-wide
-  * fetch permit (`maxConcurrencyExecutor`), not by fewer workers.
+  * 16-213`): each block's fetch buffers up to `min(blockSize,
+  * maxBufferSizeTask)` bytes and hands the buffer to the consuming task
+  * thread through a blocking queue; buffered bytes, the block the consumer
+  * holds included, never exceed `maxBufferSizeTask`.
+  *
+  * Admission is by bytes, as Spark's own reader limits a task by
+  * `spark.reducer.maxSizeInFlight`: the task thread submits one fetch job
+  * per block, in block order, to the env's fetch pool while the block's
+  * buffer fits the budget (one block is always admitted, so a block larger
+  * than the budget still reads) and fewer than pool-size fetches are
+  * outstanding. It admits more each time the consumer asks for the next
+  * block, after giving back the budget of the block the consumer held. A
+  * fetch job therefore never waits on the budget; the budget bounds a
+  * task's fetches and the pool, sized by `maxConcurrencyExecutor`, bounds
+  * the executor's.
   *
   * Completion order is delivery order: reducers don't care which map's
   * block arrives first, so the queue never head-of-line blocks.
@@ -26,10 +32,10 @@ import org.apache.spark.storage.BlockId
   * Time the consumer spends waiting on the queue is Spark's fetch wait: it
   * is reported to `readMetrics` as it accrues.
   *
-  * [[close]] stops the prefetcher: parked workers wake and exit, and every
-  * fetched but undelivered stream is closed. The reader calls it at task
-  * end, so a consumer that stops early holds no pool thread, buffer or
-  * store connection; the first worker error stops the other workers too.
+  * [[close]] stops the prefetcher: jobs not yet started skip their block,
+  * and every fetched but undelivered stream is closed. The reader calls it
+  * at task end, so a consumer that stops early holds no buffer or store
+  * connection; the first fetch error stops the other jobs too.
   */
 private[cloud] class CloudPrefetchIterator(env: CloudShuffleEnv,
     blocks: IndexedSeq[(BlockId, CloudBlockStream, InputStream)],
@@ -38,83 +44,71 @@ private[cloud] class CloudPrefetchIterator(env: CloudShuffleEnv,
 
   private case class Fetched(blockId: BlockId, stream: InputStream, buffered: Long)
 
-  private val nextIdx = new AtomicInteger(0)
   private val queue = new LinkedBlockingQueue[Either[Throwable, Fetched]]()
-  private var delivered = 0
   private val total = blocks.length
   @volatile private var stopped = false
-  // the stream last handed to the consumer; consumer thread only
+
+  // admission state, consumer thread only: blocks submitted and delivered,
+  // the budget taken by submitted blocks not yet given back, and the
+  // stream last handed to the consumer with its share of that budget
+  private var submitted = 0
+  private var delivered = 0
+  private var heldBytes = 0L
   private var current: InputStream = _
+  private var currentBytes = 0L
 
   // fetch wait, consumer thread only: nanoseconds accumulate so that
   // sub-millisecond waits add up before Spark's millisecond counter sees them
   private var waitNanos = 0L
   private var waitMsReported = 0L
 
-  // --- memory budget ------------------------------------------------------
-  private val budgetLock = new Object
-  private var bufferedBytes = 0L
+  private def bufferSize(idx: Int): Long = math.min(blocks(idx)._2.size, env.maxBufferSizeTask)
 
-  /** Takes `size` bytes of budget; false, taking nothing, once stopped. */
-  private def acquire(size: Long): Boolean = budgetLock.synchronized {
-    // Always admit at least one in-flight buffer to avoid deadlock on
-    // blocks larger than the whole budget.
-    while (!stopped && bufferedBytes > 0 && bufferedBytes + size > env.maxBufferSizeTask) {
-      budgetLock.wait()
+  private def fits(size: Long): Boolean =
+    heldBytes == 0 || heldBytes + size <= env.maxBufferSizeTask
+
+  /** Consumer thread: submits fetch jobs, in block order, for as many
+    * blocks as the budget and the pool size admit. */
+  private def admit(): Unit = {
+    while (!stopped && submitted < total && submitted - delivered < env.maxConcurrencyExecutor &&
+        fits(bufferSize(submitted))) {
+      val idx = submitted
+      heldBytes += bufferSize(idx)
+      submitted += 1
+      env.fetchPool.execute(() => fetch(idx))
     }
-    if (!stopped) bufferedBytes += size
-    !stopped
   }
 
-  private def release(size: Long): Unit = budgetLock.synchronized {
-    bufferedBytes -= size
-    budgetLock.notifyAll()
-  }
+  admit()
 
-  // --- workers --------------------------------------------------------------
-  // never more workers than blocks: a worker beyond `total` could never
-  // claim an index
-  (0 until math.min(env.maxConcurrencyTask, total)).foreach { _ =>
-    CloudShuffleEnv.ioEc.execute(() => workLoop())
-  }
-
-  private def workLoop(): Unit = {
-    var idx = nextIdx.getAndIncrement()
-    while (idx < total && !stopped) {
-      val (blockId, ranged, wrapped) = blocks(idx)
-      val toBuffer = math.min(ranged.size, env.maxBufferSizeTask)
-      var acquired = false
-      try {
-        if (!acquire(toBuffer)) return
-        acquired = true
-        // memory first, THEN the executor-wide permit: a task parked on
-        // its memory budget must not hold a fetch slot the rest of the
-        // executor could use
-        val buf = env.withFetchPermit(readUpTo(wrapped, toBuffer))
-        val stream: InputStream =
-          if (buf.length.toLong >= ranged.size || isExhausted(wrapped)) {
-            wrapped.close()
-            new ByteArrayInputStream(buf)
-          } else {
-            // block bigger than the budget: serve the buffered head, then
-            // stream the tail straight from the store
-            new SequenceInputStream(new ByteArrayInputStream(buf), wrapped)
-          }
-        queue.put(Right(Fetched(blockId, stream, toBuffer)))
-        // a stop() that drained the queue just before this put missed it
-        if (stopped) discardQueued()
-      } catch {
-        case t: Throwable =>
-          // only give back budget that was actually taken — an exception
-          // inside acquire() itself (e.g. interrupt while parked) must not
-          // drive bufferedBytes negative and loosen the cap for others
-          if (acquired) release(toBuffer)
-          try wrapped.close() catch { case _: Exception => }
-          if (!stopped) queue.put(Left(t))
-          stop()
-          return
-      }
-      idx = nextIdx.getAndIncrement()
+  /** Fetch pool: buffers one block's head and queues it for the consumer. */
+  private def fetch(idx: Int): Unit = {
+    val (blockId, ranged, wrapped) = blocks(idx)
+    if (stopped) {
+      // never opened: the block stream opens on its first read
+      try wrapped.close() catch { case _: Exception => }
+      return
+    }
+    try {
+      val toBuffer = bufferSize(idx)
+      val buf = readUpTo(wrapped, toBuffer)
+      val stream: InputStream =
+        if (buf.length.toLong >= ranged.size || isExhausted(wrapped)) {
+          wrapped.close()
+          new ByteArrayInputStream(buf)
+        } else {
+          // block bigger than the budget: serve the buffered head, then
+          // stream the tail straight from the store
+          new SequenceInputStream(new ByteArrayInputStream(buf), wrapped)
+        }
+      queue.put(Right(Fetched(blockId, stream, toBuffer)))
+      // a stop() that drained the queue just before this put missed it
+      if (stopped) discardQueued()
+    } catch {
+      case t: Throwable =>
+        try wrapped.close() catch { case _: Exception => }
+        if (!stopped) queue.put(Left(t))
+        stop()
     }
   }
 
@@ -143,12 +137,11 @@ private[cloud] class CloudPrefetchIterator(env: CloudShuffleEnv,
   }
 
   // --- stopping -------------------------------------------------------------
-  /** Any thread: wakes parked workers, which then exit, and closes the
-    * streams of fetched blocks not yet delivered. A queued error stays for
+  /** Any thread: jobs not yet started skip their block, and the streams of
+    * fetched blocks not yet delivered are closed. A queued error stays for
     * the consumer. */
   private def stop(): Unit = {
     stopped = true
-    budgetLock.synchronized(budgetLock.notifyAll())
     discardQueued()
   }
 
@@ -158,14 +151,11 @@ private[cloud] class CloudPrefetchIterator(env: CloudShuffleEnv,
       case Right(f) => dropped += f; true
       case Left(_)  => false
     }
-    dropped.foreach { f =>
-      try f.stream.close() catch { case _: Exception => }
-      release(f.buffered)
-    }
+    dropped.foreach(f => try f.stream.close() catch { case _: Exception => })
   }
 
-  /** Consumer thread: stops the prefetcher and closes the stream it last
-    * delivered. Idempotent. */
+  /** Consumer thread: stops the prefetcher, which admits nothing more, and
+    * closes the stream it last delivered. Idempotent. */
   def close(): Unit = {
     stop()
     if (current != null) {
@@ -178,6 +168,12 @@ private[cloud] class CloudPrefetchIterator(env: CloudShuffleEnv,
   override def hasNext: Boolean = delivered < total
 
   override def next(): (BlockId, InputStream) = {
+    // the consumer has moved on from the block it held: give its budget
+    // back before admitting, or a next block larger than the budget could
+    // never be admitted
+    heldBytes -= currentBytes
+    currentBytes = 0
+    admit()
     val w0 = System.nanoTime()
     val taken = queue.take()
     waitNanos += System.nanoTime() - w0
@@ -192,10 +188,8 @@ private[cloud] class CloudPrefetchIterator(env: CloudShuffleEnv,
         throw new RuntimeException(s"cloud shuffle prefetch failed", err)
       case Right(f) =>
         delivered += 1
-        // release the budget once the task thread owns the buffer: the
-        // bytes are handed off, not duplicated
-        release(f.buffered)
         current = f.stream
+        currentBytes = f.buffered
         (f.blockId, f.stream)
     }
   }

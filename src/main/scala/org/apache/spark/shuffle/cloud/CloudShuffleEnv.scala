@@ -1,7 +1,7 @@
 package org.apache.spark.shuffle.cloud
 
 import java.net.URI
-import java.util.concurrent.Executors
+import java.util.concurrent.{Executors, LinkedBlockingQueue, ThreadPoolExecutor, TimeUnit}
 
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
@@ -31,34 +31,27 @@ final class CloudShuffleEnv(val conf: SparkConf, val appId: String) extends Logg
   val rootDir: String = conf.get(ROOT_DIR_KEY, "file:///tmp/cloud-shuffle").stripSuffix("/")
   val folderPrefixes: Int = math.max(1, conf.getInt(PREFIXES_KEY, 10))
   val maxBufferSizeTask: Long = conf.getSizeAsBytes(MAX_BUFFER_TASK_KEY, "128m")
-  val maxConcurrencyTask: Int = math.max(1, conf.getInt(MAX_CONCURRENCY_KEY, 10))
-  /** Executor-wide cap on concurrent prefetch reads across ALL tasks
-    * (0 = off). The per-task cap alone lets an executor running T tasks
-    * open T×maxConcurrencyTask store connections at once — this bounds
-    * the whole JVM to one connection-pool-sized budget, which is what an
-    * object store actually meters. Beyond the reference, which keeps only
-    * per-task limits (`S3ShuffleDispatcher.scala:55-58`). */
-  val maxConcurrencyExecutor: Int = conf.getInt(MAX_EXEC_CONCURRENCY_KEY, 0)
+  /** Executor-wide cap on reduce-side GETs in flight, across all tasks:
+    * the size of [[fetchPool]]. An object store meters a client's
+    * connections, not its tasks, so the bound is per JVM. Beyond the
+    * reference, which keeps only per-task limits
+    * (`S3ShuffleDispatcher.scala:55-58`). */
+  val maxConcurrencyExecutor: Int = math.max(1, conf.getInt(MAX_EXEC_CONCURRENCY_KEY, 64))
 
-  private val executorFetchPermits =
-    if (maxConcurrencyExecutor > 0)
-      Some(new java.util.concurrent.Semaphore(maxConcurrencyExecutor, true))
-    else None
-
-  /** Run `f` holding one executor-wide fetch permit (no-op when the cap
-    * is off). Callers must NOT block on per-task budgets inside `f` —
-    * acquire memory first, then the permit, so a memory-stalled task
-    * never starves the whole executor's fetch pool. */
-  private[cloud] def withFetchPermit[T](f: => T): T = executorFetchPermits match {
-    case Some(sem) =>
-      sem.acquire()
-      try f finally sem.release()
-    case None => f
+  /** Bounded daemon pool that runs every prefetch GET of this executor.
+    * Commit PUTs and deletes stay on [[CloudShuffleEnv.ioEc]], so a commit
+    * never waits in a queue behind reducers' GETs. Idle threads exit. */
+  private[cloud] val fetchPool: ThreadPoolExecutor = {
+    val pool = new ThreadPoolExecutor(maxConcurrencyExecutor, maxConcurrencyExecutor,
+      60L, TimeUnit.SECONDS, new LinkedBlockingQueue[Runnable](), { (r: Runnable) =>
+        val t = new Thread(r, "cloud-shuffle-fetch")
+        t.setDaemon(true)
+        t
+      })
+    pool.allowCoreThreadTimeOut(true)
+    pool
   }
 
-  /** Observable permit count (-1 when the cap is off) — diagnostics. */
-  def availableFetchPermits: Int =
-    executorFetchPermits.map(_.availablePermits()).getOrElse(-1)
   /** Write-side checksums ride on Spark's own `spark.shuffle.checksum.*`. */
   val checksumEnabled: Boolean = conf.getBoolean("spark.shuffle.checksum.enabled", defaultValue = true)
   val checksumAlgorithm: String = conf.get("spark.shuffle.checksum.algorithm", "ADLER32")
@@ -86,6 +79,12 @@ final class CloudShuffleEnv(val conf: SparkConf, val appId: String) extends Logg
     f.setWriteChecksum(false)
     f.setVerifyChecksum(false)
     f
+  }
+
+  /** Shuts the fetch pool down and closes the FS. */
+  private[cloud] def close(): Unit = {
+    fetchPool.shutdown()
+    try fs.close() catch { case _: Exception => }
   }
 
   /** (shuffleId, mapId) coordinates of any supported shuffle block. */
@@ -155,23 +154,21 @@ object CloudShuffleEnv extends Logging {
   val ROOT_DIR_KEY = "spark.shuffle.cloud.rootDir"
   val PREFIXES_KEY = "spark.shuffle.cloud.folderPrefixes"
   val MAX_BUFFER_TASK_KEY = "spark.shuffle.cloud.maxBufferSizeTask"
-  val MAX_CONCURRENCY_KEY = "spark.shuffle.cloud.maxConcurrencyTask"
   val VALIDATE_KEY = "spark.shuffle.cloud.checksum.validate"
   val MAX_EXEC_CONCURRENCY_KEY = "spark.shuffle.cloud.maxConcurrencyExecutor"
 
   /** Every `spark.shuffle.cloud.*` option; the manager refuses any other. */
   val KEYS: Seq[String] = Seq(ROOT_DIR_KEY, PREFIXES_KEY, MAX_BUFFER_TASK_KEY,
-    MAX_CONCURRENCY_KEY, VALIDATE_KEY, MAX_EXEC_CONCURRENCY_KEY)
+    VALIDATE_KEY, MAX_EXEC_CONCURRENCY_KEY)
 
   /** Buffer in front of every data PUT. It only coalesces small write()
     * calls ahead of the FS client's own buffering, which sets the PUT
     * granularity. */
   val WRITE_BUFFER_SIZE: Int = 1 << 20
 
-  /** Daemon pool for every store request issued off a task thread: the
-    * prefetch workers, the per-prefix deletes and a commit's index and
-    * checksum PUTs. It grows with demand, so a worker parked on its task's
-    * memory budget never keeps another request from starting. */
+  /** Daemon pool for the per-prefix deletes and a commit's index and
+    * checksum PUTs. It grows with demand, so a commit never waits for
+    * another task's requests. */
   private[cloud] val ioEc: ExecutionContext =
     ExecutionContext.fromExecutorService(Executors.newCachedThreadPool { r =>
       val t = new Thread(r, "cloud-shuffle-io")
@@ -196,8 +193,8 @@ object CloudShuffleEnv extends Logging {
       val appId = wantApp2.getOrElse(
         throw new IllegalStateException("cloud shuffle: no app id available yet"))
       // the FS is a private newInstance (not the JVM-cached one) — close
-      // the replaced env's handle instead of leaking it per context
-      if (cur2 != null) try cur2.fs.close() catch { case _: Exception => }
+      // the replaced env's handle and pool instead of leaking them per context
+      if (cur2 != null) cur2.close()
       instance = new CloudShuffleEnv(conf, appId)
       CloudShuffleIndex.purgeAll()
       logInfo(s"cloud shuffle env for app $appId rooted at ${instance.rootDir}")
@@ -210,7 +207,7 @@ object CloudShuffleEnv extends Logging {
 
   /** Test hook: drop the singleton so a new SparkContext re-creates it. */
   def reset(): Unit = synchronized {
-    if (instance != null) try instance.fs.close() catch { case _: Exception => }
+    if (instance != null) instance.close()
     instance = null
     CloudShuffleIndex.purgeAll()
   }

@@ -18,7 +18,8 @@ import org.apache.spark.util.collection.ExternalSorter
   *     reads when the serializer/codec make concatenation safe — fewer,
   *     larger ranged GETs;
   *  3. slice each map's data blob via its prefix-sum index;
-  *  4. prefetch concurrently under a per-task memory cap;
+  *  4. prefetch concurrently, admitted by bytes under a per-task memory
+  *     cap, on the executor's bounded fetch pool;
   *  5. (optional) validate per-partition checksums while streaming;
   *  6. decrypt/decompress, deserialize, then apply the dependency's
   *     aggregation and key ordering exactly as Spark's own reader would.
@@ -97,8 +98,8 @@ private[cloud] class CloudShuffleReader[K, C](
       }.toIndexedSeq
 
     val fetched = new CloudPrefetchIterator(env, ranged, readMetrics)
-    // a consumer that stops early (take/limit, task kill) leaves workers
-    // parked on the memory budget until this stops them
+    // a consumer that stops early (take/limit, task kill) leaves fetched
+    // blocks queued, their tail streams open, until this stops them
     context.addTaskCompletionListener[Unit](_ => fetched.close())
 
     val serializerInstance = dep.serializer.newInstance()

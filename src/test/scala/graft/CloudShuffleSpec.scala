@@ -6,7 +6,7 @@ import scala.jdk.CollectionConverters._
 import scala.util.Random
 
 import org.apache.spark.{SparkConf, SparkContext}
-import org.apache.spark.shuffle.cloud.{CloudShuffleDataIO, CloudShuffleEnv, CloudShuffleManager}
+import org.apache.spark.shuffle.cloud.{CloudShuffleDataIO, CloudShuffleEnv, CloudShuffleManager, GatedStore}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterEach
 import org.scalatest.funsuite.AnyFunSuite
@@ -32,6 +32,8 @@ class CloudShuffleSpec extends AnyFunSuite with BeforeAndAfterEach {
       // semantics, and lets OUR checksum validator do the detecting
       .set("spark.hadoop.fs.file.impl", "org.apache.hadoop.fs.RawLocalFileSystem")
       .set("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
+      // as the manager asks: relocated outputs have no reduce locality
+      .set("spark.shuffle.reduceLocality.enabled", "false")
     extra.foreach { case (k, v) => c.set(k, v) }
     c
   }
@@ -60,13 +62,16 @@ class CloudShuffleSpec extends AnyFunSuite with BeforeAndAfterEach {
   }
 
   test("an unknown spark.shuffle.cloud option is refused at manager init") {
-    // writeBufferSize was an option once; a job still setting it must learn
-    // that it has no effect
-    val ex = intercept[IllegalArgumentException] {
-      new CloudShuffleManager(baseConf("spark.shuffle.cloud.writeBufferSize" -> "8m"))
+    // writeBufferSize and maxConcurrencyTask were options once; a job still
+    // setting one must learn that it has no effect
+    Seq("spark.shuffle.cloud.writeBufferSize" -> "8m",
+      "spark.shuffle.cloud.maxConcurrencyTask" -> "10").foreach { case (key, value) =>
+      val ex = intercept[IllegalArgumentException] {
+        new CloudShuffleManager(baseConf(key -> value))
+      }
+      assert(ex.getMessage.contains(key), ex.getMessage)
+      CloudShuffleEnv.KEYS.foreach(k => assert(ex.getMessage.contains(k), ex.getMessage))
     }
-    assert(ex.getMessage.contains("spark.shuffle.cloud.writeBufferSize"), ex.getMessage)
-    CloudShuffleEnv.KEYS.foreach(k => assert(ex.getMessage.contains(k), ex.getMessage))
   }
 
   test("foldByKey round trip (sort/unsafe path)") {
@@ -265,16 +270,18 @@ class CloudShuffleSpec extends AnyFunSuite with BeforeAndAfterEach {
   }
 
   test("executor-wide fetch permit cap: correct results, permits returned") {
-    // cap the WHOLE JVM to one concurrent prefetch read: many reduce
-    // tasks contend for the single permit and must still drain every
-    // block (fair semaphore, memory acquired before the permit)
-    withSc(baseConf(CloudShuffleEnv.MAX_EXEC_CONCURRENCY_KEY -> "1")) { sc =>
+    // cap the WHOLE JVM to one fetch-pool thread: many reduce tasks queue
+    // their GETs behind one another and must still drain every block; a
+    // 5 ms GET makes any overlap visible to the store
+    val store = GatedStore.sparkConf(GatedStore.OpenDelayKey -> "5").getAll
+    withSc(baseConf(store :+ (CloudShuffleEnv.MAX_EXEC_CONCURRENCY_KEY -> "1"): _*)) { sc =>
       val n = 20000
       val sums = sc.parallelize(0 until n, 8).map(i => (i % 13, i.toLong))
         .reduceByKey(_ + _, 7).collect().toMap
-      assert(sums.values.sum == (0L until n).sum)
-      assert(CloudShuffleEnv.get().availableFetchPermits == 1,
-        "all permits must return to the pool after the job")
+      assert(sums == (0 until n).groupBy(_ % 13).map { case (k, vs) => k -> vs.map(_.toLong).sum })
+      val gated = CloudShuffleEnv.get().fs.asInstanceOf[GatedStore]
+      assert(gated.opens.get > 0 && gated.opensPeak.get == 1, "one GET at a time across 7 reducers")
+      assert(gated.openInputs.get == 0, "every store stream is returned after the job")
     }
   }
 

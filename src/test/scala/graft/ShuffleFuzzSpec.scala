@@ -35,8 +35,10 @@ class ShuffleFuzzSpec extends AnyFunSuite with BeforeAndAfterEach {
       .set("spark.shuffle.sort.io.plugin.class", classOf[CloudShuffleDataIO].getName)
       .set("spark.shuffle.cloud.rootDir", root)
       .set("spark.shuffle.cloud.checksum.validate", "true")
-      // exercise the executor-wide fetch-permit path in every trial
+      // a 3-thread fetch pool in every trial
       .set("spark.shuffle.cloud.maxConcurrencyExecutor", "3")
+      // as the manager asks: relocated outputs have no reduce locality
+      .set("spark.shuffle.reduceLocality.enabled", "false")
       .set("spark.shuffle.sort.bypassMergeThreshold", "4")
       .set("spark.hadoop.fs.file.impl", "org.apache.hadoop.fs.RawLocalFileSystem")
       .set("spark.serializer", "org.apache.spark.serializer.KryoSerializer")

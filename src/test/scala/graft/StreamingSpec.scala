@@ -198,6 +198,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       .config("spark.shuffle.sort.io.plugin.class",
         "org.apache.spark.shuffle.cloud.CloudShuffleDataIO")
       .config("spark.shuffle.cloud.rootDir", root)
+      .config("spark.shuffle.reduceLocality.enabled", "false")
       .getOrCreate()
     ss.sparkContext.setLogLevel("WARN")
     try {
