@@ -25,10 +25,6 @@ private[cloud] class CloudBlockStream(env: CloudShuffleEnv,
 
   def size: Long = end - start
 
-  /** Bytes not yet consumed — `size` is the constant range width, this is
-    * the live cursor; exhaustion probes must use this one. */
-  def remainingBytes: Long = end - pos
-
   private def remaining: Long = end - pos
 
   override def read(): Int = {

@@ -93,7 +93,7 @@ private[cloud] class CloudPrefetchIterator(env: CloudShuffleEnv,
       val toBuffer = bufferSize(idx)
       val buf = readUpTo(wrapped, toBuffer)
       val stream: InputStream =
-        if (buf.length.toLong >= ranged.size || isExhausted(wrapped)) {
+        if (buf.length.toLong >= ranged.size) {
           wrapped.close()
           new ByteArrayInputStream(buf)
         } else {
@@ -110,14 +110,6 @@ private[cloud] class CloudPrefetchIterator(env: CloudShuffleEnv,
         if (!stopped) queue.put(Left(t))
         stop()
     }
-  }
-
-  /** The ranged stream reports its own exhaustion; wrappers (decompression)
-    * don't, so probe conservatively: only a raw CloudBlockStream can be
-    * declared done early. */
-  private def isExhausted(s: InputStream): Boolean = s match {
-    case c: CloudBlockStream => c.remainingBytes <= 0
-    case _                   => false
   }
 
   private def readUpTo(in: InputStream, limit: Long): Array[Byte] = {

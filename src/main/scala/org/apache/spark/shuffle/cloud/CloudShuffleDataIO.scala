@@ -1,8 +1,7 @@
 package org.apache.spark.shuffle.cloud
 
 import java.io.{BufferedOutputStream, IOException, OutputStream}
-import java.nio.file.Files
-import java.util.{Collections, Optional}
+import java.util.Collections
 
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
@@ -35,10 +34,6 @@ private[cloud] class CloudExecutorComponents(conf: SparkConf)
   override def createMapOutputWriter(shuffleId: Int, mapTaskId: Long,
       numPartitions: Int): ShuffleMapOutputWriter =
     new CloudMapOutputWriter(env, shuffleId, mapTaskId, numPartitions)
-
-  override def createSingleFileMapOutputWriter(shuffleId: Int,
-      mapId: Long): Optional[SingleSpillShuffleMapOutputWriter] =
-    Optional.of(new CloudSingleSpillWriter(env, shuffleId, mapId))
 }
 
 private[cloud] class CloudDriverComponents extends ShuffleDriverComponents with Logging {
@@ -63,23 +58,36 @@ private[cloud] class CloudDriverComponents extends ShuffleDriverComponents with 
 
 /** Streams every reduce partition of one map task into a single object
   * (`shuffle_<id>_<map>_0.data`) and records per-partition lengths; on
-  * commit, writes the prefix-sum index and checksum blobs.
+  * commit, writes the prefix-sum index and checksum blobs. Every Spark
+  * writer commits through this class: the serialized writer merges even a
+  * single spill through its partition streams.
   *
   * One object per map task (reference: `S3ShuffleMapOutputWriter.scala:22`)
   * keeps object-store request counts O(maps), not O(maps × reducers) —
   * the property that makes the layout survive 100 TB shuffles.
+  *
+  * A map output still neither committed nor aborted when its task ends is
+  * aborted then: Spark's sort writer does not abort on a failed write, and
+  * its open data stream and partial object would otherwise outlive the
+  * task.
   */
 private[cloud] class CloudMapOutputWriter(env: CloudShuffleEnv, shuffleId: Int,
     mapId: Long, numPartitions: Int) extends ShuffleMapOutputWriter with Logging {
 
+  private val dataBlock = ShuffleDataBlockId(shuffleId, mapId, CloudShuffleManager.NOOP_REDUCE_ID)
   private val partitionLengths = new Array[Long](numPartitions)
   private var lastPartitionId = -1
   private var bytesWritten = 0L
   private var stream: OutputStream = _
+  private var finished = false // committed or aborted
+
+  Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit] { _ =>
+    if (!finished) abort(new IOException(s"map task ended before committing map $mapId"))
+  })
 
   private def ensureStream(): OutputStream = {
     if (stream == null) {
-      stream = CloudMapOutputWriter.createData(env, shuffleId, mapId)
+      stream = new BufferedOutputStream(env.createBlock(dataBlock), CloudShuffleEnv.WRITE_BUFFER_SIZE)
     }
     stream
   }
@@ -120,59 +128,41 @@ private[cloud] class CloudMapOutputWriter(env: CloudShuffleEnv, shuffleId: Int,
     override def getNumBytesWritten: Long = count
   }
 
+  /** The index and checksum PUTs start on the env's I/O pool while the data
+    * PUT finishes on the calling thread, so the task waits out one store
+    * latency instead of three. Returns or throws only once every PUT has
+    * finished; if any failed, the map output is aborted, so a failed commit
+    * leaves nothing a reader could see. Spark's writers time their record
+    * writes but not the commit, so its wall time is added to the task's
+    * shuffle write time here. */
   override def commitAllPartitions(checksums: Array[Long]): MapOutputCommitMessage = {
-    val total = partitionLengths.sum
-    val withIndex = total > 0 || env.checksumEnabled
-    CloudMapOutputWriter.commit(env, shuffleId, mapId, partitionLengths, withIndex, checksums) {
-      if (stream != null) stream.close()
-      if (total != bytesWritten) {
-        throw new IOException(
-          s"cloud shuffle corruption: partition lengths sum to $total " +
-            s"but $bytesWritten bytes were written")
-      }
-    }
-    MapOutputCommitMessage.of(partitionLengths)
-  }
-
-  override def abort(error: Throwable): Unit = {
-    try if (stream != null) stream.close()
-    catch { case e: Exception => logDebug(s"abort close: $e") }
-    CloudMapOutputWriter.discard(env, shuffleId, mapId)
-  }
-}
-
-private[cloud] object CloudMapOutputWriter {
-
-  /** The buffered data object of one map output. */
-  def createData(env: CloudShuffleEnv, shuffleId: Int, mapId: Long): OutputStream =
-    new BufferedOutputStream(
-      env.createBlock(ShuffleDataBlockId(shuffleId, mapId, CloudShuffleManager.NOOP_REDUCE_ID)),
-      CloudShuffleEnv.WRITE_BUFFER_SIZE)
-
-  /** Commits one map output: the index and checksum PUTs start on the env's
-    * I/O pool while `closeData` finishes the data PUT on the calling
-    * thread, so the task waits out one store latency instead of three.
-    * Returns or throws only once every PUT has finished; if any failed, the
-    * map's objects are discarded, so a failed commit leaves nothing a
-    * reader could see. Spark's writers time their record writes but not
-    * the commit, so its wall time is added to the task's shuffle write
-    * time here. */
-  def commit(env: CloudShuffleEnv, shuffleId: Int, mapId: Long, lengths: Array[Long],
-      withIndex: Boolean, checksums: Array[Long])(closeData: => Unit): Unit = {
     implicit val ec: ExecutionContext = CloudShuffleEnv.ioEc
     val t0 = System.nanoTime()
+    val total = partitionLengths.sum
     val puts = Seq(
-      Option.when(withIndex)(Future(CloudShuffleIndex.writeIndex(env, shuffleId, mapId, lengths))),
+      Option.when(total > 0 || env.checksumEnabled)(
+        Future(CloudShuffleIndex.writeIndex(env, shuffleId, mapId, partitionLengths))),
       Option.when(env.checksumEnabled && checksums.nonEmpty)(
         Future(CloudShuffleIndex.writeChecksums(env, shuffleId, mapId, checksums)))).flatten
-    val dataError = try { closeData; None } catch { case t: Throwable => Some(t) }
+    val dataError =
+      try {
+        if (stream != null) stream.close()
+        if (total != bytesWritten) {
+          throw new IOException(
+            s"cloud shuffle corruption: partition lengths sum to $total " +
+              s"but $bytesWritten bytes were written")
+        }
+        None
+      } catch { case t: Throwable => Some(t) }
     val error = (dataError +: puts.map(settle)).flatten.headOption
     Option(TaskContext.get()).foreach(
       _.taskMetrics().shuffleWriteMetrics.incWriteTime(System.nanoTime() - t0))
     error.foreach { e =>
-      discard(env, shuffleId, mapId)
+      abort(e)
       throw e
     }
+    finished = true
+    MapOutputCommitMessage.of(partitionLengths)
   }
 
   /** Waits for `f` even across an interrupt; the interrupt then fails the
@@ -181,29 +171,14 @@ private[cloud] object CloudMapOutputWriter {
     try Await.ready(f, Duration.Inf).value.get.failed.toOption
     catch { case e: InterruptedException => settle(f).orElse(Some(e)) }
 
-  /** Deletes a map output's data, index and checksum objects and forgets
-    * its cached index. */
-  def discard(env: CloudShuffleEnv, shuffleId: Int, mapId: Long): Unit = {
-    Seq(ShuffleDataBlockId(shuffleId, mapId, CloudShuffleManager.NOOP_REDUCE_ID),
-      ShuffleIndexBlockId(shuffleId, mapId, CloudShuffleManager.NOOP_REDUCE_ID),
+  /** Closes the data stream, then deletes the map output's data, index and
+    * checksum objects and forgets its cached index. Idempotent. */
+  override def abort(error: Throwable): Unit = {
+    finished = true
+    try if (stream != null) stream.close()
+    catch { case e: Exception => logDebug(s"abort close: $e") }
+    Seq(dataBlock, ShuffleIndexBlockId(shuffleId, mapId, CloudShuffleManager.NOOP_REDUCE_ID),
       ShuffleChecksumBlockId(shuffleId, mapId, 0)).foreach(env.deleteBlock)
     CloudShuffleIndex.forget(shuffleId, mapId)
-  }
-}
-
-/** Fast path when the sort writer produced exactly one spill file: stream
-  * it to the store as the data object, committed together with the index
-  * and checksums (reference: `S3SingleSpillShuffleMapOutputWriter.scala:24-64`).
-  */
-private[cloud] class CloudSingleSpillWriter(env: CloudShuffleEnv, shuffleId: Int,
-    mapId: Long) extends SingleSpillShuffleMapOutputWriter {
-
-  override def transferMapSpillFile(mapSpillFile: java.io.File,
-      partitionLengths: Array[Long], checksums: Array[Long]): Unit = {
-    CloudMapOutputWriter.commit(env, shuffleId, mapId, partitionLengths, withIndex = true,
-      checksums) {
-      val out = CloudMapOutputWriter.createData(env, shuffleId, mapId)
-      try Files.copy(mapSpillFile.toPath, out) finally out.close()
-    }
   }
 }

@@ -17,12 +17,13 @@ import org.apache.spark.storage.{BlockId, ShuffleChecksumBlockId, ShuffleIndexBl
   *  - checksum blob = one big-endian long per reduce partition
   *    (ADLER32 / CRC32 / CRC32C value).
   *
-  * Both are tiny and read often (every reducer touches every map's index),
-  * so they are cached per-JVM. A cold read resolves through a per-key lazy
-  * cell OUTSIDE the map: its store round trip holds no bin lock, which
-  * would block unrelated readers and `writeIndex`'s `put`. Concurrent
-  * readers of one map still share one GET, and a failed read leaves no
-  * cell behind.
+  * Both are tiny and read often (every reducer touches every map's index,
+  * and every validating read its map's checksums), so they are cached
+  * per-JVM; a commit caches its checksums only when reads validate them.
+  * A cold read resolves through a per-key lazy cell OUTSIDE the map: its
+  * store round trip holds no bin lock, which would block unrelated readers
+  * and `writeIndex`'s `put`. Concurrent readers of one map still share one
+  * GET, and a failed read leaves no cell behind.
   */
 private[cloud] object CloudShuffleIndex extends Logging {
 
@@ -59,7 +60,7 @@ private[cloud] object CloudShuffleIndex extends Logging {
     if (checksums.isEmpty) return
     val blockId = ShuffleChecksumBlockId(shuffleId, mapId, 0)
     writeLongs(env, blockId, checksums)
-    checksumCache.put(blockId, new Cell(() => checksums))
+    if (env.validateChecksums) checksumCache.put(blockId, new Cell(() => checksums))
   }
 
   /** Cumulative offsets for one map task's data blob, cached. */

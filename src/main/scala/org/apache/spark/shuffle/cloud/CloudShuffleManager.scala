@@ -1,15 +1,9 @@
 package org.apache.spark.shuffle.cloud
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.{ShuffleDependency, SparkConf, SparkEnv, TaskContext}
-import org.apache.spark.internal.Logging
+import org.apache.spark.{ShuffleDependency, SparkConf, TaskContext}
 import org.apache.spark.scheduler.MapStatus
 import org.apache.spark.shuffle._
-import org.apache.spark.shuffle.api.ShuffleExecutorComponents
-import org.apache.spark.shuffle.sort.{BypassMergeSortShuffleHandle,
-  CloudSortWriters, SerializedShuffleHandle, SortShuffleManager,
-  SortShuffleWriter, UnsafeShuffleWriter}
+import org.apache.spark.shuffle.sort.SortShuffleManager
 import org.apache.spark.storage.FallbackStorage
 
 /** Cloud-backed `ShuffleManager`: shuffle data lives on a Hadoop-FS object
@@ -17,10 +11,12 @@ import org.apache.spark.storage.FallbackStorage
   * executor decommissioning without shuffle recomputation.
   *
   * Re-expression of the reference's manager
-  * (`sort/S3ShuffleManager.scala:38-187`) for Spark 4.1.2: handle selection
-  * and the three write strategies are Spark's own — the redirection happens
-  * entirely inside [[CloudShuffleDataIO]]'s components, which every writer
-  * streams through — and the read side is [[CloudShuffleReader]].
+  * (`sort/S3ShuffleManager.scala:38-187`) for Spark 4.1.2. Handle selection
+  * and the three writers are Spark's `SortShuffleManager`'s own; the
+  * redirection happens entirely inside [[CloudShuffleDataIO]]'s components,
+  * which every writer streams through. This manager adds the store's
+  * registration and deletion around the superclass's, relocates each
+  * committed map status, and reads through [[CloudShuffleReader]].
   *
   * Usage:
   * {{{
@@ -29,9 +25,7 @@ import org.apache.spark.storage.FallbackStorage
   *   spark.shuffle.cloud.rootDir=s3a://bucket/shuffle   (or any Hadoop FS)
   * }}}
   */
-class CloudShuffleManager(conf: SparkConf) extends ShuffleManager with Logging {
-
-  import CloudShuffleManager._
+class CloudShuffleManager(conf: SparkConf) extends SortShuffleManager(conf) {
 
   // fail fast: without our ShuffleDataIO the writers would scatter shuffle
   // files onto executor-local disk while the reader looks at the store
@@ -72,48 +66,16 @@ class CloudShuffleManager(conf: SparkConf) extends ShuffleManager with Logging {
     }
   }
 
-  private lazy val shuffleExecutorComponents: ShuffleExecutorComponents = {
-    val components = ShuffleDataIOUtils.loadShuffleDataIO(conf).executor()
-    val extraConfigs = conf.getAllWithPrefix(ShuffleDataIOUtils.SHUFFLE_SPARK_CONF_PREFIX).toMap
-    components.initializeExecutor(conf.getAppId,
-      SparkEnv.get.executorId, extraConfigs.asJava)
-    components
-  }
-
   override def registerShuffle[K, V, C](shuffleId: Int,
       dependency: ShuffleDependency[K, V, C]): ShuffleHandle = {
     CloudShuffleEnv.get().registerShuffle(shuffleId)
-    // Spark's own three-way strategy choice (reference reuses it verbatim,
-    // `S3ShuffleManager.scala:52-71`)
-    if (SortShuffleWriter.shouldBypassMergeSort(conf, dependency)) {
-      new BypassMergeSortShuffleHandle[K, V](
-        shuffleId, dependency.asInstanceOf[ShuffleDependency[K, V, V]])
-    } else if (SortShuffleManager.canUseSerializedShuffle(dependency)) {
-      new SerializedShuffleHandle[K, V](
-        shuffleId, dependency.asInstanceOf[ShuffleDependency[K, V, V]])
-    } else {
-      new BaseShuffleHandle(shuffleId, dependency)
-    }
+    super.registerShuffle(shuffleId, dependency)
   }
 
   override def getWriter[K, V](handle: ShuffleHandle, mapId: Long,
       context: TaskContext,
-      metrics: ShuffleWriteMetricsReporter): ShuffleWriter[K, V] = {
-    val env = SparkEnv.get
-    val base: ShuffleWriter[K, V] = handle match {
-      case unsafeShuffleHandle: SerializedShuffleHandle[K @unchecked, V @unchecked] =>
-        new UnsafeShuffleWriter(env.blockManager, context.taskMemoryManager(),
-          unsafeShuffleHandle, mapId, context, env.conf, metrics,
-          shuffleExecutorComponents)
-      case bypassShuffleHandle: BypassMergeSortShuffleHandle[K @unchecked, V @unchecked] =>
-        CloudSortWriters.newBypassWriter(env.blockManager, bypassShuffleHandle,
-          mapId, env.conf, metrics, shuffleExecutorComponents)
-      case other: BaseShuffleHandle[K @unchecked, V @unchecked, _] =>
-        new SortShuffleWriter(other, mapId, context, metrics,
-          shuffleExecutorComponents)
-    }
-    new RelocatingShuffleWriter(base)
-  }
+      metrics: ShuffleWriteMetricsReporter): ShuffleWriter[K, V] =
+    new RelocatingShuffleWriter(super.getWriter[K, V](handle, mapId, context, metrics))
 
   override def getReader[K, C](handle: ShuffleHandle, startMapIndex: Int,
       endMapIndex: Int, startPartition: Int, endPartition: Int,
@@ -129,14 +91,7 @@ class CloudShuffleManager(conf: SparkConf) extends ShuffleManager with Logging {
   override def unregisterShuffle(shuffleId: Int): Boolean = {
     CloudShuffleIndex.purgeShuffle(shuffleId)
     CloudShuffleEnv.get().deleteShuffle(shuffleId)
-    true
-  }
-
-  override val shuffleBlockResolver: ShuffleBlockResolver =
-    new IndexShuffleBlockResolver(conf)
-
-  override def stop(): Unit = {
-    shuffleBlockResolver.stop()
+    super.unregisterShuffle(shuffleId)
   }
 }
 

@@ -1,14 +1,15 @@
 package org.apache.spark.shuffle.cloud
 
 import java.io.{FileNotFoundException, IOException}
-import java.nio.file.Files
 
+import org.apache.spark.SparkConf
 import org.scalatest.BeforeAndAfterEach
 import org.scalatest.funsuite.AnyFunSuite
 
 /** A map output's commit issues its data, index and checksum PUTs together
   * and is all-or-nothing: a commit that fails, or an aborted map output,
-  * leaves no object and no cached index behind. */
+  * leaves no object and no cached index behind. A committed map's checksums
+  * are cached only when reads validate them. */
 class ConcurrentCommitSpec extends AnyFunSuite with BeforeAndAfterEach {
 
   private val shuffleId = 9002
@@ -19,8 +20,11 @@ class ConcurrentCommitSpec extends AnyFunSuite with BeforeAndAfterEach {
 
   override def afterEach(): Unit = CloudShuffleEnv.reset()
 
-  private def withEnv[T](store: (String, String)*)(body: CloudShuffleEnv => T): T = {
-    val env = new CloudShuffleEnv(GatedStore.sparkConf(store: _*), "concurrent-commit-spec")
+  private def withEnv[T](store: (String, String)*)(body: CloudShuffleEnv => T): T =
+    withConf(GatedStore.sparkConf(store: _*))(body)
+
+  private def withConf[T](conf: SparkConf)(body: CloudShuffleEnv => T): T = {
+    val env = new CloudShuffleEnv(conf, "concurrent-commit-spec")
     try body(env) finally env.fs.close()
   }
 
@@ -50,27 +54,24 @@ class ConcurrentCommitSpec extends AnyFunSuite with BeforeAndAfterEach {
     intercept[FileNotFoundException](CloudShuffleIndex.readChecksums(env, shuffleId, mapId))
   }
 
-  test("the data, index and checksum PUTs of one map are in flight together") {
-    // every PUT's close waits until three are closing at once
-    withEnv(closesTogether) { env =>
-      val msg = written(env, 1L).commitAllPartitions(checksums)
-      assert(msg.getPartitionLengths.toSeq == lengths.toSeq)
-      assert(store(env).closesPeak.get == 3)
-      assert(objectsOf(env, 1L).sorted ==
-        Seq("shuffle_9002_1_0.checksum", "shuffle_9002_1_0.data", "shuffle_9002_1_0.index"))
-      assert(CloudShuffleIndex.readIndex(env, shuffleId, 1L).toSeq == Seq(0L, 3L, 3L, 8L))
-    }
-  }
-
-  test("the single-spill commit issues its three PUTs together") {
-    withEnv(closesTogether) { env =>
-      val spill = Files.createTempFile("spill", ".data")
-      Files.write(spill, Array.fill[Byte](lengths.sum.toInt)(7))
-      new CloudSingleSpillWriter(env, shuffleId, 2L)
-        .transferMapSpillFile(spill.toFile, lengths, checksums)
-      assert(store(env).closesPeak.get == 3)
-      assert(objectsOf(env, 2L).size == 3)
-      Files.deleteIfExists(spill)
+  for (validate <- Seq(false, true)) {
+    test("the data, index and checksum PUTs of one map are in flight together" +
+        (if (validate) " (checksum validation on)" else "")) {
+      // every PUT's close waits until three are closing at once
+      val conf = GatedStore.sparkConf(closesTogether)
+        .set(CloudShuffleEnv.VALIDATE_KEY, validate.toString)
+      withConf(conf) { env =>
+        val msg = written(env, 1L).commitAllPartitions(checksums)
+        assert(msg.getPartitionLengths.toSeq == lengths.toSeq)
+        assert(store(env).closesPeak.get == 3)
+        assert(objectsOf(env, 1L).sorted ==
+          Seq("shuffle_9002_1_0.checksum", "shuffle_9002_1_0.data", "shuffle_9002_1_0.index"))
+        assert(CloudShuffleIndex.readIndex(env, shuffleId, 1L).toSeq == Seq(0L, 3L, 3L, 8L))
+        // the commit caches the checksums only for validating reads
+        val opens = store(env).opens.get
+        assert(CloudShuffleIndex.readChecksums(env, shuffleId, 1L).toSeq == checksums.toSeq)
+        assert(store(env).opens.get - opens == (if (validate) 0 else 1))
+      }
     }
   }
 

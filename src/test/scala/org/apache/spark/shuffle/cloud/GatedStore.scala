@@ -28,7 +28,7 @@ import org.apache.spark.SparkConf
   *
   * A barrier that is not met within 10 s breaks, failing the request. The
   * store records the peak number of opens and closes in progress at once,
-  * and the number of input streams open now.
+  * and the number of input and output streams open now.
   */
 class GatedStore extends RawLocalFileSystem {
   import GatedStore._
@@ -41,6 +41,7 @@ class GatedStore extends RawLocalFileSystem {
 
   val opens = new AtomicInteger(0)
   val openInputs = new AtomicInteger(0)
+  val openOutputs = new AtomicInteger(0)
   val opensPeak = new Peak
   val closesPeak = new Peak
 
@@ -79,12 +80,16 @@ class GatedStore extends RawLocalFileSystem {
       blockSize: Long, progress: Progressable): FSDataOutputStream =
     gated(f, super.create(f, overwrite, bufferSize, replication, blockSize, progress))
 
-  private def gated(f: Path, out: FSDataOutputStream): FSDataOutputStream =
+  private def gated(f: Path, out: FSDataOutputStream): FSDataOutputStream = {
+    openOutputs.incrementAndGet()
     new FSDataOutputStream(new OutputStream {
+      private var closed = false
       override def write(b: Int): Unit = out.write(b)
       override def write(b: Array[Byte], off: Int, len: Int): Unit = out.write(b, off, len)
       override def flush(): Unit = out.flush()
       override def close(): Unit = closesPeak.during(closeGate) {
+        if (!closed) openOutputs.decrementAndGet()
+        closed = true
         if (closeDelayMs > 0) Thread.sleep(closeDelayMs)
         out.close()
         if (failDataClose && f.getName.endsWith(".data")) {
@@ -92,6 +97,7 @@ class GatedStore extends RawLocalFileSystem {
         }
       }
     }, null)
+  }
 }
 
 object GatedStore {

@@ -2,7 +2,9 @@ package org.apache.spark.shuffle.cloud
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.{HashPartitioner, ShuffleDependency, SparkConf, SparkContext}
+import com.esotericsoftware.kryo.{Kryo, KryoSerializable}
+import com.esotericsoftware.kryo.io.{Input, Output}
+import org.apache.spark.{HashPartitioner, ShuffleDependency, SparkConf, SparkContext, SparkException}
 import org.apache.spark.executor.TaskMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.shuffle.sort.SerializedShuffleHandle
@@ -10,8 +12,9 @@ import org.scalatest.BeforeAndAfterEach
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Partition writers offer Spark only a stream, so the serialized writer's
-  * spill merge takes Spark's stream fallback; and a map output's commit
-  * counts as the task's shuffle write time. */
+  * spill merge takes Spark's stream fallback, for one spill as for several;
+  * a map output's commit counts as the task's shuffle write time; and a map
+  * task that fails mid-write leaves nothing open or stored. */
 class WritePathSpec extends AnyFunSuite with BeforeAndAfterEach {
 
   override def beforeEach(): Unit = CloudShuffleEnv.reset()
@@ -33,16 +36,18 @@ class WritePathSpec extends AnyFunSuite with BeforeAndAfterEach {
     } finally sc.stop()
   }
 
-  for (transferTo <- Seq(true, false)) {
-    test(s"a merge of several spills round-trips exactly (spark.file.transferTo=$transferTo)") {
+  for (transferTo <- Seq(true, false); several <- Seq(true, false)) {
+    val spills = if (several) "several spills" else "exactly one spill"
+    test(s"a merge of $spills round-trips exactly (spark.file.transferTo=$transferTo)") {
       // Kryo and no aggregator select the serialized writer once bypass is
       // off; the force-spill threshold gives each map task several spills,
-      // which the writer merges partition by partition
+      // and without it the final in-memory sort is the one spill. The
+      // writer merges either partition by partition
       val conf = GatedStore.localSparkConf("write-path-spec")
         .set("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
         .set("spark.shuffle.sort.bypassMergeThreshold", "1")
-        .set("spark.shuffle.spill.numElementsForceSpillThreshold", "100")
         .set("spark.file.transferTo", transferTo.toString)
+      if (several) conf.set("spark.shuffle.spill.numElementsForceSpillThreshold", "100")
       val n = 4000
       val metrics = mapTaskMetrics(conf) { sc =>
         val shuffled = sc.parallelize(0 until n, 4).map(i => (i, s"value-$i"))
@@ -54,8 +59,26 @@ class WritePathSpec extends AnyFunSuite with BeforeAndAfterEach {
       }
       assert(metrics.size == 4)
       // a forced spill is counted; the final in-memory sort is not
-      metrics.foreach(m => assert(m.diskBytesSpilled > 0, "no map task spilled"))
+      metrics.foreach(m => assert((m.diskBytesSpilled > 0) == several, "spilled bytes"))
     }
+  }
+
+  test("a map task that fails mid-write leaves no open stream and no object") {
+    // map-side combine selects the sort writer, which writes partition by
+    // partition: the one map task opens its data object for the earlier
+    // partitions before the value of key 7, in the last one, fails
+    val conf = GatedStore.localSparkConf("write-path-spec")
+      .set("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
+    val sc = new SparkContext(conf)
+    try {
+      val combined = sc.parallelize(0 until 1000, 1).map(i => (i % 8, new FailingValue(i)))
+        .reduceByKey((a, b) => if (a.n > b.n) a else b, 4)
+      val e = intercept[SparkException](combined.count())
+      assert(e.getMessage.contains(FailingValue.Message))
+      val env = CloudShuffleEnv.get()
+      assert(env.fs.asInstanceOf[GatedStore].openOutputs.get == 0)
+      assert(GatedStore.objects(env).isEmpty)
+    } finally sc.stop()
   }
 
   test("a map output's commit counts as shuffle write time") {
@@ -75,4 +98,19 @@ class WritePathSpec extends AnyFunSuite with BeforeAndAfterEach {
       assert(ms >= delayMs, s"write time $ms ms")
     }
   }
+}
+
+/** A value whose Kryo serialization fails for the last record of the last
+  * key. */
+class FailingValue(var n: Int) extends KryoSerializable {
+  override def write(kryo: Kryo, out: Output): Unit = {
+    if (n == 999) throw new IllegalStateException(FailingValue.Message)
+    out.writeInt(n)
+  }
+
+  override def read(kryo: Kryo, in: Input): Unit = n = in.readInt()
+}
+
+object FailingValue {
+  val Message = "value 999 refuses to serialize"
 }
