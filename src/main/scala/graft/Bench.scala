@@ -1,376 +1,138 @@
 package graft
-import org.apache.spark.shuffle.cloud.ShuffleMetricsTap
-import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.BenchRunner._
+
+/** Per-query timings of the batch queries (`runMain graft.Bench [tier]`).
+  *
+  *  - `base` (the default): every batch query on `SPARK_GRAFT_SF_DIR`
+  *    (sf0.1), plugin and default-manager lanes with the contention
+  *    re-measure; one JSON line on stdout and `target/bench.json`.
+  *    `SPARK_GRAFT_AB=0` runs the plugin lane only, `SPARK_GRAFT_AB_ORDER`
+  *    sets the lane order and `SPARK_GRAFT_BENCH_ONLY=q05,ts01,...` restricts
+  *    the sweep.
+  *  - `scale`: the heavy queries one decade right of sf0.1, plugin only;
+  *    `target/scaleprobe.json`, which `scripts/scale_table.py` renders.
+  *
+  * The streaming drains are left out: a checkpointed AvailableNow drain
+  * measures state-store and checkpoint I/O, not engine throughput, and
+  * would swamp the batch medians. `graft.BenchStream` times them.
+  */
 object Bench {
-  private case class Obs(sec: Double, shufW: Long, shufR: Long)
-  private case class Stat(med: Double, min: Double, spread: Double,
-    first: Double, shufW: Long, shufR: Long)
-
-  // ms precision keeps the line compact enough for the driver's tail
-  // capture (r1/r2 full-precision doubles overflowed it: "parsed": null)
-  private def ms(v: Double): String = if (v < 0) "-1"
-    else String.format(java.util.Locale.ROOT, "%.3f", Double.box(v)) // comma-decimal locales would break the JSON
-
-  /** One bench lane: three FULL interleaved passes of `ordered` on this
-    * session (not back-to-back repeats — the rig shares the host with
-    * other load and spikes are temporally correlated, so repeating a
-    * query immediately puts both runs inside the same spike;
-    * interleaving decorrelates). A System.gc() before each query keeps a
-    * neighbor's garbage from billing its collection pause to this query
-    * (the r2 "regression cluster" — q11-q14/ts01/mm02 2-6× slower with
-    * unchanged code — did not reproduce under this protocol). r5 lesson:
-    * a single number per query cannot distinguish a real 10% regression
-    * from host noise (r4→r5 drifted ~11% across unrelated queries), so
-    * each query reports median-of-3 (the headline), min (the noise
-    * floor), and spread (max-min, the noise band): a regression is real
-    * only when medians move by more than the spread. Shuffle bytes are
-    * plan-determined for a WARM query, but pass 1 can include one-time
-    * memoized artifact builds (cl01's k-means training, ss08's index,
-    * dd12's cluster table) — the per-pass MEDIAN reports the
-    * steady-state serve cost, not the build. */
-  private def runLane(spark: SparkSession, sfDir: String,
-      ordered: Seq[(String, (SparkSession, String) => DataFrame)])
-      : Map[String, Stat] = {
-    // per-query shuffle-volume accounting: the reference's only published
-    // perf numbers are shuffle volumes per query (run_benchmarks.sh); in
-    // the plugin lane every shuffle byte flows through the cloud plugin's
-    // measured streams, in the default lane through Spark's sort manager
-    val tap = new ShuffleMetricsTap(spark.sparkContext)
-    // warmup: JIT + codegen + FS metadata, so per-query numbers measure
-    // the queries rather than session startup
-    Tables.load(spark, sfDir, "lineitem").groupBy("l_returnflag").count().count()
-    val passes = (1 to 3).map { _ =>
-      ordered.map { case (name, fn) =>
-        System.gc()
-        tap.harvest() // reset: don't bill warmup/neighbor bytes to this query
-        val t0 = System.nanoTime()
-        try {
-          // execute the query's OWN plan via the noop sink, not a count()
-          // stacked on top: the count's re-optimization prunes every
-          // column and can DELETE the operator under test — dd16's final
-          // left join (unique-keyed right side, no filter) collapsed to a
-          // bare parquet count, benching a 0.24 s scan as if it were the
-          // span-dedup pipeline. The noop write materializes every output
-          // row/column inside a proper SQLExecution; raw
-          // queryExecution.toRdd.count() is NOT safe here — it skips the
-          // execution-id wrapper AQE's final-plan handoff waits on and
-          // intermittently deadlocks in withFinalPlanUpdate (observed on
-          // this rig).
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          val sec = (System.nanoTime() - t0) / 1e9
-          val (w, r) = tap.harvest()
-          name -> Obs(sec, w, r)
-        } catch {
-          case t: Throwable =>
-            // a broken query must read as broken, not fast: sentinel -1
-            System.err.println(s"BENCH FAIL $name: ${t.getClass.getName}: ${t.getMessage}")
-            name -> Obs(-1.0, -1L, -1L)
-        }
-      }.toMap
-    }
-    ordered.map { case (name, _) =>
-      val obs = passes.map(_(name))
-      val times = obs.map(_.sec)
-      name -> (if (times.exists(_ < 0)) Stat(-1.0, -1.0, 0.0, -1.0, -1L, -1L)
-               else {
-                 val sorted = times.sorted
-                 def med(xs: Seq[Long]) = xs.sorted.apply(xs.size / 2)
-                 // pass 1 separately (VERDICT r13 item 6): the one-time
-                 // memoized builds (k-means training, LSH/postings/media
-                 // indexes, the BPE tokenizer) ride the FIRST pass by
-                 // design, so first−med is the visible build cost the
-                 // median-of-3 serve number deliberately excludes
-                 Stat(sorted(sorted.size / 2), sorted.head, sorted.last - sorted.head,
-                   times.head, med(obs.map(_.shufW)), med(obs.map(_.shufR)))
-               })
-    }.toMap
+  def main(args: Array[String]): Unit = {
+    val set = settings(args)
+    if (set.tier == "scale") scale(set) else base(set)
   }
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // the streaming drains (st*) are correctness surface — AvailableNow
-    // checkpointed jobs measuring state-store/checkpoint I/O, not engine
-    // throughput (the reference is batch-only); they are gated by Verify
-    // and benched by BenchStream's own lane
-    // SPARK_GRAFT_BENCH_ONLY=q05,ts01,... restricts the sweep — used for
-    // the derived-sf1 A/B lane, where the replication scheme makes a few
-    // self-join queries superlinear BY CONSTRUCTION (rep10 shifts join
-    // keys but not user_id/ts, so q40's per-user interval pairs grow
-    // ~100× — a fixture artifact, not an operator property) and the
-    // overhead question only needs the shuffle-heavy subset anyway.
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val batch = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filterNot { case (name, _) => SparkEntry.streamingQueries.contains(name) }
-    val ordered = batch
-      .filter { case (name, _) => only.forall(o => o.contains(short(name))) }
+  private def base(set: Settings): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", Tiers("sf0.1"))
+    // BENCH_ONLY picks the shuffle-heavy subset for a derived tier, where
+    // the replication makes some self-join queries superlinear by
+    // construction (shifted join keys but not user_id/ts: q40's per-user
+    // interval pairs grow ~100×, a fixture artifact)
+    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    val batch = SparkEntry.queries.toSeq.sortBy(_._1).filterNot(q => SparkEntry.streamingQueries(q._1))
+    // checked against the batch set: a streaming id would otherwise drop
+    // out silently, and a zero-query sweep reads as a total of 0
     only.foreach { o =>
-      // validate against the BATCH set: a streaming id would pass a
-      // queries-wide check and then be silently dropped by the filterNot
-      // above — a zero-query sweep emitting total 0.0 looks like a result
-      val known = batch.map(q => short(q._1)).toSet
-      val unknown = o.diff(known)
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_BENCH_ONLY ids not in the batch sweep: $unknown")
+      val unknown = o.diff(batch.map(q => short(q._1)).toSet)
+      require(unknown.isEmpty, s"SPARK_GRAFT_BENCH_ONLY ids not in the batch sweep: $unknown")
     }
+    val ordered = batch.filter(q => only.forall(_.contains(short(q._1))))
     require(ordered.nonEmpty, "SPARK_GRAFT_BENCH_ONLY selected zero queries")
-    require(ordered.map(n => short(n._1)).toSet.size == ordered.size,
-      "shortened bench keys must stay unique")
-
-    // LANE 1 (the headline): every shuffle through the cloud plugin.
-    // LANE 2 — the reference's own comparative protocol
-    // (examples/run_benchmarks.sh benches S3 shuffle AGAINST local-disk
-    // shuffle; a plugin number without the default-manager column answers
-    // "how fast" but not "what does the plugin cost me"): same queries,
-    // same median-of-3 protocol, default sort shuffle manager. On a local
-    // file:// store the expected envelope is ~1× — a sustained divergence
-    // exposes a plugin inefficiency no correctness test can see.
-    // SPARK_GRAFT_AB=0 skips the lane (halves bench wall time).
-    //
-    // Both lanes share one JVM, so whichever lane runs SECOND gets fully
-    // JIT-compiled code (the codec-heavy mm* queries are CPU-bound and
-    // most sensitive). Default order runs the plugin lane first — the
-    // conservative direction: any JIT bias inflates the reported plugin
-    // overhead, never hides it. SPARK_GRAFT_AB_ORDER=default-first swaps
-    // the lanes to bound the bias; the order rides on the JSON line.
-    val ab = sys.env.getOrElse("SPARK_GRAFT_AB", "1") != "0"
-    val abOrder = sys.env.getOrElse("SPARK_GRAFT_AB_ORDER", "plugin-first")
-    // a typo'd order value would silently run plugin-first while stamping
-    // the bogus string into the artifact's ab_order field — the JIT-bias
-    // bounding run would be recorded as having happened when it didn't
-    require(abOrder == "plugin-first" || abOrder == "default-first",
-      s"SPARK_GRAFT_AB_ORDER must be plugin-first or default-first: $abOrder")
-    def lane(usePlugin: Boolean): Map[String, Stat] = {
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
-      val spark = GraftSession.get(cpus, plugin = usePlugin)
-      val r = runLane(spark, sfDir, ordered)
-      spark.stop()
-      r
+    requireUniqueShortIds(ordered.map(_._1))
+    val sw = sweep(set, ordered, remeasure = true) { (plugin, qs) =>
+      withSession(set.cpus, plugin, sfDir, ("lineitem", "l_returnflag"))(runLane(_, sfDir, qs))
     }
-    val (plugin0, default0) =
-      if (!ab) (lane(usePlugin = true), Map.empty[String, Stat])
-      else if (abOrder == "default-first") {
-        val d = lane(usePlugin = false); (lane(usePlugin = true), d)
-      } else {
-        val p = lane(usePlugin = true); (p, lane(usePlugin = false))
-      }
-
-    // Contention re-measure + splice (r15, VERDICT r14 item 4): two rounds
-    // running, the canonical sweep's total carried ~2-6×-inflated rows
-    // (r13 cl04 36.4 s; r14 cl04 med 10.5 vs own min 6.9) because the
-    // median-of-3 cannot shed a contention episode that spans two of its
-    // three passes. The `noise`/`slow` fields DIAGNOSE such a run; this
-    // acts on the diagnosis: queries whose median sits far above their own
-    // noise floor are re-run — same median-of-3 interleaved protocol,
-    // fresh session per lane, SAME lane order. The trigger has a relative
-    // arm (med − min > max(0.35·min, 0.25 s)) and, since r16, an ABSOLUTE
-    // arm (med − min > 0.5 s): the r15 driver sweep showed the relative
-    // threshold scales with the query, so the two HEAVIEST contention
-    // artifacts (cl05 med−min 2.37 s < 0.35·7.80; cl04 1.01 s < 1.89)
-    // sailed past it while twelve sub-second queries were requeried —
-    // VERDICT r15 item 2. Candidates still rank by absolute med − min,
-    // so heavy-query inflation now always lands inside the cap. The
-    // original medians stay in target/bench.json as med0_s, and the
-    // compact line carries the spliced-query count as "requeried".
-    def suspiciousIn(m: Map[String, Stat])(name: String): Boolean =
-      m.get(name).exists(st => st.med > 0 &&
-        (st.med - st.min > math.max(0.35 * st.min, 0.25) ||
-          st.med - st.min > 0.5))
-    val suspects = ordered
-      .filter { case (n, _) => suspiciousIn(plugin0)(n) || suspiciousIn(default0)(n) }
-    // cap the re-measure at the 12 worst offenders (by med − min) so a
-    // fully-contended run cannot double the sweep's wall time
-    val worst = suspects.map(_._1)
-      .sortBy(n => -(plugin0.get(n).map(s => s.med - s.min).getOrElse(0.0)
-        .max(default0.get(n).map(s => s.med - s.min).getOrElse(0.0))))
-      .take(12).toSet
-    val rerunOrdered = ordered.filter { case (n, _) => worst.contains(n) }
-    def laneSubset(usePlugin: Boolean): Map[String, Stat] = {
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
-      val spark = GraftSession.get(cpus, plugin = usePlugin)
-      val r = runLane(spark, sfDir, rerunOrdered)
-      spark.stop()
-      r
-    }
-    val (plugin2, default2) =
-      if (rerunOrdered.isEmpty) (Map.empty[String, Stat], Map.empty[String, Stat])
-      else if (!ab) (laneSubset(usePlugin = true), Map.empty[String, Stat])
-      else if (abOrder == "default-first") {
-        val d = laneSubset(usePlugin = false); (laneSubset(usePlugin = true), d)
-      } else {
-        val p = laneSubset(usePlugin = true); (p, laneSubset(usePlugin = false))
-      }
-    // PAIR-wise splice (r16, ADVICE r15): the r15 rule kept each lane's
-    // lower median independently, so a spliced query's plugin_overhead
-    // could pair a run-2 plugin Stat with a run-1 default Stat — ratios
-    // across different sessions. Now the (plugin, default) PAIR comes from
-    // whichever run has the lower COMBINED median (plugin-only when the
-    // default lane didn't run): the overhead ratio always compares
-    // same-session measurements, the choice rule is symmetric in the lanes
-    // (it cannot systematically favor the ratio), and "host load only adds
-    // time" still justifies preferring the quieter session. Audit trail
-    // unchanged: every replaced median rides in target/bench.json as
-    // med0_s / default_med0_s.
-    def medOf(m: Map[String, Stat], n: String): Double =
-      m.get(n).map(_.med).getOrElse(-1.0)
-    // A negative default median means "default lane did not run" only when
-    // both runs lack it; a failed default in just one run keeps run 1's
-    // pair, so a failed rerun never replaces a valid Stat.
-    def keepRerun(n: String): Boolean = {
-      val p0 = medOf(plugin0, n); val p2 = medOf(plugin2, n)
-      val d0 = medOf(default0, n); val d2 = medOf(default2, n)
-      if (p0 < 0 || p2 < 0) false
-      else if (d0 < 0 && d2 < 0) p2 < p0
-      else d0 >= 0 && d2 >= 0 && p2 + d2 < p0 + d0
-    }
-    def splice(base: Map[String, Stat], rerun: Map[String, Stat])
-        : (Map[String, Stat], Map[String, Double]) = {
-      val replaced = Map.newBuilder[String, Double]
-      val merged = base.map { case (n, st) =>
-        rerun.get(n) match {
-          case Some(r2) if r2.med >= 0 && keepRerun(n) =>
-            replaced += n -> st.med
-            n -> r2
-          case _ => n -> st
-        }
-      }
-      (merged, replaced.result())
-    }
-    val (plugin, pluginMed0) = splice(plugin0, plugin2)
-    val (default, defaultMed0) = splice(default0, default2)
-
-    val qs = plugin.toSeq.sortBy(_._1)
-      .map { case (k, v) => "\"" + short(k) + "\":" + ms(v.med) }
-      .mkString("{", ",", "}")
-    // failures must read as failures, not a faster total (the BenchStream
-    // rule): exclude -1 sentinels from the sum and NAME the failed queries
-    // on the line — a dropped failure would otherwise shave a second off
-    // the headline and hide the query's real cost entirely
-    val total = plugin.values.map(_.med).filter(_ >= 0).sum
-    val failed = plugin.toSeq.sortBy(_._1)
-      .collect { case (k, v) if v.med < 0 => "\"" + short(k) + "\"" }
-      .mkString("[", ",", "]")
-    // per-query overhead ratio (plugin med / default med), for queries
-    // where both lanes succeeded and the default med is non-trivial
-    // (sub-100ms queries are scheduling noise, not shuffle cost)
-    val ratios = ordered.flatMap { case (name, _) =>
-      for {
-        p <- plugin.get(name) if p.med > 0
-        df <- default.get(name) if df.med > 0.1
-      } yield name -> p.med / df.med
-    }
-    // artifact symmetry with BenchStream (ADVICE r11): whenever the
-    // default lane RAN, its total, its failures, and the lane order are
-    // recorded — a default-only failure must read as a named failure, not
-    // a silently smaller default_total that understates plugin overhead;
-    // and a no-qualifying-ratios run must still show the lane happened
-    val overheadSummary = if (default.isEmpty) "" else {
-      val defTotal = default.values.map(_.med).filter(_ >= 0).sum
-      val defFailed = default.toSeq.sortBy(_._1)
-        .collect { case (k, v) if v.med < 0 => "\"" + short(k) + "\"" }
-        .mkString("[", ",", "]")
-      val ratioPart = if (ratios.isEmpty) "" else {
-        val rs = ratios.map(_._2).sorted
-        val medR = rs(rs.size / 2)
-        val p90 = rs(math.min(rs.size - 1, (rs.size * 9) / 10))
-        s""","plugin_overhead_med":${ms(medR)},"plugin_overhead_p90":${ms(p90)}"""
-      }
-      s""","default_total":${ms(defTotal)},"default_failed":$defFailed""" +
-        ratioPart + s""","ab_order":"$abOrder""""
-    }
-    // Self-diagnosis under host load (VERDICT r13 item 2): the r13 driver
-    // sweep recorded cl04 = 36.4 s — a ~6× contention artifact the
-    // medians-only compact line could not distinguish from a regression
-    // without a judge re-run. Two additions make a contended run read as
-    // contended from the parsed line alone:
-    //   "noise" — median over non-trivial queries of spread/med (idle-host
-    //     runs sit ≈0.1–0.2; a loaded host inflates it), and
-    //   "slow"  — the 8 slowest queries' [min_s, spread_s] brackets (med
-    //     is already in "queries"): a med far above its own min with a
-    //     matching spread IS the contention signature.
-    // Budget: the driver tails 2000 bytes; r13's line was 1679 — these
-    // ~210 bytes fit (asserted by the length check below).
-    val noiseVals = plugin.values.toSeq
-      .filter(v => v.med >= 0.1)
-      .map(v => v.spread / v.med).sorted
-    val noisePart = if (noiseVals.isEmpty) ""
-      else s""","noise":${ms(noiseVals(noiseVals.size / 2))}"""
-    def slowJson(n: Int): String = plugin.toSeq
-      .filter(_._2.med > 0).sortBy(-_._2.med).take(n)
-      .sortBy(_._1)
-      .map { case (k, v) =>
-        "\"" + short(k) + "\":[" + ms(v.min) + "," + ms(v.spread) + "]" }
-      .mkString("{", ",", "}")
-    // "method" rides on the stdout line: the driver's parsed copy is the
-    // only artifact some readers see, and without the marker the
-    // median-of-3 total has been mistaken for a single contended pass
-    // (VERDICT r8 perf section)
-    // requeried = how many medians the contention re-measure replaced
-    // (the full before/after pairs live in target/bench.json's med0_s)
-    val requeriedPart =
-      if (pluginMed0.isEmpty && defaultMed0.isEmpty) ""
-      else s""","requeried":${(pluginMed0.keySet ++ defaultMed0.keySet).size}"""
-    def lineWith(slowN: Int): String =
-      s"""{"metric":"total","value":${ms(total)},"unit":"sec",""" +
-        s""""method":"median3","failed":$failed$overheadSummary$noisePart$requeriedPart,""" +
-        s""""slow":${slowJson(slowN)},"queries":$qs,"sf":"$sfDir"}"""
-    // the queries map grows with the surface (r14: 1,863 of the driver's
-    // ~1,930 usable tail bytes) — shed slow-bracket entries before the
-    // line can overflow and cost the round its whole parsed artifact;
-    // the full brackets always live in target/bench.json's detail
-    val line = Seq(8, 6, 4, 2, 0).iterator.map(lineWith)
-      .find(_.length <= 1900).getOrElse(lineWith(0))
-    if (line.length > 1930)
-      System.err.println(s"BENCH WARN: compact line ${line.length} bytes " +
-        "may overflow the driver's 2000-byte tail")
-    val detail = plugin.toSeq.sortBy(_._1).map { case (k, v) =>
-      val dPart = default.get(k).map(dv =>
-        ",\"default_med_s\":" + ms(dv.med) +
-          ",\"plugin_overhead\":" + (if (v.med > 0 && dv.med > 0) ms(v.med / dv.med) else "-1"))
-        .getOrElse("")
-      // the contention re-measure's audit trail: the original (replaced)
-      // medians ride next to the spliced ones
-      val m0Part = pluginMed0.get(k).map(m0 => ",\"med0_s\":" + ms(m0)).getOrElse("") +
-        defaultMed0.get(k).map(m0 => ",\"default_med0_s\":" + ms(m0)).getOrElse("")
-      "\"" + short(k) + "\":{\"med_s\":" + ms(v.med) + ",\"min_s\":" + ms(v.min) +
-        ",\"spread_s\":" + ms(v.spread) + ",\"first_pass_s\":" + ms(v.first) +
-        ",\"shuffle_write_bytes\":" + v.shufW + ",\"shuffle_read_bytes\":" + v.shufR +
-        dPart + m0Part + "}"
-    }.mkString("{", ",", "}")
-    val totW = plugin.values.map(_.shufW).filter(_ >= 0).sum
-    val totR = plugin.values.map(_.shufR).filter(_ >= 0).sum
-    // the machine-readable copy: the driver's stdout scrape has recorded
-    // "parsed": null for four rounds — a file can't truncate. Standard keys
-    // first (identical semantics to the stdout line), then the additions:
-    // methodology marker + per-query detail (incl. the A/B columns) +
-    // shuffle totals.
-    val rich = s"""{"metric":"total","value":${ms(total)},"unit":"sec","queries":$qs,"sf":"$sfDir",""" +
-      s""""method":"median-of-3-interleaved","failed":$failed$overheadSummary,""" +
-      s""""shuffle_write_bytes":$totW,"shuffle_read_bytes":$totR,""" +
-      s""""detail":$detail}"""
-    val out = java.nio.file.Paths.get("target/bench.json")
-    java.nio.file.Files.createDirectories(out.getParent)
-    java.nio.file.Files.write(out,
-      (rich + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    // The compact line prints ONCE, to stdout, as the FINAL act — after
-    // both sessions are stopped so no shutdown log can land after it
-    // (VERDICT r6 item 5: the former print-before-stop + stderr duplicate
-    // meant the only complete line inside the driver's 2000-byte tail was
-    // sbt's "[info] "-prefixed copy, which json.loads rejects; with
-    // run/outputStrategy := StdoutOutput in build.sbt the line below
-    // reaches the driver raw and last, so "parsed" carries the per-query
-    // medians).
+    val (line, rich) = benchReport(sw, sfDir)
+    if (line.length > 1930) System.err.println(s"BENCH WARN: compact line ${line.length} bytes may overflow the tail")
+    write("target/bench.json", rich)
+    // printed once and last, after every session has stopped, so no
+    // shutdown log lands after the line the driver parses
     println(line)
   }
 
-  // r3's line STILL overflowed the tail budget by ~100 bytes (the head
-  // with "metric"/"value"/"total" was cut → "parsed": null): 72 full
-  // query names ≈ 2.1 kB of keys alone. Report each query under its
-  // unique id prefix (q01_pricing_summary → q01, dd04_... → dd04) —
-  // saves ~1.1 kB and the ids stay unambiguous (asserted in main).
-  private def short(name: String): String = name.takeWhile(_ != '_')
+  /** Queries run on sf0.1 and the exact-copy ×10 tier. Beyond the relational
+    * and dedup cores:
+    *  - the text operators (dd16, pp07, pp08, tx11) saturate on exact copies
+    *    (every window fingerprint occurs ≥ 10×, pp08's gate drops every
+    *    doc): the maximal-duplication worst case for their join and
+    *    aggregate volume;
+    *  - pp09 and tx07 hit their tie regime (every replica scores alike, so
+    *    order falls to the doc_id tiebreak the range-partitioned scan is
+    *    for); pp14's bucket table stays O(4096) while grams grow 10×;
+    *  - tx12/tx13's type tables stay identical while frequencies grow 10×,
+    *    so BPE rounds and KN marginals should stay about flat;
+    *  - serving (ss10-ss15) should stay about flat per request: index
+    *    reads prune to the request's buckets and the builds ride pass 1;
+    *  - cl03/cl04 are capped at vec_id < 1000, flat by construction (see
+    *    the notes); their growth is the uncapped lanes' row;
+    *  - mm03/mm06 decode the staged GIF corpus, so they measure decode. */
+  private val exact = Seq("q01_pricing_summary", "q05_regional_revenue", "q38_rollup_rank", "dd01_exact_dedup",
+    "dd04_minhash_lsh_pairs", "dd07_prefix_join", "dd09_dup_components", "dd12_dedup_clusters", "dd15_cc_star",
+    "pp04_pack_sequences", "pp05_decontaminate", "pp06_mixture_sample", "dd16_substr_dedup", "pp07_chunk_overlap",
+    "pp08_span_clean_chunks", "tx11_lm_coverage", "ss10_mmr_diversify", "q35_percentiles", "q37_approx_sketches",
+    "pp09_token_budget_select", "pp12_shard_order", "tx07_hash_split", "pp14_dsir_select", "tx12_kn_lm_stats",
+    "tx13_bpe_merges", "dd17_soft_dedup_sample", "ss11_hybrid_rrf", "tx14_rule_cascade", "tx15_bpe_encode",
+    "pp10_denylist_scrub", "pp13_source_upsample", "pp15_dataset_card", "pp16_curriculum_order",
+    "ss12_ann_recall_report", "ss14_hybrid_index_serve", "mm03_frame_sample", "mm06_scene_change", "cl03_dbscan",
+    "cl04_dbscan_blocked", "ss13_stream_hybrid_serve", "ss15_stream_index_serve")
+
+  /** Queries run on the perturbed tier, the novel-corpus regime: new
+    * fingerprints and chunk hashes, spread quality scores (pp09, pp14,
+    * tx14), minted word and bigram types (tx12, tx13, tx15), and the
+    * multiplicity-1 pairs where dd07's prefix and dd04's banded blocking
+    * actually prune. */
+  private val perturbed = Seq("dd16_substr_dedup", "pp07_chunk_overlap", "pp08_span_clean_chunks",
+    "tx11_lm_coverage", "pp09_token_budget_select", "pp14_dsir_select", "tx12_kn_lm_stats", "tx13_bpe_merges",
+    "tx14_rule_cascade", "tx15_bpe_encode", "dd07_prefix_join", "dd04_minhash_lsh_pairs")
+
+  /** The uncapped clustering machinery, the growth rows the capped gated
+    * entries cannot give. cl04's Θ(n²) candidate volume skips sf1_exact;
+    * cl05's O(n log n) affords it (500 → 2,000 → 20,000 vectors). */
+  private val uncapped: Map[String, Query] = Map(
+    "cl04_blocked_uncapped" -> operators.Clustering.dbscanBlockedUncapped,
+    "cl05_knn_uncapped" -> operators.Clustering.dbscanKnnUncapped)
+
+  private val plan = Seq("sf0.01" -> uncapped.keys.toSeq.sorted, "sf0.1" -> (exact ++ uncapped.keys.toSeq.sorted),
+    "sf1_exact" -> (exact :+ "cl05_knn_uncapped"), "sf1_perturbed" -> perturbed)
+
+  /** What a reader needs to judge a row's growth. */
+  private val notes = Seq(
+    "dd07_prefix_join@sf1_exact" -> ("output-bound quadratic BY CONSTRUCTION: exact pair enumeration's output " +
+      "grows with duplicate multiplicity^2 (x10 exact copies => x100 verified pairs per original pair); dd04's " +
+      "banded blocking is the scale path, and the perturbed-tier row (novel twins, multiplicity 1) is the " +
+      "pruning regime"),
+    "cl03_dbscan@sf1_exact" -> ("flat by construction: the gated ground-truth tier caps at vec_id < 1000, " +
+      "selecting the same rows at every tier; growth lives in cl04_blocked_uncapped"),
+    "cl04_dbscan_blocked@sf1_exact" -> ("flat by construction (same vec_id < 1000 cap as cl03); see " +
+      "cl04_blocked_uncapped for the machinery's growth"),
+    "cl04_blocked_uncapped@sf0.1" -> ("~quadratic candidate volume by design at eps=0.35 (the dd08 lesson: " +
+      "low-threshold LSH buys join shape and a ~2.4x constant, not an asymptotic cut); the fixture pair is a x4 " +
+      "vector count (500 -> 2000 = x16 pair volume) across the sf0.01 -> sf0.1 tier decade; cl05_knn_uncapped " +
+      "is the subquadratic production shape"),
+    "cl05_knn_uncapped@sf1_exact" -> ("the bounded-degree tier's growth claim as numbers: knnBitsFor sizes LSH " +
+      "buckets to the corpus (bits = ceil(log2(n/24))), so candidate volume is O(n log n) and the decomposition " +
+      "consumes <= k edges per point — compare wall growth against pair volume x100 from sf0.1 (2000 -> 20000 " +
+      "vectors); recall at fixed tables decays as bits grow (SCALE.md section 3 states the tables-for-recall " +
+      "trade this lane deliberately does not pay)"),
+    "dd04_minhash_lsh_pairs@sf1_perturbed" -> ("the pruning regime for the op named as dd07's scale path: " +
+      "multiplicity-1 near-dup twins (no x100 output explosion), so the row measures the banded blocking " +
+      "itself — compare against the exact-copy tier's output-bound row"),
+    "ss14_hybrid_index_serve@sf1_exact" -> ("serve-time work is request-proportional (both lanes read " +
+      "partition-pruned indexes); residual growth is the one-time per-tier index builds riding the first rep " +
+      "plus bigger pruned buckets"))
+
+  /** One session; each tier is built once, then run as one lane. */
+  private def scale(set: Settings): Unit = {
+    val rows = withSession(set.cpus, plugin = true, Tiers("sf0.1"), ("lineitem", "l_returnflag")) { s =>
+      plan.flatMap { case (tier, names) =>
+        val dir = BenchRunner.tier(s, tier)
+        val stats = runLane(s, dir, names.map(n => n -> uncapped.getOrElse(n, SparkEntry.queries(n))), rows = true)
+        names.map(n => scaleRow(tier, n, stats(n)))
+      }
+    }
+    val json = scaleReport(plan.map(_._1), notes, rows)
+    write("target/scaleprobe.json", json)
+    println(json)
+  }
 }

@@ -1,204 +1,48 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.BenchRunner._
 
-/** Streaming-drain benchmark (VERDICT r8 item 6): the st-family plus the
-  * streaming drains living in other modules (pp02, dd14, ss09) are
-  * excluded from Bench by design — an AvailableNow checkpointed drain
-  * measures state-store + checkpoint I/O, not engine throughput, and would
-  * swamp the batch medians. That made them invisible to perf tracking:
-  * a dd15-style regression in a streaming query would surface nowhere.
-  * This main gives them their own lane: median-of-3 interleaved drain
-  * wall-times, same protocol and JSON contract as Bench (short ids,
-  * ms precision, method marker, file copy at target/bench_stream.json).
+/** Drain timings of the streaming queries (`runMain graft.BenchStream [tier]`):
+  * the st family plus the drains living in other modules (pp02, dd14, ss09),
+  * which `graft.Bench` leaves out. A stateful micro-batch pipeline shuffles
+  * in a pattern batch A/B cannot see (many tiny per-batch shuffles plus the
+  * state store's exchange), so the plugin/default lanes run here too.
   *
-  * r11 (VERDICT r10 item 6): a second median-of-3 lane under Spark's
-  * DEFAULT sort shuffle manager — the stateful micro-batch pipeline is the
-  * one place whose shuffle pattern (many tiny per-batch shuffles + state
-  * store exchange) batch A/B can't see, so the line now carries
-  * `default_total` + per-drain `plugin_overhead` ratios, the reference's
-  * comparative protocol applied to streams. SPARK_GRAFT_STREAM_AB=0 skips
-  * the lane; SPARK_GRAFT_STREAM_AB_ORDER=default-first bounds the
-  * shared-JVM JIT bias exactly as Bench's batch lanes do.
+  *  - `base` (the default): the drains on `SPARK_GRAFT_SF_DIR` (sf0.01);
+  *    with A/B on, also a plugin lane over the derived ×10 streaming tier
+  *    (`queries_sf1`), so the line carries the decade step.
+  *  - `scale`: the same lanes on the derived tier, each drain also
+  *    reporting micro-batches and peak state rows and memory.
+  *
+  * `SPARK_GRAFT_AB=0` runs the plugin lane only; `SPARK_GRAFT_AB_ORDER` sets
+  * the lane order. One JSON line on stdout and `target/bench_stream.json`.
   */
 object BenchStream {
-  private case class Stat(med: Double, min: Double, spread: Double)
-
-  private def ms(v: Double): String = if (v < 0) "-1"
-    else String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-  private def short(name: String): String = name.takeWhile(_ != '_')
-
-  /** Median-of-3 interleaved drain lane on an already-warm session. */
-  private def runLane(spark: SparkSession, sfDir: String,
-      ordered: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)])
-      : Map[String, Stat] = {
-    val passes = (1 to 3).map { _ =>
-      ordered.map { case (name, fn) =>
-        System.gc()
-        val t0 = System.nanoTime()
-        try {
-          fn(spark, sfDir).count()
-          name -> (System.nanoTime() - t0) / 1e9
-        } catch {
-          case t: Throwable =>
-            System.err.println(
-              s"BENCH_STREAM FAIL $name: ${t.getClass.getName}: ${t.getMessage}")
-            name -> -1.0
-        }
-      }.toMap
-    }
-    ordered.map { case (name, _) =>
-      val times = passes.map(_(name))
-      name -> (if (times.exists(_ < 0)) Stat(-1.0, -1.0, 0.0)
-               else {
-                 val sorted = times.sorted
-                 Stat(sorted(sorted.size / 2), sorted.head,
-                   sorted.last - sorted.head)
-               })
-    }.toMap
-  }
-
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // SPARK_GRAFT_STREAM_TIER=sf1 points the WHOLE protocol — both lanes,
-    // median-of-3, ratios, failure naming — at the derived ×10 streaming
-    // tier (VERDICT r11 item 3: the stateful-shuffle overhead bracket
-    // measured one decade right, not just a single-run plugin column).
-    // The guard mirrors the AB_ORDER one: a typo must not silently record
-    // a base-tier run as the decade artifact.
-    val tier = sys.env.getOrElse("SPARK_GRAFT_STREAM_TIER", "base")
-    require(tier == "base" || tier == "sf1",
-      s"SPARK_GRAFT_STREAM_TIER must be base or sf1: $tier")
-    val sfDir =
-      if (tier == "sf1") {
-        // stage the derived tier before any lane so neither lane's
-        // medians carry the one-time build
-        val s0 = GraftSession.get(cpus)
-        val d = try tools.StreamScaleProbe.ensureBuilt(s0) finally s0.stop()
-        SparkSession.clearActiveSession()
-        SparkSession.clearDefaultSession()
-        d
-      } else sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => SparkEntry.streamingQueries.contains(name) }
-    require(ordered.map(n => short(n._1)).toSet.size == ordered.size,
-      "shortened bench keys must stay unique")
-
-    var harnessSec = 0.0
-    def lane(usePlugin: Boolean): Map[String, Stat] = {
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
-      val spark = GraftSession.get(cpus, plugin = usePlugin)
-      // warmup: session startup + FS metadata off the first query's bill
-      Tables.load(spark, sfDir, "events").groupBy("event_type").count().count()
-      // harness/query split (VERDICT r9 item 2): the sentineled source dir
-      // (fixture copy + 2 staged sentinel files) is built once per fixture
-      // and reused by every st06/st07/st08/st09 drain — bill it here, as
-      // its own number, so the per-query medians measure the DRAIN (state
-      // store, per-microbatch shuffle, checkpoint commits), not file
-      // staging. The dir is filesystem-cached, so only the first lane
-      // pays; the recorded number is the first lane's.
-      val tHarness0 = System.nanoTime()
-      operators.StreamingQueries.sentineledSrcDir(spark, sfDir)
-      val h = (System.nanoTime() - tHarness0) / 1e9
-      if (harnessSec == 0.0) harnessSec = h
-      val r = runLane(spark, sfDir, ordered)
-      spark.stop()
-      r
-    }
-
-    val ab = sys.env.getOrElse("SPARK_GRAFT_STREAM_AB", "1") != "0"
-    val abOrder = sys.env.getOrElse("SPARK_GRAFT_STREAM_AB_ORDER", "plugin-first")
-    // a typo'd order value would silently run plugin-first while stamping
-    // the bogus string into ab_order — the JIT-bias bounding run would be
-    // recorded as having happened when it didn't (same guard as Bench)
-    require(abOrder == "plugin-first" || abOrder == "default-first",
-      s"SPARK_GRAFT_STREAM_AB_ORDER must be plugin-first or default-first: $abOrder")
-    val (results, default) =
-      if (!ab) (lane(usePlugin = true), Map.empty[String, Stat])
-      else if (abOrder == "default-first") {
-        val d = lane(usePlugin = false); (lane(usePlugin = true), d)
-      } else {
-        val p = lane(usePlugin = true); (p, lane(usePlugin = false))
-      }
-
-    val qs = results.toSeq.sortBy(_._1)
-      .map { case (k, v) => "\"" + short(k) + "\":" + ms(v.med) }
-      .mkString("{", ",", "}")
-    val detail = results.toSeq.sortBy(_._1).map { case (k, v) =>
-      val dPart = default.get(k).map(dv =>
-        ",\"default_med_s\":" + ms(dv.med) +
-          ",\"plugin_overhead\":" +
-          (if (v.med > 0 && dv.med > 0) ms(v.med / dv.med) else "-1"))
-        .getOrElse("")
-      "\"" + short(k) + "\":{\"med_s\":" + ms(v.med) + ",\"min_s\":" + ms(v.min) +
-        ",\"spread_s\":" + ms(v.spread) + dPart + "}"
-    }.mkString("{", ",", "}")
-    val total = results.values.map(_.med).filter(_ >= 0).sum
-    // a silently-dropped failure would make the total look FASTER (ADVICE
-    // r9): name the failed queries on the line so a smaller total over
-    // fewer queries cannot read as an improvement. The same rule covers
-    // the DEFAULT lane: a drain failing only under the sort manager would
-    // otherwise silently shrink default_total next to a full plugin total.
-    val failed = results.toSeq.sortBy(_._1)
-      .collect { case (k, v) if v.med < 0 => "\"" + short(k) + "\"" }
-      .mkString("[", ",", "]")
-    val defaultFailed = default.toSeq.sortBy(_._1)
-      .collect { case (k, v) if v.med < 0 => "\"" + short(k) + "\"" }
-      .mkString("[", ",", "]")
-    val overheadPart = if (default.isEmpty) "" else {
-      val ratios = ordered.flatMap { case (name, _) =>
-        for {
-          p <- results.get(name) if p.med > 0
-          d <- default.get(name) if d.med > 0.1
-        } yield p.med / d.med
-      }.sorted
-      val defTotal = default.values.map(_.med).filter(_ >= 0).sum
-      // ab_order rides with defPart, not the ratios: the lane ORDER is a
-      // fact of the run whether or not any ratio qualified
-      val defPart =
-        s""","default_total":${ms(defTotal)},"default_failed":$defaultFailed,""" +
-          s""""ab_order":"$abOrder""""
-      if (ratios.isEmpty) defPart
-      else {
-        val medR = ratios(ratios.size / 2)
-        val p90 = ratios(math.min(ratios.size - 1, (ratios.size * 9) / 10))
-        defPart +
-          s""","plugin_overhead_med":${ms(medR)},""" +
-          s""""plugin_overhead_p90":${ms(p90)}"""
+    val set = settings(args)
+    val scale = set.tier == "scale"
+    val ordered = SparkEntry.queries.toSeq.sortBy(_._1).filter(q => SparkEntry.streamingQueries(q._1))
+    requireUniqueShortIds(ordered.map(_._1))
+    val warm = ("events", "event_type")
+    // built before any lane, so no median carries the one-time build
+    val sf1 = Option.when(scale || set.ab)(
+      withSession(set.cpus, plugin = true, Tiers("sf0.1"), warm)(tier(_, "sf1_stream")))
+    val sfDir = if (scale) sf1.get else sys.env.getOrElse("SPARK_GRAFT_SF_DIR", Tiers("sf0.01"))
+    var harness = -1.0
+    val sw = sweep(set, ordered, remeasure = false) { (plugin, qs) =>
+      withSession(set.cpus, plugin, sfDir, warm) { s =>
+        // the sentineled source dir that st06-st09 drain is staged once per
+        // fixture and billed here, as its own number
+        val t0 = System.nanoTime()
+        operators.StreamingQueries.sentineledSrcDir(s, sfDir)
+        if (harness < 0) harness = (System.nanoTime() - t0) / 1e9
+        runLane(s, sfDir, qs, census = scale)
       }
     }
-    // the sf1 column (VERDICT r9 item 1): one single-run pass over the
-    // derived ×10 tier (tools.StreamScaleProbe's disjoint-user events
-    // replication), so the committed snapshot carries the decade-step
-    // next to the sf0.01 medians. SPARK_GRAFT_STREAM_SF1=0 skips it.
-    val sf1Part = if (tier == "sf1" ||
-        sys.env.getOrElse("SPARK_GRAFT_STREAM_SF1", "1") == "0") ""
-      else {
-        SparkSession.clearActiveSession()
-        SparkSession.clearDefaultSession()
-        val spark1 = GraftSession.get(cpus)
-        val dir1 = tools.StreamScaleProbe.ensureBuilt(spark1)
-        val col1 = ordered.map { case (name, fn) =>
-          System.gc()
-          val t0 = System.nanoTime()
-          val sec = try { fn(spark1, dir1).count(); (System.nanoTime() - t0) / 1e9 }
-            catch { case t: Throwable =>
-              System.err.println(s"BENCH_STREAM sf1 FAIL $name: ${t.getMessage}")
-              -1.0 }
-          "\"" + short(name) + "\":" + ms(sec)
-        }.mkString("{", ",", "}")
-        spark1.stop()
-        s""","sf1_dir":"$dir1","queries_sf1":$col1"""
-      }
-    val line = s"""{"metric":"stream_total","value":${ms(total)},""" +
-      s""""unit":"sec","method":"median3","failed":$failed,""" +
-      s""""harness_prestage_s":${ms(harnessSec)}$overheadPart,"queries":$qs,""" +
-      s""""sf":"$sfDir"$sf1Part,"detail":$detail}"""
-    val out = java.nio.file.Paths.get("target/bench_stream.json")
-    java.nio.file.Files.createDirectories(out.getParent)
-    java.nio.file.Files.write(out,
-      (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    val sf1Lane = sf1.filterNot(_ => scale).map(d => d -> withSession(set.cpus, plugin = true, d, warm)(
+      runLane(_, d, ordered)))
+    val line = streamReport(sw, sfDir, harness, sf1Lane)
+    write("target/bench_stream.json", line)
     println(line)
   }
 }

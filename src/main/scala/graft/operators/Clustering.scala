@@ -190,7 +190,7 @@ object Clustering {
     dbscanDecompose(e, pairs, minPts = 3)
   }
 
-  /** ScaleProbe-only: cl04's blocked machinery over the WHOLE embeddings
+  /** Scale-tier only (`graft.Bench scale`): cl04's blocked machinery over the WHOLE embeddings
     * table — the growth measurement the gated entry cannot provide (its
     * vec_id < 1000 ground-truth cap selects the same rows at every
     * tier). Expected growth is ~quadratic in corpus size: at eps=0.35
@@ -290,7 +290,7 @@ object Clustering {
       .distinct()
   }
 
-  /** ScaleProbe-only: cl05's kNN-graph machinery over the WHOLE embeddings
+  /** Scale-tier only (`graft.Bench scale`): cl05's kNN-graph machinery over the WHOLE embeddings
     * table with corpus-sized bucketing ([[knnBitsFor]]) — the subquadratic
     * growth row `cl04_blocked_uncapped` exists to be compared against.
     * Unlike cl04's lane this one can afford the sf1 tier: candidate

@@ -6,6 +6,7 @@ import java.util.Collections
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
 
+import org.apache.hadoop.fs.{FSDataOutputStream, StreamCapabilities}
 import org.apache.spark.{SparkConf, TaskContext}
 import org.apache.spark.internal.Logging
 import org.apache.spark.shuffle.api._
@@ -78,7 +79,8 @@ private[cloud] class CloudMapOutputWriter(env: CloudShuffleEnv, shuffleId: Int,
   private val partitionLengths = new Array[Long](numPartitions)
   private var lastPartitionId = -1
   private var bytesWritten = 0L
-  private var stream: OutputStream = _
+  private var raw: FSDataOutputStream = _ // the store's stream, for abort
+  private var stream: OutputStream = _ // raw behind the write buffer
   private var finished = false // committed or aborted
 
   Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit] { _ =>
@@ -87,7 +89,8 @@ private[cloud] class CloudMapOutputWriter(env: CloudShuffleEnv, shuffleId: Int,
 
   private def ensureStream(): OutputStream = {
     if (stream == null) {
-      stream = new BufferedOutputStream(env.createBlock(dataBlock), CloudShuffleEnv.WRITE_BUFFER_SIZE)
+      raw = env.createBlock(dataBlock)
+      stream = new BufferedOutputStream(raw, CloudShuffleEnv.WRITE_BUFFER_SIZE)
     }
     stream
   }
@@ -171,12 +174,17 @@ private[cloud] class CloudMapOutputWriter(env: CloudShuffleEnv, shuffleId: Int,
     try Await.ready(f, Duration.Inf).value.get.failed.toOption
     catch { case e: InterruptedException => settle(f).orElse(Some(e)) }
 
-  /** Closes the data stream, then deletes the map output's data, index and
-    * checksum objects and forgets its cached index. Idempotent. */
+  /** Discards the data stream, then deletes the map output's data, index
+    * and checksum objects and forgets its cached index. Idempotent. A store
+    * stream that can abort drops the upload; closing it would first complete
+    * the PUT of the partial object, only to delete it. Other streams close,
+    * and the delete removes what they stored. */
   override def abort(error: Throwable): Unit = {
     finished = true
-    try if (stream != null) stream.close()
-    catch { case e: Exception => logDebug(s"abort close: $e") }
+    try {
+      if (raw != null && raw.hasCapability(StreamCapabilities.ABORTABLE_STREAM)) raw.abort()
+      else if (stream != null) stream.close()
+    } catch { case e: Exception => logDebug(s"abort close: $e") }
     Seq(dataBlock, ShuffleIndexBlockId(shuffleId, mapId, CloudShuffleManager.NOOP_REDUCE_ID),
       ShuffleChecksumBlockId(shuffleId, mapId, 0)).foreach(env.deleteBlock)
     CloudShuffleIndex.forget(shuffleId, mapId)

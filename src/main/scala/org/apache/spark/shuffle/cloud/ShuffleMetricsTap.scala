@@ -5,7 +5,7 @@ import java.util.concurrent.atomic.LongAdder
 import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 
-/** Per-query shuffle-volume accounting for `graft.Bench`.
+/** Per-query shuffle-volume accounting for the bench lanes (`graft.BenchRunner`).
   *
   * The reference's only published performance numbers are *shuffle volumes
   * per query* (reference `examples/run_benchmarks.sh:29-34`: q5 9.6 GB …
@@ -20,7 +20,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
   * Lives in the plugin package because draining the listener queue between
   * queries needs `SparkContext.listenerBus` (`private[spark]`): without
   * `waitUntilEmpty` the async bus would bill a query's tail task-end events
-  * to its successor. The class itself is public so `graft.Bench` can own
+  * to its successor. The class itself is public so `graft.BenchRunner` can own
   * one; only the bus drain needs the package privilege.
   */
 class ShuffleMetricsTap(sc: SparkContext) extends SparkListener {
@@ -42,8 +42,8 @@ class ShuffleMetricsTap(sc: SparkContext) extends SparkListener {
     * Only meaningful when no job runs concurrently with the call (ADVICE
     * r6): `sumThenReset` makes each counter individually lossless, but a
     * task ending between the two calls still lands in the wrong harvest
-    * window — the serial query-at-a-time loops of Bench/ScaleProbe are
-    * the intended callers, and `waitUntilEmpty` only flushes events of
+    * window — the serial query-at-a-time loop of `graft.BenchRunner` is
+    * the intended caller, and `waitUntilEmpty` only flushes events of
     * ALREADY-finished tasks.
     */
   def harvest(): (Long, Long) = {

@@ -43,8 +43,7 @@ class SparkEntrySpec extends AnyFunSuite {
     // Bench and BenchStream report each query under its id prefix to fit
     // the driver's stdout tail budget — a colliding prefix would silently
     // merge two queries' numbers
-    def short(n: String) = n.takeWhile(_ != '_')
     val names = SparkEntry.queries.keySet
-    assert(names.map(short).size == names.size)
+    assert(names.map(BenchRunner.short).size == names.size)
   }
 }

@@ -9,7 +9,8 @@ import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FSDataInputStream, FSDataOutputStream, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{Abortable, FSDataInputStream, FSDataOutputStream, Path, RawLocalFileSystem,
+  StreamCapabilities}
 import org.apache.hadoop.util.Progressable
 import org.apache.spark.SparkConf
 
@@ -24,11 +25,15 @@ import org.apache.spark.SparkConf
   *  - `fs.gatefs.close.delay.ms` = d: every output stream's `close` then
   *    sleeps d ms;
   *  - `fs.gatefs.fail.data.close` = true: closing a `.data` object throws
-  *    after its bytes are on disk, as a failed upload would.
+  *    after its bytes are on disk, as a failed upload would;
+  *  - `fs.gatefs.abortable` = true: output streams report
+  *    `StreamCapabilities.ABORTABLE_STREAM`, and `abort()` drops the upload:
+  *    the object never lands, as on an object store.
   *
   * A barrier that is not met within 10 s breaks, failing the request. The
   * store records the peak number of opens and closes in progress at once,
-  * and the number of input and output streams open now.
+  * the number of input and output streams open now, and the number of
+  * `.data` uploads completed.
   */
 class GatedStore extends RawLocalFileSystem {
   import GatedStore._
@@ -38,10 +43,12 @@ class GatedStore extends RawLocalFileSystem {
   private var openDelayMs = 0L
   private var closeDelayMs = 0L
   private var failDataClose = false
+  private var abortable = false
 
   val opens = new AtomicInteger(0)
   val openInputs = new AtomicInteger(0)
   val openOutputs = new AtomicInteger(0)
+  val dataPuts = new AtomicInteger(0)
   val opensPeak = new Peak
   val closesPeak = new Peak
 
@@ -57,6 +64,7 @@ class GatedStore extends RawLocalFileSystem {
     openDelayMs = conf.getLong(OpenDelayKey, 0L)
     closeDelayMs = conf.getLong(CloseDelayKey, 0L)
     failDataClose = conf.getBoolean(FailDataCloseKey, false)
+    abortable = conf.getBoolean(AbortableKey, false)
   }
 
   override def open(f: Path, bufferSize: Int): FSDataInputStream = {
@@ -82,7 +90,7 @@ class GatedStore extends RawLocalFileSystem {
 
   private def gated(f: Path, out: FSDataOutputStream): FSDataOutputStream = {
     openOutputs.incrementAndGet()
-    new FSDataOutputStream(new OutputStream {
+    new FSDataOutputStream(new OutputStream with Abortable with StreamCapabilities {
       private var closed = false
       override def write(b: Int): Unit = out.write(b)
       override def write(b: Array[Byte], off: Int, len: Int): Unit = out.write(b, off, len)
@@ -94,6 +102,22 @@ class GatedStore extends RawLocalFileSystem {
         out.close()
         if (failDataClose && f.getName.endsWith(".data")) {
           throw new IOException(s"injected upload failure for ${f.getName}")
+        }
+        if (f.getName.endsWith(".data")) dataPuts.incrementAndGet()
+      }
+      override def hasCapability(capability: String): Boolean =
+        abortable && capability == StreamCapabilities.ABORTABLE_STREAM
+      override def abort(): Abortable.AbortableResult = {
+        val wasClosed = closed
+        if (!closed) {
+          openOutputs.decrementAndGet()
+          closed = true
+          out.close()
+          delete(f, false)
+        }
+        new Abortable.AbortableResult {
+          override def alreadyClosed(): Boolean = wasClosed
+          override def anyCleanupException(): IOException = null
         }
       }
     }, null)
@@ -108,6 +132,7 @@ object GatedStore {
   val OpenDelayKey = "fs.gatefs.open.delay.ms"
   val CloseDelayKey = "fs.gatefs.close.delay.ms"
   val FailDataCloseKey = "fs.gatefs.fail.data.close"
+  val AbortableKey = "fs.gatefs.abortable"
 
   /** Plugin settings rooted at a fresh `gatefs` directory; `store` keys are
     * the store's own (e.g. [[OpenPartiesKey]]). */

@@ -66,19 +66,28 @@ class WritePathSpec extends AnyFunSuite with BeforeAndAfterEach {
   test("a map task that fails mid-write leaves no open stream and no object") {
     // map-side combine selects the sort writer, which writes partition by
     // partition: the one map task opens its data object for the earlier
-    // partitions before the value of key 7, in the last one, fails
-    val conf = GatedStore.localSparkConf("write-path-spec")
-      .set("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-    val sc = new SparkContext(conf)
-    try {
-      val combined = sc.parallelize(0 until 1000, 1).map(i => (i % 8, new FailingValue(i)))
-        .reduceByKey((a, b) => if (a.n > b.n) a else b, 4)
-      val e = intercept[SparkException](combined.count())
-      assert(e.getMessage.contains(FailingValue.Message))
-      val env = CloudShuffleEnv.get()
-      assert(env.fs.asInstanceOf[GatedStore].openOutputs.get == 0)
-      assert(GatedStore.objects(env).isEmpty)
-    } finally sc.stop()
+    // partitions before the value of key 7, in the last one, fails. A store
+    // stream that can abort drops the partial upload; any other is closed,
+    // which completes its upload, and the object is then deleted
+    for (abortable <- Seq(true, false)) {
+      val conf = GatedStore.localSparkConf("write-path-spec", GatedStore.AbortableKey -> abortable.toString)
+        .set("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
+      val sc = new SparkContext(conf)
+      try {
+        val combined = sc.parallelize(0 until 1000, 1).map(i => (i % 8, new FailingValue(i)))
+          .reduceByKey((a, b) => if (a.n > b.n) a else b, 4)
+        val e = intercept[SparkException](combined.count())
+        assert(e.getMessage.contains(FailingValue.Message))
+        val env = CloudShuffleEnv.get()
+        val store = env.fs.asInstanceOf[GatedStore]
+        assert(store.openOutputs.get == 0)
+        assert(store.dataPuts.get == (if (abortable) 0 else 1), s"data uploads, abortable=$abortable")
+        assert(GatedStore.objects(env).isEmpty)
+      } finally {
+        sc.stop()
+        CloudShuffleEnv.reset()
+      }
+    }
   }
 
   test("a map output's commit counts as shuffle write time") {
