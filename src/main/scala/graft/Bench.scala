@@ -122,17 +122,22 @@ object Bench {
       "partition-pruned indexes); residual growth is the one-time per-tier index builds riding the first rep " +
       "plus bigger pruned buckets"))
 
-  /** One session; each tier is built once, then run as one lane. */
+  /** One session; each tier is built once, then run as one lane. The
+    * artifact is rewritten after every tier's lane, so a run that dies late
+    * keeps the rows of the tiers it finished. */
   private def scale(set: Settings): Unit = {
-    val rows = withSession(set.cpus, plugin = true, Tiers("sf0.1"), ("lineitem", "l_returnflag")) { s =>
-      plan.flatMap { case (tier, names) =>
+    val json = withSession(set.cpus, plugin = true, Tiers("sf0.1"), ("lineitem", "l_returnflag")) { s =>
+      val rows = Seq.newBuilder[String]
+      plan.indices.map { i =>
+        val (tier, names) = plan(i)
         val dir = BenchRunner.tier(s, tier)
         val stats = runLane(s, dir, names.map(n => n -> uncapped.getOrElse(n, SparkEntry.queries(n))), rows = true)
-        names.map(n => scaleRow(tier, n, stats(n)))
-      }
+        rows ++= names.map(n => scaleRow(tier, n, stats(n)))
+        val json = scaleReport(plan.take(i + 1).map(_._1), notes, rows.result())
+        write("target/scaleprobe.json", json)
+        json
+      }.last
     }
-    val json = scaleReport(plan.map(_._1), notes, rows)
-    write("target/scaleprobe.json", json)
     println(json)
   }
 }

@@ -59,7 +59,7 @@ object BenchRunner {
     val order = sys.env.getOrElse("SPARK_GRAFT_AB_ORDER", "plugin-first")
     require(order == "plugin-first" || order == "default-first",
       s"SPARK_GRAFT_AB_ORDER must be plugin-first or default-first: $order")
-    Settings(tier, sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"),
+    Settings(tier, GraftSession.Cpus,
       sys.env.getOrElse("SPARK_GRAFT_AB", "1") != "0", order)
   }
 

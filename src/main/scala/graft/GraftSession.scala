@@ -12,7 +12,11 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
-  def builder(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"),
+  /** Local cores for every entry point: `SPARK_GRAFT_CPUS`, else the JVM's
+    * available processors. */
+  val Cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
+
+  def builder(cpus: String = Cpus,
       plugin: Boolean = !sys.env.contains("SPARK_GRAFT_NO_PLUGIN"))
       : SparkSession.Builder = {
     val b = SparkSession.builder()
@@ -57,7 +61,7 @@ object GraftSession {
     b
   }
 
-  def get(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"),
+  def get(cpus: String = Cpus,
       plugin: Boolean = !sys.env.contains("SPARK_GRAFT_NO_PLUGIN")): SparkSession = {
     val spark = builder(cpus, plugin).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -18,7 +18,7 @@ object Verify {
     names.filterNot(oracles.contains).foreach(n =>
       System.err.println(s"[verify] WARNING: $n has no oracle entry — " +
         "the dump is written but check_oracle.py will not compare it"))
-    val spark = GraftSession.get(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+    val spark = GraftSession.get()
     new java.io.File(outDir).mkdirs()
     queries.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")

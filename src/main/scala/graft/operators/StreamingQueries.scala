@@ -299,8 +299,7 @@ object StreamingQueries {
   // is why it is scoped per drain here and not left to the session
   // default). Results are partition-count invariant — the oracle gate and
   // RocksDbStateSpec's provider-invariance run on the same drains.
-  private val StreamShufflePartitions =
-    sys.env.getOrElse("SPARK_GRAFT_STREAM_SHUFFLE", "8")
+  private val StreamShufflePartitions = "8"
 
   private def drain(s: SparkSession, df: DataFrame,
       mode: String = "complete"): DataFrame = {

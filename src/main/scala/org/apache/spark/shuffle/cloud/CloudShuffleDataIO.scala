@@ -18,23 +18,19 @@ import org.apache.spark.storage.{ShuffleChecksumBlockId, ShuffleDataBlockId, Shu
   * happens (reference: `S3ShuffleDataIO.scala:22-69`).
   */
 class CloudShuffleDataIO(conf: SparkConf) extends ShuffleDataIO {
-  override def executor(): ShuffleExecutorComponents = new CloudExecutorComponents(conf)
+  override def executor(): ShuffleExecutorComponents = new CloudExecutorComponents
   override def driver(): ShuffleDriverComponents = new CloudDriverComponents
 }
 
-private[cloud] class CloudExecutorComponents(conf: SparkConf)
-    extends ShuffleExecutorComponents with Logging {
-
-  private var env: CloudShuffleEnv = _
+/** The env is the running manager's, so the executor needs no setup. */
+private[cloud] class CloudExecutorComponents extends ShuffleExecutorComponents {
 
   override def initializeExecutor(appId: String, execId: String,
-      extraConfigs: java.util.Map[String, String]): Unit = {
-    env = CloudShuffleEnv.get(Some(appId))
-  }
+      extraConfigs: java.util.Map[String, String]): Unit = ()
 
   override def createMapOutputWriter(shuffleId: Int, mapTaskId: Long,
       numPartitions: Int): ShuffleMapOutputWriter =
-    new CloudMapOutputWriter(env, shuffleId, mapTaskId, numPartitions)
+    new CloudMapOutputWriter(CloudShuffleEnv.get(), shuffleId, mapTaskId, numPartitions)
 }
 
 private[cloud] class CloudDriverComponents extends ShuffleDriverComponents with Logging {
@@ -47,10 +43,8 @@ private[cloud] class CloudDriverComponents extends ShuffleDriverComponents with 
     env.deleteAppFolders()
   }
 
-  override def removeShuffle(shuffleId: Int, blocking: Boolean): Unit = {
-    CloudShuffleEnv.get().deleteShuffle(shuffleId)
-    CloudShuffleIndex.purgeShuffle(shuffleId)
-  }
+  override def removeShuffle(shuffleId: Int, blocking: Boolean): Unit =
+    CloudShuffleEnv.get().removeShuffle(shuffleId)
 
   /** Shuffle data lives on the object store, not on executors — executor
     * loss does not invalidate map outputs. */
@@ -139,7 +133,7 @@ private[cloud] class CloudMapOutputWriter(env: CloudShuffleEnv, shuffleId: Int,
     * writes but not the commit, so its wall time is added to the task's
     * shuffle write time here. */
   override def commitAllPartitions(checksums: Array[Long]): MapOutputCommitMessage = {
-    implicit val ec: ExecutionContext = CloudShuffleEnv.ioEc
+    implicit val ec: ExecutionContext = env.ioPool
     val t0 = System.nanoTime()
     val total = partitionLengths.sum
     val puts = Seq(
@@ -187,6 +181,6 @@ private[cloud] class CloudMapOutputWriter(env: CloudShuffleEnv, shuffleId: Int,
     } catch { case e: Exception => logDebug(s"abort close: $e") }
     Seq(dataBlock, ShuffleIndexBlockId(shuffleId, mapId, CloudShuffleManager.NOOP_REDUCE_ID),
       ShuffleChecksumBlockId(shuffleId, mapId, 0)).foreach(env.deleteBlock)
-    CloudShuffleIndex.forget(shuffleId, mapId)
+    CloudShuffleIndex.forget(env, shuffleId, mapId)
   }
 }

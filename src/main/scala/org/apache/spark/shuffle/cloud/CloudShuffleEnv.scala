@@ -1,28 +1,31 @@
 package org.apache.spark.shuffle.cloud
 
 import java.net.URI
-import java.util.concurrent.{Executors, LinkedBlockingQueue, ThreadPoolExecutor, TimeUnit}
+import java.util.concurrent.{ConcurrentHashMap, Executors, LinkedBlockingQueue, ThreadPoolExecutor, TimeUnit}
 
-import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.{Await, ExecutionContext, ExecutionContextExecutorService, Future}
 import scala.concurrent.duration.Duration
 
 import org.apache.hadoop.fs.{FileSystem, Path, FSDataInputStream, FSDataOutputStream}
-import org.apache.spark.{SparkConf, SparkEnv}
+import org.apache.spark.SparkConf
 import org.apache.spark.deploy.SparkHadoopUtil
 import org.apache.spark.internal.Logging
 import org.apache.spark.storage._
 
-/** Process-wide configuration + Hadoop FileSystem handle for the cloud
-  * shuffle plugin.
+/** One SparkContext's state of the cloud shuffle plugin: configuration,
+  * Hadoop FileSystem handle, fetch and I/O pools, index and checksum caches
+  * and the live-shuffle set. [[CloudShuffleManager]] opens the JVM's one env
+  * and closes it at `stop()`.
   *
   * Behavioral spec from the reference's dispatcher
-  * (`helper/S3ShuffleDispatcher.scala:25-255`): a lazily-created singleton
-  * holding the FS client, the deterministic object-store path scheme
+  * (`helper/S3ShuffleDispatcher.scala:25-255`): the FS client, the
+  * deterministic object-store path scheme
   * `${rootDir}/${mapId % folderPrefixes}/${appId}/${shuffleId}/${blockId}`
   * (`:142-143`) — the prefix shard dodges per-prefix object-store rate
   * limits — plus parallel bulk deletes (`:104-118,174-183`) and
-  * readahead suppression for ranged reads (`:194-196`). Re-expressed
-  * from scratch for Spark 4.1.2.
+  * readahead suppression for ranged reads (`:194-196`). The reference keeps
+  * its dispatcher as a process-wide singleton; this env lives exactly as
+  * long as one manager. Re-expressed from scratch for Spark 4.1.2.
   */
 final class CloudShuffleEnv(val conf: SparkConf, val appId: String) extends Logging {
 
@@ -39,8 +42,8 @@ final class CloudShuffleEnv(val conf: SparkConf, val appId: String) extends Logg
   val maxConcurrencyExecutor: Int = math.max(1, conf.getInt(MAX_EXEC_CONCURRENCY_KEY, 64))
 
   /** Bounded daemon pool that runs every prefetch GET of this executor.
-    * Commit PUTs and deletes stay on [[CloudShuffleEnv.ioEc]], so a commit
-    * never waits in a queue behind reducers' GETs. Idle threads exit. */
+    * Commit PUTs and deletes stay on [[ioPool]], so a commit never waits in
+    * a queue behind reducers' GETs. Idle threads exit. */
   private[cloud] val fetchPool: ThreadPoolExecutor = {
     val pool = new ThreadPoolExecutor(maxConcurrencyExecutor, maxConcurrencyExecutor,
       60L, TimeUnit.SECONDS, new LinkedBlockingQueue[Runnable](), { (r: Runnable) =>
@@ -51,6 +54,21 @@ final class CloudShuffleEnv(val conf: SparkConf, val appId: String) extends Logg
     pool.allowCoreThreadTimeOut(true)
     pool
   }
+
+  /** Daemon pool for the per-prefix deletes and a commit's index and
+    * checksum PUTs. It grows with demand, so a commit never waits for
+    * another task's requests. */
+  private[cloud] val ioPool: ExecutionContextExecutorService =
+    ExecutionContext.fromExecutorService(Executors.newCachedThreadPool { r =>
+      val t = new Thread(r, "cloud-shuffle-io")
+      t.setDaemon(true)
+      t
+    })
+
+  /** Index and checksum blobs read or written in this context, by block;
+    * see [[CloudShuffleIndex]]. */
+  private[cloud] val indexCache = new ConcurrentHashMap[BlockId, CloudShuffleIndex.Cell]()
+  private[cloud] val checksumCache = new ConcurrentHashMap[BlockId, CloudShuffleIndex.Cell]()
 
   /** Write-side checksums ride on Spark's own `spark.shuffle.checksum.*`. */
   val checksumEnabled: Boolean = conf.getBoolean("spark.shuffle.checksum.enabled", defaultValue = true)
@@ -81,25 +99,21 @@ final class CloudShuffleEnv(val conf: SparkConf, val appId: String) extends Logg
     f
   }
 
-  /** Shuts the fetch pool down and closes the FS. */
-  private[cloud] def close(): Unit = {
+  /** Shuts both pools down and closes the FS. */
+  def close(): Unit = {
     fetchPool.shutdown()
+    ioPool.shutdown()
     try fs.close() catch { case _: Exception => }
   }
 
-  /** (shuffleId, mapId) coordinates of any supported shuffle block. */
-  private def coords(blockId: BlockId): (Int, Long) = blockId match {
-    case ShuffleBlockId(s, m, _)         => (s, m)
-    case ShuffleBlockBatchId(s, m, _, _) => (s, m)
-    case ShuffleDataBlockId(s, m, _)     => (s, m)
-    case ShuffleIndexBlockId(s, m, _)    => (s, m)
-    case ShuffleChecksumBlockId(s, m, _) => (s, m)
-    case other =>
-      throw new IllegalArgumentException(s"Unsupported shuffle block: $other")
-  }
-
+  /** Where one of a map output's data, index and checksum objects lives. */
   def blockPath(blockId: BlockId): Path = {
-    val (shuffleId, mapId) = coords(blockId)
+    val (shuffleId, mapId) = blockId match {
+      case ShuffleDataBlockId(s, m, _)     => (s, m)
+      case ShuffleIndexBlockId(s, m, _)    => (s, m)
+      case ShuffleChecksumBlockId(s, m, _) => (s, m)
+      case other => throw new IllegalArgumentException(s"Unsupported shuffle block: $other")
+    }
     val prefix = (mapId % folderPrefixes + folderPrefixes) % folderPrefixes
     new Path(s"$rootDir/$prefix/$appId/$shuffleId/${blockId.name}")
   }
@@ -126,19 +140,23 @@ final class CloudShuffleEnv(val conf: SparkConf, val appId: String) extends Logg
 
   def registerShuffle(shuffleId: Int): Unit = liveShuffles.add(shuffleId)
 
-  /** Delete every object of one shuffle — one future per folder prefix so
-    * object-store deletes proceed in parallel. Spark reaches the plugin
-    * through several cleanup calls, on the driver and on executors; only
-    * the first call in the JVM that registered the shuffle deletes. */
-  def deleteShuffle(shuffleId: Int): Unit =
+  /** Forget one shuffle: delete every object of it — one future per folder
+    * prefix so object-store deletes proceed in parallel — then drop its
+    * cached index and checksum blobs. Spark reaches the plugin through
+    * several cleanup calls, on the driver and on executors; only the first
+    * call in the JVM that registered the shuffle deletes, and every call
+    * drops the caches. */
+  def removeShuffle(shuffleId: Int): Unit = {
     if (liveShuffles.remove(shuffleId))
       parallelDelete(p => new Path(s"$rootDir/$p/$appId/$shuffleId"))
+    CloudShuffleIndex.purgeShuffle(this, shuffleId)
+  }
 
   /** Delete every object this application wrote. */
   def deleteAppFolders(): Unit = parallelDelete(p => new Path(s"$rootDir/$p/$appId"))
 
   private def parallelDelete(path: Int => Path): Unit = {
-    implicit val ec: ExecutionContext = CloudShuffleEnv.ioEc
+    implicit val ec: ExecutionContext = ioPool
     val fut = Future.sequence((0 until folderPrefixes).map { p =>
       Future {
         try fs.delete(path(p), true)
@@ -166,49 +184,38 @@ object CloudShuffleEnv extends Logging {
     * granularity. */
   val WRITE_BUFFER_SIZE: Int = 1 << 20
 
-  /** Daemon pool for the per-prefix deletes and a commit's index and
-    * checksum PUTs. It grows with demand, so a commit never waits for
-    * another task's requests. */
-  private[cloud] val ioEc: ExecutionContext =
-    ExecutionContext.fromExecutorService(Executors.newCachedThreadPool { r =>
-      val t = new Thread(r, "cloud-shuffle-io")
-      t.setDaemon(true)
-      t
-    })
-
+  /** The running manager's conf, and its env once first used. */
+  @volatile private var openConf: SparkConf = _
   @volatile private var instance: CloudShuffleEnv = _
 
-  /** Get (or lazily create) the process-wide env. `appIdHint` comes from
-    * `ShuffleExecutorComponents.initializeExecutor`; on the driver the app
-    * id is read from the SparkConf once the context has set it. */
-  def get(appIdHint: Option[String] = None): CloudShuffleEnv = {
+  /** The running manager's env. It is built on first use: the driver
+    * constructs the manager before it sets `spark.app.id` in the same conf. */
+  def get(): CloudShuffleEnv = {
     val cur = instance
-    val wantApp = appIdHint.orElse(currentAppId)
-    if (cur != null && wantApp.forall(_ == cur.appId)) return cur
-    synchronized {
-      val cur2 = instance
-      val wantApp2 = appIdHint.orElse(currentAppId)
-      if (cur2 != null && wantApp2.forall(_ == cur2.appId)) return cur2
-      val conf = Option(SparkEnv.get).map(_.conf).getOrElse(new SparkConf())
-      val appId = wantApp2.getOrElse(
-        throw new IllegalStateException("cloud shuffle: no app id available yet"))
-      // the FS is a private newInstance (not the JVM-cached one) — close
-      // the replaced env's handle and pool instead of leaking them per context
-      if (cur2 != null) cur2.close()
-      instance = new CloudShuffleEnv(conf, appId)
-      CloudShuffleIndex.purgeAll()
-      logInfo(s"cloud shuffle env for app $appId rooted at ${instance.rootDir}")
+    if (cur != null) cur
+    else synchronized {
+      if (instance == null) {
+        if (openConf == null) throw new IllegalStateException("no cloud shuffle manager is " +
+          s"running; set spark.shuffle.manager=${classOf[CloudShuffleManager].getName}")
+        instance = new CloudShuffleEnv(openConf, openConf.getAppId)
+        logInfo(s"cloud shuffle env for app ${instance.appId} rooted at ${instance.rootDir}")
+      }
       instance
     }
   }
 
-  private def currentAppId: Option[String] =
-    Option(SparkEnv.get).flatMap(e => e.conf.getOption("spark.app.id"))
+  /** Called by the manager's constructor: its conf backs the JVM's env. */
+  private[cloud] def open(conf: SparkConf): Unit = synchronized {
+    if (openConf != null) close(openConf)
+    openConf = conf
+  }
 
-  /** Test hook: drop the singleton so a new SparkContext re-creates it. */
-  def reset(): Unit = synchronized {
-    if (instance != null) instance.close()
-    instance = null
-    CloudShuffleIndex.purgeAll()
+  /** Called by the manager's `stop()`: closes the env it opened, if built. */
+  private[cloud] def close(conf: SparkConf): Unit = synchronized {
+    if (openConf eq conf) {
+      if (instance != null) instance.close()
+      instance = null
+      openConf = null
+    }
   }
 }

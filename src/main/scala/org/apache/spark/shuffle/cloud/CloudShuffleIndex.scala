@@ -1,7 +1,6 @@
 package org.apache.spark.shuffle.cloud
 
 import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, DataOutputStream, EOFException}
-import java.util.concurrent.ConcurrentHashMap
 import java.util.zip.{Adler32, CRC32, CRC32C, Checksum}
 
 import org.apache.spark.internal.Logging
@@ -18,8 +17,9 @@ import org.apache.spark.storage.{BlockId, ShuffleChecksumBlockId, ShuffleIndexBl
   *    (ADLER32 / CRC32 / CRC32C value).
   *
   * Both are tiny and read often (every reducer touches every map's index,
-  * and every validating read its map's checksums), so they are cached
-  * per-JVM; a commit caches its checksums only when reads validate them.
+  * and every validating read its map's checksums), so they are cached in
+  * the env, for its context's life; a commit caches its checksums only when
+  * reads validate them.
   * A cold read resolves through a per-key lazy cell OUTSIDE the map: its
   * store round trip holds no bin lock, which would block unrelated readers
   * and `writeIndex`'s `put`. Concurrent readers of one map still share one
@@ -27,12 +27,9 @@ import org.apache.spark.storage.{BlockId, ShuffleChecksumBlockId, ShuffleIndexBl
   */
 private[cloud] object CloudShuffleIndex extends Logging {
 
-  private final class Cell(read: () => Array[Long]) {
+  final class Cell(read: () => Array[Long]) {
     lazy val longs: Array[Long] = read()
   }
-
-  private val indexCache = new ConcurrentHashMap[BlockId, Cell]()
-  private val checksumCache = new ConcurrentHashMap[BlockId, Cell]()
 
   /** `[0, l0, l0+l1, …]` — length n+1, exact cumulative byte offsets. */
   def prefixSums(lengths: Array[Long]): Array[Long] = {
@@ -52,7 +49,7 @@ private[cloud] object CloudShuffleIndex extends Logging {
     val blockId = ShuffleIndexBlockId(shuffleId, mapId, CloudShuffleManager.NOOP_REDUCE_ID)
     val acc = prefixSums(partitionLengths)
     writeLongs(env, blockId, acc)
-    indexCache.put(blockId, new Cell(() => acc))
+    env.indexCache.put(blockId, new Cell(() => acc))
   }
 
   def writeChecksums(env: CloudShuffleEnv, shuffleId: Int, mapId: Long,
@@ -60,21 +57,21 @@ private[cloud] object CloudShuffleIndex extends Logging {
     if (checksums.isEmpty) return
     val blockId = ShuffleChecksumBlockId(shuffleId, mapId, 0)
     writeLongs(env, blockId, checksums)
-    if (env.validateChecksums) checksumCache.put(blockId, new Cell(() => checksums))
+    if (env.validateChecksums) env.checksumCache.put(blockId, new Cell(() => checksums))
   }
 
   /** Cumulative offsets for one map task's data blob, cached. */
   def readIndex(env: CloudShuffleEnv, shuffleId: Int, mapId: Long): Array[Long] = {
     val blockId = ShuffleIndexBlockId(shuffleId, mapId, CloudShuffleManager.NOOP_REDUCE_ID)
-    cached(indexCache, env, blockId)
+    cached(env.indexCache, env, blockId)
   }
 
   def readChecksums(env: CloudShuffleEnv, shuffleId: Int, mapId: Long): Array[Long] = {
     val blockId = ShuffleChecksumBlockId(shuffleId, mapId, 0)
-    cached(checksumCache, env, blockId)
+    cached(env.checksumCache, env, blockId)
   }
 
-  private def cached(cache: ConcurrentHashMap[BlockId, Cell], env: CloudShuffleEnv,
+  private def cached(cache: java.util.Map[BlockId, Cell], env: CloudShuffleEnv,
       blockId: BlockId): Array[Long] = {
     val cell = cache.computeIfAbsent(blockId, _ => new Cell(() => readLongs(env, blockId)))
     try cell.longs
@@ -85,31 +82,16 @@ private[cloud] object CloudShuffleIndex extends Logging {
     }
   }
 
-  def purgeShuffle(shuffleId: Int): Unit = {
-    purge(indexCache, shuffleId)
-    purge(checksumCache, shuffleId)
-  }
+  def purgeShuffle(env: CloudShuffleEnv, shuffleId: Int): Unit =
+    Seq(env.indexCache, env.checksumCache).foreach(_.keySet.removeIf {
+      case ShuffleIndexBlockId(s, _, _)    => s == shuffleId
+      case ShuffleChecksumBlockId(s, _, _) => s == shuffleId
+      case _                               => false
+    })
 
-  private def purge(cache: ConcurrentHashMap[BlockId, Cell], shuffleId: Int): Unit = {
-    val it = cache.keySet().iterator()
-    while (it.hasNext) {
-      val matches = it.next() match {
-        case ShuffleIndexBlockId(s, _, _)    => s == shuffleId
-        case ShuffleChecksumBlockId(s, _, _) => s == shuffleId
-        case _                               => false
-      }
-      if (matches) it.remove()
-    }
-  }
-
-  def forget(shuffleId: Int, mapId: Long): Unit = {
-    indexCache.remove(ShuffleIndexBlockId(shuffleId, mapId, CloudShuffleManager.NOOP_REDUCE_ID))
-    checksumCache.remove(ShuffleChecksumBlockId(shuffleId, mapId, 0))
-  }
-
-  def purgeAll(): Unit = {
-    indexCache.clear()
-    checksumCache.clear()
+  def forget(env: CloudShuffleEnv, shuffleId: Int, mapId: Long): Unit = {
+    env.indexCache.remove(ShuffleIndexBlockId(shuffleId, mapId, CloudShuffleManager.NOOP_REDUCE_ID))
+    env.checksumCache.remove(ShuffleChecksumBlockId(shuffleId, mapId, 0))
   }
 
   private def writeLongs(env: CloudShuffleEnv, blockId: BlockId, values: Array[Long]): Unit = {

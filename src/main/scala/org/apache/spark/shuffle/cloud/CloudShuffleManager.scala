@@ -14,7 +14,8 @@ import org.apache.spark.storage.FallbackStorage
   * (`sort/S3ShuffleManager.scala:38-187`) for Spark 4.1.2. Handle selection
   * and the three writers are Spark's `SortShuffleManager`'s own; the
   * redirection happens entirely inside [[CloudShuffleDataIO]]'s components,
-  * which every writer streams through. This manager adds the store's
+  * which every writer streams through. This manager opens the JVM's
+  * [[CloudShuffleEnv]] and closes it at `stop()`, adds the store's
   * registration and deletion around the superclass's, relocates each
   * committed map status, and reads through [[CloudShuffleReader]].
   *
@@ -66,6 +67,8 @@ class CloudShuffleManager(conf: SparkConf) extends SortShuffleManager(conf) {
     }
   }
 
+  CloudShuffleEnv.open(conf)
+
   override def registerShuffle[K, V, C](shuffleId: Int,
       dependency: ShuffleDependency[K, V, C]): ShuffleHandle = {
     CloudShuffleEnv.get().registerShuffle(shuffleId)
@@ -89,9 +92,15 @@ class CloudShuffleManager(conf: SparkConf) extends SortShuffleManager(conf) {
   }
 
   override def unregisterShuffle(shuffleId: Int): Boolean = {
-    CloudShuffleIndex.purgeShuffle(shuffleId)
-    CloudShuffleEnv.get().deleteShuffle(shuffleId)
+    CloudShuffleEnv.get().removeShuffle(shuffleId)
     super.unregisterShuffle(shuffleId)
+  }
+
+  /** Spark stops the manager after `cleanupApplication` has deleted the
+    * application's objects; the env's pools and FS end here. */
+  override def stop(): Unit = {
+    CloudShuffleEnv.close(conf)
+    super.stop()
   }
 }
 

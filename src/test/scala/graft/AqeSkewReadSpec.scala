@@ -14,7 +14,6 @@ import org.scalatest.funsuite.AnyFunSuite
 class AqeSkewReadSpec extends AnyFunSuite {
 
   private def withSession[A](extra: (String, String)*)(f: SparkSession => A): A = {
-    org.apache.spark.shuffle.cloud.CloudShuffleEnv.reset()
     val root = Files.createTempDirectory("cloud-shuffle-skew").toUri.toString
     val b = SparkSession.builder()
       .master("local[4]").appName("aqe-skew-read-spec")
@@ -41,7 +40,6 @@ class AqeSkewReadSpec extends AnyFunSuite {
     try f(spark)
     finally {
       spark.stop()
-      org.apache.spark.shuffle.cloud.CloudShuffleEnv.reset()
     }
   }
 

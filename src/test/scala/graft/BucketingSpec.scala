@@ -16,7 +16,6 @@ class BucketingSpec extends AnyFunSuite with BeforeAndAfterAll {
   private val sf = "/root/testdata/sf0.001"
 
   override def beforeAll(): Unit = {
-    org.apache.spark.shuffle.cloud.CloudShuffleEnv.reset()
     spark = SparkSession.builder()
       .master("local[4]").appName("bucketing-spec")
       .config("spark.ui.enabled", "false")

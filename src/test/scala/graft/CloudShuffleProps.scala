@@ -13,10 +13,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * slicing, and streamed checksum validation under arbitrary chunking. */
 class CloudShuffleProps extends AnyFunSuite {
 
-  private def freshEnv(): CloudShuffleEnv = {
+  private def withFreshEnv[T](body: CloudShuffleEnv => T): T = {
     val root = Files.createTempDirectory("cloud-props").toUri.toString
-    new CloudShuffleEnv(
+    val env = new CloudShuffleEnv(
       new SparkConf().set(CloudShuffleEnv.ROOT_DIR_KEY, root), "prop-app")
+    try body(env) finally env.close()
   }
 
   test("prefix sums are cumulative and anchored at zero") {
@@ -31,8 +32,7 @@ class CloudShuffleProps extends AnyFunSuite {
     }
   }
 
-  test("index write/read round trip preserves the exact offsets") {
-    val env = freshEnv()
+  test("index write/read round trip preserves the exact offsets")(withFreshEnv { env =>
     val rng = new Random(2)
     (1 to 100).foreach { trial =>
       val lengths = Array.fill(rng.nextInt(40))(rng.nextLong(1L << 16))
@@ -40,14 +40,14 @@ class CloudShuffleProps extends AnyFunSuite {
       // (cache hit path)
       val mapId = 7000L + trial
       CloudShuffleIndex.writeIndex(env, trial, mapId, lengths)
-      CloudShuffleIndex.purgeAll() // force re-read from the store
-      val back = CloudShuffleIndex.readIndex(env, trial, mapId)
+      // a fresh env on the same store has an empty cache: re-read from the store
+      val cold = new CloudShuffleEnv(env.conf, env.appId)
+      val back = try CloudShuffleIndex.readIndex(cold, trial, mapId) finally cold.close()
       assert(back.toSeq == CloudShuffleIndex.prefixSums(lengths).toSeq)
     }
-  }
+  })
 
-  test("ranged block stream returns exactly the sliced bytes") {
-    val env = freshEnv()
+  test("ranged block stream returns exactly the sliced bytes")(withFreshEnv { env =>
     val rng = new Random(3)
     (1 to 100).foreach { trial =>
       val size = 1 + rng.nextInt(1 << 14)
@@ -63,7 +63,7 @@ class CloudShuffleProps extends AnyFunSuite {
       assert(got.toSeq == bytes.slice(start, end).toSeq,
         s"slice [$start,$end) of $size")
     }
-  }
+  })
 
   test("checksum stream validates clean data under arbitrary chunking, rejects corruption") {
     val rng = new Random(4)

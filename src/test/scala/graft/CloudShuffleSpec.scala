@@ -38,11 +38,8 @@ class CloudShuffleSpec extends AnyFunSuite with BeforeAndAfterEach {
     c
   }
 
-  override def beforeEach(): Unit = CloudShuffleEnv.reset()
-
   override def afterEach(): Unit = {
     SparkSession.getActiveSession.foreach(_.stop())
-    CloudShuffleEnv.reset()
   }
 
   private def withSc[T](conf: SparkConf)(body: SparkContext => T): T = {
@@ -153,7 +150,6 @@ class CloudShuffleSpec extends AnyFunSuite with BeforeAndAfterEach {
     // Spark's writers compute per-partition checksums with the configured
     // algorithm; our validator must agree with each of them
     for (algo <- Seq("ADLER32", "CRC32", "CRC32C")) {
-      CloudShuffleEnv.reset()
       withSc(baseConf(
         "spark.shuffle.cloud.checksum.validate" -> "true",
         "spark.shuffle.checksum.algorithm" -> algo)) { sc =>
@@ -169,7 +165,6 @@ class CloudShuffleSpec extends AnyFunSuite with BeforeAndAfterEach {
     // what the write side encoded (and batch-fetch legality depends on
     // concatenatable codecs — exercised by the contiguous-range merge)
     for (codec <- Seq("zstd", "snappy")) {
-      CloudShuffleEnv.reset()
       withSc(baseConf("spark.io.compression.codec" -> codec)) { sc =>
         val got = sc.parallelize(0 until 5000, 6).map(i => (i % 17, i.toLong))
           .reduceByKey(_ + _, 5).collect().toMap
@@ -239,7 +234,6 @@ class CloudShuffleSpec extends AnyFunSuite with BeforeAndAfterEach {
         df.collect().map(_.toString()).sorted.toSeq
       } finally spark.stop()
     }
-    CloudShuffleEnv.reset()
     val got = {
       val spark = SparkSession.builder().config(baseConf()).getOrCreate()
       try queryFor(spark).collect().map(_.toString()).sorted.toSeq

@@ -16,7 +16,6 @@ class ClusteringSpec extends AnyFunSuite with BeforeAndAfterAll {
   private var spark: SparkSession = _
 
   override def beforeAll(): Unit = {
-    org.apache.spark.shuffle.cloud.CloudShuffleEnv.reset()
     spark = SparkSession.builder()
       .master("local[4]")
       .appName("clustering-spec")

@@ -22,7 +22,6 @@ class ConcurrentQueriesSpec extends AnyFunSuite with BeforeAndAfterAll {
   private var spark: SparkSession = _
 
   override def beforeAll(): Unit = {
-    org.apache.spark.shuffle.cloud.CloudShuffleEnv.reset()
     val root = Files.createTempDirectory("cloud-shuffle-conc").toUri.toString
     spark = SparkSession.builder()
       .master("local[8]").appName("concurrent-queries-spec")
@@ -42,7 +41,6 @@ class ConcurrentQueriesSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = {
     if (spark != null) spark.stop()
-    org.apache.spark.shuffle.cloud.CloudShuffleEnv.reset()
   }
 
   test("a dozen shuffling queries run concurrently and each matches its serial result") {

@@ -14,7 +14,6 @@ class NorthStarSpec extends AnyFunSuite with BeforeAndAfterAll {
   private var spark: SparkSession = _
 
   override def beforeAll(): Unit = {
-    org.apache.spark.shuffle.cloud.CloudShuffleEnv.reset()
     spark = SparkSession.builder()
       .master("local[4]")
       .appName("north-star-spec")

@@ -19,10 +19,8 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class ShuffleFuzzSpec extends AnyFunSuite with BeforeAndAfterEach {
 
-  override def beforeEach(): Unit = CloudShuffleEnv.reset()
   override def afterEach(): Unit = {
     SparkSession.getActiveSession.foreach(_.stop())
-    CloudShuffleEnv.reset()
   }
 
   private def conf(): SparkConf = {

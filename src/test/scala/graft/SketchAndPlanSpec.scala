@@ -13,7 +13,6 @@ class SketchAndPlanSpec extends AnyFunSuite with BeforeAndAfterAll {
   private val sf = "/root/testdata/sf0.01"
 
   override def beforeAll(): Unit = {
-    org.apache.spark.shuffle.cloud.CloudShuffleEnv.reset()
     spark = SparkSession.builder()
       .master("local[4]").appName("sketch-plan-spec")
       .config("spark.ui.enabled", "false")

@@ -14,7 +14,6 @@ class SkewSpec extends AnyFunSuite with BeforeAndAfterAll {
   private var spark: SparkSession = _
 
   override def beforeAll(): Unit = {
-    org.apache.spark.shuffle.cloud.CloudShuffleEnv.reset()
     spark = SparkSession.builder()
       .master("local[4]").appName("skew-spec")
       .config("spark.ui.enabled", "false")

@@ -15,7 +15,6 @@ class SourcesSpec extends AnyFunSuite with BeforeAndAfterAll {
   private val sf = "/root/testdata/sf0.001"
 
   override def beforeAll(): Unit = {
-    org.apache.spark.shuffle.cloud.CloudShuffleEnv.reset()
     spark = SparkSession.builder()
       .master("local[4]").appName("sources-spec")
       .config("spark.ui.enabled", "false")

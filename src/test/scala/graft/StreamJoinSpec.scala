@@ -17,7 +17,6 @@ class StreamJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
   private var spark: SparkSession = _
 
   override def beforeAll(): Unit = {
-    org.apache.spark.shuffle.cloud.CloudShuffleEnv.reset()
     spark = SparkSession.builder()
       .master("local[4]").appName("stream-join-spec")
       .config("spark.ui.enabled", "false")

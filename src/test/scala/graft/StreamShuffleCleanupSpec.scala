@@ -15,7 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * frees a map output fills any store.
   *
   * The cleanup path under test is ContextCleaner → ShuffleDriverComponents
-  * .removeShuffle (CloudDriverComponents) → CloudShuffleEnv.deleteShuffle:
+  * .removeShuffle (CloudDriverComponents) → CloudShuffleEnv.removeShuffle:
   * a microbatch's ShuffleDependency becomes unreachable as soon as the
   * next batch replaces the incremental plan, so a GC lets the cleaner
   * delete its store objects while the query is still running. The test
@@ -26,7 +26,6 @@ import org.scalatest.funsuite.AnyFunSuite
 class StreamShuffleCleanupSpec extends AnyFunSuite {
 
   test("store objects stay bounded across a multi-batch streaming drain") {
-    org.apache.spark.shuffle.cloud.CloudShuffleEnv.reset()
     val root = s"/tmp/cloud-shuffle-cleanup-${java.util.UUID.randomUUID()}"
     val spark = SparkSession.builder()
       .master("local[4]")

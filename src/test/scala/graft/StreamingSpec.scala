@@ -18,7 +18,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   private var spark: SparkSession = _
 
   private def makeSession(): SparkSession = {
-    org.apache.spark.shuffle.cloud.CloudShuffleEnv.reset()
     val s = SparkSession.builder()
       .master("local[4]")
       .appName("streaming-spec")
@@ -185,7 +184,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("stateful streaming shuffles ride the cloud shuffle plugin") {
     // separate session: shuffle manager is fixed at context creation
     spark.stop()
-    org.apache.spark.shuffle.cloud.CloudShuffleEnv.reset()
     val root = java.nio.file.Files.createTempDirectory("stream-shuffle").toUri.toString
     val ss = SparkSession.builder()
       .master("local[4]").appName("streaming-plugin-spec")

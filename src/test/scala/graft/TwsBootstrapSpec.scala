@@ -34,7 +34,6 @@ class TwsBootstrapSpec extends AnyFunSuite with BeforeAndAfterAll {
   private var spark: SparkSession = _
 
   override def beforeAll(): Unit = {
-    org.apache.spark.shuffle.cloud.CloudShuffleEnv.reset()
     spark = SparkSession.builder()
       .master("local[4]")
       .appName("tws-bootstrap-spec")

@@ -7,22 +7,17 @@ import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
 
 import org.apache.spark.storage.ShuffleIndexBlockId
-import org.scalatest.BeforeAndAfterEach
 import org.scalatest.funsuite.AnyFunSuite
 
 /** A cold index read resolves outside the cache map: concurrent readers of
   * one map share one GET, and a failed read is not remembered. */
-class CloudShuffleIndexSpec extends AnyFunSuite with BeforeAndAfterEach {
+class CloudShuffleIndexSpec extends AnyFunSuite {
 
   private val shuffleId = 9003
 
-  override def beforeEach(): Unit = CloudShuffleEnv.reset()
-
-  override def afterEach(): Unit = CloudShuffleEnv.reset()
-
   private def withEnv[T](store: (String, String)*)(body: CloudShuffleEnv => T): T = {
     val env = new CloudShuffleEnv(GatedStore.sparkConf(store: _*), "cloud-shuffle-index-spec")
-    try body(env) finally env.fs.close()
+    try body(env) finally env.close()
   }
 
   private def store(env: CloudShuffleEnv) = env.fs.asInstanceOf[GatedStore]

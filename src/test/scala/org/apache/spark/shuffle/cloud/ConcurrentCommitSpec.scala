@@ -3,29 +3,24 @@ package org.apache.spark.shuffle.cloud
 import java.io.{FileNotFoundException, IOException}
 
 import org.apache.spark.SparkConf
-import org.scalatest.BeforeAndAfterEach
 import org.scalatest.funsuite.AnyFunSuite
 
 /** A map output's commit issues its data, index and checksum PUTs together
   * and is all-or-nothing: a commit that fails, or an aborted map output,
   * leaves no object and no cached index behind. A committed map's checksums
   * are cached only when reads validate them. */
-class ConcurrentCommitSpec extends AnyFunSuite with BeforeAndAfterEach {
+class ConcurrentCommitSpec extends AnyFunSuite {
 
   private val shuffleId = 9002
   private val lengths = Array(3L, 0L, 5L)
   private val checksums = Array(11L, 22L, 33L)
-
-  override def beforeEach(): Unit = CloudShuffleEnv.reset()
-
-  override def afterEach(): Unit = CloudShuffleEnv.reset()
 
   private def withEnv[T](store: (String, String)*)(body: CloudShuffleEnv => T): T =
     withConf(GatedStore.sparkConf(store: _*))(body)
 
   private def withConf[T](conf: SparkConf)(body: CloudShuffleEnv => T): T = {
     val env = new CloudShuffleEnv(conf, "concurrent-commit-spec")
-    try body(env) finally env.fs.close()
+    try body(env) finally env.close()
   }
 
   private def closesTogether = GatedStore.ClosePartiesKey -> "3"

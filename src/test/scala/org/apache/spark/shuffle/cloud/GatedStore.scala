@@ -32,8 +32,8 @@ import org.apache.spark.SparkConf
   *
   * A barrier that is not met within 10 s breaks, failing the request. The
   * store records the peak number of opens and closes in progress at once,
-  * the number of input and output streams open now, and the number of
-  * `.data` uploads completed.
+  * the number of input and output streams open now, the number of `.data`
+  * uploads completed, and whether the store has been closed.
   */
 class GatedStore extends RawLocalFileSystem {
   import GatedStore._
@@ -51,6 +51,7 @@ class GatedStore extends RawLocalFileSystem {
   val dataPuts = new AtomicInteger(0)
   val opensPeak = new Peak
   val closesPeak = new Peak
+  @volatile var closed = false
 
   override def getUri: URI = Uri
 
@@ -65,6 +66,11 @@ class GatedStore extends RawLocalFileSystem {
     closeDelayMs = conf.getLong(CloseDelayKey, 0L)
     failDataClose = conf.getBoolean(FailDataCloseKey, false)
     abortable = conf.getBoolean(AbortableKey, false)
+  }
+
+  override def close(): Unit = {
+    closed = true
+    super.close()
   }
 
   override def open(f: Path, bufferSize: Int): FSDataInputStream = {
@@ -157,8 +163,11 @@ object GatedStore {
       .set("spark.shuffle.reduceLocality.enabled", "false")
 
   /** Names of every object under an env's store root. */
-  def objects(env: CloudShuffleEnv): Seq[String] = {
-    val walk = Files.walk(Paths.get(URI.create(env.rootDir).getPath))
+  def objects(env: CloudShuffleEnv): Seq[String] = objects(env.rootDir)
+
+  /** Names of every object under a store root. */
+  def objects(rootDir: String): Seq[String] = {
+    val walk = Files.walk(Paths.get(URI.create(rootDir).getPath))
     try walk.iterator().asScala.filter(Files.isRegularFile(_)).map(_.getFileName.toString).toSeq
     finally walk.close()
   }

@@ -8,7 +8,6 @@ import scala.util.Random
 import org.apache.spark.{HashPartitioner, SparkContext}
 import org.apache.spark.executor.TempShuffleReadMetrics
 import org.apache.spark.storage.{BlockId, ShuffleDataBlockId}
-import org.scalatest.BeforeAndAfterEach
 import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.time.SpanSugar._
@@ -19,13 +18,9 @@ import org.scalatest.time.SpanSugar._
   * per executor. It reports the time the task waits for blocks as Spark's
   * fetch wait. Closing it, as the reader does at task end, leaves no store
   * stream open, and no fetch job ever waits inside the prefetcher. */
-class PrefetchPoolSpec extends AnyFunSuite with BeforeAndAfterEach {
+class PrefetchPoolSpec extends AnyFunSuite {
 
   private val threads = 4
-
-  override def beforeEach(): Unit = CloudShuffleEnv.reset()
-
-  override def afterEach(): Unit = CloudShuffleEnv.reset()
 
   /** An env with a `poolSize`-thread fetch pool over a `gatefs` store
     * holding `count` data blocks of `size` bytes, map m's block filled with

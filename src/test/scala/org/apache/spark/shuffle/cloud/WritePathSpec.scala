@@ -8,18 +8,13 @@ import org.apache.spark.{HashPartitioner, ShuffleDependency, SparkConf, SparkCon
 import org.apache.spark.executor.TaskMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.shuffle.sort.SerializedShuffleHandle
-import org.scalatest.BeforeAndAfterEach
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Partition writers offer Spark only a stream, so the serialized writer's
   * spill merge takes Spark's stream fallback, for one spill as for several;
   * a map output's commit counts as the task's shuffle write time; and a map
   * task that fails mid-write leaves nothing open or stored. */
-class WritePathSpec extends AnyFunSuite with BeforeAndAfterEach {
-
-  override def beforeEach(): Unit = CloudShuffleEnv.reset()
-
-  override def afterEach(): Unit = CloudShuffleEnv.reset()
+class WritePathSpec extends AnyFunSuite {
 
   /** Runs `job` and returns the metrics of its shuffle map tasks. */
   private def mapTaskMetrics(conf: SparkConf)(job: SparkContext => Unit): Seq[TaskMetrics] = {
@@ -85,7 +80,6 @@ class WritePathSpec extends AnyFunSuite with BeforeAndAfterEach {
         assert(GatedStore.objects(env).isEmpty)
       } finally {
         sc.stop()
-        CloudShuffleEnv.reset()
       }
     }
   }
