@@ -3,10 +3,12 @@
 
 Usage: python3 scripts/scale_table.py SCALEPROBE_r12.json [query ...]
 
-With no query args, renders one table per tier pair (sf0.1 -> sf1_exact and
-sf0.1 -> sf1_perturbed) over every query present in both tiers. Dev-only
-helper — the narrative `note` column of SCALE.md stays hand-written; this
-generates the numeric columns so they can never drift from the artifact.
+With no query args, renders one table per tier pair (sf0.1 -> sf1_exact,
+sf0.1 -> sf1_perturbed and sf0.01 -> sf0.1) over every query present in both
+tiers, then one single-tier table for each tier in no rendered pair (a run
+that stopped after its first tier, say). Dev-only helper — the narrative
+`note` column of SCALE.md stays hand-written; this generates the numeric
+columns so they can never drift from the artifact.
 """
 import json
 import sys
@@ -23,9 +25,20 @@ def fmt(rows, base, tier, names):
         if base not in t or tier not in t:
             continue
         a, b = t[base], t[tier]
-        print(
-            f"| {q} | {a['wall_s']:.2f} s / {a['rows']:,} / {a['shuffle_w_mb']:.1f} MB "
-            f"| {b['wall_s']:.2f} s / {b['rows']:,} / {b['shuffle_w_mb']:.1f} MB |")
+        print(f"| {q} | {cell(a)} | {cell(b)} |")
+
+
+def cell(r):
+    return f"{r['wall_s']:.2f} s / {r['rows']:,} / {r['shuffle_w_mb']:.1f} MB"
+
+
+def lone(rows, tier, names):
+    byq = {r["query"]: r for r in rows if r["tier"] == tier}
+    print(f"| query | {tier} wall / rows / shuffle_w |")
+    print("|---|---|")
+    for q in names:
+        if q in byq:
+            print(f"| {q} | {cell(byq[q])} |")
 
 
 def main():
@@ -33,6 +46,7 @@ def main():
         art = json.load(f)
     rows = art["rows"]
     names = sys.argv[2:] or sorted({r["query"] for r in rows})
+    paired = set()
     for base, tier in (("sf0.1", "sf1_exact"), ("sf0.1", "sf1_perturbed"),
                        ("sf0.01", "sf0.1")):
         both = ({r["query"] for r in rows if r["tier"] == base} &
@@ -40,6 +54,10 @@ def main():
         if any(r["tier"] == tier and r["query"] in both for r in rows):
             print(f"\n## {base} -> {tier}\n")
             fmt(rows, base, tier, [q for q in names if q in both])
+            paired |= {base, tier}
+    for tier in sorted({r["tier"] for r in rows} - paired):
+        print(f"\n## {tier}\n")
+        lone(rows, tier, names)
     notes = art.get("notes", {})
     if notes:
         print("\n## notes\n")

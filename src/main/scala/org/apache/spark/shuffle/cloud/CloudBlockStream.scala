@@ -5,10 +5,9 @@ import java.io.{EOFException, InputStream}
 import org.apache.hadoop.fs.FSDataInputStream
 import org.apache.spark.SparkException
 import org.apache.spark.internal.Logging
-import org.apache.spark.storage.ShuffleDataBlockId
 
-/** InputStream over the byte range `[start, end)` of one map task's data
-  * blob — i.e. one reduce partition or a contiguous batch of them.
+/** InputStream over the byte range `[start, end)` of one map output's data
+  * object — i.e. one reduce partition or a contiguous batch of them.
   *
   * Lazily opens the underlying FS stream on first read (reference:
   * `S3ShuffleBlockStream.scala:16-111`), uses positioned reads (ranged GETs
@@ -16,7 +15,7 @@ import org.apache.spark.storage.ShuffleDataBlockId
   * streams early don't leak connections.
   */
 private[cloud] class CloudBlockStream(env: CloudShuffleEnv,
-    dataBlock: ShuffleDataBlockId, start: Long, end: Long)
+    mapOutput: MapOutputId, start: Long, end: Long)
     extends InputStream with Logging {
 
   private var in: FSDataInputStream = _
@@ -36,13 +35,13 @@ private[cloud] class CloudBlockStream(env: CloudShuffleEnv,
 
   override def read(b: Array[Byte], off: Int, len: Int): Int = {
     if (closed || remaining <= 0) return -1
-    if (in == null) in = env.openBlock(dataBlock)
+    if (in == null) in = env.open(mapOutput, CloudShuffleEnv.Data)
     val n = math.min(len.toLong, remaining).toInt
     try in.readFully(pos, b, off, n) // positioned read = ranged GET
     catch {
       case e: EOFException =>
         throw new SparkException(
-          s"cloud shuffle: ${dataBlock.name} shorter than its index claims " +
+          s"cloud shuffle: ${env.path(mapOutput, CloudShuffleEnv.Data)} shorter than its index claims " +
             s"(wanted $n bytes at $pos)", e)
     }
     pos += n
@@ -64,7 +63,7 @@ private[cloud] class CloudBlockStream(env: CloudShuffleEnv,
     closed = true
     if (in != null) {
       try in.close()
-      catch { case e: Exception => logDebug(s"close ${dataBlock.name}: $e") }
+      catch { case e: Exception => logDebug(s"close $mapOutput: $e") }
       in = null
     }
   }

@@ -11,7 +11,6 @@ import org.apache.spark.{SparkConf, TaskContext}
 import org.apache.spark.internal.Logging
 import org.apache.spark.shuffle.api._
 import org.apache.spark.shuffle.api.metadata.MapOutputCommitMessage
-import org.apache.spark.storage.{ShuffleChecksumBlockId, ShuffleDataBlockId, ShuffleIndexBlockId}
 
 /** `ShuffleDataIO` plugin: Spark's writers stream their output through these
   * components, which is where the redirection to the Hadoop-FS object store
@@ -51,11 +50,11 @@ private[cloud] class CloudDriverComponents extends ShuffleDriverComponents with 
   override def supportsReliableStorage(): Boolean = true
 }
 
-/** Streams every reduce partition of one map task into a single object
-  * (`shuffle_<id>_<map>_0.data`) and records per-partition lengths; on
-  * commit, writes the prefix-sum index and checksum blobs. Every Spark
-  * writer commits through this class: the serialized writer merges even a
-  * single spill through its partition streams.
+/** Streams every reduce partition of one map task into its map output's
+  * data object and records per-partition lengths; on commit, writes the
+  * prefix-sum index and checksum objects. Every Spark writer commits
+  * through this class: the serialized writer merges even a single spill
+  * through its partition streams.
   *
   * One object per map task (reference: `S3ShuffleMapOutputWriter.scala:22`)
   * keeps object-store request counts O(maps), not O(maps × reducers) —
@@ -69,13 +68,16 @@ private[cloud] class CloudDriverComponents extends ShuffleDriverComponents with 
 private[cloud] class CloudMapOutputWriter(env: CloudShuffleEnv, shuffleId: Int,
     mapId: Long, numPartitions: Int) extends ShuffleMapOutputWriter with Logging {
 
-  private val dataBlock = ShuffleDataBlockId(shuffleId, mapId, CloudShuffleManager.NOOP_REDUCE_ID)
+  import CloudShuffleEnv.{Checksum, Data, Index}
+
+  private val id = MapOutputId(shuffleId, mapId)
   private val partitionLengths = new Array[Long](numPartitions)
   private var lastPartitionId = -1
   private var bytesWritten = 0L
   private var raw: FSDataOutputStream = _ // the store's stream, for abort
   private var stream: OutputStream = _ // raw behind the write buffer
   private var finished = false // committed or aborted
+  private var created = List.empty[String] // kinds of the objects created, for abort
 
   Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit] { _ =>
     if (!finished) abort(new IOException(s"map task ended before committing map $mapId"))
@@ -83,7 +85,8 @@ private[cloud] class CloudMapOutputWriter(env: CloudShuffleEnv, shuffleId: Int,
 
   private def ensureStream(): OutputStream = {
     if (stream == null) {
-      raw = env.createBlock(dataBlock)
+      created ::= Data
+      raw = env.create(id, Data)
       stream = new BufferedOutputStream(raw, CloudShuffleEnv.WRITE_BUFFER_SIZE)
     }
     stream
@@ -136,11 +139,11 @@ private[cloud] class CloudMapOutputWriter(env: CloudShuffleEnv, shuffleId: Int,
     implicit val ec: ExecutionContext = env.ioPool
     val t0 = System.nanoTime()
     val total = partitionLengths.sum
+    def put(kind: String)(write: => Unit): Future[Unit] = { created ::= kind; Future(write) }
     val puts = Seq(
-      Option.when(total > 0 || env.checksumEnabled)(
-        Future(CloudShuffleIndex.writeIndex(env, shuffleId, mapId, partitionLengths))),
-      Option.when(env.checksumEnabled && checksums.nonEmpty)(
-        Future(CloudShuffleIndex.writeChecksums(env, shuffleId, mapId, checksums)))).flatten
+      Option.when(total > 0 || env.checksumEnabled)(put(Index)(env.writeIndex(id, partitionLengths))),
+      Option.when(env.checksumEnabled && checksums.nonEmpty)(put(Checksum)(env.writeChecksums(id, checksums)))
+    ).flatten
     val dataError =
       try {
         if (stream != null) stream.close()
@@ -168,8 +171,8 @@ private[cloud] class CloudMapOutputWriter(env: CloudShuffleEnv, shuffleId: Int,
     try Await.ready(f, Duration.Inf).value.get.failed.toOption
     catch { case e: InterruptedException => settle(f).orElse(Some(e)) }
 
-  /** Discards the data stream, then deletes the map output's data, index
-    * and checksum objects and forgets its cached index. Idempotent. A store
+  /** Discards the data stream, then deletes the objects this writer
+    * created and forgets the map output's cached index. Idempotent. A store
     * stream that can abort drops the upload; closing it would first complete
     * the PUT of the partial object, only to delete it. Other streams close,
     * and the delete removes what they stored. */
@@ -179,8 +182,7 @@ private[cloud] class CloudMapOutputWriter(env: CloudShuffleEnv, shuffleId: Int,
       if (raw != null && raw.hasCapability(StreamCapabilities.ABORTABLE_STREAM)) raw.abort()
       else if (stream != null) stream.close()
     } catch { case e: Exception => logDebug(s"abort close: $e") }
-    Seq(dataBlock, ShuffleIndexBlockId(shuffleId, mapId, CloudShuffleManager.NOOP_REDUCE_ID),
-      ShuffleChecksumBlockId(shuffleId, mapId, 0)).foreach(env.deleteBlock)
-    CloudShuffleIndex.forget(env, shuffleId, mapId)
+    env.deleteMapOutput(id, created)
+    created = Nil
   }
 }

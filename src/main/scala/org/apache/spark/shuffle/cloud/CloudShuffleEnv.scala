@@ -10,12 +10,16 @@ import org.apache.hadoop.fs.{FileSystem, Path, FSDataInputStream, FSDataOutputSt
 import org.apache.spark.SparkConf
 import org.apache.spark.deploy.SparkHadoopUtil
 import org.apache.spark.internal.Logging
-import org.apache.spark.storage._
+
+/** One map output, the unit the store keeps: a map task attempt's data,
+  * index and checksum objects. */
+final case class MapOutputId(shuffleId: Int, mapId: Long)
 
 /** One SparkContext's state of the cloud shuffle plugin: configuration,
   * Hadoop FileSystem handle, fetch and I/O pools, index and checksum caches
-  * and the live-shuffle set. [[CloudShuffleManager]] opens the JVM's one env
-  * and closes it at `stop()`.
+  * and the live-shuffle set. It alone names, caches and deletes a map
+  * output's objects. [[CloudShuffleManager]] opens the JVM's one env and
+  * closes it at `stop()`.
   *
   * Behavioral spec from the reference's dispatcher
   * (`helper/S3ShuffleDispatcher.scala:25-255`): the FS client, the
@@ -65,10 +69,13 @@ final class CloudShuffleEnv(val conf: SparkConf, val appId: String) extends Logg
       t
     })
 
-  /** Index and checksum blobs read or written in this context, by block;
-    * see [[CloudShuffleIndex]]. */
-  private[cloud] val indexCache = new ConcurrentHashMap[BlockId, CloudShuffleIndex.Cell]()
-  private[cloud] val checksumCache = new ConcurrentHashMap[BlockId, CloudShuffleIndex.Cell]()
+  /** Index and checksum blobs read or written in this context, by map
+    * output. A cold read resolves through a per-key lazy cell outside the
+    * map: its store round trip holds no bin lock, which would block
+    * unrelated readers and a commit's `put`. Concurrent readers of one map
+    * output still share one GET, and a failed read leaves no cell behind. */
+  private val indexCache = new ConcurrentHashMap[MapOutputId, Cell]()
+  private val checksumCache = new ConcurrentHashMap[MapOutputId, Cell]()
 
   /** Write-side checksums ride on Spark's own `spark.shuffle.checksum.*`. */
   val checksumEnabled: Boolean = conf.getBoolean("spark.shuffle.checksum.enabled", defaultValue = true)
@@ -106,33 +113,70 @@ final class CloudShuffleEnv(val conf: SparkConf, val appId: String) extends Logg
     try fs.close() catch { case _: Exception => }
   }
 
-  /** Where one of a map output's data, index and checksum objects lives. */
-  def blockPath(blockId: BlockId): Path = {
-    val (shuffleId, mapId) = blockId match {
-      case ShuffleDataBlockId(s, m, _)     => (s, m)
-      case ShuffleIndexBlockId(s, m, _)    => (s, m)
-      case ShuffleChecksumBlockId(s, m, _) => (s, m)
-      case other => throw new IllegalArgumentException(s"Unsupported shuffle block: $other")
-    }
-    val prefix = (mapId % folderPrefixes + folderPrefixes) % folderPrefixes
-    new Path(s"$rootDir/$prefix/$appId/$shuffleId/${blockId.name}")
-  }
+  /** Where one of a map output's objects lives: `kind` is [[Data]],
+    * [[Index]] or [[Checksum]], and the name is Spark's shuffle block name
+    * with reduce id 0, because the whole map output is one object. */
+  def path(id: MapOutputId, kind: String): Path =
+    new Path(s"${shuffleDir(Math.floorMod(id.mapId, folderPrefixes), id.shuffleId)}/" +
+      s"shuffle_${id.shuffleId}_${id.mapId}_0.$kind")
 
-  /** Open a block for ranged reads; FS readahead is disabled because the
-    * reader issues positioned reads of exactly the byte ranges it needs. */
-  def openBlock(blockId: BlockId): FSDataInputStream = {
-    val in = fs.open(blockPath(blockId))
+  /** One folder prefix's share of this application's objects. */
+  private def appDir(prefix: Int): String = s"$rootDir/$prefix/$appId"
+
+  private def shuffleDir(prefix: Int, shuffleId: Int): String = s"${appDir(prefix)}/$shuffleId"
+
+  /** Opens an object for ranged reads; FS readahead is disabled because
+    * readers issue positioned reads of exactly the byte ranges they need. */
+  def open(id: MapOutputId, kind: String): FSDataInputStream = {
+    val in = fs.open(path(id, kind))
     try in.setReadahead(0L)
     catch { case _: UnsupportedOperationException => }
     in
   }
 
-  def createBlock(blockId: BlockId): FSDataOutputStream =
-    fs.create(blockPath(blockId), true)
+  def create(id: MapOutputId, kind: String): FSDataOutputStream = fs.create(path(id, kind), true)
 
-  def deleteBlock(blockId: BlockId): Unit =
-    try fs.delete(blockPath(blockId), false)
-    catch { case e: Exception => logDebug(s"delete ${blockId.name}: $e") }
+  /** Writes a map output's index, the prefix sums of its partition
+    * lengths, and caches it. */
+  def writeIndex(id: MapOutputId, partitionLengths: Array[Long]): Unit = {
+    val acc = CloudShuffleIndex.prefixSums(partitionLengths)
+    CloudShuffleIndex.writeLongs(create(id, Index), acc)
+    indexCache.put(id, new Cell(() => acc))
+  }
+
+  /** Writes a map output's checksums, caching them only when reads
+    * validate them. */
+  def writeChecksums(id: MapOutputId, checksums: Array[Long]): Unit = {
+    CloudShuffleIndex.writeLongs(create(id, Checksum), checksums)
+    if (validateChecksums) checksumCache.put(id, new Cell(() => checksums))
+  }
+
+  /** Cumulative byte offsets of a map output's partitions in its data object. */
+  def readIndex(id: MapOutputId): Array[Long] = cached(indexCache, id, Index)
+
+  def readChecksums(id: MapOutputId): Array[Long] = cached(checksumCache, id, Checksum)
+
+  private def cached(cache: ConcurrentHashMap[MapOutputId, Cell], id: MapOutputId,
+      kind: String): Array[Long] = {
+    val cell = cache.computeIfAbsent(id, _ => new Cell(() => CloudShuffleIndex.readLongs(open(id, kind))))
+    try cell.longs
+    catch {
+      case t: Throwable =>
+        cache.remove(id, cell)
+        throw t
+    }
+  }
+
+  /** Deletes the given objects of one map output and forgets its cached
+    * index and checksums. */
+  def deleteMapOutput(id: MapOutputId, kinds: Iterable[String]): Unit = {
+    kinds.map(path(id, _)).foreach { p =>
+      try fs.delete(p, false)
+      catch { case e: Exception => logDebug(s"delete $p: $e") }
+    }
+    indexCache.remove(id)
+    checksumCache.remove(id)
+  }
 
   /** Shuffles registered in this JVM whose objects may still be stored.
     * Only the driver registers shuffles. */
@@ -148,19 +192,19 @@ final class CloudShuffleEnv(val conf: SparkConf, val appId: String) extends Logg
     * drops the caches. */
   def removeShuffle(shuffleId: Int): Unit = {
     if (liveShuffles.remove(shuffleId))
-      parallelDelete(p => new Path(s"$rootDir/$p/$appId/$shuffleId"))
-    CloudShuffleIndex.purgeShuffle(this, shuffleId)
+      parallelDelete(shuffleDir(_, shuffleId))
+    Seq(indexCache, checksumCache).foreach(_.keySet.removeIf(_.shuffleId == shuffleId))
   }
 
   /** Delete every object this application wrote. */
-  def deleteAppFolders(): Unit = parallelDelete(p => new Path(s"$rootDir/$p/$appId"))
+  def deleteAppFolders(): Unit = parallelDelete(appDir)
 
-  private def parallelDelete(path: Int => Path): Unit = {
+  private def parallelDelete(dir: Int => String): Unit = {
     implicit val ec: ExecutionContext = ioPool
     val fut = Future.sequence((0 until folderPrefixes).map { p =>
       Future {
-        try fs.delete(path(p), true)
-        catch { case e: Exception => logDebug(s"delete ${path(p)}: $e") }
+        try fs.delete(new Path(dir(p)), true)
+        catch { case e: Exception => logDebug(s"delete ${dir(p)}: $e") }
       }
     })
     try Await.result(fut, Duration.Inf)
@@ -183,6 +227,15 @@ object CloudShuffleEnv extends Logging {
     * calls ahead of the FS client's own buffering, which sets the PUT
     * granularity. */
   val WRITE_BUFFER_SIZE: Int = 1 << 20
+
+  /** The three object kinds of a map output, named by their suffix. */
+  val Data = "data"
+  val Index = "index"
+  val Checksum = "checksum"
+
+  private final class Cell(read: () => Array[Long]) {
+    lazy val longs: Array[Long] = read()
+  }
 
   /** The running manager's conf, and its env once first used. */
   @volatile private var openConf: SparkConf = _

@@ -1,12 +1,10 @@
 package org.apache.spark.shuffle.cloud
 
-import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, DataOutputStream, EOFException}
+import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, DataOutputStream, EOFException,
+  InputStream, OutputStream}
 import java.util.zip.{Adler32, CRC32, CRC32C, Checksum}
 
-import org.apache.spark.internal.Logging
-import org.apache.spark.storage.{BlockId, ShuffleChecksumBlockId, ShuffleIndexBlockId}
-
-/** Index + checksum codec for cloud shuffle blocks.
+/** Index + checksum codec for cloud shuffle objects.
   *
   * Wire format (kept bit-identical to the reference for drop-in parity,
   * `helper/S3ShuffleHelper.scala:44-59,94-121`):
@@ -16,20 +14,9 @@ import org.apache.spark.storage.{BlockId, ShuffleChecksumBlockId, ShuffleIndexBl
   *  - checksum blob = one big-endian long per reduce partition
   *    (ADLER32 / CRC32 / CRC32C value).
   *
-  * Both are tiny and read often (every reducer touches every map's index,
-  * and every validating read its map's checksums), so they are cached in
-  * the env, for its context's life; a commit caches its checksums only when
-  * reads validate them.
-  * A cold read resolves through a per-key lazy cell OUTSIDE the map: its
-  * store round trip holds no bin lock, which would block unrelated readers
-  * and `writeIndex`'s `put`. Concurrent readers of one map still share one
-  * GET, and a failed read leaves no cell behind.
+  * [[CloudShuffleEnv]] names, caches and deletes the objects.
   */
-private[cloud] object CloudShuffleIndex extends Logging {
-
-  final class Cell(read: () => Array[Long]) {
-    lazy val longs: Array[Long] = read()
-  }
+private[cloud] object CloudShuffleIndex {
 
   /** `[0, l0, l0+l1, …]` — length n+1, exact cumulative byte offsets. */
   def prefixSums(lengths: Array[Long]): Array[Long] = {
@@ -44,71 +31,23 @@ private[cloud] object CloudShuffleIndex extends Logging {
     acc
   }
 
-  def writeIndex(env: CloudShuffleEnv, shuffleId: Int, mapId: Long,
-      partitionLengths: Array[Long]): Unit = {
-    val blockId = ShuffleIndexBlockId(shuffleId, mapId, CloudShuffleManager.NOOP_REDUCE_ID)
-    val acc = prefixSums(partitionLengths)
-    writeLongs(env, blockId, acc)
-    env.indexCache.put(blockId, new Cell(() => acc))
+  /** Writes `values` as big-endian longs, then closes `out`. */
+  def writeLongs(out: OutputStream, values: Array[Long]): Unit = {
+    val data = new DataOutputStream(new BufferedOutputStream(out))
+    try values.foreach(data.writeLong)
+    finally data.close()
   }
 
-  def writeChecksums(env: CloudShuffleEnv, shuffleId: Int, mapId: Long,
-      checksums: Array[Long]): Unit = {
-    if (checksums.isEmpty) return
-    val blockId = ShuffleChecksumBlockId(shuffleId, mapId, 0)
-    writeLongs(env, blockId, checksums)
-    if (env.validateChecksums) env.checksumCache.put(blockId, new Cell(() => checksums))
-  }
-
-  /** Cumulative offsets for one map task's data blob, cached. */
-  def readIndex(env: CloudShuffleEnv, shuffleId: Int, mapId: Long): Array[Long] = {
-    val blockId = ShuffleIndexBlockId(shuffleId, mapId, CloudShuffleManager.NOOP_REDUCE_ID)
-    cached(env.indexCache, env, blockId)
-  }
-
-  def readChecksums(env: CloudShuffleEnv, shuffleId: Int, mapId: Long): Array[Long] = {
-    val blockId = ShuffleChecksumBlockId(shuffleId, mapId, 0)
-    cached(env.checksumCache, env, blockId)
-  }
-
-  private def cached(cache: java.util.Map[BlockId, Cell], env: CloudShuffleEnv,
-      blockId: BlockId): Array[Long] = {
-    val cell = cache.computeIfAbsent(blockId, _ => new Cell(() => readLongs(env, blockId)))
-    try cell.longs
-    catch {
-      case t: Throwable =>
-        cache.remove(blockId, cell)
-        throw t
-    }
-  }
-
-  def purgeShuffle(env: CloudShuffleEnv, shuffleId: Int): Unit =
-    Seq(env.indexCache, env.checksumCache).foreach(_.keySet.removeIf {
-      case ShuffleIndexBlockId(s, _, _)    => s == shuffleId
-      case ShuffleChecksumBlockId(s, _, _) => s == shuffleId
-      case _                               => false
-    })
-
-  def forget(env: CloudShuffleEnv, shuffleId: Int, mapId: Long): Unit = {
-    env.indexCache.remove(ShuffleIndexBlockId(shuffleId, mapId, CloudShuffleManager.NOOP_REDUCE_ID))
-    env.checksumCache.remove(ShuffleChecksumBlockId(shuffleId, mapId, 0))
-  }
-
-  private def writeLongs(env: CloudShuffleEnv, blockId: BlockId, values: Array[Long]): Unit = {
-    val out = new DataOutputStream(new BufferedOutputStream(env.createBlock(blockId)))
-    try values.foreach(out.writeLong)
-    finally out.close()
-  }
-
-  private def readLongs(env: CloudShuffleEnv, blockId: BlockId): Array[Long] = {
-    val in = new DataInputStream(new BufferedInputStream(env.openBlock(blockId)))
+  /** Reads big-endian longs to the end of `in`, then closes it. */
+  def readLongs(in: InputStream): Array[Long] = {
+    val data = new DataInputStream(new BufferedInputStream(in))
     try {
       val buf = scala.collection.mutable.ArrayBuffer.empty[Long]
       try {
-        while (true) buf += in.readLong()
+        while (true) buf += data.readLong()
       } catch { case _: EOFException => }
       buf.toArray
-    } finally in.close()
+    } finally data.close()
   }
 
   /** Checksum factory for read-side validation (same algorithms Spark's

@@ -38,10 +38,9 @@ class CloudShuffleManager(conf: SparkConf) extends SortShuffleManager(conf) {
         s"${classOf[CloudShuffleDataIO].getName} (found '$plugin')")
     // Push-based shuffle writes ShufflePushBlockId/ShuffleMergedBlockId
     // blocks through external merger services that never exist on an
-    // object-store layout — the path mapper would only meet them mid-job
-    // as an opaque IllegalArgumentException. Refuse at init with the fix
-    // spelled out (push-based merging is moot when every reducer already
-    // reads merged ranges straight from the store).
+    // object-store layout, which keeps only whole map outputs. Refuse at
+    // init with the fix spelled out (push-based merging is moot when every
+    // reducer already reads merged ranges straight from the store).
     require(!conf.getBoolean("spark.shuffle.push.enabled", defaultValue = false),
       "cloud shuffle does not support push-based shuffle; set " +
         "spark.shuffle.push.enabled=false (merged-block IDs have no " +
@@ -102,12 +101,6 @@ class CloudShuffleManager(conf: SparkConf) extends SortShuffleManager(conf) {
     CloudShuffleEnv.close(conf)
     super.stop()
   }
-}
-
-object CloudShuffleManager {
-  /** Reduce id used in data/index block names — the whole map output lives
-    * in one object, so the per-reduce id slot is a constant. */
-  val NOOP_REDUCE_ID: Int = 0
 }
 
 /** Decorator rewriting the committed MapStatus location to the fallback

@@ -7,7 +7,7 @@ import org.apache.spark.internal.{config => SparkConfig}
 import org.apache.spark.io.CompressionCodec
 import org.apache.spark.serializer.SerializerManager
 import org.apache.spark.shuffle.{BaseShuffleHandle, ShuffleReader, ShuffleReadMetricsReporter}
-import org.apache.spark.storage.{BlockId, ShuffleBlockBatchId, ShuffleBlockId, ShuffleDataBlockId}
+import org.apache.spark.storage.{BlockId, ShuffleBlockBatchId, ShuffleBlockId}
 import org.apache.spark.util.CompletionIterator
 import org.apache.spark.util.collection.ExternalSorter
 
@@ -54,9 +54,9 @@ private[cloud] class CloudShuffleReader[K, C](
     shouldBatchFetch && serializerRelocatable && codecConcat && !encrypted
   }
 
-  private def reduceRange(blockId: BlockId): (Int, Long, Int, Int) = blockId match {
-    case ShuffleBlockId(s, m, r)           => (s, m, r, r + 1)
-    case ShuffleBlockBatchId(s, m, rs, re) => (s, m, rs, re)
+  private def reduceRange(blockId: BlockId): (MapOutputId, Int, Int) = blockId match {
+    case ShuffleBlockId(s, m, r)           => (MapOutputId(s, m), r, r + 1)
+    case ShuffleBlockBatchId(s, m, rs, re) => (MapOutputId(s, m), rs, re)
     case other =>
       throw new IllegalArgumentException(s"unexpected shuffle block $other")
   }
@@ -74,8 +74,8 @@ private[cloud] class CloudShuffleReader[K, C](
     // resolve each block to a byte range of its map's data blob
     val ranged: IndexedSeq[(BlockId, CloudBlockStream, InputStream)] =
       blocks.iterator.flatMap { case (blockId, _) =>
-        val (shuffleId, mapId, rs, re) = reduceRange(blockId)
-        val offsets = CloudShuffleIndex.readIndex(env, shuffleId, mapId)
+        val (mapOutput, rs, re) = reduceRange(blockId)
+        val offsets = env.readIndex(mapOutput)
         if (re >= offsets.length) {
           // a silent clamp here would drop data — fail loudly instead
           throw new org.apache.spark.SparkException(
@@ -86,12 +86,11 @@ private[cloud] class CloudShuffleReader[K, C](
         if (to <= from) None
         else {
           readMetrics.incRemoteBytesRead(to - from)
-          val dataBlock = ShuffleDataBlockId(shuffleId, mapId, CloudShuffleManager.NOOP_REDUCE_ID)
-          val base = new CloudBlockStream(env, dataBlock, from, to)
+          val base = new CloudBlockStream(env, mapOutput, from, to)
           val validated: InputStream =
             if (env.validateChecksums)
               new ChecksumValidatingStream(base, blockId.name, env.checksumAlgorithm,
-                offsets, CloudShuffleIndex.readChecksums(env, shuffleId, mapId), rs, re)
+                offsets, env.readChecksums(mapOutput), rs, re)
             else base
           Some((blockId, base, validated))
         }

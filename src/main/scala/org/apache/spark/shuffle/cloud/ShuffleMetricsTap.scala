@@ -39,12 +39,12 @@ class ShuffleMetricsTap(sc: SparkContext) extends SparkListener {
   /** Drain pending task-end events, then read-and-reset both counters.
     * Returns (shuffleBytesWritten, shuffleBytesRead) since the last call.
     *
-    * Only meaningful when no job runs concurrently with the call (ADVICE
-    * r6): `sumThenReset` makes each counter individually lossless, but a
-    * task ending between the two calls still lands in the wrong harvest
-    * window — the serial query-at-a-time loop of `graft.BenchRunner` is
-    * the intended caller, and `waitUntilEmpty` only flushes events of
-    * ALREADY-finished tasks.
+    * A harvest holds exactly the bytes of the tasks that ended since the
+    * previous one only while no job runs concurrently with the call:
+    * `sumThenReset` makes each counter individually lossless, but a task
+    * ending between the two calls lands in the wrong window, and
+    * `waitUntilEmpty` only flushes events of tasks that already finished.
+    * The serial query-at-a-time loop of `graft.BenchRunner` keeps that.
     */
   def harvest(): (Long, Long) = {
     sc.listenerBus.waitUntilEmpty()

@@ -5,7 +5,7 @@ import java.nio.file.Files
 import scala.util.Random
 
 import org.apache.spark.SparkConf
-import org.apache.spark.storage.{BlockId, ShuffleBlockBatchId, ShuffleBlockId, ShuffleDataBlockId}
+import org.apache.spark.storage.{BlockId, ShuffleBlockBatchId, ShuffleBlockId}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Property-style tests (seeded, 100 trials each — SURVEY.md §5) for the
@@ -36,13 +36,13 @@ class CloudShuffleProps extends AnyFunSuite {
     val rng = new Random(2)
     (1 to 100).foreach { trial =>
       val lengths = Array.fill(rng.nextInt(40))(rng.nextLong(1L << 16))
-      CloudShuffleIndex.writeIndex(env, trial, rng.nextLong(1000), lengths)
+      env.writeIndex(MapOutputId(trial, rng.nextLong(1000)), lengths)
       // (cache hit path)
       val mapId = 7000L + trial
-      CloudShuffleIndex.writeIndex(env, trial, mapId, lengths)
+      env.writeIndex(MapOutputId(trial, mapId), lengths)
       // a fresh env on the same store has an empty cache: re-read from the store
       val cold = new CloudShuffleEnv(env.conf, env.appId)
-      val back = try CloudShuffleIndex.readIndex(cold, trial, mapId) finally cold.close()
+      val back = try cold.readIndex(MapOutputId(trial, mapId)) finally cold.close()
       assert(back.toSeq == CloudShuffleIndex.prefixSums(lengths).toSeq)
     }
   })
@@ -52,13 +52,13 @@ class CloudShuffleProps extends AnyFunSuite {
     (1 to 100).foreach { trial =>
       val size = 1 + rng.nextInt(1 << 14)
       val bytes = Array.tabulate[Byte](size)(i => (i * 31 + trial).toByte)
-      val blockId = ShuffleDataBlockId(1, trial.toLong, 0)
-      val out = env.createBlock(blockId)
+      val mapOutput = MapOutputId(1, trial.toLong)
+      val out = env.create(mapOutput, CloudShuffleEnv.Data)
       out.write(bytes)
       out.close()
       val (a, b) = (rng.nextInt(size + 1), rng.nextInt(size + 1))
       val (start, end) = (math.min(a, b), math.max(a, b))
-      val in = new CloudBlockStream(env, blockId, start, end)
+      val in = new CloudBlockStream(env, mapOutput, start, end)
       val got = in.readAllBytes()
       assert(got.toSeq == bytes.slice(start, end).toSeq,
         s"slice [$start,$end) of $size")

@@ -6,7 +6,6 @@ import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
 
-import org.apache.spark.storage.ShuffleIndexBlockId
 import org.scalatest.funsuite.AnyFunSuite
 
 /** A cold index read resolves outside the cache map: concurrent readers of
@@ -24,8 +23,7 @@ class CloudShuffleIndexSpec extends AnyFunSuite {
 
   /** Puts an index object in the store without touching the JVM's cache. */
   private def putIndex(env: CloudShuffleEnv, mapId: Long, offsets: Seq[Long]): Unit = {
-    val out = new DataOutputStream(
-      env.createBlock(ShuffleIndexBlockId(shuffleId, mapId, CloudShuffleManager.NOOP_REDUCE_ID)))
+    val out = new DataOutputStream(env.create(MapOutputId(shuffleId, mapId), CloudShuffleEnv.Index))
     try offsets.foreach(out.writeLong) finally out.close()
   }
 
@@ -39,7 +37,7 @@ class CloudShuffleIndexSpec extends AnyFunSuite {
         val start = new CountDownLatch(1)
         val reads = Seq.fill(2)(Future {
           start.await(10, TimeUnit.SECONDS)
-          CloudShuffleIndex.readIndex(env, shuffleId, 1L).toSeq
+          env.readIndex(MapOutputId(shuffleId, 1L)).toSeq
         })
         start.countDown()
         assert(reads.map(Await.result(_, 30.seconds)) == Seq.fill(2)(Seq(0L, 4L, 9L)))
@@ -50,9 +48,9 @@ class CloudShuffleIndexSpec extends AnyFunSuite {
 
   test("a failed index read is retried once the index exists") {
     withEnv() { env =>
-      intercept[FileNotFoundException](CloudShuffleIndex.readIndex(env, shuffleId, 2L))
+      intercept[FileNotFoundException](env.readIndex(MapOutputId(shuffleId, 2L)))
       putIndex(env, 2L, Seq(0L, 7L))
-      assert(CloudShuffleIndex.readIndex(env, shuffleId, 2L).toSeq == Seq(0L, 7L))
+      assert(env.readIndex(MapOutputId(shuffleId, 2L)).toSeq == Seq(0L, 7L))
       assert(store(env).opens.get == 2)
     }
   }

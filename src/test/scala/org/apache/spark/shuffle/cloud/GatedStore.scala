@@ -33,7 +33,8 @@ import org.apache.spark.SparkConf
   * A barrier that is not met within 10 s breaks, failing the request. The
   * store records the peak number of opens and closes in progress at once,
   * the number of input and output streams open now, the number of `.data`
-  * uploads completed, and whether the store has been closed.
+  * uploads completed, the number of `delete` calls, and whether the store
+  * has been closed.
   */
 class GatedStore extends RawLocalFileSystem {
   import GatedStore._
@@ -49,6 +50,7 @@ class GatedStore extends RawLocalFileSystem {
   val openInputs = new AtomicInteger(0)
   val openOutputs = new AtomicInteger(0)
   val dataPuts = new AtomicInteger(0)
+  val deletes = new AtomicInteger(0)
   val opensPeak = new Peak
   val closesPeak = new Peak
   @volatile var closed = false
@@ -72,6 +74,14 @@ class GatedStore extends RawLocalFileSystem {
     closed = true
     super.close()
   }
+
+  override def delete(f: Path, recursive: Boolean): Boolean = {
+    deletes.incrementAndGet()
+    super.delete(f, recursive)
+  }
+
+  /** An aborted upload never lands; dropping it is not a delete request. */
+  private def discard(f: Path): Unit = super.delete(f, false)
 
   override def open(f: Path, bufferSize: Int): FSDataInputStream = {
     opens.incrementAndGet()
@@ -119,7 +129,7 @@ class GatedStore extends RawLocalFileSystem {
           openOutputs.decrementAndGet()
           closed = true
           out.close()
-          delete(f, false)
+          discard(f)
         }
         new Abortable.AbortableResult {
           override def alreadyClosed(): Boolean = wasClosed
@@ -166,9 +176,15 @@ object GatedStore {
   def objects(env: CloudShuffleEnv): Seq[String] = objects(env.rootDir)
 
   /** Names of every object under a store root. */
-  def objects(rootDir: String): Seq[String] = {
-    val walk = Files.walk(Paths.get(URI.create(rootDir).getPath))
-    try walk.iterator().asScala.filter(Files.isRegularFile(_)).map(_.getFileName.toString).toSeq
+  def objects(rootDir: String): Seq[String] = paths(rootDir).map(_.split('/').last)
+
+  /** Paths of every object under an env's store root, relative to it. */
+  def paths(env: CloudShuffleEnv): Seq[String] = paths(env.rootDir)
+
+  private def paths(rootDir: String): Seq[String] = {
+    val root = Paths.get(URI.create(rootDir).getPath)
+    val walk = Files.walk(root)
+    try walk.iterator().asScala.filter(Files.isRegularFile(_)).map(root.relativize(_).toString).toSeq
     finally walk.close()
   }
 

@@ -34,19 +34,19 @@ class PrefetchPoolSpec extends AnyFunSuite {
       .set(CloudShuffleEnv.MAX_BUFFER_TASK_KEY, "1m")
     val env = new CloudShuffleEnv(sparkConf, "prefetch-pool-spec")
     (0 until count).foreach { m =>
-      val out = env.createBlock(blockId(m))
+      val out = env.create(MapOutputId(9001, m), CloudShuffleEnv.Data)
       try out.write(Array.fill[Byte](size)(m.toByte)) finally out.close()
     }
     (env, streams(env, count, size))
   }
 
-  private def blockId(m: Int) = ShuffleDataBlockId(9001, m, CloudShuffleManager.NOOP_REDUCE_ID)
+  private def blockId(m: Int) = ShuffleDataBlockId(9001, m, 0)
 
   /** Fresh, unopened streams over the blocks [[storeWithBlocks]] wrote. */
   private def streams(env: CloudShuffleEnv, count: Int, size: Int)
       : IndexedSeq[(BlockId, CloudBlockStream, InputStream)] =
     (0 until count).map { m =>
-      val stream = new CloudBlockStream(env, blockId(m), 0, size)
+      val stream = new CloudBlockStream(env, MapOutputId(9001, m), 0, size)
       (blockId(m): BlockId, stream, stream: InputStream)
     }
 

@@ -7,13 +7,14 @@ import com.esotericsoftware.kryo.io.{Input, Output}
 import org.apache.spark.{HashPartitioner, ShuffleDependency, SparkConf, SparkContext, SparkException}
 import org.apache.spark.executor.TaskMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.shuffle.sort.SerializedShuffleHandle
+import org.apache.spark.shuffle.sort.{BypassMergeSortShuffleHandle, SerializedShuffleHandle}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Partition writers offer Spark only a stream, so the serialized writer's
   * spill merge takes Spark's stream fallback, for one spill as for several;
-  * a map output's commit counts as the task's shuffle write time; and a map
-  * task that fails mid-write leaves nothing open or stored. */
+  * a map output's commit counts as the task's shuffle write time; a map
+  * task that fails mid-write leaves nothing open or stored; and an abort
+  * deletes only the objects its map output created. */
 class WritePathSpec extends AnyFunSuite {
 
   /** Runs `job` and returns the metrics of its shuffle map tasks. */
@@ -82,6 +83,25 @@ class WritePathSpec extends AnyFunSuite {
         sc.stop()
       }
     }
+  }
+
+  test("a bypass map whose input fails before its first record stores and deletes nothing") {
+    // the bypass writer creates its map output writer before it reads a
+    // record, and aborts it when the input throws
+    val message = "input fails before its first record"
+    val sc = new SparkContext(GatedStore.localSparkConf("write-path-spec"))
+    try {
+      val shuffled = sc.parallelize(0 until 4, 1)
+        .mapPartitions[(Int, Int)](_ => Iterator.continually[(Int, Int)](throw new IllegalStateException(message)))
+        .partitionBy(new HashPartitioner(4))
+      val dep = shuffled.dependencies.head.asInstanceOf[ShuffleDependency[_, _, _]]
+      assert(dep.shuffleHandle.isInstanceOf[BypassMergeSortShuffleHandle[_, _]])
+      val e = intercept[SparkException](shuffled.count())
+      assert(e.getMessage.contains(message))
+      val env = CloudShuffleEnv.get()
+      assert(env.fs.asInstanceOf[GatedStore].deletes.get == 0, "deletes")
+      assert(GatedStore.objects(env).isEmpty)
+    } finally sc.stop()
   }
 
   test("a map output's commit counts as shuffle write time") {
