@@ -16,9 +16,7 @@ object GraftSession {
     * available processors. */
   val Cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
 
-  def builder(cpus: String = Cpus,
-      plugin: Boolean = !sys.env.contains("SPARK_GRAFT_NO_PLUGIN"))
-      : SparkSession.Builder = {
+  def builder(cpus: String = Cpus, plugin: Boolean = true): SparkSession.Builder = {
     val b = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -47,13 +45,11 @@ object GraftSession {
       .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
     // Run every shuffle through the cloud shuffle plugin (the engine's
     // core): file:// stands in for the object store locally, exactly as
-    // the reference's own tests do. SPARK_GRAFT_NO_PLUGIN=1 (or
-    // plugin=false — Bench's A/B lane) opts out.
+    // the reference's own tests do. plugin=false (the default-manager A/B
+    // lanes) opts out; the manager installs its own ShuffleDataIO.
     if (plugin) {
       b.config("spark.shuffle.manager",
           "org.apache.spark.shuffle.cloud.CloudShuffleManager")
-        .config("spark.shuffle.sort.io.plugin.class",
-          "org.apache.spark.shuffle.cloud.CloudShuffleDataIO")
         .config("spark.shuffle.cloud.rootDir",
           sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_DIR",
             s"file:///tmp/cloud-shuffle-${java.util.UUID.randomUUID()}"))
@@ -61,8 +57,7 @@ object GraftSession {
     b
   }
 
-  def get(cpus: String = Cpus,
-      plugin: Boolean = !sys.env.contains("SPARK_GRAFT_NO_PLUGIN")): SparkSession = {
+  def get(cpus: String = Cpus, plugin: Boolean = true): SparkSession = {
     val spark = builder(cpus, plugin).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Bench/Verify re-invoke queries that persist() their intermediates

@@ -5,6 +5,7 @@ import java.io.{EOFException, InputStream}
 import org.apache.hadoop.fs.FSDataInputStream
 import org.apache.spark.SparkException
 import org.apache.spark.internal.Logging
+import org.apache.spark.network.shuffle.checksum.ShuffleChecksumHelper
 
 /** InputStream over the byte range `[start, end)` of one map output's data
   * object — i.e. one reduce partition or a contiguous batch of them.
@@ -84,30 +85,23 @@ private[cloud] class ChecksumValidatingStream(under: InputStream,
     checksums: Array[Long], startReduce: Int, endReduce: Int)
     extends InputStream {
 
-  private val digest = CloudShuffleIndex.newChecksum(algorithm)
+  private val digest = ShuffleChecksumHelper.getChecksumByAlgorithm(algorithm)
   private var part = startReduce
   private var leftInPart = partLen(part)
 
   private def partLen(p: Int): Long =
     if (p < endReduce) offsets(p + 1) - offsets(p) else 0L
 
-  /** Zero-length partitions have trivially-correct checksums — skip them. */
-  private def advancePastEmpty(): Unit = {
-    while (part < endReduce && leftInPart == 0) {
-      verifyCurrent()
-      part += 1
-      leftInPart = partLen(part)
-      digest.reset()
-    }
-  }
-
-  private def verifyCurrent(): Unit = {
-    if (part < endReduce && part < checksums.length &&
-        digest.getValue != checksums(part)) {
+  /** Checks the partition just read, then starts the next. */
+  private def nextPart(): Unit = {
+    if (part < endReduce && digest.getValue != checksums(part)) {
       throw new SparkException(
         s"cloud shuffle: checksum mismatch in $blockName reduce partition " +
           s"$part: got ${digest.getValue}, expected ${checksums(part)}")
     }
+    part += 1
+    leftInPart = partLen(part)
+    digest.reset()
   }
 
   override def read(): Int = {
@@ -117,7 +111,7 @@ private[cloud] class ChecksumValidatingStream(under: InputStream,
   }
 
   override def read(b: Array[Byte], off: Int, len: Int): Int = {
-    advancePastEmpty()
+    while (part < endReduce && leftInPart == 0) nextPart() // zero-length partitions
     val n = under.read(b, off, len)
     if (n <= 0) return n
     var o = off
@@ -129,10 +123,7 @@ private[cloud] class ChecksumValidatingStream(under: InputStream,
       o += chunk
       todo -= chunk
       if (leftInPart == 0) {
-        verifyCurrent()
-        part += 1
-        leftInPart = partLen(part)
-        digest.reset()
+        nextPart()
         if (todo > 0 && part >= endReduce) {
           throw new SparkException(
             s"cloud shuffle: $blockName returned bytes past reduce range " +

@@ -128,22 +128,24 @@ private[cloud] class CloudMapOutputWriter(env: CloudShuffleEnv, shuffleId: Int,
     override def getNumBytesWritten: Long = count
   }
 
-  /** The index and checksum PUTs start on the env's I/O pool while the data
-    * PUT finishes on the calling thread, so the task waits out one store
-    * latency instead of three. Returns or throws only once every PUT has
-    * finished; if any failed, the map output is aborted, so a failed commit
-    * leaves nothing a reader could see. Spark's writers time their record
-    * writes but not the commit, so its wall time is added to the task's
-    * shuffle write time here. */
+  /** An all-empty map output stores no object: the tracker reports its
+    * blocks as 0 bytes, so no reader asks for them. Otherwise the index and
+    * checksum (when Spark computes one) PUTs start on the env's I/O pool
+    * while the data PUT finishes on the calling thread, so the task waits
+    * out one store latency instead of three. Returns or throws only once
+    * every PUT has finished; if any failed, the map output is aborted, so a
+    * failed commit leaves nothing a reader could see. Spark's writers time
+    * their record writes but not the commit, so its wall time is added to
+    * the task's shuffle write time here. */
   override def commitAllPartitions(checksums: Array[Long]): MapOutputCommitMessage = {
     implicit val ec: ExecutionContext = env.ioPool
     val t0 = System.nanoTime()
     val total = partitionLengths.sum
     def put(kind: String)(write: => Unit): Future[Unit] = { created ::= kind; Future(write) }
-    val puts = Seq(
-      Option.when(total > 0 || env.checksumEnabled)(put(Index)(env.writeIndex(id, partitionLengths))),
-      Option.when(env.checksumEnabled && checksums.nonEmpty)(put(Checksum)(env.writeChecksums(id, checksums)))
-    ).flatten
+    val puts =
+      if (total == 0) Nil
+      else Seq(put(Index)(env.writeIndex(id, partitionLengths))) ++
+        Option.when(env.checksumEnabled && checksums.nonEmpty)(put(Checksum)(env.writeChecksums(id, checksums)))
     val dataError =
       try {
         if (stream != null) stream.close()

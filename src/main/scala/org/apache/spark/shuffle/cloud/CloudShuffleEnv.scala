@@ -1,5 +1,6 @@
 package org.apache.spark.shuffle.cloud
 
+import java.io.EOFException
 import java.net.URI
 import java.util.concurrent.{ConcurrentHashMap, Executors, LinkedBlockingQueue, ThreadPoolExecutor, TimeUnit}
 
@@ -7,9 +8,9 @@ import scala.concurrent.{Await, ExecutionContext, ExecutionContextExecutorServic
 import scala.concurrent.duration.Duration
 
 import org.apache.hadoop.fs.{FileSystem, Path, FSDataInputStream, FSDataOutputStream}
-import org.apache.spark.SparkConf
+import org.apache.spark.{SparkConf, SparkException}
 import org.apache.spark.deploy.SparkHadoopUtil
-import org.apache.spark.internal.Logging
+import org.apache.spark.internal.{config, Logging}
 
 /** One map output, the unit the store keeps: a map task attempt's data,
   * index and checksum objects. */
@@ -77,9 +78,10 @@ final class CloudShuffleEnv(val conf: SparkConf, val appId: String) extends Logg
   private val indexCache = new ConcurrentHashMap[MapOutputId, Cell]()
   private val checksumCache = new ConcurrentHashMap[MapOutputId, Cell]()
 
-  /** Write-side checksums ride on Spark's own `spark.shuffle.checksum.*`. */
-  val checksumEnabled: Boolean = conf.getBoolean("spark.shuffle.checksum.enabled", defaultValue = true)
-  val checksumAlgorithm: String = conf.get("spark.shuffle.checksum.algorithm", "ADLER32")
+  /** Spark's own `spark.shuffle.checksum.*`, read through its config
+    * entries, so the values are exactly those Spark's writers see. */
+  val checksumEnabled: Boolean = conf.get(config.SHUFFLE_CHECKSUM_ENABLED)
+  val checksumAlgorithm: String = conf.get(config.SHUFFLE_CHECKSUM_ALGORITHM)
   val validateChecksums: Boolean =
     conf.getBoolean(VALIDATE_KEY, defaultValue = false) && checksumEnabled
 
@@ -140,31 +142,50 @@ final class CloudShuffleEnv(val conf: SparkConf, val appId: String) extends Logg
     * lengths, and caches it. */
   def writeIndex(id: MapOutputId, partitionLengths: Array[Long]): Unit = {
     val acc = CloudShuffleIndex.prefixSums(partitionLengths)
-    CloudShuffleIndex.writeLongs(create(id, Index), acc)
+    writeLongs(id, Index, acc)
     indexCache.put(id, new Cell(() => acc))
   }
 
   /** Writes a map output's checksums, caching them only when reads
     * validate them. */
   def writeChecksums(id: MapOutputId, checksums: Array[Long]): Unit = {
-    CloudShuffleIndex.writeLongs(create(id, Checksum), checksums)
+    writeLongs(id, Checksum, checksums)
     if (validateChecksums) checksumCache.put(id, new Cell(() => checksums))
   }
 
-  /** Cumulative byte offsets of a map output's partitions in its data object. */
-  def readIndex(id: MapOutputId): Array[Long] = cached(indexCache, id, Index)
+  private def writeLongs(id: MapOutputId, kind: String, values: Array[Long]): Unit = {
+    val out = create(id, kind)
+    try out.write(CloudShuffleIndex.encode(values)) finally out.close()
+  }
 
-  def readChecksums(id: MapOutputId): Array[Long] = cached(checksumCache, id, Checksum)
+  /** Cumulative byte offsets of a map output's partitions in its data object. */
+  def readIndex(id: MapOutputId, partitions: Int): Array[Long] = cached(indexCache, id, Index, partitions + 1)
+
+  def readChecksums(id: MapOutputId, partitions: Int): Array[Long] = cached(checksumCache, id, Checksum, partitions)
 
   private def cached(cache: ConcurrentHashMap[MapOutputId, Cell], id: MapOutputId,
-      kind: String): Array[Long] = {
-    val cell = cache.computeIfAbsent(id, _ => new Cell(() => CloudShuffleIndex.readLongs(open(id, kind))))
+      kind: String, longs: Int): Array[Long] = {
+    val cell = cache.computeIfAbsent(id, _ => new Cell(() => readLongs(id, kind, longs)))
     try cell.longs
     catch {
       case t: Throwable =>
         cache.remove(id, cell)
         throw t
     }
+  }
+
+  /** The first `n` longs of an object in one positioned read: a longer
+    * object starts with the same longs, and a shorter one is refused. */
+  private def readLongs(id: MapOutputId, kind: String, n: Int): Array[Long] = {
+    val bytes = new Array[Byte](n * 8)
+    val in = open(id, kind)
+    try in.readFully(0L, bytes)
+    catch {
+      case e: EOFException =>
+        throw new SparkException(s"cloud shuffle: ${path(id, kind)} is shorter than the " +
+          s"${bytes.length} bytes of its $n longs", e)
+    } finally in.close()
+    CloudShuffleIndex.decode(bytes)
   }
 
   /** Deletes the given objects of one map output and forgets its cached

@@ -1,8 +1,6 @@
 package org.apache.spark.shuffle.cloud
 
-import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, DataOutputStream, EOFException,
-  InputStream, OutputStream}
-import java.util.zip.{Adler32, CRC32, CRC32C, Checksum}
+import java.nio.ByteBuffer
 
 /** Index + checksum codec for cloud shuffle objects.
   *
@@ -14,6 +12,7 @@ import java.util.zip.{Adler32, CRC32, CRC32C, Checksum}
   *  - checksum blob = one big-endian long per reduce partition
   *    (ADLER32 / CRC32 / CRC32C value).
   *
+  * With P reduce partitions the two blobs are exactly (P+1)·8 and P·8 bytes.
   * [[CloudShuffleEnv]] names, caches and deletes the objects.
   */
 private[cloud] object CloudShuffleIndex {
@@ -31,32 +30,16 @@ private[cloud] object CloudShuffleIndex {
     acc
   }
 
-  /** Writes `values` as big-endian longs, then closes `out`. */
-  def writeLongs(out: OutputStream, values: Array[Long]): Unit = {
-    val data = new DataOutputStream(new BufferedOutputStream(out))
-    try values.foreach(data.writeLong)
-    finally data.close()
+  /** `values` as big-endian longs. */
+  def encode(values: Array[Long]): Array[Byte] = {
+    val bytes = ByteBuffer.allocate(values.length * 8)
+    bytes.asLongBuffer().put(values)
+    bytes.array()
   }
 
-  /** Reads big-endian longs to the end of `in`, then closes it. */
-  def readLongs(in: InputStream): Array[Long] = {
-    val data = new DataInputStream(new BufferedInputStream(in))
-    try {
-      val buf = scala.collection.mutable.ArrayBuffer.empty[Long]
-      try {
-        while (true) buf += data.readLong()
-      } catch { case _: EOFException => }
-      buf.toArray
-    } finally data.close()
-  }
-
-  /** Checksum factory for read-side validation (same algorithms Spark's
-    * writers use via `spark.shuffle.checksum.algorithm`). */
-  def newChecksum(algorithm: String): Checksum = algorithm.toUpperCase match {
-    case "ADLER32" => new Adler32()
-    case "CRC32"   => new CRC32()
-    case "CRC32C"  => new CRC32C()
-    case other =>
-      throw new UnsupportedOperationException(s"checksum algorithm $other")
+  /** The big-endian longs of `bytes`, whose length is a multiple of 8. */
+  def decode(bytes: Array[Byte]): Array[Long] = {
+    val buf = ByteBuffer.wrap(bytes)
+    Array.fill(bytes.length / 8)(buf.getLong())
   }
 }

@@ -17,24 +17,27 @@ import org.apache.spark.storage.FallbackStorage
   * which every writer streams through. This manager opens the JVM's
   * [[CloudShuffleEnv]] and closes it at `stop()`, adds the store's
   * registration and deletion around the superclass's, relocates each
-  * committed map status, and reads through [[CloudShuffleReader]].
+  * committed map status, and reads through [[CloudShuffleReader]]. It sets
+  * [[CloudShuffleDataIO]] in its conf before Spark loads the `ShuffleDataIO`
+  * from that conf.
   *
   * Usage:
   * {{{
   *   spark.shuffle.manager=org.apache.spark.shuffle.cloud.CloudShuffleManager
-  *   spark.shuffle.sort.io.plugin.class=org.apache.spark.shuffle.cloud.CloudShuffleDataIO
   *   spark.shuffle.cloud.rootDir=s3a://bucket/shuffle   (or any Hadoop FS)
   * }}}
   */
 class CloudShuffleManager(conf: SparkConf) extends SortShuffleManager(conf) {
 
-  // fail fast: without our ShuffleDataIO the writers would scatter shuffle
+  // fail fast on any other ShuffleDataIO: the writers would scatter shuffle
   // files onto executor-local disk while the reader looks at the store
   // (reference keeps the same gate, `S3ShuffleManager.scala:190-195`)
   {
-    val plugin = conf.get("spark.shuffle.sort.io.plugin.class", "")
+    val pluginKey = "spark.shuffle.sort.io.plugin.class"
+    conf.setIfMissing(pluginKey, classOf[CloudShuffleDataIO].getName)
+    val plugin = conf.get(pluginKey)
     require(plugin == classOf[CloudShuffleDataIO].getName,
-      s"CloudShuffleManager requires spark.shuffle.sort.io.plugin.class=" +
+      s"CloudShuffleManager requires $pluginKey=" +
         s"${classOf[CloudShuffleDataIO].getName} (found '$plugin')")
     // Push-based shuffle writes ShufflePushBlockId/ShuffleMergedBlockId
     // blocks through external merger services that never exist on an

@@ -71,17 +71,13 @@ private[cloud] class CloudShuffleReader[K, C](
 
     readMetrics.incRemoteBlocksFetched(blocks.size)
 
-    // resolve each block to a byte range of its map's data blob
+    // resolve each block to a byte range of its map's data blob; the
+    // partition count fixes the index's and checksums' lengths
+    val partitions = dep.partitioner.numPartitions
     val ranged: IndexedSeq[(BlockId, CloudBlockStream, InputStream)] =
       blocks.iterator.flatMap { case (blockId, _) =>
         val (mapOutput, rs, re) = reduceRange(blockId)
-        val offsets = env.readIndex(mapOutput)
-        if (re >= offsets.length) {
-          // a silent clamp here would drop data — fail loudly instead
-          throw new org.apache.spark.SparkException(
-            s"cloud shuffle: ${blockId.name} asks for reduce range [$rs, $re) " +
-              s"but the index covers only ${offsets.length - 1} partitions")
-        }
+        val offsets = env.readIndex(mapOutput, partitions)
         val (from, to) = (offsets(rs), offsets(re))
         if (to <= from) None
         else {
@@ -90,7 +86,7 @@ private[cloud] class CloudShuffleReader[K, C](
           val validated: InputStream =
             if (env.validateChecksums)
               new ChecksumValidatingStream(base, blockId.name, env.checksumAlgorithm,
-                offsets, env.readChecksums(mapOutput), rs, re)
+                offsets, env.readChecksums(mapOutput, partitions), rs, re)
             else base
           Some((blockId, base, validated))
         }

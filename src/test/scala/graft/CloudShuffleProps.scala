@@ -42,7 +42,7 @@ class CloudShuffleProps extends AnyFunSuite {
       env.writeIndex(MapOutputId(trial, mapId), lengths)
       // a fresh env on the same store has an empty cache: re-read from the store
       val cold = new CloudShuffleEnv(env.conf, env.appId)
-      val back = try cold.readIndex(MapOutputId(trial, mapId)) finally cold.close()
+      val back = try cold.readIndex(MapOutputId(trial, mapId), lengths.length) finally cold.close()
       assert(back.toSeq == CloudShuffleIndex.prefixSums(lengths).toSeq)
     }
   })

@@ -26,7 +26,6 @@ class CloudShuffleSpec extends AnyFunSuite with BeforeAndAfterEach {
       .setAppName("cloud-shuffle-spec")
       .set("spark.ui.enabled", "false")
       .set("spark.shuffle.manager", classOf[CloudShuffleManager].getName)
-      .set("spark.shuffle.sort.io.plugin.class", classOf[CloudShuffleDataIO].getName)
       .set("spark.shuffle.cloud.rootDir", root)
       // raw local FS: no Hadoop .crc side files — closer to object-store
       // semantics, and lets OUR checksum validator do the detecting
@@ -69,6 +68,17 @@ class CloudShuffleSpec extends AnyFunSuite with BeforeAndAfterEach {
       assert(ex.getMessage.contains(key), ex.getMessage)
       CloudShuffleEnv.KEYS.foreach(k => assert(ex.getMessage.contains(k), ex.getMessage))
     }
+  }
+
+  test("a ShuffleDataIO other than the plugin's is refused at manager init") {
+    // the manager installs its own ShuffleDataIO; another one would send
+    // the writers to executor-local disk while the reader looks at the store
+    val local = "org.apache.spark.shuffle.sort.io.LocalDiskShuffleDataIO"
+    val ex = intercept[IllegalArgumentException] {
+      new CloudShuffleManager(baseConf("spark.shuffle.sort.io.plugin.class" -> local))
+    }
+    assert(ex.getMessage.contains(classOf[CloudShuffleDataIO].getName) && ex.getMessage.contains(local),
+      ex.getMessage)
   }
 
   test("foldByKey round trip (sort/unsafe path)") {
@@ -149,7 +159,9 @@ class CloudShuffleSpec extends AnyFunSuite with BeforeAndAfterEach {
   test("checksum validation accepts clean data (all three algorithms)") {
     // Spark's writers compute per-partition checksums with the configured
     // algorithm; our validator must agree with each of them
-    for (algo <- Seq("ADLER32", "CRC32", "CRC32C")) {
+    // crc32: Spark's config entry upper-cases the name before its writers
+    // and this validator see it
+    for (algo <- Seq("ADLER32", "CRC32", "CRC32C", "crc32")) {
       withSc(baseConf(
         "spark.shuffle.cloud.checksum.validate" -> "true",
         "spark.shuffle.checksum.algorithm" -> algo)) { sc =>
@@ -279,23 +291,26 @@ class CloudShuffleSpec extends AnyFunSuite with BeforeAndAfterEach {
     }
   }
 
-  test("all-empty map outputs with checksums off commit no object") {
-    // with checksums off an all-empty map output writes neither a data nor
-    // an index object: its tracker sizes are all zero, so no reducer asks
-    val root = Files.createTempDirectory("cloud-shuffle-empty").toUri.toString
-    withSc(baseConf("spark.shuffle.checksum.enabled" -> "false",
-      "spark.shuffle.cloud.rootDir" -> root)) { sc =>
-      // 2 records over 6 map partitions: 4 map outputs are all-empty
-      val data = sc.makeRDD(Seq((1, 10L), (2, 20L)), 6)
-      assert(data.reduceByKey(_ + _, 3).collect().sorted.toSeq ==
-        Seq((1, 10L), (2, 20L)))
-      // shuffle_<shuffleId>_<mapId>_0.{data,index}: one of each for the two
-      // non-empty maps, nothing for the other four
-      val names = Files.walk(java.nio.file.Paths.get(new java.net.URI(root))).iterator()
-        .asScala.filter(Files.isRegularFile(_)).map(_.getFileName.toString).toSeq
-      assert(names.size == 4 && names.map(_.split('_')(2)).distinct.size == 2 &&
-        names.count(_.endsWith(".data")) == 2 && names.count(_.endsWith(".index")) == 2,
-        s"expected a data and an index object for each non-empty map only: $names")
+  for (checksums <- Seq(false, true)) {
+    test(s"all-empty map outputs with checksums ${if (checksums) "on" else "off"} commit no object") {
+      // an all-empty map output writes no data, index or checksum object:
+      // its tracker sizes are all zero, so no reducer asks
+      val root = Files.createTempDirectory("cloud-shuffle-empty").toUri.toString
+      withSc(baseConf("spark.shuffle.checksum.enabled" -> checksums.toString,
+        "spark.shuffle.cloud.rootDir" -> root)) { sc =>
+        // 2 records over 6 map partitions: 4 map outputs are all-empty
+        val data = sc.makeRDD(Seq((1, 10L), (2, 20L)), 6)
+        assert(data.reduceByKey(_ + _, 3).collect().sorted.toSeq ==
+          Seq((1, 10L), (2, 20L)))
+        // shuffle_<shuffleId>_<mapId>_0.{data,index[,checksum]}: one of each
+        // for the two non-empty maps, nothing for the other four
+        val names = Files.walk(java.nio.file.Paths.get(new java.net.URI(root))).iterator()
+          .asScala.filter(Files.isRegularFile(_)).map(_.getFileName.toString).toSeq
+        val kinds = if (checksums) Seq("checksum", "data", "index") else Seq("data", "index")
+        assert(names.map(_.split('_')(2)).distinct.size == 2 &&
+          names.groupMapReduce(_.split('.').last)(_ => 1)(_ + _) == kinds.map(_ -> 2).toMap,
+          s"expected ${kinds.mkString(", ")} objects for each non-empty map only: $names")
+      }
     }
   }
 

@@ -28,8 +28,6 @@ class ConcurrentQueriesSpec extends AnyFunSuite with BeforeAndAfterAll {
       .config("spark.ui.enabled", "false")
       .config("spark.shuffle.manager",
         classOf[org.apache.spark.shuffle.cloud.CloudShuffleManager].getName)
-      .config("spark.shuffle.sort.io.plugin.class",
-        classOf[org.apache.spark.shuffle.cloud.CloudShuffleDataIO].getName)
       .config("spark.shuffle.cloud.rootDir", root)
       .config("spark.shuffle.reduceLocality.enabled", "false")
       .config("spark.sql.shuffle.partitions", "8")

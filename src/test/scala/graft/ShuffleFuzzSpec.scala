@@ -5,7 +5,7 @@ import java.nio.file.Files
 import scala.util.Random
 
 import org.apache.spark.{SparkConf, SparkContext}
-import org.apache.spark.shuffle.cloud.{CloudShuffleDataIO, CloudShuffleEnv, CloudShuffleManager}
+import org.apache.spark.shuffle.cloud.{CloudShuffleEnv, CloudShuffleManager}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterEach
 import org.scalatest.funsuite.AnyFunSuite
@@ -30,7 +30,6 @@ class ShuffleFuzzSpec extends AnyFunSuite with BeforeAndAfterEach {
       .setAppName("shuffle-fuzz")
       .set("spark.ui.enabled", "false")
       .set("spark.shuffle.manager", classOf[CloudShuffleManager].getName)
-      .set("spark.shuffle.sort.io.plugin.class", classOf[CloudShuffleDataIO].getName)
       .set("spark.shuffle.cloud.rootDir", root)
       .set("spark.shuffle.cloud.checksum.validate", "true")
       // a 3-thread fetch pool in every trial

@@ -36,8 +36,6 @@ class StreamShuffleCleanupSpec extends AnyFunSuite {
       .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
       .config("spark.shuffle.manager",
         "org.apache.spark.shuffle.cloud.CloudShuffleManager")
-      .config("spark.shuffle.sort.io.plugin.class",
-        "org.apache.spark.shuffle.cloud.CloudShuffleDataIO")
       .config("spark.shuffle.cloud.rootDir", s"file://$root")
       .config("spark.shuffle.reduceLocality.enabled", "false")
       .getOrCreate()

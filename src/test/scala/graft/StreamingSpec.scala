@@ -193,8 +193,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
       .config("spark.shuffle.manager",
         "org.apache.spark.shuffle.cloud.CloudShuffleManager")
-      .config("spark.shuffle.sort.io.plugin.class",
-        "org.apache.spark.shuffle.cloud.CloudShuffleDataIO")
       .config("spark.shuffle.cloud.rootDir", root)
       .config("spark.shuffle.reduceLocality.enabled", "false")
       .getOrCreate()

@@ -6,10 +6,13 @@ import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
 
+import org.apache.spark.SparkException
 import org.scalatest.funsuite.AnyFunSuite
 
 /** A cold index read resolves outside the cache map: concurrent readers of
-  * one map share one GET, and a failed read is not remembered. */
+  * one map share one GET, and a failed read is not remembered. A cold read
+  * takes an object at the length its partition count fixes, and refuses a
+  * shorter one. */
 class CloudShuffleIndexSpec extends AnyFunSuite {
 
   private val shuffleId = 9003
@@ -21,23 +24,24 @@ class CloudShuffleIndexSpec extends AnyFunSuite {
 
   private def store(env: CloudShuffleEnv) = env.fs.asInstanceOf[GatedStore]
 
-  /** Puts an index object in the store without touching the JVM's cache. */
-  private def putIndex(env: CloudShuffleEnv, mapId: Long, offsets: Seq[Long]): Unit = {
-    val out = new DataOutputStream(env.create(MapOutputId(shuffleId, mapId), CloudShuffleEnv.Index))
-    try offsets.foreach(out.writeLong) finally out.close()
+  /** Puts an object of big-endian longs in the store without touching the
+    * JVM's cache. */
+  private def putLongs(env: CloudShuffleEnv, mapId: Long, kind: String, longs: Seq[Long]): Unit = {
+    val out = new DataOutputStream(env.create(MapOutputId(shuffleId, mapId), kind))
+    try longs.foreach(out.writeLong) finally out.close()
   }
 
   test("two concurrent cold reads of one map's index open the object once") {
     // each open takes 300 ms, so the second reader arrives mid-GET
     withEnv(GatedStore.OpenDelayKey -> "300") { env =>
-      putIndex(env, 1L, Seq(0L, 4L, 9L))
+      putLongs(env, 1L, CloudShuffleEnv.Index, Seq(0L, 4L, 9L))
       val pool = Executors.newFixedThreadPool(2)
       implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
       try {
         val start = new CountDownLatch(1)
         val reads = Seq.fill(2)(Future {
           start.await(10, TimeUnit.SECONDS)
-          env.readIndex(MapOutputId(shuffleId, 1L)).toSeq
+          env.readIndex(MapOutputId(shuffleId, 1L), 2).toSeq
         })
         start.countDown()
         assert(reads.map(Await.result(_, 30.seconds)) == Seq.fill(2)(Seq(0L, 4L, 9L)))
@@ -48,10 +52,28 @@ class CloudShuffleIndexSpec extends AnyFunSuite {
 
   test("a failed index read is retried once the index exists") {
     withEnv() { env =>
-      intercept[FileNotFoundException](env.readIndex(MapOutputId(shuffleId, 2L)))
-      putIndex(env, 2L, Seq(0L, 7L))
-      assert(env.readIndex(MapOutputId(shuffleId, 2L)).toSeq == Seq(0L, 7L))
+      intercept[FileNotFoundException](env.readIndex(MapOutputId(shuffleId, 2L), 1))
+      putLongs(env, 2L, CloudShuffleEnv.Index, Seq(0L, 7L))
+      assert(env.readIndex(MapOutputId(shuffleId, 2L), 1).toSeq == Seq(0L, 7L))
       assert(store(env).opens.get == 2)
+    }
+  }
+
+  test("an index object shorter than P+1 longs is refused, naming it and its expected length") {
+    withEnv() { env =>
+      putLongs(env, 3L, CloudShuffleEnv.Index, Seq(0L, 4L))
+      val e = intercept[SparkException](env.readIndex(MapOutputId(shuffleId, 3L), 3))
+      assert(e.getMessage.contains(env.path(MapOutputId(shuffleId, 3L), CloudShuffleEnv.Index).toString) &&
+        e.getMessage.contains("32 bytes"), e.getMessage)
+    }
+  }
+
+  test("a checksum object shorter than P longs is refused, naming it") {
+    withEnv() { env =>
+      putLongs(env, 4L, CloudShuffleEnv.Checksum, Seq(11L, 22L))
+      val e = intercept[SparkException](env.readChecksums(MapOutputId(shuffleId, 4L), 3))
+      assert(e.getMessage.contains(env.path(MapOutputId(shuffleId, 4L), CloudShuffleEnv.Checksum).toString) &&
+        e.getMessage.contains("24 bytes"), e.getMessage)
     }
   }
 }

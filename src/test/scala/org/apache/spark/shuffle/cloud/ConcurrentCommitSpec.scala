@@ -45,8 +45,8 @@ class ConcurrentCommitSpec extends AnyFunSuite {
     * checksums. */
   private def assertGone(env: CloudShuffleEnv, mapId: Long): Unit = {
     assert(objectsOf(env, mapId).isEmpty)
-    intercept[FileNotFoundException](env.readIndex(MapOutputId(shuffleId, mapId)))
-    intercept[FileNotFoundException](env.readChecksums(MapOutputId(shuffleId, mapId)))
+    intercept[FileNotFoundException](env.readIndex(MapOutputId(shuffleId, mapId), lengths.length))
+    intercept[FileNotFoundException](env.readChecksums(MapOutputId(shuffleId, mapId), lengths.length))
   }
 
   for (validate <- Seq(false, true)) {
@@ -61,10 +61,10 @@ class ConcurrentCommitSpec extends AnyFunSuite {
         assert(store(env).closesPeak.get == 3)
         assert(objectsOf(env, 1L).sorted ==
           Seq("shuffle_9002_1_0.checksum", "shuffle_9002_1_0.data", "shuffle_9002_1_0.index"))
-        assert(env.readIndex(MapOutputId(shuffleId, 1L)).toSeq == Seq(0L, 3L, 3L, 8L))
+        assert(env.readIndex(MapOutputId(shuffleId, 1L), lengths.length).toSeq == Seq(0L, 3L, 3L, 8L))
         // the commit caches the checksums only for validating reads
         val opens = store(env).opens.get
-        assert(env.readChecksums(MapOutputId(shuffleId, 1L)).toSeq == checksums.toSeq)
+        assert(env.readChecksums(MapOutputId(shuffleId, 1L), lengths.length).toSeq == checksums.toSeq)
         assert(store(env).opens.get - opens == (if (validate) 0 else 1))
       }
     }

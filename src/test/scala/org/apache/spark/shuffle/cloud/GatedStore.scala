@@ -169,7 +169,6 @@ object GatedStore {
       .setAppName(appName)
       .set("spark.ui.enabled", "false")
       .set("spark.shuffle.manager", classOf[CloudShuffleManager].getName)
-      .set("spark.shuffle.sort.io.plugin.class", classOf[CloudShuffleDataIO].getName)
       .set("spark.shuffle.reduceLocality.enabled", "false")
 
   /** Names of every object under an env's store root. */
