@@ -59,21 +59,19 @@ class CloudShuffleIndexSpec extends AnyFunSuite {
     }
   }
 
-  test("an index object shorter than P+1 longs is refused, naming it and its expected length") {
+  test("an index or checksum object shorter than its partition count fixes is refused, " +
+      "naming it and its expected length") {
     withEnv() { env =>
-      putLongs(env, 3L, CloudShuffleEnv.Index, Seq(0L, 4L))
-      val e = intercept[SparkException](env.readIndex(MapOutputId(shuffleId, 3L), 3))
-      assert(e.getMessage.contains(env.path(MapOutputId(shuffleId, 3L), CloudShuffleEnv.Index).toString) &&
-        e.getMessage.contains("32 bytes"), e.getMessage)
-    }
-  }
-
-  test("a checksum object shorter than P longs is refused, naming it") {
-    withEnv() { env =>
-      putLongs(env, 4L, CloudShuffleEnv.Checksum, Seq(11L, 22L))
-      val e = intercept[SparkException](env.readChecksums(MapOutputId(shuffleId, 4L), 3))
-      assert(e.getMessage.contains(env.path(MapOutputId(shuffleId, 4L), CloudShuffleEnv.Checksum).toString) &&
-        e.getMessage.contains("24 bytes"), e.getMessage)
+      // P = 3: an index is 4 longs (32 bytes), a checksum object 3 (24 bytes)
+      val cases = Seq[(String, MapOutputId => Array[Long], Int)](
+        (CloudShuffleEnv.Index, env.readIndex(_, 3), 32),
+        (CloudShuffleEnv.Checksum, env.readChecksums(_, 3), 24))
+      for (((kind, read, bytes), mapId) <- cases.zip(Seq(3L, 4L))) {
+        putLongs(env, mapId, kind, Seq(0L, 4L))
+        val e = intercept[SparkException](read(MapOutputId(shuffleId, mapId)))
+        assert(e.getMessage.contains(env.path(MapOutputId(shuffleId, mapId), kind).toString) &&
+          e.getMessage.contains(s"$bytes bytes"), e.getMessage)
+      }
     }
   }
 }

@@ -1,12 +1,19 @@
 package org.apache.spark.shuffle.cloud
 
+import java.net.URI
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.SparkContext
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The env lives exactly as long as one SparkContext's shuffle manager:
   * stopping the context shuts the env's pools and closes its FS, the next
   * context in the JVM builds its own env from its own conf, and with no
-  * cloud manager running there is no env to get. */
+  * cloud manager running there is no env to get. A context that leaves
+  * `spark.shuffle.sort.io.plugin.class` unset still gets the plugin's driver
+  * components, which delete the app's folders when it stops. */
 class EnvLifecycleSpec extends AnyFunSuite {
 
   private val n = 2000
@@ -50,6 +57,27 @@ class EnvLifecycleSpec extends AnyFunSuite {
       assert(GatedStore.objects(env).exists(_.contains(".checksum")))
       assert(GatedStore.objects(firstRoot).isEmpty, "nothing under the first context's root")
     } finally second.stop()
+  }
+
+  test("a context without the ShuffleDataIO key loads the plugin's driver components, " +
+      "which delete the app's folders at stop") {
+    val conf = GatedStore.localSparkConf("env-lifecycle-spec")
+    assert(!conf.contains("spark.shuffle.sort.io.plugin.class"))
+    val root = Paths.get(URI.create(conf.get(CloudShuffleEnv.ROOT_DIR_KEY)).getPath)
+    val sc = new SparkContext(conf)
+    val appId = sc.applicationId
+    def appFolders(): Seq[Path] = {
+      val walk = Files.walk(root)
+      try walk.iterator().asScala.filter(p => Files.isDirectory(p) && p.getFileName.toString == appId).toSeq
+      finally walk.close()
+    }
+    try {
+      assert(sc.shuffleDriverComponents.isInstanceOf[CloudDriverComponents],
+        sc.shuffleDriverComponents.getClass.getName)
+      assert(sums(sc) == expected)
+      assert(appFolders().nonEmpty, "the shuffle wrote under the app's folders")
+    } finally sc.stop()
+    assert(appFolders().isEmpty, appFolders().mkString(", "))
   }
 
   test("get() with no cloud shuffle manager running names spark.shuffle.manager") {
