@@ -3,11 +3,9 @@ package graft
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.shuffle.cloud.ShuffleMetricsTap
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQueryListener
-import org.apache.spark.sql.streaming.StreamingQueryListener._
+import org.apache.spark.sql.graft.BenchListener
 
 /** The timing driver behind `graft.Bench` and `graft.BenchStream`: one lane
   * runner, one plugin/default A/B sequencer, one report writer and one tier
@@ -104,18 +102,18 @@ object BenchRunner {
     *    pass-through node, so the timed plan stays the query's own.
     *  - With `census`, each streaming drain records its micro-batch count
     *    and peak state rows and memory.
-    *  - The shuffle tap reads the task metrics the plugin feeds, per query.
+    *  - One listener folds each query's shuffle bytes from task metrics
+    *    and, for a drain, its streaming progress.
     */
   def runLane(spark: SparkSession, dir: String, ordered: Seq[(String, Query)],
       rows: Boolean = false, census: Boolean = false): Map[String, Stat] = {
-    val tap = new ShuffleMetricsTap(spark.sparkContext)
-    val streams = Option.when(census)(new StreamCensus).map { c => spark.streams.addListener(c); c }
+    val tap = new BenchListener(spark.sparkContext)
+    spark.sparkContext.addSparkListener(tap)
     try {
       val passes = (1 to 3).map { pass =>
         ordered.map { case (name, fn) =>
           System.gc()
           tap.harvest()
-          streams.foreach(_.harvest())
           val t0 = System.nanoTime()
           name -> (try {
             val df = fn(spark, dir)
@@ -123,9 +121,9 @@ object BenchRunner {
             seen.fold(df)(o => df.observe(o, count(lit(1)).as("n")))
               .write.format("noop").mode("overwrite").save()
             val sec = (System.nanoTime() - t0) / 1e9
-            // the bus drain also delivers the drain's streaming progress events
-            val (w, r) = tap.harvest()
-            Obs(sec, w, r, seen.fold(-1L)(_.get("n").asInstanceOf[Long]), streams.toSeq.flatMap(_.harvest()))
+            val h = tap.harvest()
+            Obs(sec, h.shuffleWritten, h.shuffleRead, seen.fold(-1L)(_.get("n").asInstanceOf[Long]),
+              if (census) h.census else Nil)
           } catch {
             case t: Throwable =>
               System.err.println(s"BENCH FAIL $name: ${t.getClass.getName}: ${t.getMessage}")
@@ -141,31 +139,7 @@ object BenchRunner {
           else Stat(t(1), t.head, t.last - t.head, obs.head.sec, med(obs.map(_.shufW)),
             med(obs.map(_.shufR)), obs.head.rows, obs.head.census))
       }.toMap
-    } finally {
-      spark.sparkContext.removeSparkListener(tap)
-      streams.foreach(spark.streams.removeListener)
-    }
-  }
-
-  /** Micro-batches and peak total state rows and memory since the last
-    * harvest. */
-  private final class StreamCensus extends StreamingQueryListener {
-    private var batches, stateRows, stateMem = 0L
-
-    override def onQueryStarted(e: QueryStartedEvent): Unit = ()
-    override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
-    override def onQueryProgress(e: QueryProgressEvent): Unit = synchronized {
-      batches += 1
-      val ops = Option(e.progress.stateOperators).map(_.toSeq).getOrElse(Nil)
-      stateRows = math.max(stateRows, ops.map(_.numRowsTotal).sum)
-      stateMem = math.max(stateMem, ops.map(_.memoryUsedBytes).sum)
-    }
-
-    def harvest(): Seq[(String, Long)] = synchronized {
-      val r = Seq("batches" -> batches, "state_rows_max" -> stateRows, "state_mem_max_bytes" -> stateMem)
-      batches = 0; stateRows = 0; stateMem = 0
-      r
-    }
+    } finally spark.sparkContext.removeSparkListener(tap)
   }
 
   /** Runs `lane` with the plugin and, unless A/B is off, with the default

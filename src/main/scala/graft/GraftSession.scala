@@ -63,8 +63,8 @@ object GraftSession {
     // Bench/Verify re-invoke queries that persist() their intermediates
     // (dd04's group table et al.); the second pass re-registers the same
     // plan and CacheManager warns "Asked to cache already cached data" —
-    // ~10 repeats of pure noise in the bench tail the driver captures
-    // (VERDICT r9 docs-hygiene item). The warning never indicates a
+    // ~10 repeats of pure noise in the bench output's captured tail.
+    // The warning never indicates a
     // defect here (re-caching an identical plan is a no-op), so demote
     // that ONE logger; everything else stays at WARN.
     org.apache.logging.log4j.core.config.Configurator.setLevel(

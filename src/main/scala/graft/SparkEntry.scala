@@ -48,8 +48,8 @@ object SparkEntry {
     modules.map(_._2._2).reduce(_ ++ _)
 
   /** The standing explanation for every `err: "no_oracle"` row the driver
-    * records, so it does not have to be re-derived each round
-    * (VERDICT r8 item 5). Exactly ONE query ships without an oracle BY
+    * records, so it does not have to be re-derived per run.
+    * Exactly ONE query ships without an oracle BY
     * DESIGN: dd08_embedding_lsh_pairs is the LSH *stress tier* — random
     * hyperplane banding run deliberately unpruned, whose whole point is
     * recall < 1 (physics of probabilistic blocking), so no deterministic

@@ -15,10 +15,10 @@ import org.apache.spark.sql.functions._
 object VectorOps {
 
   /** The fixture embedding dimensionality (TESTDATA.md), named ONCE for
-    * every plane-mirrored LSH oracle (ADVICE r13: cl04's oracle carried a
-    * bare `64` literal while the Spark side adapts to the runtime vector
-    * length — a fixture dim change would read as a confusing hash-gate
-    * mismatch instead of pointing here). The gates themselves assert it:
+    * every plane-mirrored LSH oracle: the Spark side adapts to the
+    * runtime vector length, so a bare `64` literal in an oracle would turn
+    * a fixture dim change into a confusing hash-gate mismatch instead of
+    * pointing here. The gates themselves assert it:
     * a dim change hash-mismatches every LSH-mirrored query. */
   private[graft] val EmbeddingDim = 64
 

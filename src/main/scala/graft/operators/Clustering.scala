@@ -97,7 +97,7 @@ object Clustering {
         org.apache.spark.sql.graft.NearestCells(col("v"), typedlit(codebook), 1), 1)
         .as("cell"))
 
-  /** Hot-cell guard ceiling (VERDICT r5 item 4): the within-cell pair
+  /** Hot-cell guard ceiling: the within-cell pair
     * search is quadratic in the cell, so an adversarial corpus (everything
     * semantically alike → one cell) degrades SemDeDup to all-pairs. Cells
     * above the cap switch to hyperplane-LSH sub-blocking INSIDE the cell
@@ -120,7 +120,7 @@ object Clustering {
     * guarded, exact-path pairs are unique by construction, and the guarded
     * path collapses its collision multiplicity below. Consumers need no
     * re-dedup. */
-  /** Cell sizing as a partial aggregation (VERDICT r6 item 1): map-side
+  /** Cell sizing as a partial aggregation: map-side
     * combine collapses the corpus to ≤ k rows before any exchange, so no
     * task ever buffers a whole cell just to measure it. The previous
     * Window.partitionBy(cell) sizing hash-partitioned the ENTIRE hot
@@ -170,7 +170,8 @@ object Clustering {
 
   // cl03/cl04 shared DBSCAN shape: eps as a cosine floor; cl04's blocking
   // params are tuned for THIS eps (see the cl04 entry) — changing one
-  // without re-tuning the other re-opens the r12 `weak` finding
+  // without re-tuning the other loses cl04's recall against cl03's exact
+  // graph, which ClusteringSpec pins
   private[graft] val DbscanEps = 0.35
   private[graft] val Cl04Tables = 48
   private[graft] val Cl04Bits = 10
@@ -201,7 +202,7 @@ object Clustering {
   private[graft] def dbscanBlockedUncapped(s: SparkSession, d: String): DataFrame =
     dbscanBlocked(s, emb(s, d))
 
-  // cl05 bounded-degree shape (VERDICT r13 item 1): the kNN-graph DBSCAN
+  // cl05 bounded-degree shape: the kNN-graph DBSCAN
   // that kills cl04's Θ(n²)-candidate eps-graph. The gated entry pins the
   // sizing formula's values AT THE GATE FIXTURE (knnBitsFor(500) = 5 —
   // the oracle's plane literals must be static); the uncapped probe lane
@@ -265,8 +266,8 @@ object Clustering {
       .select(col("a_id"), col("b_id"),
         VectorOps.cosineD(col("a_v"), col("b_v")).as("cos"))
       .filter(col("cos") >= DbscanEps)
-      // pin the verified-edge subtree to ONE materialization (VERDICT r14
-      // item 2, the pp09 discipline): the directional self-union below
+      // pin the verified-edge subtree to ONE materialization (the pp09
+      // discipline): the directional self-union below
       // consumes it twice, and relying on ReusedExchange to dedupe the
       // LSH-candidate join + cosine verify would be plan-shape luck, not
       // a guarantee. Lazy, so it adds no action — the edge list
@@ -329,7 +330,7 @@ object Clustering {
     * by the degree, core-edge, and border passes. */
   private def dbscanDecompose(e: DataFrame, pairs0: DataFrame,
       minPts: Int): DataFrame = {
-    // LAZY checkpoint (r15): still a LogicalRDD leaf (the degree,
+    // LAZY checkpoint: still a LogicalRDD leaf (the degree,
     // core-edge, and border passes all read one materialization), but the
     // pair pipeline now materializes inside starComponents' first
     // certificate count instead of as its own up-front action — one fewer
@@ -339,7 +340,7 @@ object Clustering {
     val deg = pairs
       .select(explode(array(col("a_id"), col("b_id"))).as("x"))
       .groupBy(col("x")).agg(count(lit(1)).as("deg"))
-    // pin the core set (r15): it feeds the core-edge join (twice), the
+    // pin the core set: it feeds the core-edge join (twice), the
     // star loop's node table, the border anti-join, and the final role
     // projection — each reference would re-run the degree aggregation
     // over the pair list. Lazy: materializes inside the star loop's
@@ -412,7 +413,7 @@ object Clustering {
       dbscanDecompose(e, pairs, minPts = 3)
     }),
 
-    // The 100-TB DBSCAN (VERDICT r12 item 2): the SAME decomposition as
+    // The 100-TB DBSCAN: the SAME decomposition as
     // cl03, but the eps-graph comes from dd13's LSH candidate machinery
     // (lshCandidatePairs: radius-1 multi-probe bucket equi-join — a
     // hash-partitionable join, never a materialized cross product) with
@@ -437,8 +438,8 @@ object Clustering {
     "cl04_dbscan_blocked" -> ((s, d) =>
       dbscanBlocked(s, emb(s, d).filter(col("vec_id") < 1000))),
 
-    // The BOUNDED-DEGREE DBSCAN tier (VERDICT r13 item 1 — cl04's honest
-    // gap closed): cl04 bought the hash-partitionable JOIN SHAPE but its
+    // The BOUNDED-DEGREE DBSCAN tier, which closes cl04's gap: cl04
+    // bought the hash-partitionable JOIN SHAPE but its
     // candidate volume stays Θ(n²)·~0.4 by eps-physics (at eps=0.35 each
     // extra signature bit cuts random collisions by only (0.5/0.614)× at
     // fixed recall). cl05 changes the GRAPH, not just the blocking:
@@ -447,8 +448,8 @@ object Clustering {
     // to each point's top-Cl05K eps-neighbors by cosine (a kNN graph —
     // ≤ k directed picks per point ⇒ ≤ n·k TOTAL edges; re-symmetrization
     // keeps an edge if EITHER endpoint ranked it, so an individual
-    // point's undirected degree can exceed k (ADVICE r14 wording fix —
-    // the n·k bound is what ClusteringSpec asserts and what the
+    // point's undirected degree can exceed k (the n·k bound is what
+    // ClusteringSpec asserts and what the
     // asymptotics need; the NG-DBSCAN family's move), and the
     // blocking underneath sizes its buckets to the corpus
     // (knnBitsFor: bucket population ~constant ⇒ candidate volume
@@ -484,8 +485,8 @@ object Clustering {
             .as("mean_cos"))
     }),
 
-    // Cluster-QUALITY report (r14 — the cl-numbering gap, and the ss12
-    // eval-harness discipline applied to the k-means tier): the report a
+    // Cluster-QUALITY report (the ss12 eval-harness discipline applied
+    // to the k-means tier): the report a
     // pipeline runs before TRUSTING a trained quantizer. Per trained
     // cell: size, cohesion (mean cos to the OWN centroid), separation
     // (mean cos to the SECOND-nearest centroid), and the margin — a
@@ -531,8 +532,8 @@ object Clustering {
     // above CellCap take the LSH sub-blocking path (hot-cell guard —
     // fixture cells never do, so fixture output is the exact path's).
     // semanticCandidates' output contract is globally-distinct pairs, so
-    // no re-dedup is needed here (ADVICE r6: the former terminal distinct
-    // re-shuffled the whole result set for nothing).
+    // no re-dedup is needed here: a terminal distinct would re-shuffle
+    // the whole result set for nothing.
     "dd10_semantic_dedup" -> ((s, d) => {
       val e = emb(s, d)
       val cb = codebookFor(s, d, K, Iters)
@@ -547,7 +548,7 @@ object Clustering {
     })
   )
 
-  /** VERDICT r6 item 2: the k-means consumers are oracle-gated by
+  /** The k-means consumers are oracle-gated by
     * re-running the ENTIRE deterministic training loop in DuckDB SQL —
     * [[OracleMirror.kmeansCtes]] unrolls the fixed `Iters` Lloyd
     * iterations as a CTE chain over the fixture parquet alone (no trained

@@ -65,7 +65,7 @@ object Dedup {
       // falls back to a token-keyed shuffle join when a 100 TB corpus's
       // billion-token vocabulary doesn't fit. A hard broadcast() hint
       // would attempt the broadcast regardless of measured size and fail
-      // at the 8 GB cap (VERDICT r4 item 1).
+      // at the 8 GB cap.
       .join(tokDf, "tok")
       .groupBy(col("rep_id"), col("th"), col("n"))
       .agg(transform(array_sort(collect_list(struct(col("df"), col("tok")))),
@@ -229,7 +229,7 @@ object Dedup {
     * in one JVM re-stream the same arrivals against the same memoized
     * index dir — without the marker both would re-append the rows,
     * growing the artifact and its small-file count linearly per run
-    * (ADVICE r5). The underscore-prefixed marker is invisible to the
+    * The underscore-prefixed marker is invisible to the
     * parquet reader's file index. Marker-after-append ordering means a
     * crash between the two can still leave one duplicate append (the
     * standard non-transactional commit window); decisions stay correct
@@ -254,7 +254,7 @@ object Dedup {
   }
 
   /** Index COMPACTION — the lifecycle pass a long-running ingest stream
-    * needs (VERDICT r5 item 3): every appended micro-batch adds one small
+    * needs: every appended micro-batch adds one small
     * parquet file per touched `pb=` partition, so an unbounded stream
     * grows the file listing (and the probe-side scan's open-file count)
     * linearly with batch count. Rewrites any partition whose data-file
@@ -268,8 +268,8 @@ object Dedup {
     * self-healing, so deletion must never precede the replacement).
     * Compaction runs inside the ingest loop between batches, so the only
     * reader of the index is the gate of a later batch. The listing/swap
-    * speaks the Hadoop `FileSystem` of the index path (VERDICT r6 item
-    * 3): a local dir, a `file://` URI, and an object store all resolve
+    * speaks the Hadoop `FileSystem` of the index path: a local dir, a
+    * `file://` URI, and an object store all resolve
     * through the same API, so the identical code commits via the store's
     * protocol. The partition granularity is what makes it cheap: one
     * partition's worth of I/O per rewrite, never a full-index pass.
@@ -286,7 +286,7 @@ object Dedup {
       val dataFiles = fs.listStatus(p.getPath).filter(st =>
         st.isFile && st.getPath.getName.startsWith("part-"))
       if (dataFiles.length > maxFiles) {
-        // stage INSIDE the index dir (ADVICE r6): the staged files are on
+        // stage INSIDE the index dir: the staged files are on
         // the same filesystem as their destination, so the per-file move
         // below is an atomic rename — a java.io.tmpdir staging dir could
         // sit on a different FS, degrading the move to copy+delete and
@@ -305,7 +305,7 @@ object Dedup {
           // fresh part- names are write-unique UUIDs: no collision with
           // the files being replaced. FileSystem.rename moves a checksum
           // sidecar with its file (ChecksumFileSystem), so compacted
-          // files keep their local-FS CRCs (ADVICE r6); a failed rename
+          // files keep their local-FS CRCs; a failed rename
           // must abort BEFORE any original is deleted — losing the fresh
           // file after the deletes would lose the partition's rows.
           fresh.foreach { f =>
@@ -503,12 +503,13 @@ object Dedup {
     // for-bit with ANSI SQL engines — so the FULL algorithm (tokenize,
     // vote, pack, pair, hamming) mirrors into a hash-exact DuckDB oracle.
     "dd05_simhash_pairs" -> ((s, d) => {
-      // pin the signature table (r15): the chunk self-join consumes it on
+      // pin the signature table: the chunk self-join consumes it on
       // both sides, and the join keys derive from `sh`, so Catalyst's
       // null-filter inference pushed an isnotnull(simhash64(...)) BELOW
       // each side's projection — the per-token-md5 signature kernel ran
       // 2× per row per side, 4× per doc in the executed plan
-      // (plans/r15/dd05_simhash_pairs_before.txt). The checkpoint is a
+      // (the unpinned plan is `dd05_simhash_pairs_before.txt` under
+      // `plans/`). The checkpoint is a
       // 16-byte/doc signature table — exactly what a production SimHash
       // pass materializes — and lazy, so the query still runs as one
       // action; both sides read the one materialization.
@@ -559,7 +560,7 @@ object Dedup {
         tables = 160, bits = 15, thr = 0.4)
     }),
 
-    // The PRODUCTION-threshold tier of dd08 (VERDICT r4 item 2): real
+    // The PRODUCTION-threshold tier of dd08: real
     // near-dup detection runs at cos ≥ 0.8, where per-hyperplane sign
     // agreement is high enough that 6 tables × 16 bits with radius-1
     // probing holds recall while the random-pair candidate volume
@@ -627,8 +628,8 @@ object Dedup {
     // is dd09's recursive-CTE reachability, verbatim.
     "dd15_cc_star" -> ((s, d) => repComponents(s, d)),
 
-    // The TERMINAL dedup artifact (VERDICT r4 item 3, closing SCALE.md's
-    // "Known limits" caveat): the cluster/group TABLE, not the pair list.
+    // The TERMINAL dedup artifact: the cluster/group TABLE, not the
+    // pair list.
     // dd04/dd07 emit all verified pairs, so a k-duplicate group costs
     // k²/2 output rows — quadratic in the worst skew (a boilerplate page
     // duplicated 10⁸ times). This query emits what a production dedup
@@ -732,7 +733,7 @@ object Dedup {
     substrCoverageOf(docs(s, d))
 
   /** [[substrCoverage]] over an arbitrary (doc_id, text) corpus — factored
-    * (r16) so SkewSpec can plant a ≥10⁷-occurrence hot gram and measure
+    * so SkewSpec can plant a ≥10⁷-occurrence hot gram and measure
     * the count shape's task bound. */
   private[graft] def substrCoverageOf(docsDf: DataFrame): DataFrame = {
     val k = 8
@@ -743,7 +744,7 @@ object Dedup {
       .select(col("doc_id"), explode(expr(
         s"transform(sequence(1, size(toks) - ${k - 1}), i -> named_struct(" +
           s"'p', i, " +
-          // 8-byte BINARY key (r16, guide "narrower types"): unhex of the
+          // 8-byte BINARY key (guide "narrower types"): unhex of the
           // md5 prefix is a bijection, so counts/joins are unchanged while
           // the pinned gram table and the h-keyed exchange halve the key
           // bytes vs the 16-hex-char string
@@ -751,11 +752,10 @@ object Dedup {
         .as("w"))
       .select(col("doc_id"), col("w.p").as("p"), col("w.h").as("h"))
     // occurrence count per window fingerprint: PIN the gram table (one
-    // corpus window-explode + md5 pass — the r15 lesson: an unpinned
-    // double reference re-ran the dominant compute per reference), then a
-    // partial→final groupBy count and a semi-join back on the gram key.
-    // r16 (VERDICT r15 item 6, replacing the r15 count-window): the
-    // window forced a globally-duplicated gram (boilerplate at 100 TB:
+    // corpus window-explode + md5 pass: an unpinned double reference
+    // re-runs the dominant compute per reference), then a partial→final
+    // groupBy count and a semi-join back on the gram key, not a count
+    // window: a window would force a globally-duplicated gram (boilerplate at 100 TB:
     // 10⁸–10⁹ occurrences of ONE h) through a single window task that
     // AQE cannot split. The groupBy's map-side combine bounds the hot
     // key's shuffle to ≤ one row per map task, and the join-back is the
@@ -874,7 +874,7 @@ object Dedup {
     starComponentsWithRounds(reps, pairs)._1
 
   /** One large-star step over a canonically-oriented (u > v) edge set.
-    * Factored out of [[starComponentsWithRounds]] (r16) so the plan guard
+    * Factored out of [[starComponentsWithRounds]] so the plan guard
     * can count a single contraction's exchanges. */
   private[graft] def largeStarRound(e: DataFrame): DataFrame = {
     val adj = e.select(explode(array(
@@ -884,7 +884,7 @@ object Dedup {
     val mins = adj.groupBy("u").agg(min(col("v")).as("nmin"))
       .select(col("u"), least(col("u"), col("nmin")).as("m"))
     // emit (w, m(u)) for every larger neighbor w of u; w > u >= m keeps
-    // the canonical orientation with no re-sort. NO distinct here (r15):
+    // the canonical orientation with no re-sort. NO distinct here:
     // the v > u filter keeps each undirected edge exactly once (only
     // its smaller endpoint's direction survives), so the output is
     // already ≤ one row per input edge — duplicates can only coincide
@@ -897,11 +897,10 @@ object Dedup {
       .select(col("v").as("u"), col("m").as("v"))
   }
 
-  /** One small-star step over a canonically-oriented edge set — r16
-    * (VERDICT r15 item 5, the carried round-fusion item): ONE u-keyed
-    * exchange per small-star instead of two. The r15 shape paid the
-    * groupBy/join exchange on u PLUS a terminal distinct exchange on
-    * (u, v); here the explicit repartition on u is the star's only
+  /** One small-star step over a canonically-oriented edge set: ONE
+    * u-keyed exchange per small-star instead of two. A terminal distinct
+    * would add a second exchange on (u, v) to the groupBy/join exchange
+    * on u; here the explicit repartition on u is the star's only
     * shuffle and everything above rides it:
     *   - `ed` dedups (u, v) pairs with no exchange of its own —
     *     HashPartitioning(u) satisfies ClusteredDistribution(u, v)
@@ -911,7 +910,7 @@ object Dedup {
     *   - `mins` (input is canonical — all neighbors in a group are < u,
     *     so the group min IS the neighborhood min) and the ed ⋈ mins
     *     equi-join on u reuse the same partitioning.
-    * The output SET is identical to the r15 shape: leaves (v, m) for
+    * The output SET is what a terminal distinct would leave: leaves (v, m) for
     * every neighbor v ≠ m, plus one center (u, m) per group (u > m
     * always — m is a strictly smaller neighbor), both in canonical
     * orientation. What the dropped distinct cost: bounded RESIDUAL
@@ -937,18 +936,18 @@ object Dedup {
 
   private[graft] def starComponentsWithRounds(reps0: DataFrame, pairs: DataFrame,
       maxRounds: Int = 30): (DataFrame, Int) = {
-    // pin the node table to ONE materialization (r15): labelsOf references
+    // pin the node table to ONE materialization: labelsOf references
     // it once per certificate and the certificate's lu/lv self-join embeds
     // labelsOf twice, so a caller whose `reps` is itself a subplan (the
     // DBSCAN decompose passes the degree-filtered core set) would re-run
-    // that subtree 2× per round. Lazy — materializes inside round 1's
-    // certificate count.
+    // that subtree 2× per round. Lazy — materializes inside the first
+    // round's certificate count.
     val reps = reps0.localCheckpoint(false)
     // canonical orientation u > v; a frozen copy feeds the certificate
     // (uniformity over one direction implies it over both), and the
     // checkpoint means the verified pair set is scanned exactly once.
-    // LAZY (r15): the logical plan truncates to a LogicalRDD leaf either
-    // way; lazily the RDD materializes inside round 1's certificate count
+    // LAZY: the logical plan truncates to a LogicalRDD leaf either
+    // way; lazily the RDD materializes inside the first round's certificate count
     // instead of as its own action — one cluster barrier saved here and
     // one PER ROUND below (each round previously cost checkpoint + count;
     // now the count materializes the round's edges as a side effect).
@@ -980,7 +979,7 @@ object Dedup {
     // check in one job chain (dd09's 3 rounds cost 1 action; cl03's tail
     // 5 rounds cost 2). At 100 TB each action is a cluster-wide barrier;
     // the trade is ≤ 2 contractions of overshoot past the fixpoint (a
-    // graph converging at round 1 is first certified at round 3; a
+    // graph converging in the first round is first certified in the third; a
     // contraction of an already-star graph is a cheap no-op) against
     // certificates that each re-scan the original edge list. `rounds`
     // counts CONTRACTIONS.

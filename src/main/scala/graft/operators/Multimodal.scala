@@ -405,7 +405,7 @@ object Multimodal {
     // VIDEO frame sampling — a real multi-frame codec round trip (r4: the
     // byte-arithmetic stub is gone). The animated GIFs (one 8×8 grayscale
     // frame per 64-byte chunk, ≤ MaxFrames) are STAGED once per fixture
-    // ([[mediaDir]] — r13); the query opens each container with ImageIO's
+    // ([[mediaDir]]); the query opens each container with ImageIO's
     // GIF reader, DECODES every 4th frame, and downscales it by exact
     // 2×2 average pooling to a 4×4 thumbnail. One input row fans out to
     // many frame rows inside the same mapPartitions batch (the

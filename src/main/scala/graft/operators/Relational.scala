@@ -34,7 +34,7 @@ object Relational {
     * and the scale spec that asserts the sort footprint. */
   private[graft] final case class PctLocated(bucketed: DataFrame, located: DataFrame)
 
-  /** Gate for the adaptive refine (r12): a straddling bucket of at most
+  /** Gate for the adaptive refine: a straddling bucket of at most
     * this many ROWS resolves directly via the distinct-value rank pass —
     * at most this many values sort in ONE streaming window partition,
     * microseconds for a task — so only a bigger bucket pays the two extra
@@ -48,7 +48,7 @@ object Relational {
     * by [[PctBuckets]] per level, so depth d bounds the final rank-pass
     * partition by n/PctBuckets^d distinct values — at the default d = 2
     * (locate + one refine + forced final pass) a 10¹²-row group's worst
-    * task ranks ~10⁶ values, the same ceiling r11 documented. Deeper
+    * task ranks ~10⁶ values. Deeper
     * unrolls are caller-requested (`depth` on [[exactPctsCols]]): each
     * unrolled level is runtime-elided by AQE when its frontier is empty,
     * but still costs a fixed ~0.5 s of planning + sequential
@@ -74,7 +74,7 @@ object Relational {
     * partition the rank space. Non-finite values pin explicitly (−Inf → 0;
     * +Inf and NaN → nb−1, matching the NaN-last total order both engines
     * sort by): the scaled offset of a non-finite value is NaN, which casts
-    * to bucket 0 and would break rank monotonicity (ADVICE r11). A −Inf
+    * to bucket 0 and would break rank monotonicity. A −Inf
     * ENDPOINT degrades gracefully rather than breaking: finite offsets
     * against an infinite range scale to NaN → bucket 0, so that level
     * gains no resolution and the bucket rides the depth ceiling into a
@@ -85,13 +85,13 @@ object Relational {
       .when(hi <= lo, lit(0))
       .otherwise(least(floor((v - lo) / (hi - lo) * nb).cast("int"), lit(nb - 1)))
 
-  /** Rank-locate phase of the bucketed exact percentile (shape designed in
-    * r10, SCALE.md §"exact percentiles"): equi-width bucket histogram →
+  /** Rank-locate phase of the bucketed exact percentile (SCALE.md
+    * §"exact percentiles"): equi-width bucket histogram →
     * prefix sum over the ~10³ bucket rows → for each target rank, the ONE
     * bucket whose cumulative range covers it. All ranks are exact integer
     * counts, so bucketing changes which rows are scanned, never the result.
     *
-    * Multi-column (r11 action economy): several value columns locate in
+    * Multi-column (action economy): several value columns locate in
     * ONE pipeline — the rows explode to (grp, cid, v) so one scan buckets
     * every column, and every downstream key gains the column id. q35's two
     * value columns share one scan+histogram instead of running the whole
@@ -154,8 +154,8 @@ object Relational {
       col("side"), col("r"), col("bmin").as("lo"), col("bmax").as("hi"),
       col("bc").as("cnt"), col("cum_lo").as("cum"))
 
-  /** One adaptive resolution level (r12, replacing the unconditional r11
-    * level-2 refine). Each frontier interval takes exactly one of three
+  /** One adaptive resolution level (no unconditional level-2 refine).
+    * Each frontier interval takes exactly one of three
     * routes, decided declaratively so the whole multi-level pipeline stays
     * ONE lazy Catalyst plan:
     *
@@ -184,8 +184,8 @@ object Relational {
     *
     * Plan-size discipline (measured, not theoretical): every reference to
     * the previous frontier re-embeds that level's whole subplan, so a
-    * depth-d unroll costs ~refs^d plan copies — the first r12 cut used 4
-    * references per level and planned ~350 AQE stages, +1.8 s/query of
+    * depth-d unroll costs ~refs^d plan copies — 4 references per level
+    * planned ~350 AQE stages, +1.8 s/query of
     * pure planning overhead at sf0.1. This shape holds the frontier
     * reference count at 2 (`direct` + the vh join) and the vh count at 2.
     * A level whose frontier is empty is elided at runtime by AQE's
@@ -245,11 +245,11 @@ object Relational {
   }
 
   /** Exact interpolated percentile (quantile_cont semantics) the scale-safe
-    * way, shared by q35 and q37: bucket-histogram rank-locate. The r10
-    * sort-based formulation (row_number over a per-group sort) had bounded
-    * memory but serialized each group's ENTIRE sort through one task — with
-    * 3 groups at 100 TB each task sorts ~33 TB (the one `weak` item of
-    * VERDICT r10). This formulation sorts only the straddling BUCKETS:
+    * way, shared by q35 and q37: bucket-histogram rank-locate. A
+    * sort-based formulation (row_number over a per-group sort) has bounded
+    * memory but serializes each group's ENTIRE sort through one task — with
+    * 3 groups at 100 TB each task sorts ~33 TB. This formulation sorts
+    * only the straddling BUCKETS:
     *
     *   1. per-group min/max (broadcast) → equi-width bucket id per row;
     *   2. per-(group, bucket) counts + bucket min/max — a partial→final
@@ -267,8 +267,8 @@ object Relational {
     *      values locates the value whose cumulative rank range covers
     *      the target: global rank = bucket prefix + running count.
     *
-    * Step 5 is ADAPTIVE (r12, retiring the unconditional r11 level-2
-    * refine): a straddling bucket at most [[PctSmallBucket]] rows ranks
+    * Step 5 is ADAPTIVE (no unconditional level-2 refine): a straddling
+    * bucket at most [[PctSmallBucket]] rows ranks
     * directly; a bigger one re-buckets over its OWN [bmin, bmax] —
     * range-ADAPTIVE refinement, so a single outlier that compresses the
     * group's global range into one dense bucket (the equi-width failure
@@ -303,7 +303,7 @@ object Relational {
     val allPs = colsPs.flatMap(_._2)
     require(allPs.map(_._2).distinct.size == allPs.size,
       "percentile output names must be globally unique across columns")
-    // r16 (VERDICT r15 item 4): route the adaptive resolve at
+    // Route the adaptive resolve at
     // PLAN-CONSTRUCTION time instead of unrolling every level statically
     // and leaving AQE's empty-relation propagation to elide the unused
     // ones at runtime (~0.5 s of sequential stage-materialization latency
@@ -322,8 +322,8 @@ object Relational {
     val spark = rows.sparkSession
     import scala.jdk.CollectionConverters._
     // one row per group: literalizing it turns the targets derivation and
-    // the final interpolation join into LocalRelations (the r15 plan
-    // re-scanned the cnts aggregation per reference)
+    // the final interpolation join into LocalRelations (an unliteralized
+    // plan re-scans the cnts aggregation per reference)
     val cntsL = spark.createDataFrame(
       cnts.collect().toSeq.asJava, cnts.schema)
     val parts = pctLocateCols(rows, cntsL, colsPs, grp)
@@ -332,7 +332,7 @@ object Relational {
     // driver-side routing mirror of pctResolveLevel's COMPRESSED route
     // (plain Double compare: a NaN endpoint reads not-compressed here and
     // resolves via the level-1 rank pass — the same depth-ceiling
-    // degradation the r15 shape documented for non-finite endpoints). A
+    // degradation [[pctBucketId]] documents for non-finite endpoints). A
     // null endpoint (a bucket of null values) reads like NaN.
     def bound(r: Row, f: String): Double =
       if (r.isNullAt(r.fieldIndex(f))) Double.NaN else r.getAs[Double](f)
@@ -355,8 +355,8 @@ object Relational {
     }
     val answers = levels.result().reduce(_ unionByName _)
     // pivot the ≤ 2·Σ|ps| rows per group into lo_/hi_ columns, then
-    // interpolate exactly as the r10 formulation did (same expressions,
-    // same values — the oracle is unchanged; pname is globally unique, so
+    // interpolate with quantile_cont's expressions (same values as the
+    // oracle's; pname is globally unique, so
     // the pivot needs no cid)
     val aggs = allPs.flatMap { case (_, out) => Seq(
       min(when(col("pname") === out && col("side") === "lo", col("pv"))).as(s"lo_$out"),
@@ -482,7 +482,7 @@ object Relational {
     }),
 
     "q09_order_size_histogram" -> ((s, d) => {
-      // aggregate BEFORE the join (r15, guide-§2.3 "aggregate before you
+      // aggregate BEFORE the join (guide-§2.3 "aggregate before you
       // shuffle"): the former left-outer join carried every lineitem row
       // to the per-order count — at 100 TB that shuffles the fact table
       // to produce counts the partial agg already knows. Collapsing
@@ -858,8 +858,8 @@ object Relational {
     // SketchAndPlanSpec keeps the direct 5% assertion on the raw values.
     // The sketches and the exact distinct counts run in SEPARATE
     // aggregations joined on the 3-row group key — never in one Aggregate.
-    // Mixing them is a scale anti-pattern the r10 bench-action fix
-    // exposed: multiple countDistincts plan an Expand whose FIRST-stage
+    // Mixing them is a scale anti-pattern the noop-sink bench action
+    // exposes: multiple countDistincts plan an Expand whose FIRST-stage
     // aggregation keys on the distinct columns, so every distinct value
     // (600k partkeys at sf0.1, billions at 100 TB) carries the full
     // TypedImperative buffers of the co-located sketches — two
@@ -902,10 +902,10 @@ object Relational {
     // EXACT interpolated percentiles the SCALE-SAFE way: Spark's
     // percentile() aggregate is a TypedImperativeAggregate that buffers
     // every (value, count) of a group IN MEMORY — at 100 TB a 3-group
-    // lineitem would hold ~rows/3 values per buffer and OOM (the honest
-    // r10 bench action exposed the real cost the old pruned action hid);
-    // the r10 sort-based fix bounded memory but serialized each group's
-    // full sort through one task. This is the r11 bucket-histogram
+    // lineitem would hold ~rows/3 values per buffer and OOM (a pruned
+    // count() action hides that cost; the noop-sink action shows it);
+    // a per-group sort bounds memory but serializes each group's full
+    // sort through one task. This is the bucket-histogram
     // rank-locate (see exactPcts): only the straddling buckets sort,
     // in parallel — quantile_cont semantics, same values (the oracle is
     // unchanged), bounded memory AND bounded per-task work at any scale.
@@ -913,7 +913,7 @@ object Relational {
       val li = t(s, d, "lineitem")
       val cnts = li.groupBy(col("l_returnflag")).agg(count(lit(1)).as("n_rows"))
       // both value columns ride ONE locate pipeline (explode to (grp, cid,
-      // v) — one scan, one histogram, one refine; r11 action economy)
+      // v) — one scan, one histogram, one refine: action economy)
       exactPctsCols(li, cnts, Seq(
         col("l_quantity") -> Seq(0.5 -> "median_qty"),
         col("l_extendedprice") -> Seq(0.25 -> "p25_price", 0.75 -> "p75_price")))

@@ -218,7 +218,7 @@ object Similarity {
     Tables.load(s, d, "documents")
       .filter(col("doc_id").isin(ids.toIndexedSeq.map(Long.box): _*))
       .select(col("doc_id").as("q_id"), col("text"))
-      // lazy (r15): the plan is a leaf either way; the batch materializes
+      // lazy: the plan is a leaf either way; the batch materializes
       // inside the bucket-key collect that immediately consumes it
       // instead of as its own up-front action — one action per serve
       // batch saved, same self-contained serve plan.
@@ -266,14 +266,14 @@ object Similarity {
     val qterms = docsT.join(broadcast(qIds), col("doc_id") === col("q_id"))
       .select(col("q_id"),
         explode(array_distinct(TextOps.tokens(col("text")))).as("term"))
-    // PIN the postings table (r16, ADVICE r15): one corpus tokenize +
+    // PIN the postings table: one corpus tokenize +
     // gram aggregation feeds both the df count and the scoring join.
-    // The r15 shape computed df as a count-window over term, which
-    // shuffles the ENTIRE postings table by term and funnels each term's
+    // df is not a count-window over term: that would shuffle the ENTIRE
+    // postings table by term and funnel each term's
     // full posting list through one window task BEFORE the rare gate can
     // discard it — a stopword's corpus-wide list in a single unsplittable
     // task at production scale. The pin keeps the single tokenize pass
-    // (the r15 win) while df reverts to a partial-aggregating groupBy
+    // while df is a partial-aggregating groupBy
     // (map-side combine: ≤ one row per term per map task crosses the
     // wire) joined back on term — the join is AQE-skew-splittable where
     // the window was not.
@@ -331,8 +331,8 @@ object Similarity {
   }
 
   /** ss01's exact brute-force lane over an arbitrary loaded embeddings
-    * table (columns vec_id, embedding). Parametrized (r16, VERDICT r15
-    * item 7) so ss12 can compose the SHIPPED lane over one pinned corpus
+    * table (columns vec_id, embedding). Parametrized so ss12 can
+    * compose the SHIPPED lane over one pinned corpus
     * read — in-query reuse; ss01 itself still reads the parquet. */
   private[graft] def cosineTopkOf(eRaw: DataFrame): DataFrame = {
     val e = eRaw.select(col("vec_id"), asDouble(col("embedding")).as("v"))
@@ -403,8 +403,8 @@ object Similarity {
         s, d, graft.operators.Clustering.K, graft.operators.Clustering.Iters))
       // Cell ASSIGNMENT is a pure per-row map — the native NearestCells
       // expression scores the codebook inline: no crossJoin ×k
-      // amplification, no corpus shuffle, no window (VERDICT r2's
-      // scale-killer in this query). nprobe=1 for the corpus, 2 for the
+      // amplification, no corpus shuffle, no window (a window is this
+      // query's scale-killer). nprobe=1 for the corpus, 2 for the
       // (tiny) query side.
       def nearestCells(src: DataFrame, idCol: String, n: Int): DataFrame =
         src.select(col(idCol), col("v"),
@@ -540,7 +540,7 @@ object Similarity {
           .select(col("vec_id"), col("embedding")))),
 
     // STREAMING ANN serving — the serving half of a real pipeline run
-    // under the streaming execution path (VERDICT r4 stretch item): query
+    // under the streaming execution path: query
     // vectors arrive as file-source micro-batches (one file per trigger,
     // the endpoint's request batches), and each batch runs the SAME
     // pruned-index serve as ss08 inside foreachBatch — per micro-batch:
@@ -642,10 +642,10 @@ object Similarity {
     // per-query independent, so the drained union across triggers equals
     // the one-shot batch answer exactly — ss13 oracles against ss11's
     // SQL verbatim, and drift in either lane breaks both gates visibly.
-    // r13: the lexical lane serves from the MATERIALIZED postings index
+    // The lexical lane serves from the MATERIALIZED postings index
     // (lexLaneServed — per-batch work is a pruned bucket read + a
-    // request-sized join, no corpus tokenize/aggregate per trigger; the
-    // r12 shape re-scanned the whole corpus inside every foreachBatch).
+    // request-sized join, no corpus tokenize/aggregate per trigger, never
+    // a re-scan of the whole corpus inside every foreachBatch).
     // The vector lane stays the brute tier — that is what keeps ss13
     // oracle-exact against ss11's SQL; the index-served vector lane's
     // streaming twin is ss09.
@@ -661,7 +661,7 @@ object Similarity {
     // The PRODUCTION hybrid serve: BOTH lanes read materialized,
     // partition-pruned indexes. The vector lane reads ss08's
     // bucket-partitioned LSH index (top-20 among verified candidates);
-    // the lexical lane (r13) reads the term-bucketed postings index
+    // the lexical lane reads the term-bucketed postings index
     // (lexIndexDir — rare-gated at build time, pruned to the request's
     // term buckets at serve time). Per-request work is proportional to
     // the REQUEST on both lanes; no corpus scan, no corpus aggregation.
@@ -673,7 +673,7 @@ object Similarity {
       hybridServeIndexed(s, d, emb(s, d).filter(col("vec_id") < 10)
         .select(col("vec_id"), col("embedding")))),
 
-    // The serving matrix completed (r13): BOTH lanes index-served per
+    // The serving matrix completed: BOTH lanes index-served per
     // micro-batch — the endpoint shape a deployment actually runs
     // (ss09 = streaming vector-only serve; ss13 = streaming fusion with
     // the brute vector lane that keeps it on ss11's oracle; ss15 = the
@@ -701,9 +701,9 @@ object Similarity {
     // O(queries·k) rows, so the harness adds nothing to either lane's
     // scale shape.
     "ss12_ann_recall_report" -> ((s, d) => {
-      // r16 (VERDICT r15 item 7): both lanes compose over ONE pinned
-      // corpus read instead of each re-scanning the embeddings parquet
-      // (the r15 plan read it 6×: exact q/c + LSH probe/index/q_v/c_v).
+      // Both lanes compose over ONE pinned corpus read instead of each
+      // re-scanning the embeddings parquet (unpinned, the plan reads it
+      // 6×: exact q/c + LSH probe/index/q_v/c_v).
       // IN-QUERY reuse only — the pin is lazy and lives inside this
       // query's own action, nothing crosses invocations. The lanes are
       // still the shipped code paths (cosineTopkOf/annLshTopkOf are
@@ -741,7 +741,7 @@ object Similarity {
   )
 
   // ss02/ss08/ss09 are oracle-gated by a full SQL mirror of the LSH
-  // algorithm (VERDICT r6 item 2): the hyperplane matrix is a pure
+  // algorithm: the hyperplane matrix is a pure
   // function of (tables, bits, dim, seed) and rides into the SQL as a
   // literal; signatures, radius-1 probes, the bucket join, and the
   // verify/top-k tail are recomputed by DuckDB from the fixtures alone.
@@ -749,7 +749,7 @@ object Similarity {
   // queries are disjoint and the serve is per-query independent).
   // fixture embedding dimensionality (asserted by the gate itself: a dim
   // change would hash-mismatch) — the shared constant, so every
-  // plane-mirrored oracle points at one definition (ADVICE r13)
+  // plane-mirrored oracle points at one definition
   private val lshDim = EmbeddingDim
 
   /** ss10's oracle: the greedy MMR loop UNROLLED one CTE pair per
@@ -758,8 +758,7 @@ object Similarity {
     * determinism contract: every raw cosine quantizes ONCE to integer
     * 1e-6 units (`CAST(ROUND(cos * 1000000, 0) AS BIGINT)` ==
     * `MmrSelect.roundU(cos * 1e6)` on BOTH signs — half away from zero,
-    * the r11 fix for the negative-.5-boundary divergence ADVICE r10
-    * flagged), scoring is exact
+    * so the engines agree on negative .5 boundaries), scoring is exact
     * integer arithmetic `7·rel_u − 3·sim_u`, ties break by c_id — so the
     * two engines take identical argmax branches. */
   private def mmrOracleSql(k: Int): String = {

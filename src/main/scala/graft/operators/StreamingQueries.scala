@@ -61,7 +61,7 @@ object StreamingQueries {
     * micro-precision, and flooring last+gap to ms would declare a
     * session final up to ~1ms before the watermark strictly clears it —
     * an admissible sub-ms arrival in that window would then wrongly open
-    * a new session. STRICTNESS invariant (ADVICE r6): a session whose
+    * a new session. STRICTNESS invariant: a session whose
     * end+gap lands EXACTLY on the final watermark ms (==) stays open
     * forever — the ceil'd timer reschedules to wm+1, which never comes
     * once the stream ends. Emission therefore requires the end-of-stream
@@ -641,7 +641,7 @@ object StreamingQueries {
     }),
 
     // CUSTOM sessionization via flatMapGroupsWithState — the arbitrary-
-    // stateful-processing API, oracle-gated (VERDICT r4 item 5; st02's
+    // stateful-processing API, oracle-gated (st02's
     // session_window is the built-in twin, this is the hand-rolled state
     // machine a pipeline writes when sessions need custom semantics —
     // here session_end = last event, not last + gap). Sessions are

@@ -87,7 +87,7 @@ object TextAnalysis {
       val toks = docs(s, d).filter(col("doc_id") < 100)
         .select(col("doc_id"), explode(tokens(col("text"))).as("term"))
       // every corpus statistic derives from the ONE (doc, term) tf
-      // aggregation (r15): doclen = Σ tf per doc, df = row count per term
+      // aggregation: doclen = Σ tf per doc, df = row count per term
       // (tf rows are distinct in (doc, term) by construction), n = tf's
       // distinct docs — the former four direct references to `toks` each
       // re-ran the scan + tokenize + explode. The pin holds the
@@ -125,7 +125,7 @@ object TextAnalysis {
     "tx08_common_token_density" -> ((s, d) => {
       val toks = docs(s, d).select(col("doc_id"), explode(tokens(col("text"))).as("tok"))
       val tf = toks.groupBy(col("tok")).agg(count(lit(1)).as("cnt"))
-      // total instance count = Σ of the dictionary's counts (r15): the
+      // total instance count = Σ of the dictionary's counts: the
       // former direct toks.agg re-ran the corpus explode a third time to
       // produce one number the vocabulary-sized tf table already carries
       val nTotal = tf.agg(sum(col("cnt")).as("n_total"))
@@ -146,7 +146,7 @@ object TextAnalysis {
     // 80/90%. The standard reproducible-split op for training pipelines:
     // assignment depends only on content, never on partitioning or run
     // order. Two window passes + a rollup; linear at any scale.
-    // r12: the md5 rank rides Pipelines.groupPrefixScan (range-partition
+    // The md5 rank rides Pipelines.groupPrefixScan (range-partition
     // two-level scan) instead of a per-source row_number window — the
     // old shape pulled EVERY doc of a source through one window task,
     // the serial bottleneck the prefix-scan primitive removes. The
@@ -391,7 +391,7 @@ object TextAnalysis {
           i => struct(element_at(col("ws"), i).as("w1"),
             element_at(col("ws"), i + 1).as("w2")))).as("p"))
         .select(col("p.w1").as("w1"), col("p.w2").as("w2"))
-      // pin the bigram-type table (r15): it feeds the left/right marginal
+      // pin the bigram-type table: it feeds the left/right marginal
       // aggregations, the type-count scalar, AND the final join — four
       // plan references, each of which re-ran the corpus pair explode +
       // count (column pruning gives each copy a different ReadSchema, so
@@ -421,10 +421,9 @@ object TextAnalysis {
             org.apache.spark.sql.graft.TextSignatures.bigrams(tokens(col("text")))))
             .as("bg"))
       // document frequency per (source, bigram): PIN the bigram table
-      // (one corpus explode — the r15 lesson: an unpinned double
-      // reference re-ran it per reference), then a partial→final groupBy
-      // count and a join back on the bigram key. r16 (VERDICT r15
-      // item 6, replacing the r15 count-window): the window forced a
+      // (one corpus explode: an unpinned double reference re-runs it
+      // per reference), then a partial→final groupBy count and a join
+      // back on the bigram key, not a count window: a window would force a
       // boilerplate bigram shared by every doc of a source through ONE
       // window task AQE cannot split; the groupBy's map-side combine
       // bounds the hot key's shuffle to ≤ one row per map task, and the
@@ -528,8 +527,8 @@ object TextAnalysis {
     val merges = (1 to rounds).map { r =>
       // the 1-row argmax COLLECTS — this IS the round's materialization
       // (it replaces the former eager localCheckpoint, so the exhaustion
-      // guard below costs no extra Spark action; the r12 guard's
-      // checkpoint+count pair billed tx13/tx15 one job per round,
+      // guard below costs no extra Spark action; a checkpoint+count
+      // guard would bill tx13/tx15 one job per round,
       // +0.5 s at sf0.1): the winning pair is model-sized driver state,
       // the trainKMeans discipline
       val bestRows = words
@@ -543,7 +542,7 @@ object TextAnalysis {
         .agg(sum(col("freq")).as("cnt"))
         .orderBy(col("cnt").desc, col("w1"), col("w2")).limit(1)
         .collect()
-      // exhaustion guard (ADVICE r12): an empty argmax would have made
+      // exhaustion guard: an empty argmax would have made
       // the former crossJoin silently EMPTY the whole type table — and
       // the oracle degenerates identically, so the hash gate would stay
       // green on zeroed output. Fail loudly instead: `rounds` must not

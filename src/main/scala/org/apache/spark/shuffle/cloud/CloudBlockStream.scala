@@ -23,8 +23,6 @@ private[cloud] class CloudBlockStream(env: CloudShuffleEnv,
   private var pos: Long = start
   private var closed = false
 
-  def size: Long = end - start
-
   private def remaining: Long = end - pos
 
   override def read(): Int = {

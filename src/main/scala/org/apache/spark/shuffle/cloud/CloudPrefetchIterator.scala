@@ -10,21 +10,21 @@ import org.apache.spark.storage.BlockId
   * performance against high-latency object stores.
   *
   * Behavioral spec from the reference (`S3BufferedPrefetchIterator.scala:
-  * 16-213`): each block's fetch buffers up to `min(blockSize,
-  * maxBufferSizeTask)` bytes and hands the buffer to the consuming task
-  * thread through a blocking queue; buffered bytes, the block the consumer
-  * holds included, never exceed `maxBufferSizeTask`.
+  * 16-213`): each block's fetch buffers up to `min(blockSize, budget)`
+  * bytes and hands the buffer to the consuming task thread through a
+  * blocking queue; buffered bytes, the block the consumer holds included,
+  * never exceed the task's budget. The budget is the env's
+  * `maxBytesInFlight`, Spark's own `spark.reducer.maxSizeInFlight`.
   *
-  * Admission is by bytes, as Spark's own reader limits a task by
-  * `spark.reducer.maxSizeInFlight`: the task thread submits one fetch job
-  * per block, in block order, to the env's fetch pool while the block's
-  * buffer fits the budget (one block is always admitted, so a block larger
-  * than the budget still reads) and fewer than pool-size fetches are
-  * outstanding. It admits more each time the consumer asks for the next
-  * block, after giving back the budget of the block the consumer held. A
-  * fetch job therefore never waits on the budget; the budget bounds a
-  * task's fetches and the pool, sized by `maxConcurrencyExecutor`, bounds
-  * the executor's.
+  * Admission is by bytes, as Spark's own reader limits a task: the task
+  * thread submits one fetch job per block, in block order, to the env's
+  * fetch pool while the block's buffer fits the budget (one block is always
+  * admitted, so a block larger than the budget still reads) and fewer than
+  * pool-size fetches are outstanding. It admits more each time the consumer
+  * asks for the next block, after giving back the budget of the block the
+  * consumer held. A fetch job therefore never waits on the budget; the
+  * budget bounds a task's fetches and the pool, sized by
+  * `maxConcurrencyExecutor`, bounds the executor's.
   *
   * Completion order is delivery order: reducers don't care which map's
   * block arrives first, so the queue never head-of-line blocks.
@@ -38,7 +38,7 @@ import org.apache.spark.storage.BlockId
   * connection; the first fetch error stops the other jobs too.
   */
 private[cloud] class CloudPrefetchIterator(env: CloudShuffleEnv,
-    blocks: IndexedSeq[(BlockId, CloudBlockStream, InputStream)],
+    blocks: IndexedSeq[(BlockId, Long, InputStream)],
     readMetrics: ShuffleReadMetricsReporter)
     extends Iterator[(BlockId, InputStream)] {
 
@@ -62,10 +62,10 @@ private[cloud] class CloudPrefetchIterator(env: CloudShuffleEnv,
   private var waitNanos = 0L
   private var waitMsReported = 0L
 
-  private def bufferSize(idx: Int): Long = math.min(blocks(idx)._2.size, env.maxBufferSizeTask)
+  private def bufferSize(idx: Int): Long = math.min(blocks(idx)._2, env.maxBytesInFlight)
 
   private def fits(size: Long): Boolean =
-    heldBytes == 0 || heldBytes + size <= env.maxBufferSizeTask
+    heldBytes == 0 || heldBytes + size <= env.maxBytesInFlight
 
   /** Consumer thread: submits fetch jobs, in block order, for as many
     * blocks as the budget and the pool size admit. */
@@ -83,7 +83,7 @@ private[cloud] class CloudPrefetchIterator(env: CloudShuffleEnv,
 
   /** Fetch pool: buffers one block's head and queues it for the consumer. */
   private def fetch(idx: Int): Unit = {
-    val (blockId, ranged, wrapped) = blocks(idx)
+    val (blockId, size, wrapped) = blocks(idx)
     if (stopped) {
       // never opened: the block stream opens on its first read
       try wrapped.close() catch { case _: Exception => }
@@ -93,7 +93,7 @@ private[cloud] class CloudPrefetchIterator(env: CloudShuffleEnv,
       val toBuffer = bufferSize(idx)
       val buf = readUpTo(wrapped, toBuffer)
       val stream: InputStream =
-        if (buf.length.toLong >= ranged.size) {
+        if (buf.length >= size) {
           wrapped.close()
           new ByteArrayInputStream(buf)
         } else {
@@ -116,16 +116,11 @@ private[cloud] class CloudPrefetchIterator(env: CloudShuffleEnv,
     // the buffered size is known up front (the index gives exact ranges),
     // so read straight into one right-sized array. Blocks beyond
     // byte[]-addressability buffer their first 2 GB; the
-    // SequenceInputStream tail streams the rest.
-    val size = math.min(limit, (Int.MaxValue - 16).toLong).toInt
-    val buf = new Array[Byte](size)
-    var off = 0
-    var eof = false
-    while (off < size && !eof) {
-      val n = in.read(buf, off, size - off)
-      if (n < 0) eof = true else off += n
-    }
-    if (off == size) buf else java.util.Arrays.copyOf(buf, off)
+    // SequenceInputStream tail streams the rest. A short object fails
+    // the read, so the array always fills.
+    val buf = new Array[Byte](math.min(limit, (Int.MaxValue - 16).toLong).toInt)
+    in.readNBytes(buf, 0, buf.length)
+    buf
   }
 
   // --- stopping -------------------------------------------------------------

@@ -2,6 +2,7 @@ package org.apache.spark.shuffle.cloud
 
 import java.io.EOFException
 import java.net.URI
+import java.nio.ByteBuffer
 import java.util.concurrent.{ConcurrentHashMap, Executors, LinkedBlockingQueue, ThreadPoolExecutor, TimeUnit}
 
 import scala.concurrent.{Await, ExecutionContext, ExecutionContextExecutorService, Future}
@@ -38,7 +39,12 @@ final class CloudShuffleEnv(val conf: SparkConf, val appId: String) extends Logg
 
   val rootDir: String = conf.get(ROOT_DIR_KEY, "file:///tmp/cloud-shuffle").stripSuffix("/")
   val folderPrefixes: Int = math.max(1, conf.getInt(PREFIXES_KEY, 10))
-  val maxBufferSizeTask: Long = conf.getSizeAsBytes(MAX_BUFFER_TASK_KEY, "128m")
+  /** Per-task cap on prefetched bytes: Spark's own
+    * `spark.reducer.maxSizeInFlight`, read through its config entry and
+    * scaled as `BlockStoreShuffleReader` scales it, so a bare number means
+    * MiB. The reference keeps a separate 128 MiB option
+    * (`S3ShuffleDispatcher.scala:55-61`). */
+  val maxBytesInFlight: Long = conf.get(config.REDUCER_MAX_SIZE_IN_FLIGHT) * 1024 * 1024
   /** Executor-wide cap on reduce-side GETs in flight, across all tasks:
     * the size of [[fetchPool]]. An object store meters a client's
     * connections, not its tasks, so the bound is per JVM. Beyond the
@@ -141,7 +147,7 @@ final class CloudShuffleEnv(val conf: SparkConf, val appId: String) extends Logg
   /** Writes a map output's index, the prefix sums of its partition
     * lengths, and caches it. */
   def writeIndex(id: MapOutputId, partitionLengths: Array[Long]): Unit = {
-    val acc = CloudShuffleIndex.prefixSums(partitionLengths)
+    val acc = prefixSums(partitionLengths)
     writeLongs(id, Index, acc)
     indexCache.put(id, new Cell(() => acc))
   }
@@ -155,7 +161,7 @@ final class CloudShuffleEnv(val conf: SparkConf, val appId: String) extends Logg
 
   private def writeLongs(id: MapOutputId, kind: String, values: Array[Long]): Unit = {
     val out = create(id, kind)
-    try out.write(CloudShuffleIndex.encode(values)) finally out.close()
+    try out.write(encode(values)) finally out.close()
   }
 
   /** Cumulative byte offsets of a map output's partitions in its data object. */
@@ -185,7 +191,7 @@ final class CloudShuffleEnv(val conf: SparkConf, val appId: String) extends Logg
         throw new SparkException(s"cloud shuffle: ${path(id, kind)} is shorter than the " +
           s"${bytes.length} bytes of its $n longs", e)
     } finally in.close()
-    CloudShuffleIndex.decode(bytes)
+    decode(bytes)
   }
 
   /** Deletes the given objects of one map output and forgets its cached
@@ -236,13 +242,11 @@ final class CloudShuffleEnv(val conf: SparkConf, val appId: String) extends Logg
 object CloudShuffleEnv extends Logging {
   val ROOT_DIR_KEY = "spark.shuffle.cloud.rootDir"
   val PREFIXES_KEY = "spark.shuffle.cloud.folderPrefixes"
-  val MAX_BUFFER_TASK_KEY = "spark.shuffle.cloud.maxBufferSizeTask"
   val VALIDATE_KEY = "spark.shuffle.cloud.checksum.validate"
   val MAX_EXEC_CONCURRENCY_KEY = "spark.shuffle.cloud.maxConcurrencyExecutor"
 
   /** Every `spark.shuffle.cloud.*` option; the manager refuses any other. */
-  val KEYS: Seq[String] = Seq(ROOT_DIR_KEY, PREFIXES_KEY, MAX_BUFFER_TASK_KEY,
-    VALIDATE_KEY, MAX_EXEC_CONCURRENCY_KEY)
+  val KEYS: Seq[String] = Seq(ROOT_DIR_KEY, PREFIXES_KEY, VALIDATE_KEY, MAX_EXEC_CONCURRENCY_KEY)
 
   /** Buffer in front of every data PUT. It only coalesces small write()
     * calls ahead of the FS client's own buffering, which sets the PUT
@@ -253,6 +257,39 @@ object CloudShuffleEnv extends Logging {
   val Data = "data"
   val Index = "index"
   val Checksum = "checksum"
+
+  // Index and checksum codec. The wire format is bit-identical to the
+  // reference's (`helper/S3ShuffleHelper.scala:44-59,94-121`): an index
+  // object holds the big-endian longs `[0, l0, l0+l1, …, Σl]`, the prefix
+  // sums of the partition lengths, so `acc(r)..acc(r+1)` is partition r's
+  // byte range in the data object; a checksum object holds one big-endian
+  // long per partition. With P partitions they are (P+1)·8 and P·8 bytes.
+
+  /** `[0, l0, l0+l1, …]`: length n+1, exact cumulative byte offsets. */
+  private[cloud] def prefixSums(lengths: Array[Long]): Array[Long] = {
+    val acc = new Array[Long](lengths.length + 1)
+    var i = 0
+    var s = 0L
+    while (i < lengths.length) {
+      s += lengths(i)
+      acc(i + 1) = s
+      i += 1
+    }
+    acc
+  }
+
+  /** `values` as big-endian longs. */
+  private[cloud] def encode(values: Array[Long]): Array[Byte] = {
+    val bytes = ByteBuffer.allocate(values.length * 8)
+    bytes.asLongBuffer().put(values)
+    bytes.array()
+  }
+
+  /** The big-endian longs of `bytes`, whose length is a multiple of 8. */
+  private[cloud] def decode(bytes: Array[Byte]): Array[Long] = {
+    val buf = ByteBuffer.wrap(bytes)
+    Array.fill(bytes.length / 8)(buf.getLong())
+  }
 
   private final class Cell(read: () => Array[Long]) {
     lazy val longs: Array[Long] = read()

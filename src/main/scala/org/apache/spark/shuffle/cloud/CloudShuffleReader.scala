@@ -18,8 +18,9 @@ import org.apache.spark.util.collection.ExternalSorter
   *     reads when the serializer/codec make concatenation safe — fewer,
   *     larger ranged GETs;
   *  3. slice each map's data blob via its prefix-sum index;
-  *  4. prefetch concurrently, admitted by bytes under a per-task memory
-  *     cap, on the executor's bounded fetch pool;
+  *  4. prefetch concurrently, admitted by bytes under Spark's per-task
+  *     `spark.reducer.maxSizeInFlight`, on the executor's bounded fetch
+  *     pool;
   *  5. (optional) validate per-partition checksums while streaming;
   *  6. decrypt/decompress, deserialize, then apply the dependency's
   *     aggregation and key ordering exactly as Spark's own reader would.
@@ -74,7 +75,7 @@ private[cloud] class CloudShuffleReader[K, C](
     // resolve each block to a byte range of its map's data blob; the
     // partition count fixes the index's and checksums' lengths
     val partitions = dep.partitioner.numPartitions
-    val ranged: IndexedSeq[(BlockId, CloudBlockStream, InputStream)] =
+    val ranged: IndexedSeq[(BlockId, Long, InputStream)] =
       blocks.iterator.flatMap { case (blockId, _) =>
         val (mapOutput, rs, re) = reduceRange(blockId)
         val offsets = env.readIndex(mapOutput, partitions)
@@ -88,7 +89,7 @@ private[cloud] class CloudShuffleReader[K, C](
               new ChecksumValidatingStream(base, blockId.name, env.checksumAlgorithm,
                 offsets, env.readChecksums(mapOutput, partitions), rs, re)
             else base
-          Some((blockId, base, validated))
+          Some((blockId, to - from, validated))
         }
       }.toIndexedSeq
 

@@ -32,8 +32,8 @@ import org.apache.spark.sql.types._
   * half-away-from-zero `round(cos·1e6)` on BOTH signs ([[MmrSelect.roundU]]
   * mirrors DuckDB's ROUND; plain Java `Math.round` is half-UP, which
   * diverges on exact negative .5 boundaries — anti-correlated vectors make
-  * sim_u and rel_u legitimately negative, so the symmetry matters, ADVICE
-  * r10) — and all scoring is exact integer arithmetic
+  * sim_u and rel_u legitimately negative, so the symmetry matters) —
+  * and all scoring is exact integer arithmetic
   * (`relWeight·rel_u − divWeight·sim_u`), ties broken toward the lower
   * id. Scoring rounded DOUBLES instead (λ·rel at λ=0.7 over 6-decimal
   * rels) lands exactly on .xxxxxx5 boundaries by construction, where
@@ -85,7 +85,7 @@ case class MmrSelect(child: Expression, k: Int, relWeight: Int, divWeight: Int)
   override protected def nullSafeEval(candsAny: Any): Any =
     MmrSelect.select(candsAny.asInstanceOf[ArrayData], k, relWeight, divWeight)
 
-  /** Codegen (r12, retiring the CodegenFallback): the greedy kernel is a
+  /** Codegen (no CodegenFallback): the greedy kernel is a
     * single static call on the already-evaluated child — the
     * StaticInvoke pattern. No per-row interpretation of the expression
     * tree, no `ctx.INPUT_ROW` materialization (a CodegenFallback forces

@@ -24,7 +24,7 @@ class CloudShuffleProps extends AnyFunSuite {
     val rng = new Random(1)
     (1 to 100).foreach { _ =>
       val lengths = Array.fill(rng.nextInt(40))(rng.nextLong(1L << 40))
-      val acc = CloudShuffleIndex.prefixSums(lengths)
+      val acc = CloudShuffleEnv.prefixSums(lengths)
       assert(acc.length == lengths.length + 1)
       assert(acc.head == 0L)
       lengths.indices.foreach(i => assert(acc(i + 1) - acc(i) == lengths(i)))
@@ -43,7 +43,7 @@ class CloudShuffleProps extends AnyFunSuite {
       // a fresh env on the same store has an empty cache: re-read from the store
       val cold = new CloudShuffleEnv(env.conf, env.appId)
       val back = try cold.readIndex(MapOutputId(trial, mapId), lengths.length) finally cold.close()
-      assert(back.toSeq == CloudShuffleIndex.prefixSums(lengths).toSeq)
+      assert(back.toSeq == CloudShuffleEnv.prefixSums(lengths).toSeq)
     }
   })
 
@@ -70,7 +70,7 @@ class CloudShuffleProps extends AnyFunSuite {
     (1 to 100).foreach { _ =>
       val parts = Array.fill(1 + rng.nextInt(8))(
         Array.fill[Byte](rng.nextInt(512))(rng.nextInt().toByte))
-      val offsets = CloudShuffleIndex.prefixSums(parts.map(_.length.toLong))
+      val offsets = CloudShuffleEnv.prefixSums(parts.map(_.length.toLong))
       val checksums = parts.map { p =>
         val c = new java.util.zip.Adler32()
         c.update(p, 0, p.length)

@@ -58,16 +58,30 @@ class CloudShuffleSpec extends AnyFunSuite with BeforeAndAfterEach {
   }
 
   test("an unknown spark.shuffle.cloud option is refused at manager init") {
-    // writeBufferSize and maxConcurrencyTask were options once; a job still
-    // setting one must learn that it has no effect
+    // writeBufferSize, maxConcurrencyTask and maxBufferSizeTask were options
+    // once (the last is now Spark's spark.reducer.maxSizeInFlight); a job
+    // still setting one must learn that it has no effect
     Seq("spark.shuffle.cloud.writeBufferSize" -> "8m",
-      "spark.shuffle.cloud.maxConcurrencyTask" -> "10").foreach { case (key, value) =>
+      "spark.shuffle.cloud.maxConcurrencyTask" -> "10",
+      "spark.shuffle.cloud.maxBufferSizeTask" -> "128m").foreach { case (key, value) =>
       val ex = intercept[IllegalArgumentException] {
         new CloudShuffleManager(baseConf(key -> value))
       }
       assert(ex.getMessage.contains(key), ex.getMessage)
       CloudShuffleEnv.KEYS.foreach(k => assert(ex.getMessage.contains(k), ex.getMessage))
     }
+  }
+
+  test("README's Key options name exactly the plugin's options") {
+    // the paragraph's `name=default` entries, plus rootDir from the usage
+    // block, must be the options the manager accepts
+    val readme = Files.readString(java.nio.file.Paths.get("README.md"))
+    val paragraph = readme.split("\\n\\s*\\n").filter(_.startsWith("Key options")).toSeq
+    assert(paragraph.size == 1, "README has one Key options paragraph")
+    val named = "`([A-Za-z.]+)=[^`]*`".r.findAllMatchIn(paragraph.head)
+      .map("spark.shuffle.cloud." + _.group(1)).toSeq
+    assert(named.distinct == named, named)
+    assert((named :+ CloudShuffleEnv.ROOT_DIR_KEY).toSet == CloudShuffleEnv.KEYS.toSet, named)
   }
 
   test("a ShuffleDataIO other than the plugin's is refused at manager init") {

@@ -22,16 +22,16 @@ class PrefetchPoolSpec extends AnyFunSuite {
 
   private val threads = 4
 
-  /** An env with a `poolSize`-thread fetch pool over a `gatefs` store
-    * holding `count` data blocks of `size` bytes, map m's block filled with
-    * byte m; `store` keys are the store's own. Returns the env and the
-    * prefetcher's input. */
+  /** An env with a `poolSize`-thread fetch pool and a `budget` per-task
+    * budget over a `gatefs` store holding `count` data blocks of `size`
+    * bytes, map m's block filled with byte m; `store` keys are the store's
+    * own. Returns the env and the prefetcher's input. */
   private def storeWithBlocks(count: Int, size: Int, poolSize: Int = threads,
-      store: Seq[(String, String)] = Nil)
-      : (CloudShuffleEnv, IndexedSeq[(BlockId, CloudBlockStream, InputStream)]) = {
+      store: Seq[(String, String)] = Nil, budget: String = "1m")
+      : (CloudShuffleEnv, IndexedSeq[(BlockId, Long, InputStream)]) = {
     val sparkConf = GatedStore.sparkConf(store: _*)
       .set(CloudShuffleEnv.MAX_EXEC_CONCURRENCY_KEY, poolSize.toString)
-      .set(CloudShuffleEnv.MAX_BUFFER_TASK_KEY, "1m")
+      .set("spark.reducer.maxSizeInFlight", budget)
     val env = new CloudShuffleEnv(sparkConf, "prefetch-pool-spec")
     (0 until count).foreach { m =>
       val out = env.create(MapOutputId(9001, m), CloudShuffleEnv.Data)
@@ -44,10 +44,9 @@ class PrefetchPoolSpec extends AnyFunSuite {
 
   /** Fresh, unopened streams over the blocks [[storeWithBlocks]] wrote. */
   private def streams(env: CloudShuffleEnv, count: Int, size: Int)
-      : IndexedSeq[(BlockId, CloudBlockStream, InputStream)] =
+      : IndexedSeq[(BlockId, Long, InputStream)] =
     (0 until count).map { m =>
-      val stream = new CloudBlockStream(env, MapOutputId(9001, m), 0, size)
-      (blockId(m): BlockId, stream, stream: InputStream)
+      (blockId(m): BlockId, size.toLong, new CloudBlockStream(env, MapOutputId(9001, m), 0, size): InputStream)
     }
 
   /** Threads other than the caller that wait with the prefetcher as their
@@ -91,31 +90,34 @@ class PrefetchPoolSpec extends AnyFunSuite {
     } finally sc.stop()
   }
 
-  test("maxBufferSizeTask caps buffered blocks larger than budget / threads") {
+  test("the per-task budget caps buffered blocks larger than budget / threads") {
     // 400 KiB blocks under a 1 MiB budget: the four pool threads could hold
     // 1.6 MiB, the budget admits two blocks, the one the consumer holds
     // included. A job opens its block only after admission, so GETs opened
     // and not yet delivered, plus the block last delivered, are blocks held
-    // against the budget.
+    // against the budget. Spark reads a bare number as MiB.
     val size = 400 * 1024
-    val (env, blocks) = storeWithBlocks(8, size)
-    try {
-      val store = env.fs.asInstanceOf[GatedStore]
-      val it = new CloudPrefetchIterator(env, blocks, new TempShuffleReadMetrics)
-      var delivered = 0
-      var maxHeld = 0
-      while (it.hasNext) {
-        Thread.sleep(100) // let the pool fetch all the budget admits
-        val held = store.opens.get - delivered + math.min(delivered, 1)
-        maxHeld = math.max(maxHeld, held)
-        val (id, in) = it.next()
-        delivered += 1
-        drain(id, in, size)
-      }
-      assert(delivered == 8)
-      assert(maxHeld.toLong * size <= (1 << 20), s"$maxHeld blocks held")
-      assert(maxHeld == (1 << 20) / size)
-    } finally env.close()
+    Seq("1m", "1").foreach { budget =>
+      val (env, blocks) = storeWithBlocks(8, size, budget = budget)
+      try {
+        assert(env.maxBytesInFlight == (1 << 20), s"budget $budget")
+        val store = env.fs.asInstanceOf[GatedStore]
+        val it = new CloudPrefetchIterator(env, blocks, new TempShuffleReadMetrics)
+        var delivered = 0
+        var maxHeld = 0
+        while (it.hasNext) {
+          Thread.sleep(100) // let the pool fetch all the budget admits
+          val held = store.opens.get - delivered + math.min(delivered, 1)
+          maxHeld = math.max(maxHeld, held)
+          val (id, in) = it.next()
+          delivered += 1
+          drain(id, in, size)
+        }
+        assert(delivered == 8)
+        assert(maxHeld.toLong * size <= (1 << 20), s"$maxHeld blocks held under budget $budget")
+        assert(maxHeld == (1 << 20) / size, s"budget $budget")
+      } finally env.close()
+    }
   }
 
   test("time waiting for blocks is reported as fetch wait") {
@@ -223,13 +225,13 @@ class PrefetchPoolSpec extends AnyFunSuite {
   test("take(1) over a shuffle larger than the budget leaves no worker parked") {
     val conf = GatedStore.localSparkConf("prefetch-pool-spec")
       .set(CloudShuffleEnv.MAX_EXEC_CONCURRENCY_KEY, threads.toString)
-      .set(CloudShuffleEnv.MAX_BUFFER_TASK_KEY, "64k")
+      .set("spark.reducer.maxSizeInFlight", "1m")
     val sc = new SparkContext(conf)
     try {
-      // 8 maps of incompressible 100 KiB values into 2 reducers: every
-      // reducer's blocks add up to several budgets
+      // 8 maps of incompressible 512 KiB values into 2 reducers: each block
+      // is about two budgets, and every reducer's blocks add up to 16
       val rows = sc.parallelize(0 until 64, 8).map { i =>
-        val value = new Array[Byte](100 * 1024)
+        val value = new Array[Byte](512 * 1024)
         new Random(i).nextBytes(value)
         (i, value)
       }.partitionBy(new HashPartitioner(2)).take(1)
