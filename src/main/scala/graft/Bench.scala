@@ -5,8 +5,8 @@ import graft.BenchRunner._
 /** Per-query timings of the batch queries (`runMain graft.Bench [tier]`).
   *
   *  - `base` (the default): every batch query on `SPARK_GRAFT_SF_DIR`
-  *    (sf0.1), plugin and default-manager lanes with the contention
-  *    re-measure; one JSON line on stdout and `target/bench.json`.
+  *    (sf0.1), plugin and default-manager lanes; one JSON line on stdout
+  *    and `target/bench.json`.
   *    `SPARK_GRAFT_AB=0` runs the plugin lane only, `SPARK_GRAFT_AB_ORDER`
   *    sets the lane order and `SPARK_GRAFT_BENCH_ONLY=q05,ts01,...` restricts
   *    the sweep.
@@ -40,8 +40,8 @@ object Bench {
     val ordered = batch.filter(q => only.forall(_.contains(short(q._1))))
     require(ordered.nonEmpty, "SPARK_GRAFT_BENCH_ONLY selected zero queries")
     requireUniqueShortIds(ordered.map(_._1))
-    val sw = sweep(set, ordered, remeasure = true) { (plugin, qs) =>
-      withSession(set.cpus, plugin, sfDir, ("lineitem", "l_returnflag"))(runLane(_, sfDir, qs))
+    val sw = sweep(set) { plugin =>
+      withSession(set.cpus, plugin, sfDir, ("lineitem", "l_returnflag"))(runLane(_, sfDir, ordered))
     }
     val (line, rich) = benchReport(sw, sfDir)
     if (line.length > 1930) System.err.println(s"BENCH WARN: compact line ${line.length} bytes may overflow the tail")

@@ -21,22 +21,28 @@ import org.apache.spark.sql.graft.BenchListener
 object BenchRunner {
   type Query = (SparkSession, String) => DataFrame
 
-  /** One query over a lane's three passes: median, min (the noise floor),
-    * spread (max − min, the noise band) and pass 1's time. A regression is
-    * real only when medians move by more than the spread. Pass 1 carries the
-    * one-time memoized builds (k-means training, indexes, the BPE
+  /** One query over a lane's three passes: `secs` holds each pass's
+    * seconds in run order. Median, min (the noise floor), spread (max −
+    * min, the noise band) and pass 1's time derive from them; a regression
+    * is real only when medians move by more than the spread. Pass 1 carries
+    * the one-time memoized builds (k-means training, indexes, the BPE
     * tokenizer), so first − med is the build cost the median excludes.
     * Shuffle bytes are per-pass medians; `rows` and `census` come from
     * pass 1 and stay -1 / empty unless the lane records them. A failed query
-    * reads -1 everywhere: broken must not read as fast. */
-  final case class Stat(med: Double, min: Double, spread: Double, first: Double,
-      shufW: Long, shufR: Long, rows: Long = -1L, census: Seq[(String, Long)] = Nil)
-  val Failed: Stat = Stat(-1.0, -1.0, 0.0, -1.0, -1L, -1L)
+    * has no `secs` and reads -1 everywhere: broken must not read as fast. */
+  final case class Stat(secs: Seq[Double], shufW: Long, shufR: Long, rows: Long = -1L,
+      census: Seq[(String, Long)] = Nil) {
+    private def sorted = secs.sorted
+    def med: Double = if (secs.isEmpty) -1.0 else sorted(secs.size / 2)
+    def min: Double = if (secs.isEmpty) -1.0 else sorted.head
+    def spread: Double = if (secs.isEmpty) 0.0 else sorted.last - sorted.head
+    def first: Double = secs.headOption.getOrElse(-1.0)
+  }
+  val Failed: Stat = Stat(Nil, -1L, -1L)
 
-  /** A sweep's lanes after any contention re-measure: `med0`/`defaultMed0`
-    * hold the medians the splice replaced. */
+  /** A sweep's plugin lane and, when A/B ran, its default-manager lane,
+    * each measured once in `order`. */
   final case class Sweep(plugin: Map[String, Stat], default: Map[String, Stat] = Map.empty,
-      med0: Map[String, Double] = Map.empty, defaultMed0: Map[String, Double] = Map.empty,
       order: String = "plugin-first")
 
   final case class Settings(tier: String, cpus: String, ab: Boolean, order: String)
@@ -133,11 +139,9 @@ object BenchRunner {
       }
       ordered.map { case (name, _) =>
         val obs = passes.map(_(name))
-        val t = obs.map(_.sec).sorted
         def med(xs: Seq[Long]) = xs.sorted.apply(xs.size / 2)
-        name -> (if (t.head < 0) Failed
-          else Stat(t(1), t.head, t.last - t.head, obs.head.sec, med(obs.map(_.shufW)),
-            med(obs.map(_.shufR)), obs.head.rows, obs.head.census))
+        name -> (if (obs.exists(_.sec < 0)) Failed
+          else Stat(obs.map(_.sec), med(obs.map(_.shufW)), med(obs.map(_.shufR)), obs.head.rows, obs.head.census))
       }.toMap
     } finally spark.sparkContext.removeSparkListener(tap)
   }
@@ -146,53 +150,11 @@ object BenchRunner {
     * manager. Both lanes share one JVM, so the second gets fully JIT-compiled
     * code; plugin-first is the conservative default (any JIT bias inflates
     * the plugin's overhead, never hides it) and `default-first` bounds the
-    * bias.
-    *
-    * With `remeasure`, queries whose median sits far above their own
-    * minimum run again in fresh sessions, same lane order: a contention
-    * episode spanning two of three passes survives the median. The
-    * trigger's relative arm alone scales with the query and missed the
-    * heaviest artifacts, hence the absolute arm. At most the 12 worst (by
-    * med − min) re-run, so a fully contended run cannot double the sweep. */
-  def sweep(set: Settings, ordered: Seq[(String, Query)], remeasure: Boolean)
-      (lane: (Boolean, Seq[(String, Query)]) => Map[String, Stat]): Sweep = {
-    def lanes(qs: Seq[(String, Query)]) =
-      if (!set.ab) (lane(true, qs), Map.empty[String, Stat])
-      else if (set.order == "default-first") { val d = lane(false, qs); (lane(true, qs), d) }
-      else { val p = lane(true, qs); (p, lane(false, qs)) }
-    val (p0, d0) = lanes(ordered)
-    def stats(n: String) = Seq(p0, d0).flatMap(_.get(n))
-    def suspicious(s: Stat) = s.med > 0 && (s.med - s.min > math.max(0.35 * s.min, 0.25) || s.med - s.min > 0.5)
-    val worst = ordered.map(_._1).filter(n => stats(n).exists(suspicious))
-      .sortBy(n => -stats(n).map(s => s.med - s.min).max).take(12).toSet
-    if (!remeasure || worst.isEmpty) Sweep(p0, d0, order = set.order)
-    else {
-      val (p2, d2) = lanes(ordered.filter(q => worst(q._1)))
-      splice(p0, d0, p2, d2, set.order)
-    }
-  }
-
-  /** Keeps the re-run's (plugin, default) pair when its combined median is
-    * lower (plugin alone when the default lane did not run), so an overhead
-    * ratio always compares one session's measurements. A failed re-run
-    * never replaces a valid stat. */
-  def keepRerun(p0: Double, p2: Double, d0: Double, d2: Double): Boolean =
-    if (p0 < 0 || p2 < 0) false
-    else if (d0 < 0 && d2 < 0) p2 < p0
-    else d0 >= 0 && d2 >= 0 && p2 + d2 < p0 + d0
-
-  def splice(p0: Map[String, Stat], d0: Map[String, Stat], p2: Map[String, Stat],
-      d2: Map[String, Stat], order: String): Sweep = {
-    def med(m: Map[String, Stat], n: String) = m.get(n).map(_.med).getOrElse(-1.0)
-    val kept = p2.keySet.filter(n => keepRerun(med(p0, n), med(p2, n), med(d0, n), med(d2, n)))
-    def pick(base: Map[String, Stat], rerun: Map[String, Stat]) = {
-      val swap = kept.filter(n => base.contains(n) && rerun.get(n).exists(_.med >= 0))
-      (base ++ rerun.view.filterKeys(swap), swap.map(n => n -> base(n).med).toMap)
-    }
-    val (plugin, med0) = pick(p0, p2)
-    val (default, defaultMed0) = pick(d0, d2)
-    Sweep(plugin, default, med0, defaultMed0, order)
-  }
+    * bias. */
+  def sweep(set: Settings)(lane: Boolean => Map[String, Stat]): Sweep =
+    if (!set.ab) Sweep(lane(true), order = set.order)
+    else if (set.order == "default-first") { val d = lane(false); Sweep(lane(true), d, set.order) }
+    else { val p = lane(true); Sweep(p, lane(false), set.order) }
 
   // ---- report writer: pure functions of the stats ----
 
@@ -232,11 +194,10 @@ object BenchRunner {
 
   private def detail(sw: Sweep): String = obj(byId(sw.plugin).map { case (k, v) =>
     short(k) -> obj(Seq("med_s" -> ms(v.med), "min_s" -> ms(v.min), "spread_s" -> ms(v.spread),
-      "first_pass_s" -> ms(v.first), "shuffle_write_bytes" -> v.shufW.toString,
-      "shuffle_read_bytes" -> v.shufR.toString) ++
+      "first_pass_s" -> ms(v.first), "pass_s" -> v.secs.map(ms).mkString("[", ",", "]"),
+      "shuffle_write_bytes" -> v.shufW.toString, "shuffle_read_bytes" -> v.shufR.toString) ++
       sw.default.get(k).toSeq.flatMap(d => Seq("default_med_s" -> ms(d.med),
         "plugin_overhead" -> (if (v.med > 0 && d.med > 0) ms(v.med / d.med) else "-1"))) ++
-      sw.med0.get(k).map("med0_s" -> ms(_)) ++ sw.defaultMed0.get(k).map("default_med0_s" -> ms(_)) ++
       v.census.map { case (c, n) => c -> n.toString })
   })
 
@@ -248,18 +209,16 @@ object BenchRunner {
     * least 0.1 s) and `slow` (the slowest queries' [min, spread]). Slow
     * entries are shed before the line passes 1,900 bytes. `method` marks
     * the median-of-3, which has been mistaken for one contended pass. The
-    * file copy cannot truncate: per-query detail, A/B columns, replaced
-    * medians and shuffle totals. */
+    * file copy cannot truncate: per-query detail with every pass's seconds,
+    * A/B columns and shuffle totals. */
   def benchReport(sw: Sweep, sf: String): (String, String) = {
     val p = sw.plugin
     val head = Seq("metric" -> str("total"), "value" -> ms(total(p)), "unit" -> str("sec"))
     val noise = p.values.filter(_.med >= 0.1).map(v => v.spread / v.med).toSeq.sorted
-    val requeried = (sw.med0.keySet ++ sw.defaultMed0.keySet).size
     def slow(n: Int) = obj(byId(p).filter(_._2.med > 0).sortBy(-_._2.med).take(n).sortBy(_._1)
       .map { case (k, v) => short(k) -> s"[${ms(v.min)},${ms(v.spread)}]" })
     def line(slowN: Int) = obj(head ++ Seq("method" -> str("median3"), "failed" -> failed(p)) ++ abFields(sw) ++
       noise.headOption.map(_ => "noise" -> ms(noise(noise.size / 2))) ++
-      Option.when(requeried > 0)("requeried" -> requeried.toString) ++
       Seq("slow" -> slow(slowN), "queries" -> medians(p), "sf" -> str(sf)))
     val compact = Seq(8, 6, 4, 2, 0).map(line).find(_.length <= 1900).getOrElse(line(0))
     val bytes = (f: Stat => Long) => p.values.map(f).filter(_ >= 0).sum.toString
@@ -271,14 +230,11 @@ object BenchRunner {
 
   /** `graft.BenchStream`'s line, also its `target/bench_stream.json`.
     * `harness` is the one-time staging of the sentineled source dir, billed
-    * apart so drain medians measure the drain; `sf1` is the plugin lane
-    * over the derived streaming tier. */
-  def streamReport(sw: Sweep, sf: String, harness: Double, sf1: Option[(String, Map[String, Stat])]): String =
+    * apart so drain medians measure the drain. */
+  def streamReport(sw: Sweep, sf: String, harness: Double): String =
     obj(Seq("metric" -> str("stream_total"), "value" -> ms(total(sw.plugin)), "unit" -> str("sec"),
       "method" -> str("median3"), "failed" -> failed(sw.plugin), "harness_prestage_s" -> ms(harness)) ++
-      abFields(sw) ++ Seq("queries" -> medians(sw.plugin), "sf" -> str(sf)) ++
-      sf1.toSeq.flatMap { case (d, m) => Seq("sf1_dir" -> str(d), "queries_sf1" -> medians(m)) } ++
-      Seq("detail" -> detail(sw)))
+      abFields(sw) ++ Seq("queries" -> medians(sw.plugin), "sf" -> str(sf), "detail" -> detail(sw)))
 
   /** One row of `target/scaleprobe.json`, the file `scripts/scale_table.py`
     * renders. */

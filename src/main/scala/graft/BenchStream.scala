@@ -8,11 +8,9 @@ import graft.BenchRunner._
   * in a pattern batch A/B cannot see (many tiny per-batch shuffles plus the
   * state store's exchange), so the plugin/default lanes run here too.
   *
-  *  - `base` (the default): the drains on `SPARK_GRAFT_SF_DIR` (sf0.01);
-  *    with A/B on, also a plugin lane over the derived ×10 streaming tier
-  *    (`queries_sf1`), so the line carries the decade step.
-  *  - `scale`: the same lanes on the derived tier, each drain also
-  *    reporting micro-batches and peak state rows and memory.
+  *  - `base` (the default): the drains on `SPARK_GRAFT_SF_DIR` (sf0.01).
+  *  - `scale`: the same lanes on the derived ×10 streaming tier, each drain
+  *    also reporting micro-batches and peak state rows and memory.
   *
   * `SPARK_GRAFT_AB=0` runs the plugin lane only; `SPARK_GRAFT_AB_ORDER` sets
   * the lane order. One JSON line on stdout and `target/bench_stream.json`.
@@ -25,23 +23,20 @@ object BenchStream {
     requireUniqueShortIds(ordered.map(_._1))
     val warm = ("events", "event_type")
     // built before any lane, so no median carries the one-time build
-    val sf1 = Option.when(scale || set.ab)(
-      withSession(set.cpus, plugin = true, Tiers("sf0.1"), warm)(tier(_, "sf1_stream")))
-    val sfDir = if (scale) sf1.get else sys.env.getOrElse("SPARK_GRAFT_SF_DIR", Tiers("sf0.01"))
+    val sfDir = if (scale) withSession(set.cpus, plugin = true, Tiers("sf0.1"), warm)(tier(_, "sf1_stream"))
+      else sys.env.getOrElse("SPARK_GRAFT_SF_DIR", Tiers("sf0.01"))
     var harness = -1.0
-    val sw = sweep(set, ordered, remeasure = false) { (plugin, qs) =>
+    val sw = sweep(set) { plugin =>
       withSession(set.cpus, plugin, sfDir, warm) { s =>
         // the sentineled source dir that st06-st09 drain is staged once per
         // fixture and billed here, as its own number
         val t0 = System.nanoTime()
         operators.StreamingQueries.sentineledSrcDir(s, sfDir)
         if (harness < 0) harness = (System.nanoTime() - t0) / 1e9
-        runLane(s, sfDir, qs, census = scale)
+        runLane(s, sfDir, ordered, census = scale)
       }
     }
-    val sf1Lane = sf1.filterNot(_ => scale).map(d => d -> withSession(set.cpus, plugin = true, d, warm)(
-      runLane(_, d, ordered)))
-    val line = streamReport(sw, sfDir, harness, sf1Lane)
+    val line = streamReport(sw, sfDir, harness)
     write("target/bench_stream.json", line)
     println(line)
   }

@@ -25,6 +25,8 @@ import org.apache.spark.storage.FallbackStorage
   * {{{
   *   spark.shuffle.manager=org.apache.spark.shuffle.cloud.CloudShuffleManager
   *   spark.shuffle.cloud.rootDir=s3a://bucket/shuffle   (or any Hadoop FS)
+  *   spark.shuffle.reduceLocality.enabled=false         (required: relocated
+  *     map outputs name a synthetic host delay scheduling can wait on forever)
   * }}}
   */
 class CloudShuffleManager(conf: SparkConf) extends SortShuffleManager(conf) {
